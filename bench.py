@@ -18,7 +18,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    from tiny_etl_multiproc_bigdata_spark.session import get_spark
+    from tiny_etl_multiproc_bigdata_spark.session import _cpus, get_spark
     from tiny_etl_multiproc_bigdata_spark.plans.registry import queries
 
     headline = [
@@ -102,7 +102,7 @@ def main() -> None:
     # ~0.1s fixed job-setup cost that dominated at n_rep=64 (VERDICT r04
     # item 6)
     n_rep = 512
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _cpus()
     # replication range is the partitioned stream side, tiny corpus is
     # broadcast: each task GENERATES its replicas locally — no shuffle
     # of the amplified text (a real corpus gets this from input splits)
@@ -778,7 +778,7 @@ def main() -> None:
             "3 (sustained, amplified, layout) timed runs; sf1 "
             "warm-once + single steady-state run; load_avg is "
             "the 1-min load average sampled at each battery "
-            "start (32 hardware threads)"
+            f"start ({cpus} local cores)"
         ),
     }
 

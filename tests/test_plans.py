@@ -62,25 +62,21 @@ def test_topk_uses_take_ordered(spark, sf_dir):
 
 
 def test_flagship_shuffle_shape(spark, sf_dir):
-    """The single-pass design: the token stream is reduced by a
-    codegen'd partial HashAggregate BELOW the first exchange (never
-    crosses a wide exchange un-reduced), and the whole plan has at most
-    3 exchanges (level-1 agg, level-2 agg, window) — all post-reduction
-    ones move ~|distinct words| rows, not ~|tokens|."""
+    """The document-level design: exactly one exchange, a hash
+    repartition of the documents on ``source``. The explode and every
+    aggregate sit above it, so no token crosses an exchange, and nothing
+    aggregates (least of all a SortAggregate) on the scan side."""
     plan = _plan(_q("flagship_words", spark, sf_dir))
     body = plan.split("\n\n(1)")[0]  # tree section only (AQE repeats nodes)
-    assert 2 <= body.count("Exchange") <= 3, body
-    tree_before_first_exchange = body.split("Exchange")[-1]
-    assert "HashAggregate" in tree_before_first_exchange, (
-        "token stream crosses the first exchange un-reduced or the "
-        "partial aggregate is not the codegen'd hash form"
+    assert body.count("Exchange") == 1, body
+    args = re.search(r"\) Exchange\nInput \[[^\]]*\]: [^\n]*\nArguments: ([^\n]*)", plan)
+    assert args and re.match(r"hashpartitioning\(source#\d+, \d+\)", args.group(1)), (
+        args.group(1) if args else plan
     )
-    # a SortAggregate is fine ABOVE the first exchange (level-2 min over
-    # the already-reduced per-word rows) but never below it, where the
-    # full token stream flows
-    assert "SortAggregate" not in tree_before_first_exchange, (
-        "full token stream goes through a sort-based aggregate"
-    )
+    above, below = body.split("Exchange")
+    assert "Generate" in above, "the explode runs below the exchange: tokens cross it"
+    assert above.count("Aggregate") >= 4, "both aggregation levels sit above the exchange"
+    assert "Aggregate" not in below and "Generate" not in below, below
 
 
 def test_flagship_scan_prunes_to_two_columns(spark, sf_dir):

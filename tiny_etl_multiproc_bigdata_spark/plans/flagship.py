@@ -13,19 +13,35 @@ Reference dataflow (two full reads of every file!):
 
 Spark-first single-pass design (the double scan disappears):
 
-  tokens → groupBy(source, lower(token)) with COUNT(*)  -- map-side
-           partial agg crushes the token stream before the only wide
-           shuffle; representative word = min(token) for determinism
-        → window SUM(occurrences) OVER (PARTITION BY source)
-           -- words_count recovered from the already-deduped rows, so
-           the second shuffle moves ~|distinct| rows, not ~|tokens|.
+  docs → repartition(N, source)  -- the ONLY exchange: each document's
+           compressed text crosses it once, whole
+       → tokens → groupBy(source, lower(token)) with COUNT(*), then
+           min(token) as the deterministic representative word
+       → window SUM(occurrences) OVER (PARTITION BY source)
+           -- words_count recovered from the already-deduped rows.
 
-Scale notes (100 TB): the heavy exchange is keyed on
-(source, norm) — high cardinality, well-spread; the window shuffle is on
-source over deduped data. A pathological single giant document bounds the
-window partition at |distinct words of that doc| — acceptable; if docs
-were truly enormous you'd salt the first agg (norm already does this
-naturally). No join, no broadcast needed, no Python in the plan.
+Every operator after the repartition is keyed by ``source`` (both
+aggregation levels and the window), and ``hashpartitioning(source)``
+satisfies all their distribution requirements, so the token stream is
+produced, reduced and summed inside the task the document landed in:
+one exchange instead of three token-level ones (pinned by
+tests/test_plans.py::test_flagship_shuffle_shape; the old three-exchange
+lowering is kept verbatim in tests/test_flagship_rewrite.py).
+
+N is the session's shuffle-partition count (``session.shuffle_partitions``),
+fixed on purpose: AQE would coalesce an unnumbered repartition by shuffle
+bytes, and compressed text understates the tokenize/aggregate CPU that
+follows, so it merges the work onto too few tasks.
+
+Scale notes (100 TB) and skew bound: a task always holds whole sources,
+so no task can be smaller than its largest source. Through
+``read_whole_files`` the source is the file path, i.e. one file — the
+same floor the whole-file scan already has. For ``documents.parquet``
+the source is a label shared by many documents (20 labels, at most 25
+documents per label at sf0.01 and 250 at sf0.1), so one task holds at
+least one label's documents and at most 20 tasks have work. What
+crosses the exchange is the input text once, never the token stream,
+and there is no join, no broadcast and no Python in the plan.
 """
 
 from __future__ import annotations
@@ -41,6 +57,7 @@ from tiny_etl_multiproc_bigdata_spark.functions.text import (
     tokenize_words,
     truncate_str,
 )
+from tiny_etl_multiproc_bigdata_spark.session import shuffle_partitions
 
 
 def flagship_words(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -53,6 +70,7 @@ def words_from_docs(docs: DataFrame) -> DataFrame:
     """The flagship pipeline over any (source, text) DataFrame — also
     used by bench.py's sustained-throughput run over an amplified
     corpus."""
+    docs = docs.repartition(shuffle_partitions(docs.sparkSession), "source")
     tokens = docs.select(
         "source",
         F.explode(tokenize_words(F.col("text"))).alias("token"),

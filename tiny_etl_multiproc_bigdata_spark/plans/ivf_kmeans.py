@@ -28,6 +28,7 @@ from tiny_etl_multiproc_bigdata_spark.functions.vectors import (
     is_complete_vector,
 )
 from tiny_etl_multiproc_bigdata_spark.plans.registry import register
+from tiny_etl_multiproc_bigdata_spark.session import shuffle_partitions
 
 _CENTROID_MOD = 100  # vec_id % 100 == 7 → deterministic centroid sample
 # The embeddings INPUT CONTRACT (r12 NULL-parity matrix extension; see
@@ -359,7 +360,7 @@ def _km_assign(spark: SparkSession, sf_dir: str):
     e = table(spark, sf_dir, "embeddings").filter(
         is_complete_vector(F.col("embedding"))
     )
-    n_groups = 8 * int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_groups = 8 * shuffle_partitions(spark)
     qv = ckpt_hash(
         e.select(
             "vec_id",

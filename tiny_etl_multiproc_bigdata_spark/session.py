@@ -1,7 +1,8 @@
 """SparkSession factory tuned for the engine.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32) but every
-setting here is chosen to also hold on a large multi-executor cluster:
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the host's
+``os.cpu_count()``) but every setting here is chosen to also hold on a
+large multi-executor cluster:
 
 * AQE on (runtime re-plan, partition coalescing, skew-join splitting) —
   at 100 TB the static ``shuffle.partitions`` guess is always wrong, AQE
@@ -23,9 +24,21 @@ from pyspark.sql import SparkSession
 
 def _cpus() -> int:
     try:
-        return max(1, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+        return max(1, int(os.environ["SPARK_GRAFT_CPUS"]))
+    except (KeyError, ValueError):
+        return os.cpu_count() or 1
+
+
+def shuffle_partitions(spark: SparkSession) -> int:
+    """The session's ``spark.sql.shuffle.partitions`` as an int.
+
+    Managed platforms may set it to a non-numeric value such as
+    ``auto``; then the count falls back to the context's
+    ``defaultParallelism`` (the total executor cores)."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
     except ValueError:
-        return 32
+        return spark.sparkContext.defaultParallelism
 
 
 def get_spark(

@@ -3,6 +3,7 @@ their DuckDB oracles (order-insensitive rows+schema compare, the
 tests/compare.py harness == the driver's t2 check) at one or more SFs.
 
 Usage: python tools/verify_queries.py [--sf 0.01[,0.1]] name [name ...]
+(``--sf`` may come before, between or after the names.)
 
 VERDICT r13 item 8: the driver's rotating 50-query sample left 23 of
 28 rewritten queries unverified by the driver; this tool produces the
@@ -11,6 +12,7 @@ committed board for every query an optimization round touches.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -19,15 +21,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    args = sys.argv[1:]
-    sfs = ["0.01"]
-    if args and args[0] == "--sf":
-        sfs = args[1].split(",")
-        args = args[2:]
-    names = args
-    if not names:
-        print("usage: verify_queries.py [--sf 0.01,0.1] name ...")
-        sys.exit(2)
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("names", nargs="+", metavar="name", help="registry query names")
+    ap.add_argument(
+        "--sf", default="0.01", help="comma-separated scale factors (default 0.01)"
+    )
+    args = ap.parse_intermixed_args()
+    sfs = args.sf.split(",")
+    names = args.names
 
     from tiny_etl_multiproc_bigdata_spark.session import get_spark
     from tiny_etl_multiproc_bigdata_spark.plans.registry import (
