@@ -21,6 +21,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import Window, functions as F
 
+from conftest import TWO_SFS
 from tiny_etl_multiproc_bigdata_spark.catalog import table
 from tiny_etl_multiproc_bigdata_spark.functions.vectors import (
     is_complete_vector,
@@ -30,8 +31,6 @@ from tiny_etl_multiproc_bigdata_spark.plans.ivf_kmeans import (
     _assign_cells,
     _l2sq,
 )
-
-TWO_SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 
 
 def _assign_cells_window_reference(e, centroids):

@@ -6,6 +6,7 @@ check (random graphs include chains, stars, cycles, and multi-edges)."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -34,6 +35,7 @@ _edges = st.lists(
 )
 
 
+@pytest.mark.slow
 @settings(
     max_examples=12,
     deadline=None,

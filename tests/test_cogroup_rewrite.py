@@ -15,13 +15,13 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import TWO_SFS
 from tiny_etl_multiproc_bigdata_spark.catalog import table
 from tiny_etl_multiproc_bigdata_spark.functions.timedomain import epoch_us_ntz
 from tiny_etl_multiproc_bigdata_spark.operators.grouped_pandas import (
     cogroup_asof_from,
 )
 
-TWO_SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 
 _SCHEMA = (
     "user_id long, event_id long, last_click_epoch long, "

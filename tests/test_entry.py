@@ -48,6 +48,14 @@ def test_query_metadata_contract():
     # the flag is load-bearing: the registry has both kinds of entry
     assert any(v["ulp_sensitive"] for v in m.values())
     assert any(not v["has_oracle"] for v in m.values())
+    # all three accessors iterate in sorted name order
+    assert list(q) == sorted(REGISTRY)
+    assert list(m) == list(q)
+    assert list(o) == [n for n in q if n in o]
+    # the fixed surface: 435 entries, 429 with an oracle, 6 rows-only
+    assert len(q) == 435
+    assert len(o) == 429
+    assert sum(not v["has_oracle"] for v in m.values()) == 6
 
 
 def test_entry_default_matches_registry_flagship(spark, monkeypatch):
@@ -59,311 +67,3 @@ def test_entry_default_matches_registry_flagship(spark, monkeypatch):
     a = E.entry(spark).collect()
     b = q["flagship_words"](spark, "/root/testdata/sf0.01").collect()
     assert sorted(a) == sorted(b)
-
-
-def test_driver_sweep_priority_contract():
-    """The external driver samples a capped prefix of queries() —
-    ordering IS the re-queue mechanism. Pin the r08 consolidation
-    contract (VERDICT r07 item 1): the five newest entries plus the
-    single r08 addition lead, the ~50-row sample window contains NO
-    already-attested entry (it must drain the never-checked set), every
-    _PRIORITY entry precedes every checked-only entry, and _PRIORITY
-    names all exist."""
-    E = _entry_module()
-    from tiny_etl_multiproc_bigdata_spark.plans.registry import (
-        _CHECKED,
-        _PRIORITY,
-        REGISTRY,
-    )
-
-    names = list(E.queries())
-    r08_head = [
-        "csv_permissive_corrupt_records",
-        "triplet_margin_violation_rate",
-        "wilson_ci_conversion",
-        "first_touch_type_distribution",
-        "orders_aging_buckets",
-        "sorted_write_layout",
-    ]
-    # literal head pin for the r08 sample; self-disarms once these draw
-    # driver rows (they then sink by design and a new head leads)
-    if all(n not in _CHECKED for n in r08_head):
-        assert names[: len(r08_head)] == r08_head
-    # the driver's ~50-row sample must be spent entirely on entries
-    # with no driver row yet, for as long as that many exist. Because
-    # _CHECKED is file-derived and priority rank only applies while
-    # unattested, this invariant survives future CORRECTNESS files
-    # landing: newly-attested entries sink and the next never-checked
-    # block leads, with no manual reorder.
-    n_unattested = sum(1 for n in names if n not in _CHECKED)
-    window = min(50, n_unattested)
-    assert not [n for n in names[:window] if n in _CHECKED]
-    assert set(_PRIORITY) <= set(REGISTRY), (
-        set(_PRIORITY) - set(REGISTRY)
-    )
-    # every never-attested entry precedes every attested one, except
-    # the PENDING subset of the _REQUEUE tier (changed code whose
-    # latest driver row predates the change, see _requeue_pending),
-    # which sits between them; an INERT requeue listing (fresh row
-    # already drawn) must sink into the attested tier (r12, VERDICT
-    # r11 item 2 — inert listings must not occupy sample-window slots)
-    from tiny_etl_multiproc_bigdata_spark.plans.registry import (
-        _REQUEUE,
-        _REQUEUE_PENDING,
-    )
-
-    unattested_idx = [
-        names.index(n) for n in names if n not in _CHECKED
-    ]
-    # _CHECKED derives from historical CORRECTNESS files and may name
-    # entries since renamed/removed — intersect with the live registry
-    # before names.index (ADVICE r08) so drift reads as a clean skip,
-    # not a ValueError
-    attested_current = (set(_CHECKED) - _REQUEUE_PENDING) & set(names)
-    if unattested_idx and attested_current:  # drained board disarms
-        last_unattested = max(unattested_idx)
-        first_attested = min(names.index(n) for n in attested_current)
-        assert last_unattested < first_attested
-        for n in _REQUEUE:
-            if n in _CHECKED and n in names and n in _REQUEUE_PENDING:
-                assert last_unattested < names.index(n) < first_attested
-    elif attested_current:
-        # never-checked set fully drained: the pending requeues (if
-        # any) must lead the order, before any current-attested entry
-        first_attested = min(names.index(n) for n in attested_current)
-        for n in _REQUEUE:
-            if n in _CHECKED and n in names and n in _REQUEUE_PENDING:
-                assert names.index(n) < first_attested
-
-
-def test_driver_attestation_parsing(tmp_path):
-    """_CHECKED self-maintains from the committed CORRECTNESS files,
-    latest-wins (ADVICE r08): green full-pass rows attest, the
-    rows-only form attests ONLY for entries registered oracle=None,
-    red/errored rows do NOT, and a red row in a LATER round un-attests
-    an entry that was green earlier — regressions re-queue at the head
-    of the sweep instead of staying counted as done."""
-    import json
-
-    from tiny_etl_multiproc_bigdata_spark.plans.registry import (
-        _CHECKED,
-        _CHECKED_BASE,
-        _ROWS_ONLY_BY_DESIGN,
-        _driver_attested,
-    )
-
-    green = {"rows_match": True, "schema_match": True,
-             "hash_match": True, "spark_rows": 3,
-             "oracle_rows": 3, "err": None}
-    no_oracle = {"rows_match": None, "schema_match": None,
-                 "hash_match": None, "spark_rows": 5,
-                 "oracle_rows": None, "err": "no_oracle"}
-    rows = {
-        "green_full": green,
-        # designed rows-only entry: no_oracle attests
-        "kmeans_lloyd": no_oracle,
-        # value-checked entry whose oracle broke driver-side: the
-        # no_oracle row must NOT attest (ADVICE r08) — it re-queues
-        "green_full_broken_oracle": no_oracle,
-        "red_hash": {"rows_match": True, "schema_match": True,
-                     "hash_match": False, "spark_rows": 3,
-                     "oracle_rows": 3, "err": None},
-        "crashed": {"rows_match": None, "schema_match": None,
-                    "hash_match": None, "spark_rows": None,
-                    "oracle_rows": None, "err": "Traceback ..."},
-        # boolean spark_rows is not a row count
-        "table_sample": dict(no_oracle, spark_rows=True),
-    }
-    assert "kmeans_lloyd" in _ROWS_ONLY_BY_DESIGN
-    (tmp_path / "CORRECTNESS_r98.json").write_text(json.dumps(rows))
-    got = _driver_attested(root=str(tmp_path))
-    assert got == {"green_full", "kmeans_lloyd"}
-
-    # latest-wins: a red row in r99 un-attests r98's green entries, and
-    # a green row in r99 attests an entry that was red in r98
-    later = {
-        "green_full": {"rows_match": True, "schema_match": True,
-                       "hash_match": False, "spark_rows": 3,
-                       "oracle_rows": 3, "err": None},
-        "red_hash": green,
-    }
-    (tmp_path / "CORRECTNESS_r99.json").write_text(json.dumps(later))
-    got = _driver_attested(root=str(tmp_path))
-    assert got == {"kmeans_lloyd", "red_hash"}
-
-    # no parseable file at all → _driver_attested is empty (the live
-    # _CHECKED then falls back to the static baseline)
-    assert _driver_attested(root=str(tmp_path / "nowhere")) == frozenset()
-
-    # the live set derives from the repo's real files. When they are
-    # present (this checkout), latest-wins must cover the frozen
-    # r01-r07 baseline — every historically-red entry was re-attested
-    # green in a later round. In a checkout WITHOUT the CORRECTNESS
-    # files the registry falls back to _CHECKED_BASE by design, so
-    # only assert the subset when files actually parsed (ADVICE r08).
-    live = _driver_attested()
-    if live:
-        assert _CHECKED_BASE <= live
-        assert _CHECKED_BASE <= _CHECKED
-    else:
-        assert _CHECKED == _CHECKED_BASE
-
-
-def test_rows_only_design_set_matches_registry():
-    """_ROWS_ONLY_BY_DESIGN (the static set gating the driver's
-    no_oracle attestation form) must equal the live set of entries
-    registered with oracle=None — drift in either direction would let
-    a broken oracle attest or make a designed rows-only entry
-    unattestable."""
-    from tiny_etl_multiproc_bigdata_spark.plans.registry import (
-        REGISTRY,
-        _ROWS_ONLY_BY_DESIGN,
-        _load_all,
-    )
-
-    _load_all()
-    live = {n for n, spec in REGISTRY.items() if spec.oracle is None}
-    assert live == set(_ROWS_ONLY_BY_DESIGN)
-
-
-def test_attestation_ledger_tool_agrees_with_registry():
-    """tools/attestation_ledger.py (the drain's audit trail) must agree
-    with the live registry: same counts, a clean next sample window,
-    and no red or unexpected-no_oracle row counted as attested."""
-    import importlib.util
-    import os
-
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "tools",
-        "attestation_ledger.py",
-    )
-    spec = importlib.util.spec_from_file_location("attestation_ledger", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    ledger = mod.build_ledger()
-
-    from tiny_etl_multiproc_bigdata_spark.plans.registry import (
-        REGISTRY,
-        _CHECKED,
-    )
-
-    assert ledger["registry"] == len(REGISTRY)
-    assert ledger["attested"] == len(_CHECKED & set(REGISTRY))
-    # while entries remain never-sampled, the window must be spent on
-    # them exclusively (drain discipline); disarms on a drained board
-    if ledger["never_sampled"]:
-        assert ledger["next_sample_window_clean"]
-    # latest-wins coherence: no attested entry's latest verdict is red
-    # or an unexpected rows-only form
-    for e in ledger["entries"]:
-        if e["name"] in _CHECKED:
-            assert e["verdict"] in ("pass", "rows_only"), e
-    # requeue vintage coherence (r12, VERDICT r11 item 2): the ledger's
-    # pending/inert split must agree with the registry's, pending ∪
-    # inert = the whole listed tier, and every pending requeue must
-    # appear in the next sample window (they are the next rows the
-    # driver owes) while no inert one does
-    from tiny_etl_multiproc_bigdata_spark.plans.registry import (
-        _REQUEUE,
-        _REQUEUE_PENDING,
-    )
-
-    assert set(ledger["requeue_pending"]) == set(_REQUEUE_PENDING)
-    assert (
-        set(ledger["requeue_pending"]) | set(ledger["requeue_inert"])
-        == set(_REQUEUE) & set(REGISTRY)
-    )
-    window = set(ledger["next_sample_window"])
-    # mirror the ledger's tier-based owed count (r12 ADVICE item 1):
-    # tier 0 covers never-sampled AND regressed-red, tier 1 = pending
-    n_owed = sum(1 for e in ledger["entries"] if e["tier"] in (0, 1))
-    if n_owed <= mod.WINDOW:
-        assert set(ledger["requeue_pending"]) <= window
-    assert not (set(ledger["requeue_inert"]) & window)
-
-
-def test_requeue_vintage_pending_vs_inert(tmp_path):
-    """_requeue_pending distinguishes live requeue debt from inert
-    history by ROUND VINTAGE (r12, VERDICT r11 item 2): a name whose
-    latest driver row predates its requeue round is pending; a row of
-    round >= vintage (the driver samples at round end, so a same-round
-    row post-dates the change) turns it inert with no manual edit; and
-    with no parseable CORRECTNESS file the whole tier is conservatively
-    pending. Exercised against a synthetic CORRECTNESS set so the pin
-    survives the real files evolving."""
-    import json
-
-    from tiny_etl_multiproc_bigdata_spark.plans.registry import (
-        _REQUEUE_VINTAGE,
-        _requeue_pending,
-    )
-
-    names = sorted(_REQUEUE_VINTAGE)[:3]
-    if len(names) < 3:
-        import pytest
-
-        pytest.skip("fewer than 3 requeued entries to exercise")
-    a, b, c = names
-    green = {
-        "rows_match": True,
-        "schema_match": True,
-        "hash_match": True,
-        "spark_rows": 1,
-        "oracle_rows": 1,
-        "err": None,
-    }
-    va, vb = _REQUEUE_VINTAGE[a], _REQUEUE_VINTAGE[b]
-    # a: latest row BEFORE its vintage -> pending
-    (tmp_path / f"CORRECTNESS_r{va - 1:02d}.json").write_text(
-        json.dumps({a: green})
-    )
-    # b: row in the SAME round as its vintage -> inert
-    (tmp_path / f"CORRECTNESS_r{vb:02d}.json").write_text(
-        json.dumps({b: green})
-    )
-    # c: no row at all -> pending
-    pending = _requeue_pending(str(tmp_path))
-    assert a in pending
-    assert b not in pending
-    assert c in pending
-    # no parseable file -> conservatively the whole tier
-    empty = tmp_path / "empty"
-    empty.mkdir()
-    assert _requeue_pending(str(empty)) == frozenset(_REQUEUE_VINTAGE)
-
-
-def test_certification_guard_internal_consistency():
-    """tools/certification_guard.py (r13, VERDICT r12 item 2) must (a)
-    find the r12 certification events in PROGRESS.jsonl, (b) find a
-    last source change, and (c) derive `certified` exactly as
-    cert_ts >= src_ts — the rule the round-close step enforces. It
-    cannot assert certified=True here: mid-round the tree legitimately
-    carries uncertified diffs (that state is what the tool exists to
-    detect)."""
-    import importlib.util
-    import os
-
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "tools",
-        "certification_guard.py",
-    )
-    spec = importlib.util.spec_from_file_location("certification_guard", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    root = os.path.dirname(os.path.dirname(path))
-    rep = mod.build_report(root)
-    assert "certification" in rep["last_certification_event"]
-    assert rep["last_certification_ts"] > 0
-    assert rep["last_source_change_ts"] > 0
-    assert rep["certified"] == (
-        rep["last_certification_ts"] >= rep["last_source_change_ts"]
-    )
-    # the source-change detector must not be fooled by doc/JSON churn:
-    # PROGRESS.jsonl itself is never a source path
-    assert not mod._is_source("PROGRESS.jsonl")
-    assert not mod._is_source("OPERATORS.md")
-    assert mod._is_source("tiny_etl_multiproc_bigdata_spark/catalog.py")
-    assert mod._is_source("tools/certification_guard.py")
-    assert not mod._is_source("tools_backup/evil.py")

@@ -17,6 +17,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import TWO_SFS
 from tiny_etl_multiproc_bigdata_spark.catalog import table
 from tiny_etl_multiproc_bigdata_spark.plans.graph_ops import (
     _KCORE_K,
@@ -28,8 +29,6 @@ from tiny_etl_multiproc_bigdata_spark.plans.graph_ops import (
     _SSSP_ITERS,
     _SSSP_SOURCE,
 )
-
-TWO_SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 
 
 def _pagerank_scaled_string_reference(spark, sf_dir):

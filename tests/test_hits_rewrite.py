@@ -15,13 +15,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import TWO_SFS
 from tiny_etl_multiproc_bigdata_spark.catalog import table
 from tiny_etl_multiproc_bigdata_spark.plans.graph_ops import (
     _HITS_ITERS,
     hits_hub_authority,
 )
-
-TWO_SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 
 
 def _hits_string_reference(spark, sf_dir):

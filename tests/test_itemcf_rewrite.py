@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from conftest import TWO_SFS
 from tiny_etl_multiproc_bigdata_spark.catalog import table
 from tiny_etl_multiproc_bigdata_spark.plans.relational import _CF_TOPK
 
@@ -69,10 +70,7 @@ def _itemcf_union_reference(spark, sf_dir):
     )
 
 
-@pytest.mark.parametrize(
-    "two_sf_dir",
-    ["/root/testdata/sf0.001", "/root/testdata/sf0.01"],
-)
+@pytest.mark.parametrize("two_sf_dir", TWO_SFS)
 def test_itemcf_rewrite_matches_union_lowering(spark, two_sf_dir):
     if not os.path.isdir(two_sf_dir):
         pytest.skip(f"{two_sf_dir} not present")

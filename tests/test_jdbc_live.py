@@ -41,6 +41,7 @@ def _jars_present() -> bool:
         return False
 
 
+@pytest.mark.slow
 @pytest.mark.skipif(
     not _jars_present(),
     reason="hive-jdbc / spark-hive-thriftserver jars not on the classpath",

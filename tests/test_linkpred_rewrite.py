@@ -20,6 +20,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import TWO_SFS
 from tiny_etl_multiproc_bigdata_spark.catalog import table
 from tiny_etl_multiproc_bigdata_spark.plans.stat_tests import (
     _RA_DEG_CAP,
@@ -100,10 +101,7 @@ def _linkpred_explode_from_edges(e):
     )
 
 
-@pytest.mark.parametrize(
-    "two_sf_dir",
-    ["/root/testdata/sf0.001", "/root/testdata/sf0.01"],
-)
+@pytest.mark.parametrize("two_sf_dir", TWO_SFS)
 def test_linkpred_rewrite_matches_selfjoin_lowering(spark, two_sf_dir):
     if not os.path.isdir(two_sf_dir):
         pytest.skip(f"{two_sf_dir} not present")

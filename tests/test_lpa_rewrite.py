@@ -20,6 +20,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import TWO_SFS
 from tiny_etl_multiproc_bigdata_spark.catalog import table
 from tiny_etl_multiproc_bigdata_spark.plans.graph_ops import (
     _LPA_ITERS,
@@ -120,10 +121,7 @@ def test_dec_inverts_enc(spark):
     assert bad == 0
 
 
-@pytest.mark.parametrize(
-    "two_sf_dir",
-    ["/root/testdata/sf0.001", "/root/testdata/sf0.01"],
-)
+@pytest.mark.parametrize("two_sf_dir", TWO_SFS)
 def test_lpa_rewrite_matches_string_lowering(spark, two_sf_dir):
     if not os.path.isdir(two_sf_dir):
         pytest.skip(f"{two_sf_dir} not present")

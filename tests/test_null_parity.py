@@ -357,7 +357,9 @@ TIMESKEW_SENTINELS = [
     "events_rolling_dau",       # double-epoch() day-rounding class
     "asof_next_purchase",       # µs-reconstruction idiom class
     "grouped_ols_trend",        # span-quadratic overflow / obs window
-    "time_series_densify",      # spine-explosion / obs window
+    pytest.param(               # spine-explosion / obs window
+        "time_series_densify", marks=pytest.mark.slow
+    ),
     "streaming_tumbling_counts",       # stream domain + time_bucket
     "streaming_stateful_counter",      # pandas datetime64[ns] kernel
     "streaming_stream_stream_left_outer",  # strict epoch floor

@@ -23,11 +23,13 @@ entries whose construction executes by design).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
 _INTEGRAL = (ByteType, ShortType, IntegerType, LongType)
 
 
+@pytest.mark.slow
 def test_no_uncast_hugeint_in_any_oracle(spark, duck, sf_dir):
     import __spark_entry__ as entry
 

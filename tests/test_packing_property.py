@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -32,6 +33,7 @@ def _greedy_pack(tokens: list[int], cap: int) -> list[int]:
     return bins
 
 
+@pytest.mark.slow
 @given(
     st.lists(
         st.tuples(st.integers(0, 10_000), st.integers(1, 900)),

@@ -12,6 +12,9 @@ any value-equality test).
 
 from __future__ import annotations
 
+import threading
+from types import SimpleNamespace
+
 from pyspark.sql import functions as F
 
 from tiny_etl_multiproc_bigdata_spark.functions.partitioning import (
@@ -60,3 +63,60 @@ def test_ckpt_hash_restores_aqe_and_values(spark):
     # values unchanged by the repartition+checkpoint
     got = sorted(r["k"] for r in df.distinct().collect())
     assert got == list(range(7))
+
+
+class _Conf:
+    def __init__(self) -> None:
+        self.kv = {"spark.sql.adaptive.enabled": "true"}
+
+    def get(self, key, default=None):
+        return self.kv.get(key, default)
+
+    def set(self, key, value) -> None:
+        self.kv[key] = value
+
+
+class _Frame:
+    """Stands in for a DataFrame: ``localCheckpoint`` runs ``body``."""
+
+    def __init__(self, session, body) -> None:
+        self.sparkSession = session
+        self._body = body
+
+    def localCheckpoint(self, eager=True):
+        self._body()
+        return self
+
+
+def test_concurrent_barriers_restore_aqe():
+    """Two ckpt_keep calls on one session, forced into the interleaving
+    that loses the restore: B saves AQE while A has it off, and B
+    restores after A does. Unserialized, B writes back A's "false" and
+    AQE stays off for the session; under the lock B cannot save until
+    A has restored (A's wait for B times out instead)."""
+    session = SimpleNamespace(conf=_Conf())
+    a_in_body, b_in_body, a_done = (threading.Event() for _ in range(3))
+
+    def body_a():
+        a_in_body.set()
+        b_in_body.wait(timeout=1)
+
+    def body_b():
+        b_in_body.set()
+        a_done.wait(timeout=1)
+
+    def run_a():
+        ckpt_keep(_Frame(session, body_a))
+        a_done.set()
+
+    def run_b():
+        a_in_body.wait(timeout=5)
+        ckpt_keep(_Frame(session, body_b))
+
+    threads = [threading.Thread(target=run_a), threading.Thread(target=run_b)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=10)
+    assert not any(t.is_alive() for t in threads)
+    assert session.conf.get("spark.sql.adaptive.enabled") == "true"

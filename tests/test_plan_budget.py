@@ -204,6 +204,7 @@ def _streaming_entries():
     return sorted(n for n in REGISTRY if n.startswith("streaming_"))
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("name", _streaming_entries())
 def test_streaming_structure_budget(spark, name):
     from tiny_etl_multiproc_bigdata_spark.plans.registry import REGISTRY

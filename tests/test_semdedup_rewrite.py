@@ -17,6 +17,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from conftest import TWO_SFS
 from tiny_etl_multiproc_bigdata_spark.catalog import table
 from tiny_etl_multiproc_bigdata_spark.functions.rounding import round_half_up
 from tiny_etl_multiproc_bigdata_spark.functions.vectors import (
@@ -98,10 +99,7 @@ def _sem_window_reference(spark, sf_dir):
     )
 
 
-@pytest.mark.parametrize(
-    "two_sf_dir",
-    ["/root/testdata/sf0.001", "/root/testdata/sf0.01"],
-)
+@pytest.mark.parametrize("two_sf_dir", TWO_SFS)
 def test_semdedup_rewrite_matches_window_lowering(spark, two_sf_dir):
     if not os.path.isdir(two_sf_dir):
         pytest.skip(f"{two_sf_dir} not present")

@@ -17,6 +17,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import TWO_SFS
 from tiny_etl_multiproc_bigdata_spark.catalog import table
 from tiny_etl_multiproc_bigdata_spark.plans.corpus_ops import (
     _WIN_DF_CAP,
@@ -26,8 +27,6 @@ from tiny_etl_multiproc_bigdata_spark.plans.corpus_ops import (
     winnow_fingerprints,
     winnowing_neardup_pairs,
 )
-
-TWO_SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 
 
 def _old_pairs_from_h(h):

@@ -28,6 +28,7 @@ constant.
 
 from __future__ import annotations
 
+import threading
 from contextlib import contextmanager
 from typing import Iterator
 
@@ -35,17 +36,28 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _AQE_KEY = "spark.sql.adaptive.enabled"
+_AQE_LOCK = threading.Lock()
 
 
 @contextmanager
 def _aqe_off(df: DataFrame) -> Iterator[None]:
+    """Turn AQE off for the body, then restore the previous value.
+
+    The conf is session-global, so the save, the checkpoint and the
+    restore run under one module-level lock: two concurrent barriers
+    cannot interleave and leave AQE off for the session. The lock only
+    orders barriers against each other. Any other query planned while
+    a barrier holds it also plans with AQE off, so planning is assumed
+    single-threaded around a barrier.
+    """
     spark = df.sparkSession
-    prev = spark.conf.get(_AQE_KEY, "true")
-    spark.conf.set(_AQE_KEY, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(_AQE_KEY, prev)
+    with _AQE_LOCK:
+        prev = spark.conf.get(_AQE_KEY, "true")
+        spark.conf.set(_AQE_KEY, "false")
+        try:
+            yield
+        finally:
+            spark.conf.set(_AQE_KEY, prev)
 
 
 def ckpt_keep(df: DataFrame) -> DataFrame:

@@ -4,6 +4,9 @@ Every operator from SURVEY.md §2 (plus the training-data-pipeline
 extensions) registers a named query callable and, when SQL-expressible,
 a DuckDB oracle twin. The driver hash-compares them at sf0.01; entries
 without an oracle get a weaker rows-only check (streaming/stateful ops).
+
+``queries()``, ``oracle_sql()`` and ``query_metadata()`` iterate in
+sorted name order.
 """
 
 from __future__ import annotations
@@ -86,745 +89,10 @@ def _load_all() -> None:
     from tiny_etl_multiproc_bigdata_spark.streaming import jobs  # noqa: F401
 
 
-# Driver-sweep ordering: the verification driver checks a capped
-# prefix (~50) of the registry in iteration order. After r07,
-# 279/434 entries have a driver row cumulatively (none ever red); the
-# remaining 155 never-checked entries are the r07 breadth that outran
-# the 50/round sample. r08 is a consolidation round (VERDICT r07 item
-# 1): _PRIORITY lists ALL 155 never-checked entries, newest code first
-# (VERDICT r07 item 7 names the first five), then insertion order, plus
-# the single r08 addition `sorted_write_layout` (VERDICT r07 item 6 —
-# the only registry growth this round). Drain plan: r08 attests the
-# first ~50, r09 the next ~50, r10 the remaining ~56 — and the drain is
-# SELF-MAINTAINING: _CHECKED derives from the committed
-# CORRECTNESS_r*.json files, priority rank applies only while an entry
-# is unattested (see _ordered_names), so each new driver file sinks its
-# green rows and the next ~50 never-checked entries lead automatically,
-# with no manual reorder. A listed name that gains a row is inert debt,
-# not a bug. Entries whose implementation changes in a round go in
-# _REQUEUE below (changed-code hygiene): after every never-checked
-# entry, before the attested tier.
-_PRIORITY: tuple[str, ...] = (
-    "csv_permissive_corrupt_records",
-    "triplet_margin_violation_rate",
-    "wilson_ci_conversion",
-    "first_touch_type_distribution",
-    "orders_aging_buckets",
-    # the single r08 addition (VERDICT r07 item 6)
-    "sorted_write_layout",
-    "kaplan_meier_retention",
-    "caliper_nearest_match",
-    "diff_in_differences",
-    "sprt_sequential_test",
-    "poisson_bootstrap_ci",
-    "gbdt_boosted_stumps",
-    "bloom_membership_fpr",
-    "corr_matrix_features",
-    "weighted_median_exact",
-    "ndcg_ranking_eval",
-    "vocab_coverage_curve",
-    "segment_provenance_topk",
-    "source_overlap_matrix",
-    "silhouette_sampled_eval",
-    "mutual_nn_pairs",
-    "knn_label_eval",
-    "nearest_centroid_eval",
-    "lsh_recall_eval",
-    "int8_reconstruction_error",
-    "hamming_cosine_calibration",
-    "embedding_gram_matrix",
-    "hard_negative_mining",
-    "embedding_drift_centroids",
-    "minhash_lsh_sensitivity_curve",
-    "dedup_shingle_containment",
-    "dedup_method_agreement",
-    "telemetry_near_time_dedup",
-    "rake_keyword_extract",
-    "lang_confusion_matrix",
-    "char_coverage_vocab",
-    "dedup_cluster_size_histogram",
-    "quantile_normalize_histogram",
-    "funnel_latency_quantiles",
-    "map_hof_suite",
-    "label_propagation_communities",
-    "hilbert_cluster_assign",
-    "modularity_nations",
-    "local_clustering_coefficient",
-    "k_anonymity_audit",
-    "incremental_join_view",
-    "benford_digit_audit",
-    "dp_noisy_counts",
-    "equi_depth_histogram",
-    "merkle_partition_checksums",
-    "right_to_erasure_cascade",
-    "replica_drift_repair_plan",
-    "hashed_linear_classifier",
-    "dsir_importance_weights",
-    "stupid_backoff_score",
-    "roc_auc_eval",
-    "confusion_matrix_threshold",
-    "doc_compression_ratio",
-    "pr_curve_thresholds",
-    "naive_bayes_lang_confusion",
-    "rank_biased_overlap_eval",
-    "dedup_token_inflation",
-    "truncation_loss_report",
-    "itemcf_topk_similar",
-    "apriori_brand_triples",
-    "gini_acctbal_concentration",
-    "hhi_supplier_concentration",
-    "association_rules_confidence",
-    "revenue_share_hierarchy",
-    "setop_all_variants",
-    "hash_sample_extrapolation",
-    "execute_immediate_params",
-    "udtf_table_partitioned",
-    "collation_lcase_grouping",
-    "sql_scripting_iterative_trim",
-    "pandas_api_merge_asof",
-    "sql_table_function_lateral",
-    "mann_whitney_u",
-    "ks_two_sample",
-    "spearman_rho",
-    "autocorrelation_lags",
-    "degree_assortativity",
-    "resource_allocation_linkpred",
-    "theil_sen_grouped",
-    "mcnemar_paired_test",
-    "cohens_kappa_agreement",
-    "cramers_v_effect",
-    "zipf_fit_slope",
-    "template_skeleton_clusters",
-    "cuped_variance_reduction",
-    "ols_normal_equations",
-    "partial_correlation",
-    "ab_power_mde",
-    "runs_test_randomness",
-    "cross_correlation_lags",
-    "pinball_loss_eval",
-    "mutual_information_lang_source",
-    "trimmed_winsorized_means",
-    "qq_deciles_two_group",
-    "anova_weekday_revenue",
-    "ransac_slope_fit",
-    "kruskal_wallis_weekday",
-    "levenshtein_verify_match",
-    "as_of_snapshot_counts",
-    "kfold_assignment_balance",
-    "webdataset_shard_manifest",
-    "class_balance_downsample",
-    "largest_remainder_apportion",
-    "ctfidf_cluster_terms",
-    "skyline_pareto_parts",
-    "rolling_median_exact",
-    "cusum_changepoint",
-    "cusum_alert_path",
-    "markov_next_event_eval",
-    "markov_calibration_bins",
-    "locf_impute",
-    "session_path_signatures",
-    "markov_entropy_rate",
-    "interarrival_burstiness",
-    "bollinger_bands",
-    "markov_stationary_distribution",
-    "dau_wau_stickiness",
-    "sequential_pattern_support",
-    "window_groups_frame_sum",
-    "leave_one_out_encoding",
-    "ohlc_daily_candles",
-    "vwap_daily",
-    "monotone_streak_lengths",
-    "attribution_u_shaped",
-    "mase_forecast_eval",
-    "cumulative_distinct_users",
-    "half_life_weighted_revenue",
-    "window_range_interval_frame",
-    "session_gap_sensitivity",
-    "time_grouping_sets_rollup",
-    "linear_interpolate_gaps",
-    "streaming_cusum_alert",
-    "streaming_sprt_decision",
-    "holt_linear_forecast",
-    "streaming_state_timeout_sessions",
-    "pandas_grouped_agg_udf",
-    "pandas_iter_udf_scoring",
-    "dynamic_partition_overwrite",
-    "federated_union_agg",
-    "nested_field_pruning_agg",
-    "python_datasource_write",
-    "python_datasource_stream_write",
-    "streaming_dedup_within_watermark",
-    "streaming_stream_stream_left_outer",
-    "streaming_ohlc_candles",
-    "streaming_session_dynamic_gap",
-    "streaming_stream_stream_full_outer",
-    "streaming_join_then_window",
-    "streaming_denylist_filter",
-    "streaming_windowed_distinct_users",
-    "streaming_stream_stream_right_outer",
-)
-
-# Changed-code re-queue tier: entries whose implementation changed in
-# round R but which already hold a green driver row from an EARLIER
-# vintage. _REQUEUE_VINTAGE maps each name to the round its change
-# landed; an entry is PENDING while its latest committed driver row
-# (any verdict) predates that round, and INERT once a row of round
-# >= vintage lands (the driver samples at round end, so a same-round
-# row post-dates the change). Only PENDING entries occupy tier 1 —
-# they sort AFTER every never-checked entry (a re-queue must not
-# displace first-time attestation) and BEFORE the attested tier, so
-# each draws one fresh row as soon as the never-checked set drains
-# past it. Inert entries sink to tier 2 AUTOMATICALLY (r12, VERDICT
-# r11 items 2-3: before vintages, inert listings occupied sample-
-# window slots and the ledger could not tell pending from inert);
-# the remove-at-next-touch policy still applies — prune inert names
-# when touching this dict so it lists only live debt. Future
-# requeues: add (name, round-of-change) here.
-_REQUEUE_VINTAGE: dict[str, int] = {
-    # --- r13 matrix extensions (tools/null_parity_audit.py
-    # --nonfinite, --unicode and --ragged; 125 entries total) ---
-    # NON-FINITE DOUBLES: a schema-legal NaN/±Inf/1e308 in
-    # events.value or an embedding element diverged 74 entries
-    # three ways — Spark's ANSI CAST threw where DuckDB's
-    # ConversionException threw at different rows, DuckDB's
-    # stddev/corr raised Out-of-Range where Spark folded NaN, and
-    # Spark silently saturated CAST(±Inf AS BIGINT) to Long.MIN
-    # inside aggregates. Fixed with two symmetric contracts at
-    # depth: functions/numerics.py::in_grid_domain /
-    # grid_domain_sql (scalar measurements must lie inside the
-    # quantization-grid domain |x| < 2**53/1e6 — two pushable
-    # range conjuncts that exclude NULL, NaN, ±Inf and corrupt
-    # magnitudes identically in both engines) and a finite-element
-    # widening of functions/vectors.py::is_complete_vector.
-    # ADVERSARIAL UTF-8: the engines' lowercase mappings differ on
-    # 71 codepoints (enumerated exhaustively); the realistic one,
-    # Turkish U+0130 İ, silently shifted every downstream token
-    # string, fingerprint md5 and simhash in 20 entries — fixed
-    # oracle-side with functions/text.py::duck_jlower (Spark's
-    # mapping is the Unicode-correct side).
-    # RAGGED DIMENSION: a wrong-LENGTH vector (every element
-    # present and finite) diverged 24 entries — Spark's zip_with
-    # pads the shorter side with NULL so the fold dot product
-    # silently NULL-propagates, while DuckDB's list_inner_product
-    # raises InvalidInputException; fixed by widening the same
-    # contract with a declared-dimension conjunct
-    # (functions/vectors.py::EMBED_DIM, len(col) = 64 in the
-    # oracle twin). Values on every
-    # committed fixture are unchanged (no non-finite values,
-    # İ, or ragged vectors exist there) — changed-code hygiene
-    # rows only. Entries
-    # sharing the patched fragments (_DUCK_TOKS, duck_jlower,
-    # complete_vector_sql, DUCK_FINGERPRINT) requeue too: their
-    # oracle text changed, so their parity evidence is stale by
-    # definition even where values are provably identical.
-    # The 9 names below lead the dict DELIBERATELY: they are the
-    # r12 vintage-12 carries the r12 window could not hold (their
-    # vintage upgrades in place, r12 precedent), and tier-1 order
-    # is dict insertion order — listing them first guarantees the
-    # r13 50-row sample drains them (VERDICT r12 item 1).
-    "hard_negative_mining": 13,
-    "int8_reconstruction_error": 13,
-    "knn_label_eval": 13,
-    "mutual_nn_pairs": 13,
-    "pq_adc_topk": 13,
-    "pq_code_assign": 13,
-    "pq_recall_eval": 13,
-    "triplet_margin_violation_rate": 13,
-    "vector_norm_stats": 13,
-    # --- the remaining r13 changed-code listings ---
-    "a3_unique_filter": 13,
-    "ab_power_mde": 13,
-    "ann_bruteforce_topk": 13,
-    "ann_ivf_multiprobe": 13,
-    "ann_ivf_topk": 13,
-    "ann_lsh_buckets": 13,
-    "ann_lsh_topk": 13,
-    "anomaly_rolling_zscore": 13,
-    "bigram_logprob_score": 13,
-    "bm25_doc_scores": 13,
-    "ccnet_perplexity_buckets": 13,
-    "char_coverage_vocab": 13,
-    "chunk_sliding_tokens": 13,
-    "cohens_kappa_agreement": 13,
-    "confusion_matrix_threshold": 13,
-    "cross_correlation_lags": 13,
-    "ctfidf_cluster_terms": 13,
-    "cuped_variance_reduction": 13,
-    "cusum_alert_path": 13,
-    "cusum_changepoint": 13,
-    "ddsketch_quantiles": 13,
-    "decision_stump_split": 13,
-    "decontaminate_eval_overlap": 13,
-    "dedup_corpus_segments": 13,
-    "dedup_corpus_segments_rewrite": 13,
-    "dedup_embedding_cosine": 13,
-    "dedup_embedding_lsh": 13,
-    "dedup_incremental_embedding": 13,
-    "dedup_semantic_kmeans": 13,
-    "dedup_simhash": 13,
-    "dedup_token_inflation": 13,
-    "diff_in_differences": 13,
-    "dsir_importance_weights": 13,
-    "embedding_drift_centroids": 13,
-    "embedding_gram_matrix": 13,
-    "embedding_label_centroids": 13,
-    "embedding_power_iteration": 13,
-    "embedding_quantize_int8": 13,
-    "embedding_standardize": 13,
-    "ewma_fixed_horizon": 13,
-    "feature_hash_counts": 13,
-    "gbdt_boosted_stumps": 13,
-    "grouped_arrow_value_stats": 13,
-    "grouped_ols_trend": 13,
-    "half_life_weighted_revenue": 13,
-    "hashed_linear_classifier": 13,
-    "hybrid_search_rrf": 13,
-    "inverted_index_build": 13,
-    "ivf_recall_eval": 13,
-    "kmeans_fixed_iters": 13,
-    "kmeans_lloyd": 13,
-    "kruskal_wallis_weekday": 13,
-    "linear_interpolate_gaps": 13,
-    "locf_impute": 13,
-    "lsh_recall_eval": 13,
-    "map_hof_suite": 13,
-    "mase_forecast_eval": 13,
-    "mcnemar_paired_test": 13,
-    "monotone_streak_lengths": 13,
-    "naive_bayes_lang_confusion": 13,
-    "ndcg_ranking_eval": 13,
-    "nearest_centroid_eval": 13,
-    "ohlc_daily_candles": 13,
-    "p12_mapper_chain": 13,
-    "p2_derived_values": 13,
-    "pandas_iter_udf_scoring": 13,
-    "pmi_collocations": 13,
-    "poisson_bootstrap_ci": 13,
-    "pr_curve_thresholds": 13,
-    "pretrain_corpus_pipeline": 13,
-    "python_datasource_stream_write": 13,
-    "rank_biased_overlap_eval": 13,
-    "repetition_quality_flags": 13,
-    "robust_outlier_bounds": 13,
-    "roc_auc_eval": 13,
-    "rolling_median_exact": 13,
-    "segment_novelty_rate": 13,
-    "segment_provenance_topk": 13,
-    "silhouette_sampled_eval": 13,
-    "sketch_count_min_topk": 13,
-    "source_overlap_matrix": 13,
-    "span_corruption_targets": 13,
-    "sprt_sequential_test": 13,
-    "sql_scripting_iterative_trim": 13,
-    "sql_table_function_lateral": 13,
-    "streaming_anomaly_zscore": 13,
-    "streaming_cusum_alert": 13,
-    "streaming_denylist_filter": 13,
-    "streaming_ohlc_candles": 13,
-    "streaming_segment_dedup": 13,
-    "streaming_sprt_decision": 13,
-    "streaming_stateful_counter": 13,
-    "streaming_stream_static_join": 13,
-    "streaming_tumbling_counts": 13,
-    "stupid_backoff_score": 13,
-    "telemetry_near_time_dedup": 13,
-    "text_boilerplate_strip": 13,
-    "text_fingerprint": 13,
-    "text_repetition_strip": 13,
-    "text_winnowing_fingerprint": 13,
-    "tfidf_topk_terms": 13,
-    "time_grouping_sets_rollup": 13,
-    "time_weighted_average": 13,
-    "token_entropy_score": 13,
-    "tokenizer_fertility_by_lang": 13,
-    "truncation_loss_report": 13,
-    "unigram_logprob_score": 13,
-    "vocab_coverage_curve": 13,
-    "vwap_daily": 13,
-    "welch_t_test_ab": 13,
-    "window_groups_frame_sum": 13,
-    "window_range_interval_frame": 13,
-    "window_sliding_counts": 13,
-    "window_tumbling_counts": 13,
-    "winnowing_neardup_pairs": 13,
-    "zipf_fit_slope": 13,
-    # --- r13 --stuck / --jsonedge arms (degenerate distributions +
-    # adversarial JSON). The jsonpath contract
-    # (functions/jsonpath.py: lenient extraction + integer-token-
-    # gated TRY_CAST on both engines) rewrote the oracle text of
-    # every events.props consumer — Spark's get_json_object NULLs
-    # malformed JSON while ungated DuckDB json_extract_string
-    # raises, and DuckDB's TRY_CAST rounds '2.5'→3 where Spark
-    # NULLs. ransac_slope_fit additionally gained the declared
-    # |x| <= 1e6 domain (exact int64 cross-multiplication
-    # headroom). All values on committed fixtures unchanged (every
-    # committed $.k is an integer literal in 0..99). The four
-    # --stuck names (grouped_ols_trend, welch_t_test_ab,
-    # half_life_weighted_revenue, vwap_daily) were already listed
-    # at vintage 13 above.
-    "json_extract_scalar": 13,
-    "json_roundtrip_structs": 13,
-    "null_handling_scalars": 13,
-    "p8_required_null_drop": 13,
-    "pandas_grouped_agg_udf": 13,
-    "ransac_slope_fit": 13,
-    "variant_shred_props": 13,
-    # --- r13 --timeskew arm (extreme event times). The portable /
-    # kernel / streaming / observation time-domain contracts
-    # (functions/timedomain.py) and the epoch_us-exact oracle
-    # respelling (epoch() is a DOUBLE whose ulp exceeds 1µs past year
-    # 2242; DuckDB TRY/engine trunc-vs-floor split pre-epoch) rewrote
-    # the engine lowering and/or oracle text of every events.ts
-    # consumer that diverged on the spike matrix, plus the 15 entries
-    # whose µs reconstruction idiom (unix_timestamp*1e6 + SSSSSS —
-    # wrong pre-epoch) was replaced by the shared epoch_us_ntz
-    # helper. Values on committed fixtures unchanged (all committed
-    # ts are 2024, post-epoch, mid-domain).
-    "as_of_snapshot_counts": 13,
-    "asof_last_signup": 13,
-    "asof_next_purchase": 13,
-    "asof_tolerance_join": 13,
-    "attribution_linear": 13,
-    "attribution_u_shaped": 13,
-    "cogroup_asof_pandas": 13,
-    "concurrent_sessions_peak": 13,
-    "cumulative_distinct_users": 13,
-    "dau_wau_stickiness": 13,
-    "events_rolling_dau": 13,
-    "hilbert_cluster_assign": 13,
-    "interarrival_burstiness": 13,
-    "interval_coverage_union": 13,
-    "range_join_bucketed": 13,
-    "scd2_intervals": 13,
-    "scd2_point_in_time_join": 13,
-    "seasonal_decompose_daily": 13,
-    "session_gap_sensitivity": 13,
-    "sessionize_events": 13,
-    "streaming_late_data_drop": 13,
-    "streaming_session_dynamic_gap": 13,
-    "streaming_session_window": 13,
-    "streaming_sliding_counts": 13,
-    "streaming_state_timeout_sessions": 13,
-    "streaming_stream_stream_full_outer": 13,
-    "streaming_stream_stream_left_outer": 13,
-    "streaming_windowed_distinct_users": 13,
-    "time_series_densify": 13,
-    "wilson_ci_conversion": 13,
-    "zorder_cluster_assign": 13,
-}
-
-# Names-only view (insertion order preserved) for consumers that only
-# need membership/order; tier math uses the vintages above.
-_REQUEUE: tuple[str, ...] = tuple(_REQUEUE_VINTAGE)
-
-# Baseline attestation set: entries with a green CORRECTNESS row from
-# the r01-r07 driver sweeps, kept as a static fallback ONLY for
-# environments where no CORRECTNESS_r*.json file can be parsed at all
-# (ADVICE r08: it must not be union'd into the live set, or a later
-# red row could never un-attest a baseline entry). The LIVE set below
-# (_CHECKED) is derived latest-wins from the committed driver files,
-# so from r09 on the drain is self-maintaining: a new
-# CORRECTNESS_r{N}.json moves its green rows into the checked set with
-# NO manual edit, and a red/errored row in the LATEST round an entry
-# was sampled un-attests it — the entry automatically re-queues at the
-# front of the sweep even if it was green in an earlier round.
-# (Verified at r08: the file-derived set equals this baseline exactly,
-# 279/279 both directions, and latest-wins equals the historical union
-# because every historically-red entry was re-attested green later.)
-_CHECKED_BASE: frozenset[str] = frozenset(
-    {
-        # r01 sweep
-        "flagship_words", "agg_percentiles", "agg_moment_stats",
-        "agg_correlation", "agg_min_by_max_by", "pivot_status_by_priority",
-        "unpivot_part_measures", "window_distribution_fns",
-        "window_range_frame", "array_functions", "in_subquery_filter",
-        "approx_count_distinct_hll", "approx_percentile_tdigest",
-        "table_sample", "udf_pandas_bridge", "agg_collect_set",
-        "posexplode_embedding", "string_transform_suite",
-        "time_series_densify", "dedup_exact", "dedup_exact_normalized",
-        "dedup_minhash_lsh", "dedup_simhash", "dedup_ngram_jaccard",
-        "dedup_embedding_cosine", "agg_conditional", "string_predicates",
-        "window_first_last_nth", "union_by_name", "null_handling_scalars",
-        "date_arithmetic", "event_funnel", "explode_outer_nulls",
-        "map_functions", "regexp_capture_groups", "ann_ivf_topk",
-        "kmeans_lloyd", "s1_files_list", "s5_file_lines",
-        "p1_static_values", "p2_derived_values", "p3_trans_values",
-        "p4_remove_key_paths", "p7_noop", "p8_required_null_drop",
-        "p9_filter_rows", "p10_ignore_tokens", "p11_remove_chars",
-        "p12_mapper_chain", "p13_scalar_helpers",
-        # r02 sweep
-        "a1_reduce_count", "a1_reduce_fold_sum", "a3_duplicates_only",
-        "a3_unique_filter", "a5_conservation_invariant",
-        "agg_count_distinct", "agg_having", "agg_sum_over_distinct",
-        "asof_last_signup", "dedup_cc_groups", "dedup_embedding_lsh",
-        "dedup_survivors", "grouped_map_zscore", "join_broadcast_chain",
-        "join_full_outer", "join_inner", "join_left_anti",
-        "join_left_outer", "join_left_semi", "join_right_outer",
-        "multimodal_binary_metadata", "multimodal_decode_stub",
-        "p14_remove_diac", "q1_pricing_summary", "q3_shipping_priority",
-        "q5_region_revenue", "range_join_bucketed", "s4_whole_text",
-        "scalar_subquery_filter", "sessionize_events", "setop_except",
-        "setop_intersect", "setop_union_all", "sort_limit_topk",
-        "streaming_dedup", "streaming_session_window",
-        "streaming_stateful_counter", "streaming_tumbling_counts",
-        "t2_tokenize_words", "t3_arabic_tokenize", "t4_pipeline_chain",
-        "window_lag_lead", "window_rank_dense", "window_row_number_topk",
-        "window_running_sum", "window_tumbling_counts",
-        # r03 sweep
-        "text_token_count", "text_lang_id", "text_quality_score",
-        "text_fingerprint", "ann_bruteforce_topk", "ann_lsh_topk",
-        "ann_lsh_buckets", "vector_norm_stats", "embedding_quantize_int8",
-        "salted_token_counts", "skew_salted_join", "two_stage_distinct",
-        "key_skew_profile", "orders_pareto_share", "events_rolling_dau",
-        "quality_topfrac_filter", "window_distribution_fns",
-        "text_pii_scrub", "corpus_curation", "decontaminate_eval_overlap",
-        "text_boilerplate_strip", "dataset_holdout_split",
-        "corpus_stats_summary", "dedup_incremental_minhash",
-        "minhash_recall_eval", "inverted_index_build", "text_ngram_topk",
-        "sql_q6_forecast", "user_retention_cohorts", "join_null_safe",
-        "agg_mode_deterministic", "robust_outlier_bounds",
-        "time_weighted_average", "window_sliding_counts", "agg_rollup",
-        "agg_cube", "agg_grouping_sets", "date_functions",
-        "string_functions", "json_extract_scalar",
-        "width_bucket_histogram", "merge_upsert", "table_profile",
-        "streaming_stream_static_join", "streaming_foreach_batch",
-        "multimodal_frame_sample", "pack_sequences_greedy",
-        "tfidf_topk_terms",
-        # r04 sweep
-        "pagerank_scaled", "zorder_cluster_assign", "q10_returned_items",
-        "q18_big_orders", "q12_priority_by_returnflag",
-        "q14_promo_revenue_share", "q7_nation_volume", "topk_per_group",
-        "cdc_latest_by_key", "scd2_intervals", "sample_stratified_hash",
-        "quantile_bucketize", "fuzzy_match_parts",
-        "embedding_label_centroids", "asof_next_purchase",
-        "text_rarity_score", "sketch_count_min_topk", "bpe_pair_counts",
-        "json_roundtrip_structs", "feature_hash_counts",
-        "q4_order_priority", "q13_customer_distribution",
-        "q16_supplier_part_counts", "q17_small_quantity_revenue",
-        "q19_disjunctive_revenue", "q22_idle_customers",
-        "q2_min_acctbal_supplier", "repetition_quality_flags",
-        "unigram_logprob_score", "domain_quota_sample", "snapshot_diff",
-        "tokenizer_fertility_by_lang", "streaming_stream_stream_join",
-        "recursive_bfs_levels", "lateral_nation_stats",
-        # r05 sweep
-        "q8_market_share", "q9_product_profit", "q15_top_supplier",
-        "q21_waiting_suppliers", "variant_shred_props",
-        "pipe_syntax_summary", "udtf_token_chunks",
-        "python_datasource_scan", "grouped_arrow_value_stats",
-        "observe_pipeline_metrics", "streaming_late_data_drop",
-        "triangle_count", "token_entropy_score", "script_mix_profile",
-        "bigram_logprob_score", "concurrent_sessions_peak",
-        "dedup_jaccard_prefix_filter", "pq_code_assign",
-        "streaming_sliding_counts", "streaming_complete_topk",
-        "ewma_fixed_horizon", "weighted_sample_topk",
-        "q11_important_parts", "q20_excess_suppliers",
-        "event_transition_matrix", "ann_ivf_multiprobe",
-        "embedding_standardize", "group_by_all_summary",
-        "sql_session_variables", "hll_sketch_partition_merge",
-        "csv_roundtrip_agg", "python_datasource_stream_scan",
-        "arrow_map_discount_bands", "agg_listagg_ordered",
-        "try_arithmetic_suite",
-        # r06 sweep
-        "attribution_linear", "basket_pair_lift", "bitmap_distinct_counts",
-        "bm25_doc_scores", "chunk_sliding_tokens", "cogroup_asof_pandas",
-        "compaction_binpack", "contamination_ngram_score",
-        "data_quality_checks", "dedup_corpus_segments",
-        "dedup_corpus_segments_rewrite", "dedup_semantic_kmeans",
-        "dedup_survivors_by_quality", "distribution_drift_psi",
-        "hits_hub_authority", "hybrid_search_rrf",
-        "incremental_rollup_merge", "ivf_recall_eval", "kcore_fixed_peels",
-        "kmeans_fixed_iters", "length_bucket_batching",
-        "negative_sampling_pairs", "orc_roundtrip_agg",
-        "pagerank_personalized", "pmi_collocations", "pq_adc_topk",
-        "pq_recall_eval", "preference_pairs_by_quality",
-        "pretrain_corpus_pipeline", "rfm_segmentation",
-        "seasonal_decompose_daily", "segment_novelty_rate",
-        "span_corruption_targets", "sql_udf_suite", "sssp_bellman_ford",
-        "text_winnowing_fingerprint", "tokenizer_vocab_coverage",
-        "transpose_status_metrics", "xml_roundtrip_extract",
-        # r07 sweep
-        "agg_having", "agg_rollup", "agg_sum_over_distinct",
-        "anomaly_rolling_zscore", "array_functions", "asof_tolerance_join",
-        "basket_pair_lift", "bpe_merge_train_steps",
-        "ccnet_perplexity_buckets", "chi_square_independence",
-        "data_quality_checks", "date_functions", "ddsketch_quantiles",
-        "decision_stump_split", "dedup_incremental_embedding",
-        "dedup_ngram_jaccard", "dedup_simhash",
-        "embedding_power_iteration", "grouped_ols_trend",
-        "hits_hub_authority", "interval_coverage_union",
-        "jsonl_roundtrip_agg", "mix_token_allocation",
-        "mix_weights_temperature", "multimodal_feature_extract",
-        "multimodal_resize_plan", "pagerank_personalized",
-        "pagerank_scaled", "pandas_api_groupby",
-        "partitioned_write_prune_agg", "posexplode_embedding",
-        "q1_pricing_summary", "q3_shipping_priority", "q5_region_revenue",
-        "rfm_segmentation", "scd2_point_in_time_join",
-        "schema_evolution_merge_read", "sketch_count_min_topk",
-        "sql_q6_forecast", "sssp_bellman_ford", "streaming_anomaly_zscore",
-        "streaming_segment_dedup", "text_neardup_recall_eval",
-        "text_repetition_strip", "text_winnowing_fingerprint",
-        "tfidf_topk_terms", "triangle_count", "welch_t_test_ab",
-        "window_ntile_buckets", "winnowing_neardup_pairs",
-    }
-)
-
-
-# Entries REGISTERED with oracle=None — the only names for which the
-# driver's rows-only form (err == "no_oracle") is a designed outcome.
-# A no_oracle row for any OTHER name means oracle construction broke
-# on the driver side, and must re-queue the entry instead of attesting
-# it (ADVICE r08). Pinned against the live registry by
-# tests/test_entry.py::test_rows_only_design_set_matches_registry.
-_ROWS_ONLY_BY_DESIGN: frozenset[str] = frozenset(
-    {
-        "approx_count_distinct_hll",
-        "approx_percentile_tdigest",
-        "table_sample",
-        "hll_sketch_partition_merge",
-        "kmeans_lloyd",
-        "doc_compression_ratio",
-    }
-)
-
-
-def _attestation_rows(
-    root: str | None = None,
-) -> tuple[dict[str, bool], int, dict[str, int]]:
-    """Latest driver verdict per entry across the committed
-    CORRECTNESS_r*.json files, iterated in ROUND order so a later row
-    overrides an earlier one (ADVICE r08: latest-wins — a red/errored
-    row in the most recent round an entry was sampled un-attests it,
-    even if it was green before, so regressions re-queue at the head
-    of the sweep). A verdict is green when the row is a full pass
-    (rows+schema+hash matched, no error) or the rows-only form for an
-    entry that is rows-only BY DESIGN (registered with oracle=None);
-    a no_oracle row for a value-checked entry is a broken oracle, not
-    a pass. Returns (verdicts, files_parsed, last_round) —
-    files_parsed == 0 lets the caller fall back to the static
-    baseline; last_round maps each name to the highest round it drew
-    ANY row (any verdict), the vintage input for _requeue_pending
-    (r12, VERDICT r11 item 2)."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-    import re as _re
-
-    if root is None:
-        root = _os.path.dirname(
-            _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-        )
-
-    def _round_no(path: str) -> int:
-        m = _re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        return int(m.group(1)) if m else -1
-
-    verdicts: dict[str, bool] = {}
-    last_round: dict[str, int] = {}
-    parsed = 0
-    for path in sorted(
-        _glob.glob(_os.path.join(root, "CORRECTNESS_r*.json")), key=_round_no
-    ):
-        try:
-            with open(path) as f:
-                data = _json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        parsed += 1
-        rnd = _round_no(path)
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            full = (
-                row.get("err") is None
-                and row.get("rows_match") is True
-                and row.get("schema_match") is True
-                and row.get("hash_match") is True
-            )
-            spark_rows = row.get("spark_rows")
-            rows_only = (
-                row.get("err") == "no_oracle"
-                and name in _ROWS_ONLY_BY_DESIGN
-                and isinstance(spark_rows, int)
-                and not isinstance(spark_rows, bool)
-                and spark_rows >= 0
-            )
-            verdicts[name] = full or rows_only
-            last_round[name] = max(rnd, last_round.get(name, -1))
-    return verdicts, parsed, last_round
-
-
-def _driver_attested(root: str | None = None) -> frozenset[str]:
-    """Names whose LATEST committed driver row is green (see
-    _attestation_rows). Empty when no CORRECTNESS file parses."""
-    verdicts, _, _ = _attestation_rows(root)
-    return frozenset(n for n, ok in verdicts.items() if ok)
-
-
-def _requeue_pending(root: str | None = None) -> frozenset[str]:
-    """The LIVE subset of the re-queue tier (r12, VERDICT r11 item 2):
-    names in _REQUEUE_VINTAGE whose latest committed driver row (any
-    verdict) predates the round their change landed — i.e. the fresh
-    post-change row the policy requires has not been drawn yet. Once
-    a row of round >= vintage lands, the name turns inert and sinks
-    out of tier 1 with no manual edit; a red fresh row un-attests via
-    _CHECKED and the entry rejoins tier 0 instead. With no parseable
-    CORRECTNESS file the whole tier is conservatively pending."""
-    _, parsed, last_round = _attestation_rows(root)
-    if not parsed:
-        return frozenset(_REQUEUE_VINTAGE)
-    return frozenset(
-        n
-        for n, vintage in _REQUEUE_VINTAGE.items()
-        if last_round.get(n, -1) < vintage
-    )
-
-
-_verdicts, _files_parsed, _ = _attestation_rows()
-_CHECKED: frozenset[str] = (
-    frozenset(n for n, ok in _verdicts.items() if ok)
-    if _files_parsed
-    else _CHECKED_BASE
-)
-del _verdicts, _files_parsed
-
-# Pending re-queues on the COMMITTED files at import time — the set
-# tier 1 is built from. Derived, never hand-edited.
-_REQUEUE_PENDING: frozenset[str] = _requeue_pending()
-
-
-def _ordered_names() -> list[str]:
-    """Sweep order, self-maintaining against the committed CORRECTNESS
-    files (r08; latest-wins since r09): tier 0 = never-attested entries
-    in _PRIORITY order (unlisted ones by insertion order after the
-    listed ones) — once a driver file attests an entry its _PRIORITY
-    listing becomes inert and it sinks to tier 2 automatically, and an
-    entry whose LATEST row went red un-attests and rejoins tier 0, so
-    the next round's ~50-row sample always lands on fresh-or-regressed
-    entries with no manual reorder; tier 1 = the PENDING subset of
-    _REQUEUE (changed code whose latest driver row predates the
-    change — see _requeue_pending; an inert listing sinks to tier 2
-    automatically, r12), tier 2 = attested, current."""
-    rank = {n: i for i, n in enumerate(_PRIORITY)}
-    requeue = {n: i for i, n in enumerate(_REQUEUE)}
-    insertion = {n: i for i, n in enumerate(REGISTRY)}
-    big = len(REGISTRY)
-
-    def key(n: str) -> tuple[int, int, int]:
-        if n not in _CHECKED:
-            return (0, rank.get(n, big), insertion[n])
-        if n in _REQUEUE_PENDING:
-            return (1, requeue[n], insertion[n])
-        return (2, big, insertion[n])
-
-    return sorted(REGISTRY, key=key)
-
-
 def queries() -> dict[str, QueryFn]:
     _load_all()
     out = {}
-    for name in _ordered_names():
+    for name in sorted(REGISTRY):
         spec = REGISTRY[name]
         # Attribute-tag the callable so a driver that only sees
         # queries() can consume the tolerance policy without a side
@@ -853,7 +121,7 @@ def query_metadata() -> dict[str, dict]:
             "ulp_sensitive": REGISTRY[name].ulp_sensitive,
             "has_oracle": REGISTRY[name].oracle is not None,
         }
-        for name in _ordered_names()
+        for name in sorted(REGISTRY)
     }
 
 
@@ -861,6 +129,6 @@ def oracle_sql() -> dict[str, str]:
     _load_all()
     return {
         name: REGISTRY[name].oracle
-        for name in _ordered_names()
+        for name in sorted(REGISTRY)
         if REGISTRY[name].oracle is not None
     }

@@ -608,8 +608,6 @@ def main() -> None:
     empty_mode = "--empty" in flags
     build = _MODES[flags[0]] if flags else build_fixture
     only = set(a for a in args if not a.startswith("--"))
-    from pyspark.sql import SparkSession
-
     from compare import compare  # tests/compare.py
     import duckdb
 
@@ -618,6 +616,7 @@ def main() -> None:
         REGISTRY,
         _load_all,
     )
+    from tiny_etl_multiproc_bigdata_spark.session import get_spark
 
     _load_all()
     from tiny_etl_multiproc_bigdata_spark.plans.registry import REGISTRY as _R
@@ -629,13 +628,7 @@ def main() -> None:
     build(fix)
 
     def _new_session():
-        return (
-            SparkSession.builder.master("local[16]")
-            .config("spark.sql.shuffle.partitions", "16")
-            .config("spark.ui.enabled", "false")
-            .appName("null-parity-audit")
-            .getOrCreate()
-        )
+        return get_spark(app_name="null-parity-audit")
 
     spark = _new_session()
     sc = spark.sparkContext

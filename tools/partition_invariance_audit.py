@@ -256,12 +256,11 @@ def run_pass(spark, names, registry, confs, label: str, sf_dir: str) -> dict:
 
 def main() -> None:
     only = set(sys.argv[1:])
-    from pyspark.sql import SparkSession
-
     from tiny_etl_multiproc_bigdata_spark.plans.registry import (
         REGISTRY,
         _load_all,
     )
+    from tiny_etl_multiproc_bigdata_spark.session import get_spark
 
     _load_all()
     bad = sorted(only - set(REGISTRY))
@@ -274,12 +273,7 @@ def main() -> None:
     )
     build_fixture(fix)
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.ui.enabled", "false")
-        .appName("partition-invariance-audit")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="partition-invariance-audit")
 
     base = run_pass(spark, names, REGISTRY, BASELINE_CONFS, "baseline", fix)
     pert = run_pass(spark, names, REGISTRY, PERTURBED_CONFS, "perturbed", fix)

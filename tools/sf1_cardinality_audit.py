@@ -33,6 +33,8 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from tiny_etl_multiproc_bigdata_spark.session import get_spark
+
 
 def audit(spark: SparkSession, sf_dir: str) -> dict:
     from tiny_etl_multiproc_bigdata_spark.catalog import table
@@ -191,13 +193,7 @@ def _pair_stage_counts(spark: SparkSession, sf_dir: str) -> dict:
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false")
-        .appName("sf1-cardinality-audit")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="sf1-cardinality-audit")
     sf01 = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf1 = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

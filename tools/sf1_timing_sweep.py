@@ -34,20 +34,13 @@ import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-from pyspark.sql import SparkSession
+from tiny_etl_multiproc_bigdata_spark.session import get_spark
 
 WATCHDOG_S = 150
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        .appName("sf1-timing-sweep")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="sf1-timing-sweep")
     sc = spark.sparkContext
     from tiny_etl_multiproc_bigdata_spark.benchgen import (
         ensure_sf1,
