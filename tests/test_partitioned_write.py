@@ -44,13 +44,12 @@ def test_nested_leaf_pruning(spark, sf_dir):
     import re
 
     from tiny_etl_multiproc_bigdata_spark.plans.registry import queries
+    from tiny_etl_multiproc_bigdata_spark.sources.files import staging_root
 
     import contextlib
     import io
 
-    import hashlib
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -58,10 +57,7 @@ def test_nested_leaf_pruning(spark, sf_dir):
     # raw read plan (the entry itself returns a checkpointed snapshot,
     # whose plan no longer shows the scan)
     queries()["nested_field_pruning_agg"](spark, sf_dir)
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    data_dir = os.path.join(
-        tempfile.gettempdir(), f"spark_nested_{tag}", "data"
-    )
+    data_dir = os.path.join(staging_root(sf_dir, "nested"), "data")
     df = spark.read.parquet(data_dir).select(
         F.col("meta.priority"), F.col("meta.money.cents")
     )

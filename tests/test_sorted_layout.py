@@ -15,13 +15,12 @@ each span ~the whole date range.
 from __future__ import annotations
 
 import glob
-import hashlib
 import os
-import tempfile
 
 import pyarrow.parquet as pq
 
 from conftest import SF_DIR
+from tiny_etl_multiproc_bigdata_spark.sources.files import staging_root
 
 
 def _spans(d: str) -> list[tuple]:
@@ -45,8 +44,7 @@ def test_sorted_layout_is_physically_clustered(spark):
     rows = REGISTRY["sorted_write_layout"].fn(spark, SF_DIR).collect()
     assert {r["layout"] for r in rows} == {"arrival", "sorted"}
 
-    tag = hashlib.md5(SF_DIR.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spark_sortlayout_{tag}")
+    root = staging_root(SF_DIR, "sortlayout")
     arrival = _spans(os.path.join(root, "arrival"))
     srt = _spans(os.path.join(root, "sorted"))
     assert arrival and srt

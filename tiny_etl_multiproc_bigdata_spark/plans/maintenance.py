@@ -30,6 +30,7 @@ from tiny_etl_multiproc_bigdata_spark.functions.rounding import (
     round_half_up,
 )
 from tiny_etl_multiproc_bigdata_spark.plans.registry import register
+from tiny_etl_multiproc_bigdata_spark.sources.files import staged_dir
 
 # Inserted rows get keys shifted far past the fixture key range.
 _NEW_KEY_OFFSET = 1_000_000_000
@@ -1240,13 +1241,8 @@ def sorted_write_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads stay partition-parallel. Scan-cost recovery is measured in
     bench.py at sf1 (real 10x key growth) rather than asserted here —
     the sf0.01 fixture's key space never overflows a dictionary page,
-    so the effect only exists at scale. Staging discipline (fixed
-    per-sf dir, flock, eager snapshot under the lock) matches the
-    csv/orc/partitioned roundtrips in sources/files.py."""
-    import fcntl
-    import hashlib
+    so the effect only exists at scale. Stages in ``staged_dir``."""
     import os
-    import tempfile
 
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
@@ -1255,31 +1251,23 @@ def sorted_write_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_extendedprice",
         "l_shipdate",
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spark_sortlayout_{tag}")
-    arrival_dir = os.path.join(root, "arrival")
-    sorted_dir = os.path.join(root, "sorted")
-    with open(root + ".lock", "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        try:
-            li.write.mode("overwrite").parquet(arrival_dir)
-            (
-                li.repartitionByRange(
-                    _LAYOUT_PARTS, "l_shipdate", "l_orderkey"
-                )
-                .sortWithinPartitions("l_shipdate", "l_orderkey")
-                .write.mode("overwrite")
-                .parquet(sorted_dir)
+    with staged_dir(sf_dir, "sortlayout") as root:
+        arrival_dir = os.path.join(root, "arrival")
+        sorted_dir = os.path.join(root, "sorted")
+        li.write.mode("overwrite").parquet(arrival_dir)
+        (
+            li.repartitionByRange(_LAYOUT_PARTS, "l_shipdate", "l_orderkey")
+            .sortWithinPartitions("l_shipdate", "l_orderkey")
+            .write.mode("overwrite")
+            .parquet(sorted_dir)
+        )
+        snaps = {
+            name: spark.read.parquet(path).localCheckpoint(eager=True)
+            for name, path in (
+                ("arrival", arrival_dir),
+                ("sorted", sorted_dir),
             )
-            snaps = {
-                name: spark.read.parquet(path).localCheckpoint(eager=True)
-                for name, path in (
-                    ("arrival", arrival_dir),
-                    ("sorted", sorted_dir),
-                )
-            }
-        finally:
-            fcntl.flock(lock, fcntl.LOCK_UN)
+        }
 
     def fidelity(name: str, df: DataFrame) -> DataFrame:
         return df.agg(

@@ -11,6 +11,14 @@ filtered after the fact) and content reading are one distributed scan.
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
+import hashlib
+import os
+import shutil
+import tempfile
+from collections.abc import Iterator
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -91,6 +99,43 @@ def read_file_lines(
     return out
 
 
+def staging_root(sf_dir: str, name: str) -> str:
+    """The fixed staging dir of registry entry ``name`` at scale
+    ``sf_dir``: ``$TMPDIR/spark_<name>_<md5(sf_dir)[:8]>``."""
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    return os.path.join(tempfile.gettempdir(), f"spark_{name}_{tag}")
+
+
+@contextlib.contextmanager
+def staged_dir(sf_dir: str, name: str) -> Iterator[str]:
+    """Exclusive, freshly emptied staging dir for an entry that writes
+    files and reads them back.
+
+    The root is ONE fixed dir per (scale, entry) — ``staging_root`` —
+    so the temp dir holds at most one staged copy per sf forever. The block
+    runs under an exclusive ``flock`` on ``<root>.lock``, so a
+    concurrent invocation (a driver sweep overlapping a bench run)
+    blocks for the seconds the stage needs instead of clearing the
+    other's in-flight files: the r02 advice's race, closed without the
+    per-pid dir leak the r03 review caught in the first fix. The root
+    is cleared and recreated under the lock, so no file of an earlier
+    run is ever read back.
+
+    The caller must snapshot what it returns (eager
+    ``localCheckpoint`` or ``_run_to_memory``) INSIDE the ``with``:
+    the next run clears these files the moment the lock releases.
+    """
+    root = staging_root(sf_dir, name)
+    with open(root + ".lock", "w") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        try:
+            shutil.rmtree(root, ignore_errors=True)
+            os.makedirs(root)
+            yield root
+        finally:
+            fcntl.flock(lock, fcntl.LOCK_UN)
+
+
 def _register_csv_roundtrip() -> None:
     from tiny_etl_multiproc_bigdata_spark.plans.registry import register
 
@@ -112,18 +157,11 @@ def _register_csv_roundtrip() -> None:
         no other registry entry exercises — and aggregate; the oracle
         runs the same aggregate on the original parquet, so the
         roundtrip must be lossless (delimiters, headers, numeric
-        parsing). Same staging discipline as streaming_foreach_batch:
-        one fixed dir per sf, exclusive flock, eager localCheckpoint
-        under the lock so the returned frame survives a concurrent
-        run's overwrite. quantity stages as its DECIMAL(30,2) cents
-        rendering so the text roundtrip is exact (a raw double would
-        print shortest-repr and reparse exactly too, but the decimal
-        form also pins the column's scale in the file)."""
-        import fcntl
-        import hashlib
-        import os
-        import tempfile
-
+        parsing). Stages in ``staged_dir``. quantity stages as its
+        DECIMAL(30,2) cents rendering so the text roundtrip is exact
+        (a raw double would print shortest-repr and reparse exactly
+        too, but the decimal form also pins the column's scale in the
+        file)."""
         from tiny_etl_multiproc_bigdata_spark.catalog import table
         from tiny_etl_multiproc_bigdata_spark.functions.rounding import (
             round_half_up,
@@ -135,25 +173,19 @@ def _register_csv_roundtrip() -> None:
             "l_returnflag",
             F.col("l_quantity").cast("decimal(30,2)").alias("l_quantity"),
         )
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        root = os.path.join(tempfile.gettempdir(), f"spark_csvrt_{tag}")
-        data_dir = os.path.join(root, "data")
-        with open(root + ".lock", "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            try:
-                csv_load(li, data_dir)
-                back = (
-                    spark.read.option("sep", ";")
-                    .option("header", "true")
-                    .schema(
-                        "l_orderkey bigint, l_returnflag string, "
-                        "l_quantity decimal(30,2)"
-                    )
-                    .csv(data_dir)
-                    .localCheckpoint(eager=True)
+        with staged_dir(sf_dir, "csvrt") as root:
+            data_dir = os.path.join(root, "data")
+            csv_load(li, data_dir)
+            back = (
+                spark.read.option("sep", ";")
+                .option("header", "true")
+                .schema(
+                    "l_orderkey bigint, l_returnflag string, "
+                    "l_quantity decimal(30,2)"
                 )
-            finally:
-                fcntl.flock(lock, fcntl.LOCK_UN)
+                .csv(data_dir)
+                .localCheckpoint(eager=True)
+            )
         return back.groupBy("l_returnflag").agg(
             F.count("*").alias("n"),
             round_half_up(F.sum("l_quantity").cast("double"), 2).alias(
@@ -192,14 +224,7 @@ def _register_orc_roundtrip() -> None:
         lossless. Exercises Spark's second columnar format end-to-end —
         at 100 TB the ORC path matters for interop with Hive-era lakes,
         and it inherits the same predicate-pushdown/column-pruning
-        contract as parquet. Same staging discipline as
-        csv_roundtrip_agg: fixed per-sf dir, exclusive flock, eager
-        localCheckpoint under the lock."""
-        import fcntl
-        import hashlib
-        import os
-        import tempfile
-
+        contract as parquet. Stages in ``staged_dir``."""
         from tiny_etl_multiproc_bigdata_spark.catalog import table
 
         o = table(spark, sf_dir, "orders").select(
@@ -208,16 +233,10 @@ def _register_orc_roundtrip() -> None:
             .cast("bigint")
             .alias("o_totalprice_cents"),
         )
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        root = os.path.join(tempfile.gettempdir(), f"spark_orcrt_{tag}")
-        data_dir = os.path.join(root, "data")
-        with open(root + ".lock", "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            try:
-                o.write.mode("overwrite").orc(data_dir)
-                back = spark.read.orc(data_dir).localCheckpoint(eager=True)
-            finally:
-                fcntl.flock(lock, fcntl.LOCK_UN)
+        with staged_dir(sf_dir, "orcrt") as root:
+            data_dir = os.path.join(root, "data")
+            o.write.mode("overwrite").orc(data_dir)
+            back = spark.read.orc(data_dir).localCheckpoint(eager=True)
         return back.groupBy("o_orderpriority").agg(
             F.count("*").alias("n"),
             F.sum("o_totalprice_cents").cast("bigint").alias("total_cents"),
@@ -255,35 +274,23 @@ def _register_jsonl_roundtrip() -> None:
         aggregate INCLUDES an order-insensitive corpus hash (md5 of the
         doc-id-ordered per-doc text md5s), so the oracle proves the
         text survived JSON escaping byte-exactly — newlines, quotes,
-        unicode and all — not just that row counts match. Same staging
-        discipline as csv/orc_roundtrip_agg: fixed per-sf dir,
-        exclusive flock, eager localCheckpoint under the lock.
+        unicode and all — not just that row counts match. Stages in
+        ``staged_dir``.
 
         100 TB shape: JSONL is splittable by line, so the read stays
         partition-parallel; schema is explicit on read (never
         inferSchema over a corpus — that is a full extra scan)."""
-        import fcntl
-        import hashlib
-        import os
-        import tempfile
-
         from tiny_etl_multiproc_bigdata_spark.catalog import table
 
         d = table(spark, sf_dir, "documents").select(
             "doc_id", "lang", "text"
         )
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        root = os.path.join(tempfile.gettempdir(), f"spark_jsonrt_{tag}")
-        data_dir = os.path.join(root, "data")
-        with open(root + ".lock", "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            try:
-                d.write.mode("overwrite").json(data_dir)
-                back = spark.read.schema(
-                    "doc_id bigint, lang string, text string"
-                ).json(data_dir).localCheckpoint(eager=True)
-            finally:
-                fcntl.flock(lock, fcntl.LOCK_UN)
+        with staged_dir(sf_dir, "jsonrt") as root:
+            data_dir = os.path.join(root, "data")
+            d.write.mode("overwrite").json(data_dir)
+            back = spark.read.schema(
+                "doc_id bigint, lang string, text string"
+            ).json(data_dir).localCheckpoint(eager=True)
         from tiny_etl_multiproc_bigdata_spark.functions.text import (
             tokenize_words_nonempty,
         )
@@ -341,39 +348,24 @@ def _register_partitioned_roundtrip() -> None:
         original parquet — the roundtrip plus pruning must be lossless.
         At 100 TB this is the difference between scanning one language
         partition and the whole corpus; the same mechanics drive
-        date-partitioned ingest layouts. Same staging discipline as
-        csv/orc roundtrips (fixed per-sf dir, flock, eager snapshot
-        under the lock)."""
-        import fcntl
-        import hashlib
-        import os
-        import tempfile
-
+        date-partitioned ingest layouts. Stages in ``staged_dir``."""
         from tiny_etl_multiproc_bigdata_spark.catalog import table
 
         d = table(spark, sf_dir, "documents").select(
             "doc_id", "source", "n_chars", "lang"
         )
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        root = os.path.join(tempfile.gettempdir(), f"spark_partrt_{tag}")
-        data_dir = os.path.join(root, "data")
-        with open(root + ".lock", "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            try:
-                d.write.mode("overwrite").partitionBy("lang").parquet(
-                    data_dir
-                )
-                # explicit schema (r11 empty-input audit): an EMPTY
-                # write leaves no files to infer from — production
-                # readers of a partitioned table carry the schema
-                back = (
-                    spark.read.schema(d.schema)
-                    .parquet(data_dir)
-                    .where(F.col("lang") == "en")
-                    .localCheckpoint(eager=True)
-                )
-            finally:
-                fcntl.flock(lock, fcntl.LOCK_UN)
+        with staged_dir(sf_dir, "partrt") as root:
+            data_dir = os.path.join(root, "data")
+            d.write.mode("overwrite").partitionBy("lang").parquet(data_dir)
+            # explicit schema (r11 empty-input audit): an EMPTY
+            # write leaves no files to infer from — production
+            # readers of a partitioned table carry the schema
+            back = (
+                spark.read.schema(d.schema)
+                .parquet(data_dir)
+                .where(F.col("lang") == "en")
+                .localCheckpoint(eager=True)
+            )
         return back.groupBy("source").agg(
             F.count("*").alias("n"),
             F.sum("n_chars").cast("bigint").alias("total_chars"),
@@ -409,13 +401,8 @@ def _register_schema_evolution() -> None:
         priority-bearing, so the oracle (a CASE over the original
         table) pins both the union semantics and the NULL-fill.
         The lake-reality primitive every long-lived 100 TB table needs:
-        schema change must not require rewriting history. Same staging
-        discipline as the csv/orc/partitioned roundtrips."""
-        import fcntl
-        import hashlib
-        import os
-        import tempfile
-
+        schema change must not require rewriting history. Stages in
+        ``staged_dir``."""
         from tiny_etl_multiproc_bigdata_spark.catalog import table
 
         o = table(spark, sf_dir, "orders").select(
@@ -426,27 +413,21 @@ def _register_schema_evolution() -> None:
             .cast("bigint")
             .alias("cents"),
         )
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        root = os.path.join(tempfile.gettempdir(), f"spark_evort_{tag}")
-        data_dir = os.path.join(root, "data")
-        with open(root + ".lock", "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            try:
-                old = o.where(F.col("o_orderdate") < "1996-01-01").select(
-                    "o_orderkey", "cents"
-                )
-                new = o.where(F.col("o_orderdate") >= "1996-01-01").select(
-                    "o_orderkey", "cents", "o_orderpriority"
-                )
-                old.write.mode("overwrite").parquet(f"{data_dir}/v=1")
-                new.write.mode("overwrite").parquet(f"{data_dir}/v=2")
-                back = (
-                    spark.read.option("mergeSchema", "true")
-                    .parquet(data_dir)
-                    .localCheckpoint(eager=True)
-                )
-            finally:
-                fcntl.flock(lock, fcntl.LOCK_UN)
+        old = o.where(F.col("o_orderdate") < "1996-01-01").select(
+            "o_orderkey", "cents"
+        )
+        new = o.where(F.col("o_orderdate") >= "1996-01-01").select(
+            "o_orderkey", "cents", "o_orderpriority"
+        )
+        with staged_dir(sf_dir, "evort") as root:
+            data_dir = os.path.join(root, "data")
+            old.write.mode("overwrite").parquet(f"{data_dir}/v=1")
+            new.write.mode("overwrite").parquet(f"{data_dir}/v=2")
+            back = (
+                spark.read.option("mergeSchema", "true")
+                .parquet(data_dir)
+                .localCheckpoint(eager=True)
+            )
         return back.agg(
             F.count("*").cast("bigint").alias("n"),
             F.count("o_orderpriority").cast("bigint").alias(
@@ -490,29 +471,22 @@ def _register_dynamic_partition_overwrite() -> None:
         proves both halves: en reflects the second write, the rest
         still reflect the first. This is the daily-reload primitive of
         date-partitioned lakes (reload today's partition, keep
-        history). Same staging discipline as the sibling roundtrips
-        (per-sf dir, flock, eager snapshot under the lock); the
-        session-level mode flag is restored in a finally.
+        history). Stages in ``staged_dir``; the session-level mode flag
+        is restored in a finally.
 
         100 TB shape: the overwrite's cost is proportional to the
         REPLACED partitions only — commit is a directory swap per
         touched partition, never a table rewrite."""
-        import fcntl
-        import hashlib
-        import os
-        import tempfile
-
         from tiny_etl_multiproc_bigdata_spark.catalog import table
 
         d = table(spark, sf_dir, "documents").select(
             "doc_id", "source", "n_chars", "lang"
         )
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        root = os.path.join(tempfile.gettempdir(), f"spark_dynpo_{tag}")
-        data_dir = os.path.join(root, "data")
-        os.makedirs(root, exist_ok=True)
-        with open(root + ".lock", "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
+        en_half = d.filter(
+            (F.col("lang") == "en") & (F.col("doc_id") % 2 == 0)
+        )
+        with staged_dir(sf_dir, "dynpo") as root:
+            data_dir = os.path.join(root, "data")
             prev = spark.conf.get(
                 "spark.sql.sources.partitionOverwriteMode", "static"
             )
@@ -522,9 +496,6 @@ def _register_dynamic_partition_overwrite() -> None:
                 )
                 spark.conf.set(
                     "spark.sql.sources.partitionOverwriteMode", "dynamic"
-                )
-                en_half = d.filter(
-                    (F.col("lang") == "en") & (F.col("doc_id") % 2 == 0)
                 )
                 en_half.write.mode("overwrite").partitionBy("lang").parquet(
                     data_dir
@@ -540,7 +511,6 @@ def _register_dynamic_partition_overwrite() -> None:
                 spark.conf.set(
                     "spark.sql.sources.partitionOverwriteMode", prev
                 )
-                fcntl.flock(lock, fcntl.LOCK_UN)
         return back.groupBy("lang").agg(
             F.count("*").alias("n"),
             F.sum("n_chars").cast("bigint").alias("total_chars"),
@@ -587,16 +557,11 @@ def _register_csv_permissive() -> None:
         oracle never parses the CSV — it derives the expected outcome
         from the same rules applied relationally, so a parser
         divergence (swallowed lines, mis-split quotes) cannot cancel
-        out.
+        out. Stages in ``staged_dir``.
 
         100 TB shape: CSV parsing is per-split streaming; PERMISSIVE
         keeps one bad upstream line from failing a 10-hour ingest —
         the corrupt column IS the dead-letter queue."""
-        import fcntl
-        import hashlib
-        import os
-        import tempfile
-
         from tiny_etl_multiproc_bigdata_spark.catalog import table
 
         rows = (
@@ -605,37 +570,30 @@ def _register_csv_permissive() -> None:
             .select("doc_id", "source", "n_chars")
             .collect()
         )
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        root = os.path.join(tempfile.gettempdir(), f"spark_csvperm_{tag}")
-        os.makedirs(root, exist_ok=True)
-        path = os.path.join(root, "data.csv")
-        with open(root + ".lock", "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            try:
-                with open(path, "w") as f:
-                    for r in sorted(rows, key=lambda r: r["doc_id"]):
-                        src = (
-                            f'"{r["source"]};ok"'
-                            if r["doc_id"] % 7 == 0
-                            else r["source"]
-                        )
-                        line = f'{r["doc_id"]};{src};{r["n_chars"]}'
-                        if r["doc_id"] % 13 == 0:
-                            line += ";EXTRA"
-                        f.write(line + "\n")
-                back = (
-                    spark.read.schema(
-                        "doc_id long, source string, n_chars long, "
-                        "_corrupt_record string"
+        with staged_dir(sf_dir, "csvperm") as root:
+            path = os.path.join(root, "data.csv")
+            with open(path, "w") as f:
+                for r in sorted(rows, key=lambda r: r["doc_id"]):
+                    src = (
+                        f'"{r["source"]};ok"'
+                        if r["doc_id"] % 7 == 0
+                        else r["source"]
                     )
-                    .option("sep", ";")
-                    .option("mode", "PERMISSIVE")
-                    .option("columnNameOfCorruptRecord", "_corrupt_record")
-                    .csv(path)
-                    .localCheckpoint(eager=True)
+                    line = f'{r["doc_id"]};{src};{r["n_chars"]}'
+                    if r["doc_id"] % 13 == 0:
+                        line += ";EXTRA"
+                    f.write(line + "\n")
+            back = (
+                spark.read.schema(
+                    "doc_id long, source string, n_chars long, "
+                    "_corrupt_record string"
                 )
-            finally:
-                fcntl.flock(lock, fcntl.LOCK_UN)
+                .option("sep", ";")
+                .option("mode", "PERMISSIVE")
+                .option("columnNameOfCorruptRecord", "_corrupt_record")
+                .csv(path)
+                .localCheckpoint(eager=True)
+            )
         good = F.col("_corrupt_record").isNull()
         # count_if, not sum(when): the oracle's count(CASE) is 0 over
         # an empty file while sum is NULL (r11 empty-input audit)
@@ -678,66 +636,54 @@ def _register_federated_union() -> None:
         streams land as JSONL, curated zones are parquet, and the
         query layer must treat them as one relation. The oracle states
         the invariant directly: three lossless copies triple every
-        count exactly.
+        count exactly. Stages in ``staged_dir``.
 
         100 TB shape: each leg scans with its own reader
         (pruning/pushdown quality differs per format — parquet prunes,
         CSV cannot; that asymmetry is inherent) and the union is
         plan-level, no materialized concatenation; partial aggregation
         folds per leg before the shared shuffle."""
-        import fcntl
-        import hashlib
-        import os
-        import tempfile
-
         from tiny_etl_multiproc_bigdata_spark.catalog import table
 
         d = table(spark, sf_dir, "documents").select(
             "doc_id", "lang", "n_chars"
         )
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        root = os.path.join(tempfile.gettempdir(), f"spark_fedun_{tag}")
-        os.makedirs(root, exist_ok=True)
-        pq, csvd, jl = (os.path.join(root, x) for x in ("pq", "csv", "jl"))
-        with open(root + ".lock", "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            try:
-                d.write.mode("overwrite").parquet(pq)
-                d.select("lang", "n_chars", "doc_id").write.mode(
-                    "overwrite"
-                ).option("header", True).csv(csvd)
-                d.select("n_chars", "doc_id", "lang").write.mode(
-                    "overwrite"
-                ).json(jl)
-                a = spark.read.schema(d.schema).parquet(pq)
-                # explicit schemas (r11 empty-input audit): CSV/JSON
-                # legs of an empty federation have no rows (or even no
-                # header files) to infer from
-                b = spark.read.option("header", True).schema(
-                    "lang string, n_chars bigint, doc_id bigint"
-                ).csv(csvd)
-                c = spark.read.schema(
-                    "n_chars bigint, doc_id bigint, lang string"
-                ).json(jl)
-                back = (
-                    a.unionByName(
-                        b.select(
-                            F.col("doc_id").cast("long"),
-                            "lang",
-                            F.col("n_chars").cast("long"),
-                        )
+        with staged_dir(sf_dir, "fedun") as root:
+            pq, csvd, jl = (os.path.join(root, x) for x in ("pq", "csv", "jl"))
+            d.write.mode("overwrite").parquet(pq)
+            d.select("lang", "n_chars", "doc_id").write.mode(
+                "overwrite"
+            ).option("header", True).csv(csvd)
+            d.select("n_chars", "doc_id", "lang").write.mode(
+                "overwrite"
+            ).json(jl)
+            a = spark.read.schema(d.schema).parquet(pq)
+            # explicit schemas (r11 empty-input audit): CSV/JSON
+            # legs of an empty federation have no rows (or even no
+            # header files) to infer from
+            b = spark.read.option("header", True).schema(
+                "lang string, n_chars bigint, doc_id bigint"
+            ).csv(csvd)
+            c = spark.read.schema(
+                "n_chars bigint, doc_id bigint, lang string"
+            ).json(jl)
+            back = (
+                a.unionByName(
+                    b.select(
+                        F.col("doc_id").cast("long"),
+                        "lang",
+                        F.col("n_chars").cast("long"),
                     )
-                    .unionByName(
-                        c.select(
-                            F.col("doc_id").cast("long"),
-                            "lang",
-                            F.col("n_chars").cast("long"),
-                        )
-                    )
-                    .localCheckpoint(eager=True)
                 )
-            finally:
-                fcntl.flock(lock, fcntl.LOCK_UN)
+                .unionByName(
+                    c.select(
+                        F.col("doc_id").cast("long"),
+                        "lang",
+                        F.col("n_chars").cast("long"),
+                    )
+                )
+                .localCheckpoint(eager=True)
+            )
         return back.groupBy("lang").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
             F.sum("n_chars").cast("bigint").alias("total_chars"),
@@ -773,16 +719,11 @@ def _register_nested_field_pruning() -> None:
         tests/test_partitioned_write.py::test_nested_leaf_pruning), so
         a 2-leaf query over a 50-field envelope reads 2 columns. The
         oracle aggregates the flat original — the fold/unfold must be
-        lossless.
+        lossless. Stages in ``staged_dir``.
 
         100 TB shape: leaf-level I/O plus map-side combine; without
         nested pruning the scan would materialize the full struct per
         row — the usual envelope tax this entry exists to refuse."""
-        import fcntl
-        import hashlib
-        import os
-        import tempfile
-
         from tiny_etl_multiproc_bigdata_spark.catalog import table
 
         o = table(spark, sf_dir, "orders").select(
@@ -799,24 +740,17 @@ def _register_nested_field_pruning() -> None:
                 F.col("o_custkey").alias("custkey"),
             ).alias("meta"),
         )
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        root = os.path.join(tempfile.gettempdir(), f"spark_nested_{tag}")
-        data_dir = os.path.join(root, "data")
-        os.makedirs(root, exist_ok=True)
-        with open(root + ".lock", "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            try:
-                o.write.mode("overwrite").parquet(data_dir)
-                back = (
-                    spark.read.parquet(data_dir)
-                    .select(
-                        F.col("meta.priority").alias("priority"),
-                        F.col("meta.money.cents").alias("cents"),
-                    )
-                    .localCheckpoint(eager=True)
+        with staged_dir(sf_dir, "nested") as root:
+            data_dir = os.path.join(root, "data")
+            o.write.mode("overwrite").parquet(data_dir)
+            back = (
+                spark.read.parquet(data_dir)
+                .select(
+                    F.col("meta.priority").alias("priority"),
+                    F.col("meta.money.cents").alias("cents"),
                 )
-            finally:
-                fcntl.flock(lock, fcntl.LOCK_UN)
+                .localCheckpoint(eager=True)
+            )
         return back.groupBy("priority").agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
             F.sum("cents").cast("bigint").alias("cents"),

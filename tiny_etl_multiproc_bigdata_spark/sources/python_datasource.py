@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tiny_etl_multiproc_bigdata_spark.plans.registry import register
+from tiny_etl_multiproc_bigdata_spark.sources.files import staged_dir
 
 _N = 4000
 _PARTS = 8
@@ -175,19 +176,14 @@ def python_datasource_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     protocol the reference's loaders implement per-bag. The entry
     pushes a per-language aggregate through the sink, reads the
     shards back, and must reproduce the direct aggregation — a
-    write-path roundtrip with the same staging discipline as the
-    file-format roundtrips (per-sf dir, flock).
+    write-path roundtrip staged in ``staged_dir``.
 
     100 TB shape: writes are partition-parallel with no driver data
     movement; a real sink swaps the local directory for an object
     store / queue client created INSIDE write() (per-task
     connections, the L5 JDBC pattern)."""
-    import fcntl
-    import hashlib
     import json
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql.datasource import (
         DataSource,
@@ -229,34 +225,24 @@ def python_datasource_write(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .coalesce(2)
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spark_pydsw_{tag}")
-    data_dir = os.path.join(root, "data")
-    os.makedirs(root, exist_ok=True)
-    with open(root + ".lock", "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        try:
-            shutil.rmtree(data_dir, ignore_errors=True)
-            os.makedirs(data_dir, exist_ok=True)
-            agg.write.format("tiny_etl_jsonl_sink").option(
-                "path", data_dir
-            ).mode("append").save()
-            # explicit schema (r11 empty-input audit): an empty sink
-            # dir has no JSONL to infer columns from
-            back = (
-                spark.read.schema(
-                    "lang string, n_docs bigint, total_chars bigint"
-                )
-                .json(data_dir)
-                .select(
-                    "lang",
-                    F.col("n_docs").cast("bigint").alias("n_docs"),
-                    F.col("total_chars").cast("bigint").alias("total_chars"),
-                )
-                .localCheckpoint(eager=True)
+    with staged_dir(sf_dir, "pydsw") as root:
+        data_dir = os.path.join(root, "data")
+        os.makedirs(data_dir)
+        agg.write.format("tiny_etl_jsonl_sink").option(
+            "path", data_dir
+        ).mode("append").save()
+        # explicit schema (r11 empty-input audit): an empty sink
+        # dir has no JSONL to infer columns from
+        back = (
+            spark.read.schema("lang string, n_docs bigint, total_chars bigint")
+            .json(data_dir)
+            .select(
+                "lang",
+                F.col("n_docs").cast("bigint").alias("n_docs"),
+                F.col("total_chars").cast("bigint").alias("total_chars"),
             )
-        finally:
-            fcntl.flock(lock, fcntl.LOCK_UN)
+            .localCheckpoint(eager=True)
+        )
     return back
 
 
@@ -281,17 +267,14 @@ def python_datasource_stream_write(
     same contract foreachBatch users hand-roll). The entry streams
     the events fixture through the sink (availableNow), reads every
     shard back, and the per-type totals must equal the batch
-    aggregation — nothing lost, nothing doubled.
+    aggregation — nothing lost, nothing doubled. Stages in
+    ``staged_dir``.
 
     100 TB shape: per-partition writes on executors, a metadata-only
     commit at the driver; backpressure and replay are the stream
     engine's problem, not the sink's."""
-    import fcntl
-    import hashlib
     import json
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql.datasource import (
         DataSource,
@@ -344,36 +327,26 @@ def python_datasource_stream_write(
             .alias("cents"),
         )
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spark_pydssw_{tag}")
-    data_dir = os.path.join(root, "data")
-    ckpt = os.path.join(root, "ckpt")
-    os.makedirs(root, exist_ok=True)
-    with open(root + ".lock", "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        try:
-            shutil.rmtree(data_dir, ignore_errors=True)
-            shutil.rmtree(ckpt, ignore_errors=True)
-            os.makedirs(data_dir, exist_ok=True)
-            q = (
-                ev.writeStream.format("tiny_etl_jsonl_stream_sink")
-                .option("path", data_dir)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+    with staged_dir(sf_dir, "pydssw") as root:
+        data_dir = os.path.join(root, "data")
+        os.makedirs(data_dir)
+        q = (
+            ev.writeStream.format("tiny_etl_jsonl_stream_sink")
+            .option("path", data_dir)
+            .option("checkpointLocation", os.path.join(root, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        # explicit schema (r11 empty-input audit), as above
+        back = (
+            spark.read.schema("event_type string, cents bigint")
+            .json(data_dir)
+            .groupBy("event_type")
+            .agg(
+                F.count("*").alias("n"),
+                F.sum("cents").cast("bigint").alias("total_cents"),
             )
-            q.awaitTermination()
-            # explicit schema (r11 empty-input audit), as above
-            back = (
-                spark.read.schema("event_type string, cents bigint")
-                .json(data_dir)
-                .groupBy("event_type")
-                .agg(
-                    F.count("*").alias("n"),
-                    F.sum("cents").cast("bigint").alias("total_cents"),
-                )
-                .localCheckpoint(eager=True)
-            )
-        finally:
-            fcntl.flock(lock, fcntl.LOCK_UN)
+            .localCheckpoint(eager=True)
+        )
     return back

@@ -30,6 +30,7 @@ from tiny_etl_multiproc_bigdata_spark.functions.timedomain import (
     stream_time_domain_sql,
 )
 from tiny_etl_multiproc_bigdata_spark.plans.registry import register
+from tiny_etl_multiproc_bigdata_spark.sources.files import staged_dir
 
 
 def _events_stream(
@@ -338,58 +339,38 @@ def streaming_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicates (idempotent writes = effective exactly-once; a blind
     append would only be at-least-once under retry). The stage is read
     back as the result and hash-checked lossless against the batch
-    oracle. The staging root is ONE fixed dir per scale (bounding /tmp
-    to one staged copy per sf forever) and the whole run holds an
-    exclusive flock on it, so a concurrent invocation (driver sweep
-    overlapping a bench run) blocks for the few seconds the stream
-    needs instead of rmtree'ing the other's in-flight data — the r02
-    advice's race, closed without the per-pid leak the r03 review
-    caught in the first fix."""
-    import fcntl
-    import hashlib
+    oracle. Stages in ``staged_dir``."""
     import os
-    import shutil
-    import tempfile
 
     from tiny_etl_multiproc_bigdata_spark.sinks import csv_load
 
     ev = _events_stream(spark, sf_dir).select("event_id", "user_id", "event_type")
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spark_feb_{tag}")
-    lock_path = root + ".lock"
-    data_dir = os.path.join(root, "data")
+    with staged_dir(sf_dir, "feb") as root:
+        data_dir = os.path.join(root, "data")
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        csv_load(batch_df, os.path.join(data_dir, f"batch_id={batch_id}"))
+        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+            csv_load(batch_df, os.path.join(data_dir, f"batch_id={batch_id}"))
 
-    with open(lock_path, "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        try:
-            shutil.rmtree(root, ignore_errors=True)
-            q = (
-                ev.writeStream.foreachBatch(write_batch)
-                .option("checkpointLocation", os.path.join(root, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            out = (
-                spark.read.option("sep", ";")
-                .option("header", "true")
-                .schema("event_id bigint, user_id bigint, event_type string")
-                .csv(os.path.join(data_dir, "batch_id=*"))
-            )
-            # Materialize under the lock: the returned frame must not
-            # depend on files a later run may clear. Eager
-            # localCheckpoint snapshots the scan into executor block
-            # storage JVM-side — no driver round-trip (the r04 verdict
-            # flagged the previous toPandas snapshot as the one
-            # driver-side materialization outside k-means) — and
-            # truncates lineage so downstream actions never re-read
-            # the CSVs.
-            out = out.localCheckpoint(eager=True)
-        finally:
-            fcntl.flock(lock, fcntl.LOCK_UN)
+        q = (
+            ev.writeStream.foreachBatch(write_batch)
+            .option("checkpointLocation", os.path.join(root, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        out = (
+            spark.read.option("sep", ";")
+            .option("header", "true")
+            .schema("event_id bigint, user_id bigint, event_type string")
+            .csv(os.path.join(data_dir, "batch_id=*"))
+        )
+        # Eager localCheckpoint snapshots the scan into executor block
+        # storage JVM-side — no driver round-trip (the r04 verdict
+        # flagged the previous toPandas snapshot as the one
+        # driver-side materialization outside k-means) — and
+        # truncates lineage so downstream actions never re-read
+        # the CSVs.
+        out = out.localCheckpoint(eager=True)
     return out
 
 
@@ -517,113 +498,98 @@ def streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
       emit (the last 30 minutes stay in state forever on a bounded
       replay).
 
-    The oracle reproduces all three effects. Staging is
-    flock-protected and per-sf like streaming_foreach_batch; replay
-    order is forced via mtimes (the file source processes files in
-    modification-time order)."""
+    The oracle reproduces all three effects. Stages in
+    ``staged_dir``; replay order is forced via mtimes (the file source
+    processes files in modification-time order)."""
     import datetime
-    import fcntl
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"spark_late_{tag}")
-    lock_path = root + ".lock"
+    with staged_dir(sf_dir, "late") as root:
+        src = pq.read_table(os.path.join(sf_dir, "events.parquet")).select(
+            ["event_id", "ts"]
+        )
+        ts = src.column("ts")
+        import pyarrow as pa
 
-    with open(lock_path, "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        try:
-            shutil.rmtree(root, ignore_errors=True)
-            os.makedirs(root)
-            src = pq.read_table(os.path.join(sf_dir, "events.parquet")).select(
-                ["event_id", "ts"]
+        if ts.type == "int64":  # raw epoch-nanos longs
+            ts = pc.divide(ts, 1000).cast(pa.timestamp("us"))
+            src = src.set_column(1, "ts", ts)
+        elif pa.types.is_timestamp(ts.type) and ts.type.unit != "us":
+            # the TIMESTAMP(NANOS) vintage reads as timestamp[ns]
+            # in PYARROW (the int64 manifestation above is Spark's
+            # nanosAsLong view, which pyarrow never produces) — the
+            # original check missed this, so the stage re-wrote
+            # nanos parquet verbatim and this entry's own
+            # readStream below choked on it (PARQUET_TYPE_ILLEGAL
+            # without the legacy conf, a long ts with it). Found by
+            # the r12 partition-invariance audit's nanos-vintage
+            # fixture; latent-only on the committed micros
+            # fixtures. Staged files are always TIMESTAMP(MICROS).
+            ts = ts.cast(pa.timestamp("us"))
+            src = src.set_column(1, "ts", ts)
+        j16 = datetime.datetime(2024, 1, 16)
+        j24 = datetime.datetime(2024, 1, 24)
+        mid = src.filter(
+            pc.and_(
+                pc.greater_equal(src.column("ts"), j16),
+                pc.less(src.column("ts"), j24),
             )
-            ts = src.column("ts")
-            import pyarrow as pa
-
-            if ts.type == "int64":  # raw epoch-nanos longs
-                ts = pc.divide(ts, 1000).cast(pa.timestamp("us"))
-                src = src.set_column(1, "ts", ts)
-            elif pa.types.is_timestamp(ts.type) and ts.type.unit != "us":
-                # the TIMESTAMP(NANOS) vintage reads as timestamp[ns]
-                # in PYARROW (the int64 manifestation above is Spark's
-                # nanosAsLong view, which pyarrow never produces) — the
-                # original check missed this, so the stage re-wrote
-                # nanos parquet verbatim and this entry's own
-                # readStream below choked on it (PARQUET_TYPE_ILLEGAL
-                # without the legacy conf, a long ts with it). Found by
-                # the r12 partition-invariance audit's nanos-vintage
-                # fixture; latent-only on the committed micros
-                # fixtures. Staged files are always TIMESTAMP(MICROS).
-                ts = ts.cast(pa.timestamp("us"))
-                src = src.set_column(1, "ts", ts)
-            j16 = datetime.datetime(2024, 1, 16)
-            j24 = datetime.datetime(2024, 1, 24)
-            mid = src.filter(
+        )
+        strag_mask = pc.equal(
+            pc.bit_wise_and(mid.column("event_id"), 15), 3
+        )
+        paths = [os.path.join(root, f"f{i}.parquet") for i in (1, 2, 3)]
+        pq.write_table(mid.filter(pc.invert(strag_mask)), paths[0])
+        # f2 carries everything from Jan 24 on, BOUNDED to the
+        # streaming time domain (r13 --timeskew): one corrupt
+        # far-future instant in f2 would set the watermark
+        # millennia ahead and silently evict every honest window
+        # — the drop-everything poison this entry exists to
+        # demonstrate the *correct* version of. Mirrored by the
+        # oracle's f2 conjunct.
+        dmax = datetime.datetime(9999, 12, 31, 23, 59, 59, 999999)
+        pq.write_table(
+            src.filter(
                 pc.and_(
-                    pc.greater_equal(src.column("ts"), j16),
-                    pc.less(src.column("ts"), j24),
+                    pc.greater_equal(src.column("ts"), j24),
+                    pc.less_equal(src.column("ts"), dmax),
                 )
-            )
-            strag_mask = pc.equal(
-                pc.bit_wise_and(mid.column("event_id"), 15), 3
-            )
-            paths = [os.path.join(root, f"f{i}.parquet") for i in (1, 2, 3)]
-            pq.write_table(mid.filter(pc.invert(strag_mask)), paths[0])
-            # f2 carries everything from Jan 24 on, BOUNDED to the
-            # streaming time domain (r13 --timeskew): one corrupt
-            # far-future instant in f2 would set the watermark
-            # millennia ahead and silently evict every honest window
-            # — the drop-everything poison this entry exists to
-            # demonstrate the *correct* version of. Mirrored by the
-            # oracle's f2 conjunct.
-            dmax = datetime.datetime(9999, 12, 31, 23, 59, 59, 999999)
-            pq.write_table(
-                src.filter(
-                    pc.and_(
-                        pc.greater_equal(src.column("ts"), j24),
-                        pc.less_equal(src.column("ts"), dmax),
-                    )
-                ),
-                paths[1],
-            )
-            pq.write_table(mid.filter(strag_mask), paths[2])
-            now = os.path.getmtime(paths[2])
-            os.utime(paths[0], (now - 200, now - 200))
-            os.utime(paths[1], (now - 100, now - 100))
+            ),
+            paths[1],
+        )
+        pq.write_table(mid.filter(strag_mask), paths[2])
+        now = os.path.getmtime(paths[2])
+        os.utime(paths[0], (now - 200, now - 200))
+        os.utime(paths[1], (now - 100, now - 100))
 
-            schema = spark.read.parquet(root).schema
-            raw = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(root)
+        schema = spark.read.parquet(root).schema
+        raw = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(root)
+        )
+        epoch_us = F.expr(
+            "timestampdiff(MICROSECOND,"
+            " TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
+        )
+        ev = raw.withColumn("ts", F.timestamp_micros(epoch_us))
+        agg = (
+            ev.withWatermark("ts", "30 minutes")
+            .groupBy(F.window("ts", "5 minutes").alias("w"))
+            .agg(F.count("*").alias("n"))
+            .select(
+                F.unix_timestamp(F.col("w.start")).cast("bigint").alias(
+                    "window_start_epoch"
+                ),
+                "n",
             )
-            epoch_us = F.expr(
-                "timestampdiff(MICROSECOND,"
-                " TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-            )
-            ev = raw.withColumn("ts", F.timestamp_micros(epoch_us))
-            agg = (
-                ev.withWatermark("ts", "30 minutes")
-                .groupBy(F.window("ts", "5 minutes").alias("w"))
-                .agg(F.count("*").alias("n"))
-                .select(
-                    F.unix_timestamp(F.col("w.start")).cast("bigint").alias(
-                        "window_start_epoch"
-                    ),
-                    "n",
-                )
-            )
-            # _run_to_memory awaits termination, so the stream is done
-            # with the staged files before the lock releases
-            out = _run_to_memory(agg, spark, "late_drop", "append")
-        finally:
-            fcntl.flock(lock, fcntl.LOCK_UN)
+        )
+        # _run_to_memory awaits termination, so the stream is done
+        # with the staged files before the lock releases
+        out = _run_to_memory(agg, spark, "late_drop", "append")
     return out
 
 

@@ -53,7 +53,6 @@ import os
 import shutil
 import sys
 import tempfile
-import threading
 import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
@@ -61,6 +60,8 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tests"))
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+
+from _guard import guarded
 
 # Same override tests/conftest.py honors (ADVICE r11): the spiked
 # fixture derives from the real sf0.001 tables, so point both at the
@@ -631,7 +632,6 @@ def main() -> None:
         return get_spark(app_name="null-parity-audit")
 
     spark = _new_session()
-    sc = spark.sparkContext
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -643,43 +643,21 @@ def main() -> None:
     t_all = time.time()
     for i, name in enumerate(names):
         spec = REGISTRY[name]
-        group = f"nullaudit-{name}"
-        sc.setJobGroup(group, name, interruptOnCancel=True)
-        cancelled = [False]
-
-        def cancel():
-            cancelled[0] = True
-            sc.cancelJobGroup(group)
-            # Job groups are thread-local: a registry entry that runs a
-            # StreamingQuery executes its micro-batches on the stream
-            # execution thread and blocks this one in awaitTermination,
-            # so cancelJobGroup alone cannot interrupt it (ADVICE r11).
-            # Stop every active query too — the audit runs entries
-            # serially, so anything active belongs to the hung entry,
-            # and stop() unblocks awaitTermination on the main thread.
-            try:
-                for q in spark.streams.active:
-                    q.stop()
-            except Exception:  # noqa: BLE001 — best-effort teardown
-                pass
-
-        timer = threading.Timer(WATCHDOG_S, cancel)
-        timer.start()
         try:
-            df = spec.fn(spark, fix)
-            if spec.oracle is None:
-                df.count()
-                results[name] = "ok (rows-only)"
-            else:
-                problems = compare(df, con, spec.oracle, spec.ulp_sensitive)
-                results[name] = (
-                    "ok" if not problems else "MISMATCH: " + "; ".join(problems)[:400]
-                )
+            with guarded(spark, f"nullaudit-{name}", WATCHDOG_S) as cancelled:
+                df = spec.fn(spark, fix)
+                if spec.oracle is None:
+                    df.count()
+                    results[name] = "ok (rows-only)"
+                else:
+                    problems = compare(df, con, spec.oracle, spec.ulp_sensitive)
+                    results[name] = (
+                        "ok" if not problems else "MISMATCH: " + "; ".join(problems)[:400]
+                    )
         except Exception as ex:  # noqa: BLE001 — per-entry isolation
-            kind = "WATCHDOG" if cancelled[0] else "error"
+            kind = "WATCHDOG" if cancelled.is_set() else "error"
             results[name] = f"{kind}: {repr(ex)[:300]}"
         finally:
-            timer.cancel()
             # An entry can kill the whole JVM (observed in the r13
             # --timeskew scout: interpolating a 55k-year gap OOMed the
             # driver and every later entry then "errored" on a dead
@@ -688,7 +666,7 @@ def main() -> None:
             # restart on a stopped context and mark the entry, so one
             # poisoned entry costs one restart, not the rest of the run.
             try:
-                dead = sc._jsc.sc().isStopped()
+                dead = spark.sparkContext._jsc.sc().isStopped()
             except Exception:  # noqa: BLE001 — py4j gone = dead
                 dead = True
             if dead:
@@ -701,8 +679,6 @@ def main() -> None:
                 except Exception:  # noqa: BLE001 — already dead
                     pass
                 spark = _new_session()
-                sc = spark.sparkContext
-            sc.setJobGroup("idle", "idle")
         if (i + 1) % 25 == 0:
             print(f"{i + 1}/{len(names)} {time.time() - t_all:.0f}s", flush=True)
 

@@ -67,11 +67,12 @@ from __future__ import annotations
 import os
 import sys
 import tempfile
-import threading
 import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tests"))
+
+from _guard import guarded
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 WATCHDOG_S = 120
@@ -214,37 +215,18 @@ def run_pass(spark, names, registry, confs, label: str, sf_dir: str) -> dict:
     for k, v in confs.items():
         spark.conf.set(k, v)
     spark.catalog.clearCache()
-    sc = spark.sparkContext
     out: dict = {}
     t0 = time.time()
     for i, name in enumerate(names):
         spec = registry[name]
-        group = f"payout-{label}-{name}"
-        sc.setJobGroup(group, name, interruptOnCancel=True)
-        cancelled = [False]
-
-        def cancel():
-            cancelled[0] = True
-            sc.cancelJobGroup(group)
-            # job groups are thread-local; streaming entries block in
-            # awaitTermination on a stream-execution thread — stop the
-            # (serially-run, so necessarily ours) active queries too
-            try:
-                for q in spark.streams.active:
-                    q.stop()
-            except Exception:  # noqa: BLE001 — best-effort teardown
-                pass
-
-        timer = threading.Timer(WATCHDOG_S, cancel)
-        timer.start()
         try:
-            out[name] = _canon_result(spec.fn(spark, sf_dir))
+            with guarded(
+                spark, f"payout-{label}-{name}", WATCHDOG_S
+            ) as cancelled:
+                out[name] = _canon_result(spec.fn(spark, sf_dir))
         except Exception as ex:  # noqa: BLE001 — per-entry isolation
-            kind = "__watchdog__" if cancelled[0] else "__error__"
+            kind = "__watchdog__" if cancelled.is_set() else "__error__"
             out[name] = (kind, repr(ex)[:300])
-        finally:
-            timer.cancel()
-            sc.setJobGroup("idle", "idle")
         if (i + 1) % 50 == 0:
             print(
                 f"[{label}] {i + 1}/{len(names)} {time.time() - t0:.0f}s",

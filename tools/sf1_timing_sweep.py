@@ -29,11 +29,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import threading
 import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
+from _guard import guarded
 from tiny_etl_multiproc_bigdata_spark.session import get_spark
 
 WATCHDOG_S = 150
@@ -41,7 +41,6 @@ WATCHDOG_S = 150
 
 def main() -> None:
     spark = get_spark(app_name="sf1-timing-sweep")
-    sc = spark.sparkContext
     from tiny_etl_multiproc_bigdata_spark.benchgen import (
         ensure_sf1,
         ensure_sf1_embeddings,
@@ -60,27 +59,18 @@ def main() -> None:
     names = sorted(q)
     t_all = time.time()
     for i, name in enumerate(names):
-        group = f"sweep-{name}"
-        sc.setJobGroup(group, name, interruptOnCancel=True)
-        cancelled = [False]
-
-        def cancel():
-            cancelled[0] = True
-            sc.cancelJobGroup(group)
-
-        timer = threading.Timer(WATCHDOG_S, cancel)
-        timer.start()
         t0 = time.time()
         try:
-            df = q[name](spark, sf1)
-            df.write.format("noop").mode("overwrite").save()
+            with guarded(spark, f"sweep-{name}", WATCHDOG_S) as cancelled:
+                df = q[name](spark, sf1)
+                df.write.format("noop").mode("overwrite").save()
             results[name] = {
                 "sec": round(time.time() - t0, 2),
                 "status": "ok",
             }
         except Exception as ex:  # noqa: BLE001 — per-entry isolation
             msg = repr(ex)
-            if cancelled[0]:
+            if cancelled.is_set():
                 status = "WATCHDOG_CANCELLED"
             elif "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
                 status = "no_fixture"
@@ -90,9 +80,6 @@ def main() -> None:
                 "sec": round(time.time() - t0, 2),
                 "status": status,
             }
-        finally:
-            timer.cancel()
-            sc.setJobGroup("idle", "idle")
         if (i + 1) % 25 == 0:
             print(f"{i+1}/{len(names)} {time.time()-t_all:.0f}s", flush=True)
 
