@@ -9,8 +9,10 @@ rounding.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from tiny_etl_multiproc_bigdata_spark.functions.rounding import round_half_up
 
 
 def dot_product(a: Column, b: Column) -> Column:
@@ -33,6 +35,29 @@ def l2_norm(a: Column) -> Column:
 
 def cosine_similarity(a: Column, b: Column) -> Column:
     return dot_product(a, b) / (l2_norm(a) * l2_norm(b))
+
+
+def top_k_by_cosine(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-``k`` of a ``(query_id, candidate_id, cos)`` frame:
+    rank by the micro-scaled integer score ``floor(cos·1e6+0.5)``
+    descending, then ``candidate_id`` ascending (cross-engine-stable
+    ties, ranked the same way in the oracles), keep ``rn <= k`` and
+    project ``query_id, candidate_id, cosine, rn`` with the cosine
+    rounded half-up to 4 places."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.floor(F.col("cos") * 1_000_000 + F.lit(0.5)).cast("bigint").desc(),
+        F.asc("candidate_id"),
+    )
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select(
+            "query_id",
+            "candidate_id",
+            round_half_up(F.col("cos"), 4).alias("cosine"),
+            "rn",
+        )
+    )
 
 
 # Per-element grid bound, shared with functions/numerics.py: 2**53 /

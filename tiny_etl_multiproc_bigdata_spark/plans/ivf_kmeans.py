@@ -26,6 +26,7 @@ from tiny_etl_multiproc_bigdata_spark.functions.vectors import (
     complete_vector_sql,
     cosine_similarity,
     is_complete_vector,
+    top_k_by_cosine,
 )
 from tiny_etl_multiproc_bigdata_spark.plans.registry import register
 from tiny_etl_multiproc_bigdata_spark.session import shuffle_partitions
@@ -169,14 +170,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             cosine_similarity(F.col("qv"), F.col("embedding")).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.floor(F.col("cos") * 1_000_000 + F.lit(0.5)).cast("bigint").desc(), F.asc("candidate_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TOP_K)
-        .select("query_id", "candidate_id", round_half_up(F.col("cos"), 4).alias("cosine"), "rn")
-    )
+    return top_k_by_cosine(scored, _TOP_K)
 
 
 @register("kmeans_lloyd", oracle=None)
@@ -185,42 +179,34 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     have no single-statement SQL twin — driver contract's documented
     exception). The distributed iteration pattern: per-iteration
     assign (broadcast centroids) → recompute means (one partial+final
-    agg over posexploded components) → collect the tiny centroid set
-    back to the driver for the next broadcast. Deterministic start
-    (every 100th vector) and integer-scaled distance ranking keep runs
-    reproducible. Returns per-cluster sizes and rounded inertia."""
+    agg over posexploded components) → the means DataFrame is the next
+    iteration's broadcast centroid set. No centroid touches the driver
+    and building the entry runs no Spark job: the three iterations are
+    one lazy plan. Deterministic start (every 100th vector) and
+    integer-scaled distance ranking keep runs reproducible. Returns
+    per-cluster sizes and rounded inertia."""
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    e.persist()
-    centroids = [
-        (r.cid, list(r.cvec))
-        for r in e.filter(F.col("vec_id") % _CENTROID_MOD == 7)
-        .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
-        .collect()
-    ]
+    centroids = e.filter(F.col("vec_id") % _CENTROID_MOD == 7).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
+    )
     assigned = None
     for _ in range(3):
-        cdf = spark.createDataFrame(
-            [(cid, [float(x) for x in vec]) for cid, vec in centroids],
-            "cid long, cvec array<double>",
-        )
-        assigned = _assign_cells(e, cdf)
+        assigned = _assign_cells(e, centroids)
         # new means: posexplode components → groupBy (cell, pos) avg →
         # regroup to arrays; stays fully distributed
         comp = assigned.select(
             "cell", F.posexplode(F.col("embedding")).alias("pos", "x")
         )
-        means = (
+        centroids = (
             comp.groupBy("cell", "pos")
             .agg(F.avg(F.col("x").cast("double")).alias("m"))
             .groupBy("cell")
             .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select("cell", F.transform("pm", lambda s: s["m"]).alias("cvec"))
+            .select(
+                F.col("cell").alias("cid"),
+                F.transform("pm", lambda s: s["m"]).alias("cvec"),
+            )
         )
-        centroids = [(r.cell, list(r.cvec)) for r in means.collect()]
-    # the cache paid for itself across the per-iteration collect()s;
-    # release it before returning (the final agg just recomputes one
-    # scan) so repeated registry sweeps don't accumulate pinned blocks
-    e.unpersist()
     return assigned.groupBy("cell").agg(
         F.count("*").alias("n_vectors"),
         # scale-8 sum rounded at 2 is NOT exact-at-scale — half-up
@@ -493,7 +479,7 @@ def kmeans_fixed_iters(spark: SparkSession, sf_dir: str) -> DataFrame:
     once for its 2·ITERS−1 consumers (the minhash lesson). Inertia sums
     stay < 2^63 to ~10^5 vectors at this scale/offset; beyond that,
     aggregate d in DECIMAL(38,0) (the embedding_standardize recipe).
-    Unlike kmeans_lloyd no centroid ever touches the driver: the loop
+    As in kmeans_lloyd, no centroid ever touches the driver: the loop
     builds one lazy Catalyst plan of bounded depth (fixed ITERS), so
     the same code runs unchanged on a 1000-executor cluster."""
     comp, assign = _km_assign(spark, sf_dir)
@@ -598,20 +584,7 @@ def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
             cosine_similarity(F.col("qv"), F.col("embedding")).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.floor(F.col("cos") * 1_000_000 + F.lit(0.5)).cast("bigint").desc(),
-        F.asc("candidate_id"),
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TOP_K)
-        .select(
-            "query_id",
-            "candidate_id",
-            round_half_up(F.col("cos"), 4).alias("cosine"),
-            "rn",
-        )
-    )
+    return top_k_by_cosine(scored, _TOP_K)
 
 
 # ---- dedup_semantic_kmeans: SemDeDup ------------------------------------

@@ -27,6 +27,7 @@ from tiny_etl_multiproc_bigdata_spark.functions.vectors import (
     complete_vector_sql,
     cosine_similarity,
     is_complete_vector,
+    top_k_by_cosine,
 )
 from tiny_etl_multiproc_bigdata_spark.plans.registry import register
 
@@ -151,14 +152,7 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             cosine_similarity(F.col("qv"), F.col("embedding")).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.floor(F.col("cos") * 1000000 + F.lit(0.5)).cast("bigint").desc(), F.asc("candidate_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TOP_K)
-        .select("query_id", "candidate_id", round_half_up(F.col("cos"), 4).alias("cosine"), "rn")
-    )
+    return top_k_by_cosine(scored, _TOP_K)
 
 
 @register(
@@ -233,14 +227,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             cosine_similarity(F.col("qv"), F.col("embedding")).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.floor(F.col("cos") * 1000000 + F.lit(0.5)).cast("bigint").desc(), F.asc("candidate_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TOP_K)
-        .select("query_id", "candidate_id", round_half_up(F.col("cos"), 4).alias("cosine"), "rn")
-    )
+    return top_k_by_cosine(scored, _TOP_K)
 
 
 @register(

@@ -20,7 +20,7 @@ backfill with rate limiting.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tiny_etl_multiproc_bigdata_spark.functions.rounding import (
@@ -179,6 +179,93 @@ def _run_to_memory(df: DataFrame, spark: SparkSession, name: str, output_mode: s
     return spark.table(qname)
 
 
+def _attribution_join(
+    spark: SparkSession, sf_dir: str, how: str = "inner", *,
+    require_time_domain: bool = False,
+) -> DataFrame:
+    """Click→purchase attribution: clicks (``click_id, user_id, c_ts``)
+    join purchases (``purchase_id, p_user_id, p_ts``) of the same user
+    at or up to 30 minutes after the click, both sides watermarked by 1
+    hour. Shared by the four join-family entries and
+    streaming_join_then_window.
+
+    State topology, the same for every ``how``: two sources and one
+    join whose state store is keyed by user across the shuffle and
+    bounded by the range condition — a buffered click is evicted once
+    the purchase-side watermark passes c_ts + 30 min (Spark derives the
+    state watermark from the range condition), so state is O(events in
+    the attribution window), not O(stream). An outer join adds only the
+    eviction-time null emission of its preserved side, no extra state.
+    ``require_time_domain`` declares the streaming-time-domain contract
+    of ``_events_stream`` on both inputs."""
+    clicks = (
+        _events_stream(spark, sf_dir, require_time_domain=require_time_domain)
+        .filter(F.col("event_type") == "click")
+        .select(
+            F.col("event_id").alias("click_id"),
+            "user_id",
+            F.col("ts").alias("c_ts"),
+        )
+        .withWatermark("c_ts", "1 hour")
+    )
+    purchases = (
+        _events_stream(spark, sf_dir, require_time_domain=require_time_domain)
+        .filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("p_user_id"),
+            F.col("ts").alias("p_ts"),
+        )
+        .withWatermark("p_ts", "1 hour")
+    )
+    return clicks.join(
+        purchases,
+        (F.col("user_id") == F.col("p_user_id"))
+        & (F.col("p_ts") >= F.col("c_ts"))
+        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
+        how,
+    )
+
+
+def _attribution_rows(joined: DataFrame) -> DataFrame:
+    """The join family's output row. ``coalesce`` names the purchase's
+    user on null-extended purchase rows; elsewhere it is the click's
+    user (matched rows carry equal keys, unmatched clicks a NULL
+    ``p_user_id``)."""
+    return joined.select(
+        "click_id",
+        "purchase_id",
+        F.coalesce("user_id", "p_user_id").alias("user_id"),
+        (
+            F.floor(F.unix_timestamp("p_ts"))
+            - F.floor(F.unix_timestamp("c_ts"))
+        )
+        .cast("bigint")
+        .alias("gap_s"),
+    )
+
+
+def _session_counts(ev: DataFrame, gap: str | Column) -> DataFrame:
+    """Per-user session windows over a 1-hour watermark, counted and
+    projected to epoch seconds; ``gap`` is a duration string or a
+    per-row duration expression."""
+    return (
+        ev.withWatermark("ts", "1 hour")
+        .groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
+        .agg(F.count("*").alias("n_events"))
+        .select(
+            "user_id",
+            F.unix_timestamp(F.col("sw.start")).cast("bigint").alias(
+                "session_start_epoch"
+            ),
+            F.unix_timestamp(F.col("sw.end")).cast("bigint").alias(
+                "session_end_epoch"
+            ),
+            "n_events",
+        )
+    )
+
+
 @register(
     "streaming_tumbling_counts",
     oracle=f"""
@@ -274,21 +361,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming-time-domain contract (watermark clock floors at the
     epoch; far-future poisons it) + epoch_us-exact oracle bounds."""
     ev = _events_stream(spark, sf_dir, require_event_time=True, require_time_domain=True)
-    sess = (
-        ev.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.unix_timestamp(F.col("sw.start")).cast("bigint").alias(
-                "session_start_epoch"
-            ),
-            F.unix_timestamp(F.col("sw.end")).cast("bigint").alias(
-                "session_end_epoch"
-            ),
-            "n_events",
-        )
-    )
+    sess = _session_counts(ev, "30 minutes")
     return _run_to_memory(sess, spark, "stream_session_window", "complete")
 
 
@@ -390,48 +463,11 @@ def streaming_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked stream-stream inner join: click→purchase attribution
-    within a 30-minute window, both sides unbounded streams. The time-
-    range join condition plus the two watermarks bound the state store:
-    a buffered click can be evicted once the purchase-side watermark
-    passes click.ts + 30 min (Spark derives the state watermark from
-    the range condition), so state is O(events in the attribution
-    window), not O(stream). Inner-join matches emit as found, so
-    `append` mode returns every pair under availableNow replay. The
-    same topology at 100 TB/day partitions state by user_id across the
-    shuffle — the join IS the state store."""
-    clicks = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
-    )
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
-    ).select(
-        "click_id",
-        "purchase_id",
-        "user_id",
-        (
-            F.floor(F.unix_timestamp("p_ts")) - F.floor(F.unix_timestamp("c_ts"))
-        ).cast("bigint").alias("gap_s"),
-    )
+    within a 30-minute window, both sides unbounded streams.
+    Inner-join matches emit as found, so `append` mode returns every
+    pair under availableNow replay. State topology: see
+    ``_attribution_join``."""
+    joined = _attribution_rows(_attribution_join(spark, sf_dir))
     return _run_to_memory(joined, spark, "stream_stream_join", "append")
 
 
@@ -817,48 +853,12 @@ def streaming_stream_stream_left_outer(
     c_ts + 30min < final watermark (millisecond floor — Spark tracks
     event time in ms).
 
-    100 TB shape: same state topology as the inner join (state
-    partitioned by user across the shuffle, bounded by the range
-    condition); the outer variant adds only the eviction-time null
-    emission, no extra state. r13 --timeskew: streaming-time-domain
-    contract on BOTH inputs (a corrupt far-future click poisons the
-    shared global watermark and evicts every honest pending match)."""
-    clicks = (
-        _events_stream(spark, sf_dir, require_time_domain=True)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
-    )
-    purchases = (
-        _events_stream(spark, sf_dir, require_time_domain=True)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "left_outer",
-    ).select(
-        "click_id",
-        "purchase_id",
-        "user_id",
-        (
-            F.floor(F.unix_timestamp("p_ts"))
-            - F.floor(F.unix_timestamp("c_ts"))
-        )
-        .cast("bigint")
-        .alias("gap_s"),
+    State topology: see ``_attribution_join``. r13 --timeskew:
+    streaming-time-domain contract on BOTH inputs (a corrupt
+    far-future click poisons the shared global watermark and evicts
+    every honest pending match)."""
+    joined = _attribution_rows(
+        _attribution_join(spark, sf_dir, "left_outer", require_time_domain=True)
     )
     return _run_to_memory(joined, spark, "stream_stream_loj", "append")
 
@@ -993,21 +993,7 @@ def streaming_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame
     gap = F.when(
         F.col("event_type") == "purchase", F.lit("10 minutes")
     ).otherwise(F.lit("30 minutes"))
-    sess = (
-        ev.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.unix_timestamp(F.col("sw.start")).cast("bigint").alias(
-                "session_start_epoch"
-            ),
-            F.unix_timestamp(F.col("sw.end")).cast("bigint").alias(
-                "session_end_epoch"
-            ),
-            "n_events",
-        )
-    )
+    sess = _session_counts(ev, gap)
     return _run_to_memory(sess, spark, "stream_session_dyn", "complete")
 
 
@@ -1072,47 +1058,11 @@ def streaming_stream_stream_full_outer(
     against the final global watermark (min across inputs of max
     event-time minus the 1h delay, in Spark's millisecond floor).
 
-    100 TB shape: identical state topology to the inner join — keyed
-    by user across the shuffle, bounded by the range condition; each
-    side adds only its eviction-time null emission. r13 --timeskew:
+    State topology: see ``_attribution_join``. r13 --timeskew:
     streaming-time-domain contract on BOTH inputs (a corrupt
     far-future event poisons the shared global watermark)."""
-    clicks = (
-        _events_stream(spark, sf_dir, require_time_domain=True)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            "user_id",
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
-    )
-    purchases = (
-        _events_stream(spark, sf_dir, require_time_domain=True)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "full_outer",
-    ).select(
-        "click_id",
-        "purchase_id",
-        F.coalesce("user_id", "p_user_id").alias("user_id"),
-        (
-            F.floor(F.unix_timestamp("p_ts"))
-            - F.floor(F.unix_timestamp("c_ts"))
-        )
-        .cast("bigint")
-        .alias("gap_s"),
+    joined = _attribution_rows(
+        _attribution_join(spark, sf_dir, "full_outer", require_time_domain=True)
     )
     return _run_to_memory(joined, spark, "stream_stream_foj", "append")
 
@@ -1169,26 +1119,7 @@ def streaming_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     state, the window's watermark bounds the open-bucket count. No
     extra pass between them — the window consumes join output
     within the same micro-batch."""
-    clicks = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select("user_id", F.col("ts").alias("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-    )
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"), F.col("ts").alias("p_ts")
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
-    ).select("p_ts")
+    joined = _attribution_join(spark, sf_dir).select("p_ts")
     agg = (
         joined.groupBy(F.window("p_ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("n_attributed"))
@@ -1369,44 +1300,6 @@ def streaming_stream_stream_right_outer(
     surfaces once, null-extended, when the watermark passes p_ts —
     the short gate, because clicks can only precede their purchase;
     unconverted clicks (the left side's concern) never appear here.
-
-    100 TB shape: identical state topology to the other three — the
-    outer variants differ only in which side's eviction emits."""
-    clicks = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            "user_id",
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
-    )
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "right_outer",
-    ).select(
-        "click_id",
-        "purchase_id",
-        F.coalesce("user_id", "p_user_id").alias("user_id"),
-        (
-            F.floor(F.unix_timestamp("p_ts"))
-            - F.floor(F.unix_timestamp("c_ts"))
-        )
-        .cast("bigint")
-        .alias("gap_s"),
-    )
+    State topology: see ``_attribution_join``."""
+    joined = _attribution_rows(_attribution_join(spark, sf_dir, "right_outer"))
     return _run_to_memory(joined, spark, "stream_stream_roj", "append")
