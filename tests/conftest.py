@@ -75,6 +75,23 @@ def duck():
     return duck_connect(SF_DIR)
 
 
+@pytest.fixture(scope="session")
+def nanos_events_dir(tmp_path_factory):
+    """A copy of the fixture's events table with ``ts`` rewritten as
+    int64 TIMESTAMP(NANOS) — the other vintage the generator has shipped."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path_factory.mktemp("nanos_vintage"))
+    src = pq.read_table(f"{SF_DIR}/events.parquet")
+    i = src.schema.get_field_index("ts")
+    ns = src.set_column(
+        i, pa.field("ts", pa.timestamp("ns")), src.column("ts").cast(pa.timestamp("ns"))
+    )
+    pq.write_table(ns, f"{d}/events.parquet")
+    return d
+
+
 @contextlib.contextmanager
 def confs(spark, **kv):
     """Temporarily set Spark SQL confs (double-underscore = dot);

@@ -32,18 +32,6 @@ pytestmark = pytest.mark.skipif(
 )
 
 
-@pytest.fixture(scope="module")
-def nanos_events_dir(tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("nanos_vintage"))
-    src = pq.read_table(f"{SF_DIR}/events.parquet")
-    i = src.schema.get_field_index("ts")
-    ns = src.set_column(
-        i, pa.field("ts", pa.timestamp("ns")), src.column("ts").cast(pa.timestamp("ns"))
-    )
-    pq.write_table(ns, f"{d}/events.parquet")
-    return d
-
-
 def _collect_ts(spark, sf_dir: str, tz: str):
     prior = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", tz)

@@ -1,14 +1,22 @@
-"""Equivalence pin for the flagship's document-level exchange
+"""Equivalence pins for the flagship's rewrites
 (plans/flagship.py::words_from_docs).
 
-Keeps the three-exchange token-level lowering VERBATIM and asserts the
-one-exchange lowering returns identical rows, at shuffle partitions 1
-and 3, over the sf0.001 ``documents.parquet`` (a ``source`` label shared
-by many documents) and over a ``.txt`` tree read through
-``read_whole_files`` (``source`` = file path) whose files carry the
-tokenizer's edge cases: leading/trailing whitespace (empty edge tokens),
-``\\r\\n``, Arabic diacritics, case variants, U+0130 (İ), a token longer
-than 255 characters, and paths more than five segments deep.
+Keeps two earlier lowerings VERBATIM — the three-exchange token-level
+one, and the one-exchange one that derived ``file`` per output row and
+dropped required-field NULLs with ``na.drop`` over the five derived
+columns — and asserts the current lowering (``file`` per document, the
+NULL drop on the base columns) returns identical rows to both, at
+shuffle partitions 1 and 3, over:
+
+- the sf0.001 ``documents.parquet`` (a ``source`` label shared by many
+  documents);
+- a ``.txt`` tree read through ``read_whole_files`` (``source`` = file
+  path) whose files carry the tokenizer's edge cases: leading/trailing
+  whitespace (empty edge tokens), ``\\r\\n``, Arabic diacritics, case
+  variants, U+0130 (İ), a token longer than 255 characters, and paths
+  more than five segments deep;
+- a docs frame with NULL ``source``, NULL ``text`` and empty ``text``
+  rows, the inputs the required-field drop exists for.
 """
 
 from __future__ import annotations
@@ -25,6 +33,7 @@ from tiny_etl_multiproc_bigdata_spark.functions.text import (
     truncate_str,
 )
 from tiny_etl_multiproc_bigdata_spark.plans.flagship import words_from_docs
+from tiny_etl_multiproc_bigdata_spark.session import shuffle_partitions
 from tiny_etl_multiproc_bigdata_spark.sources.files import read_whole_files
 
 
@@ -71,6 +80,53 @@ def _words_from_docs_three_exchanges(docs: DataFrame) -> DataFrame:
     )
 
 
+def _words_from_docs_na_drop(docs: DataFrame) -> DataFrame:
+    """The one-exchange lowering with ``file`` per output row and the
+    five-column ``na.drop``, verbatim (plans/flagship.py @ 445c2b3)."""
+    docs = docs.repartition(shuffle_partitions(docs.sparkSession), "source")
+    tokens = docs.select(
+        "source",
+        F.explode(tokenize_words(F.col("text"))).alias("token"),
+    ).withColumn("token", F.trim("token"))
+    # mappers=[str.strip] (example/main.py:85); ignore_word_fn=str.isspace
+    # never fires post-split (tokens can't contain \s) — see
+    # functions.text.tokenize_words parity note.
+
+    # Two-level aggregation, deliberately: the token stream must be
+    # reduced by a pure-count HashAggregate (fixed-size buffer →
+    # whole-stage codegen). A direct min(token) would fall back to
+    # SortAggregate (sorting the full stream per partition) and
+    # array_min(collect_set) to ObjectHashAggregate (no codegen) —
+    # measured 10x slower on a 95 MB corpus. Level 1 groups on
+    # (source, norm, token) with COUNT only; level 2 then takes
+    # min(token)/sum(count) over the already-tiny per-word rows.
+    pre = tokens.groupBy(
+        "source", F.lower(F.col("token")).alias("norm"), "token"
+    ).agg(F.count("*").alias("c"))
+    grouped = pre.groupBy("source", "norm").agg(
+        F.min("token").alias("word0"),
+        F.sum("c").alias("occurrences"),
+    )
+
+    with_count = grouped.withColumn(
+        "words_count",
+        F.sum("occurrences").over(Window.partitionBy("source")).cast("bigint"),
+    )
+
+    return with_count.select(
+        truncate_str(F.col("word0"), 255).alias("word"),
+        F.length(remove_diac(F.col("word0"))).cast("bigint").alias("word_len"),
+        len_str_gt(F.col("word0"), 255).alias("word_truncated"),
+        # basename_backwards_x4 keeps 5 segments (reference commons.py:157-158)
+        truncate_str(basename_backwards(F.col("source"), 5), 270).alias("file"),
+        F.col("words_count"),
+    ).na.drop(  # required-field drop at the sink (loaders/commons.py:55-62)
+        subset=["word", "word_len", "word_truncated", "file", "words_count"]
+    )
+
+
+_OLD_LOWERINGS = (_words_from_docs_three_exchanges, _words_from_docs_na_drop)
+
 _LONG = "x" * 300
 _FILES = {
     "a/b/c/d/e/f/deep.txt": "  Leading and trailing  \t\n",
@@ -108,19 +164,43 @@ def _rows(df: DataFrame) -> list[tuple]:
     return sorted(tuple(r) for r in df.collect())
 
 
+def _assert_same_as_old(docs: DataFrame) -> list[tuple]:
+    new = _rows(words_from_docs(docs))
+    for old in _OLD_LOWERINGS:
+        assert new == _rows(old(docs)), old.__name__
+    return new
+
+
 def test_documents_parquet_identical(spark, sf_dir, partitions):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    new = _rows(words_from_docs(docs))
-    assert new and new == _rows(_words_from_docs_three_exchanges(docs))
+    assert _assert_same_as_old(docs)
 
 
 def test_txt_tree_identical(spark, txt_tree, partitions):
     docs = read_whole_files(
         spark, txt_tree, ".txt", path_key="source", content_key="text"
     )
-    new = _rows(words_from_docs(docs))
-    assert new == _rows(_words_from_docs_three_exchanges(docs))
+    new = _assert_same_as_old(docs)
     # the edge cases reach the output rather than vanishing in both
     assert "" in {r[0] for r in new}  # empty edge tokens
     assert any(r[2] for r in new)  # a truncated token
     assert {r[3].count("/") for r in new} == {4}  # deep paths cut to 5 segments
+
+
+def test_null_docs_identical(spark, partitions):
+    docs = spark.createDataFrame(
+        [
+            (None, "orphan words Orphan"),
+            ("/d/a.txt", None),
+            ("/d/b.txt", ""),
+            ("/d/c.txt", "kept Kept kept"),
+            (None, None),
+            ("", "rootless text"),
+        ],
+        "source string, text string",
+    )
+    new = _assert_same_as_old(docs)
+    files = {r[3] for r in new}
+    assert None not in files  # NULL-source rows dropped
+    assert {"d/b.txt", "d/c.txt", ""} <= files  # empty text keeps one "" token
+    assert "d/a.txt" not in files  # NULL text yields no token

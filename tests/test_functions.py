@@ -38,6 +38,13 @@ def test_arabic_tokenizer_extracts_words(spark):
     assert "يَكْتُبُ" in words and "وَ" in words
 
 
+def _basename_backwards_lambda(c, depth: int):
+    """The interpreted-lambda lowering, verbatim (functions/text.py @ 445c2b3)."""
+    parts = F.filter(F.split(c, "/"), lambda x: x != "")
+    start = F.greatest(F.lit(1), F.size(parts) - F.lit(depth - 1))
+    return F.array_join(F.slice(parts, start, depth), "/")
+
+
 def test_basename_backwards(spark):
     from tiny_etl_multiproc_bigdata_spark.functions.text import basename_backwards
 
@@ -51,6 +58,23 @@ def test_basename_backwards(spark):
     assert out == ["a/b/c/d/e.txt", "x.txt", "r/s/t/u/v.txt", "a"]
     out2 = [r.s for r in df.select(basename_backwards("p", 3).alias("s")).collect()]
     assert out2 == ["c/d/e.txt", "x.txt", "t/u/v.txt", "a"]
+
+    # array_remove equals the interpreted-lambda lowering it replaced,
+    # on empty segments, the bare root, the empty string, NULL and a
+    # path deeper than any depth
+    twelve = "/" + "/".join(f"s{i}" for i in range(12)) + ".txt"
+    paths = ["//a//b/", "/", "", None, twelve, "/a/b/c/d/e.txt", "x.txt", "a//b"]
+    df = spark.createDataFrame([(p,) for p in paths], "p string")
+    for depth in (3, 5):
+        rows = df.select(
+            basename_backwards(F.col("p"), depth).alias("new"),
+            _basename_backwards_lambda(F.col("p"), depth).alias("old"),
+        ).collect()
+        assert [r.new for r in rows] == [r.old for r in rows], depth
+    by_path = dict(zip(paths, (r.new for r in rows)))  # depth 5
+    assert by_path["//a//b/"] == "a/b"
+    assert by_path["/"] == "" and by_path[""] == "" and by_path[None] is None
+    assert by_path[twelve] == "s7/s8/s9/s10/s11.txt"
 
 
 def test_truncate_and_overflow(spark):

@@ -66,7 +66,8 @@ def test_flagship_shuffle_shape(spark, sf_dir):
     repartition of the documents on ``source``. The explode and every
     aggregate sit above it, so no token crosses an exchange, and nothing
     aggregates (least of all a SortAggregate) on the scan side."""
-    plan = _plan(_q("flagship_words", spark, sf_dir))
+    df = _q("flagship_words", spark, sf_dir)
+    plan = _plan(df)
     body = plan.split("\n\n(1)")[0]  # tree section only (AQE repeats nodes)
     assert body.count("Exchange") == 1, body
     args = re.search(r"\) Exchange\nInput \[[^\]]*\]: [^\n]*\nArguments: ([^\n]*)", plan)
@@ -77,6 +78,17 @@ def test_flagship_shuffle_shape(spark, sf_dir):
     assert "Generate" in above, "the explode runs below the exchange: tokens cross it"
     assert above.count("Aggregate") >= 4, "both aggregation levels sit above the exchange"
     assert "Aggregate" not in below and "Generate" not in below, below
+    # Per-row work: `file` is derived once per document (its
+    # basename_backwards split runs below the explode, not in the final
+    # projection), the required-field drop filters base columns rather
+    # than pushing the derived ones into an `atleastnnonnulls` filter,
+    # and no interpreted lambda is left in the plan.
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "atleastnnonnulls" not in optimized, optimized
+    assert "lambdafunction" not in optimized, optimized
+    file_nodes = [ln for ln in optimized.splitlines() if "split(source#" in ln]
+    assert len(file_nodes) == 1, optimized
+    assert optimized.index("Generate") < optimized.index(file_nodes[0]), optimized
 
 
 def test_flagship_scan_prunes_to_two_columns(spark, sf_dir):

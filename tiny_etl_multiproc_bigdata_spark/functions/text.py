@@ -44,11 +44,14 @@ def basename_backwards(col: Column | str, depth: int) -> Column:
 
     Reference walks ``os.path.basename``/``dirname`` repeatedly — which
     drops empty segments (leading '/', doubled slashes) via dirname
-    normalization — so empty segments are filtered before slicing. Here
-    it is split + filter + slice + join, one codegen'd expression.
+    normalization — so empty segments are removed before slicing. Here
+    it is split + array_remove + slice + join, all codegen'd builtins
+    (``split`` never yields a NULL element, so ``array_remove(…, "")``
+    drops exactly the empty segments and keeps the order, as an
+    interpreted ``filter(…, x -> x != "")`` lambda would).
     """
     c = F.col(col) if isinstance(col, str) else col
-    parts = F.filter(F.split(c, "/"), lambda x: x != "")
+    parts = F.array_remove(F.split(c, "/"), "")
     start = F.greatest(F.lit(1), F.size(parts) - F.lit(depth - 1))
     return F.array_join(F.slice(parts, start, depth), "/")
 

@@ -15,18 +15,34 @@ Spark-first single-pass design (the double scan disappears):
 
   docs → repartition(N, source)  -- the ONLY exchange: each document's
            compressed text crosses it once, whole
-       → tokens → groupBy(source, lower(token)) with COUNT(*), then
+       → file = truncate_270(basename_backwards(source, 5))
+           -- once per document, not once per output word
+       → tokens → groupBy(source, file, lower(token)) with COUNT(*), then
            min(token) as the deterministic representative word
        → window SUM(occurrences) OVER (PARTITION BY source)
-           -- words_count recovered from the already-deduped rows.
+           -- words_count recovered from the already-deduped rows
+       → WHERE word0, source, words_count IS NOT NULL → project.
 
 Every operator after the repartition is keyed by ``source`` (both
 aggregation levels and the window), and ``hashpartitioning(source)``
 satisfies all their distribution requirements, so the token stream is
 produced, reduced and summed inside the task the document landed in:
 one exchange instead of three token-level ones (pinned by
-tests/test_plans.py::test_flagship_shuffle_shape; the old three-exchange
-lowering is kept verbatim in tests/test_flagship_rewrite.py).
+tests/test_plans.py::test_flagship_shuffle_shape; the older lowerings
+are kept verbatim in tests/test_flagship_rewrite.py). ``file`` is a
+function of ``source``, so carrying it as a grouping key beside
+``source`` changes no group and adds no exchange.
+
+Required-field drop: every output column is NULL exactly when one of
+``word0``, ``source`` or ``words_count`` is — ``word``, ``word_len`` and
+``word_truncated`` are NULL-preserving functions of ``word0``, ``file``
+of ``source`` (split, array_remove, slice, array_join and substring all
+return NULL on NULL and never on a non-NULL input), and ``words_count``
+is itself an output column. So the reference's five-column drop is a
+filter on those three base columns, placed before the projection. The
+old ``na.drop`` over the five derived columns made the optimizer push
+all five expressions into an ``atleastnnonnulls`` filter and evaluate
+them twice per output row.
 
 N is the session's shuffle-partition count (``session.shuffle_partitions``),
 fixed on purpose: AQE would coalesce an unnumbered repartition by shuffle
@@ -49,6 +65,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from tiny_etl_multiproc_bigdata_spark.catalog import read_parquet
 from tiny_etl_multiproc_bigdata_spark.functions.text import (
     ARABIC_DIACRITICS,
     basename_backwards,
@@ -63,16 +80,21 @@ from tiny_etl_multiproc_bigdata_spark.session import shuffle_partitions
 def flagship_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents(text, source) → words(word, word_len, word_truncated,
     file, words_count), per-(file, normalized-word) distinct."""
-    return words_from_docs(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    return words_from_docs(read_parquet(spark, f"{sf_dir}/documents.parquet"))
 
 
 def words_from_docs(docs: DataFrame) -> DataFrame:
     """The flagship pipeline over any (source, text) DataFrame — also
     used by bench.py's sustained-throughput run over an amplified
     corpus."""
-    docs = docs.repartition(shuffle_partitions(docs.sparkSession), "source")
+    # basename_backwards_x4 keeps 5 segments (reference commons.py:157-158);
+    # computed before the explode, so once per document
+    docs = docs.repartition(
+        shuffle_partitions(docs.sparkSession), "source"
+    ).withColumn("file", truncate_str(basename_backwards(F.col("source"), 5), 270))
     tokens = docs.select(
         "source",
+        "file",
         F.explode(tokenize_words(F.col("text"))).alias("token"),
     ).withColumn("token", F.trim("token"))
     # mappers=[str.strip] (example/main.py:85); ignore_word_fn=str.isspace
@@ -85,12 +107,12 @@ def words_from_docs(docs: DataFrame) -> DataFrame:
     # SortAggregate (sorting the full stream per partition) and
     # array_min(collect_set) to ObjectHashAggregate (no codegen) —
     # measured 10x slower on a 95 MB corpus. Level 1 groups on
-    # (source, norm, token) with COUNT only; level 2 then takes
+    # (source, file, norm, token) with COUNT only; level 2 then takes
     # min(token)/sum(count) over the already-tiny per-word rows.
     pre = tokens.groupBy(
-        "source", F.lower(F.col("token")).alias("norm"), "token"
+        "source", "file", F.lower(F.col("token")).alias("norm"), "token"
     ).agg(F.count("*").alias("c"))
-    grouped = pre.groupBy("source", "norm").agg(
+    grouped = pre.groupBy("source", "file", "norm").agg(
         F.min("token").alias("word0"),
         F.sum("c").alias("occurrences"),
     )
@@ -100,15 +122,19 @@ def words_from_docs(docs: DataFrame) -> DataFrame:
         F.sum("occurrences").over(Window.partitionBy("source")).cast("bigint"),
     )
 
-    return with_count.select(
+    # required-field drop at the sink (loaders/commons.py:55-62), on the
+    # base columns — see the module docstring
+    required = (
+        F.col("word0").isNotNull()
+        & F.col("source").isNotNull()
+        & F.col("words_count").isNotNull()
+    )
+    return with_count.where(required).select(
         truncate_str(F.col("word0"), 255).alias("word"),
         F.length(remove_diac(F.col("word0"))).cast("bigint").alias("word_len"),
         len_str_gt(F.col("word0"), 255).alias("word_truncated"),
-        # basename_backwards_x4 keeps 5 segments (reference commons.py:157-158)
-        truncate_str(basename_backwards(F.col("source"), 5), 270).alias("file"),
-        F.col("words_count"),
-    ).na.drop(  # required-field drop at the sink (loaders/commons.py:55-62)
-        subset=["word", "word_len", "word_truncated", "file", "words_count"]
+        "file",
+        "words_count",
     )
 
 

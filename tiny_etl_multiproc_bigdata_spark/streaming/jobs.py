@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tiny_etl_multiproc_bigdata_spark.catalog import parquet_schema
 from tiny_etl_multiproc_bigdata_spark.functions.rounding import (
     exact_round,
 )
@@ -94,7 +95,7 @@ def _events_stream(
     from pyspark.sql.types import LongType
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     # the file stream source wants a directory basePath; select just the
     # events file from the fixture dir via glob filter
     raw = (
@@ -698,7 +699,7 @@ def streaming_complete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream of the documents table (schema from a batch
     read), replayed with availableNow for bounded runs."""
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/documents.parquet")
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
