@@ -1149,16 +1149,18 @@ def prefix_filter_pairs_from_docs(d: DataFrame) -> DataFrame:
     an N×-replicated corpus forms N independent token spaces and
     candidate pairs grow linearly, not quadratically."""
     # Materialize the shingle ARRAYS once: the checkpointed array table
-    # feeds three independent subtrees (sizes, document frequencies,
-    # and the prefix/array build) — without a barrier the
+    # feeds two independent subtrees (document frequencies and the
+    # prefix/array build) — without a barrier the
     # tokenize→shingle lineage re-executes per consumer, multiple
     # corpus passes at scale (the minhash_pairs_from_docs lesson,
     # VERDICT r01 item 5; flagged again by the r05 review). Arrays, not
-    # exploded postings, because sizes then come map-side (F.size — no
-    # groupBy shuffle).
+    # exploded postings, because sizes then come map-side: each posting
+    # carries its doc's set size ``n`` through the explode, so the
+    # window needs no size table joined back on doc_id.
     shingled = _shingled_docs(d).localCheckpoint(eager=True)
-    sh = shingled.select("doc_id", F.explode("shingles").alias("tok"))
-    sz = shingled.select("doc_id", F.size("shingles").alias("n"))
+    sh = shingled.select(
+        "doc_id", F.size("shingles").alias("n"), F.explode("shingles").alias("tok")
+    )
     # r13 optimization-round rewrite (guide §2.3 "shuffle narrower
     # types" + §2.4 "remove shuffles outright"): every stage past the
     # df-count now runs on an exact bijective int64 token id instead of
@@ -1197,8 +1199,7 @@ def prefix_filter_pairs_from_docs(d: DataFrame) -> DataFrame:
     # aggregate as the full id set without a second pass.
     ranked = (
         sh.join(dfr, "tok")
-        .select("doc_id", "tok_id", "df")  # shingle strings end here
-        .join(sz, "doc_id")
+        .select("doc_id", "tok_id", "df", "n")  # shingle strings end here
         .withColumn("rk", F.row_number().over(w))
     )
     per_doc = (

@@ -229,12 +229,18 @@ def p8_required_null_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     modeled as explicit na.drop on the projection. JSON extraction
     rides the r13 --jsonedge contract (functions/jsonpath.py): a
     malformed or non-numeric $.k is NULL on both engines and the
-    required-field drop removes it — never an exception."""
+    required-field drop removes it — never an exception.
+
+    ``k`` comes out of an explode of a one-element array: a filter on a
+    generator's output cannot be pushed below the Generate, so the
+    optimizer no longer inlines the JSON parse into the drop's
+    ``atleastnnonnulls`` as well as the projection, and each row's
+    ``props`` is parsed once, not twice."""
     e = table(spark, sf_dir, "events")
     return (
         e.select(
             "event_id",
-            json_bigint("props", "$.k").alias("k"),
+            F.explode(F.array(json_bigint("props", "$.k"))).alias("k"),
         )
         .na.drop(subset=["event_id", "k"])
     )

@@ -12,7 +12,22 @@ large multi-executor cluster:
 * Arrow enabled so any Pandas-UDF fallback moves columnar batches, not
   pickled rows;
 * session timezone pinned to UTC so event-time semantics are stable and
-  oracle comparisons (DuckDB, naive timestamps) agree.
+  oracle comparisons (DuckDB, naive timestamps) agree;
+* Python workers start from ``worker_daemon``, which stops each task
+  from re-reading the archives under ``SPARK_HOME``
+  (``importlib.invalidate_caches()`` in pyspark's task set-up): an
+  identity ``mapInArrow`` over 500 rows went from 340-360 to about
+  200 ms median at ``local[2]`` on a 4-vCPU host (1-minute load 2),
+  where a JVM-only projection takes about 100 ms. The package root joins
+  ``spark.executorEnv.PYTHONPATH`` so workers can import that module.
+  On a cluster the package must be importable on executors (installed,
+  or shipped with ``--py-files``), as any PySpark app's modules are;
+* ``spark.python.sql.dataFrameDebugging.enabled`` off: pyspark would
+  otherwise record the Python call site of every ``F.*`` call over
+  py4j. Building ``F.lower(F.col("x")) + i`` took 2.9 ms with it and
+  0.9 ms without, and its first call imports IPython (0.26 s, 26 MB
+  of peak RSS on the same host). Only the Python call-site line of
+  DataFrame error context goes.
 """
 
 from __future__ import annotations
@@ -20,6 +35,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _cpus() -> int:
@@ -54,6 +71,10 @@ def get_spark(
     coalesce — the configs below are identical either way.
     """
     cpus = _cpus()
+    conf = dict(extra_conf or {})
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (conf.get("spark.executorEnv.PYTHONPATH"), _PACKAGE_ROOT) if p
+    )
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -70,7 +91,11 @@ def get_spark(
         # events.parquet carries TIMESTAMP(NANOS) which Spark's parquet
         # reader rejects; read as int64 nanos and convert in the catalog
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config(
+            "spark.python.daemon.module", "tiny_etl_multiproc_bigdata_spark.worker_daemon"
+        )
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
