@@ -41,7 +41,9 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _one_row(spark, fn, schema):
-    return spark.range(1).mapInArrow(fn, schema).collect()[0]
+    # one partition, so one Python task: a probe's scratch files are not
+    # shared with a concurrent task
+    return spark.range(1, numPartitions=1).mapInArrow(fn, schema).collect()[0]
 
 
 def test_worker_rereads_only_archives_outside_spark_home(spark, tmp_path):
@@ -159,3 +161,24 @@ def test_dataframe_debugging_off(spark, monkeypatch):
 
     monkeypatch.setattr(utils, "_enable_debugging_cache", None)
     assert utils.is_debugging_enabled() is False
+
+
+_NO_INVALIDATE_CACHES_IMPORT = """
+import sys, zipimport
+sys.path.insert(0, sys.argv[1])
+del zipimport.zipimporter.invalidate_caches
+import tiny_etl_multiproc_bigdata_spark.worker_daemon
+print("PATCHED", hasattr(zipimport.zipimporter, "invalidate_caches"))
+"""
+
+
+def test_daemon_imports_where_zipimporter_has_no_invalidate_caches():
+    """Before Python 3.10 zipimporter has no invalidate_caches (nor a
+    re-read to skip): the daemon module must still import and add none."""
+    run = subprocess.run(
+        [sys.executable, "-c", _NO_INVALIDATE_CACHES_IMPORT, ROOT],
+        capture_output=True,
+        text=True,
+        timeout=60,
+    )
+    assert run.stdout.split() == ["PATCHED", "False"], run.stderr[-2000:]

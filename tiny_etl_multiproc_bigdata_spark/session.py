@@ -28,6 +28,11 @@ large multi-executor cluster:
   0.9 ms without, and its first call imports IPython (0.26 s, 26 MB
   of peak RSS on the same host). Only the Python call-site line of
   DataFrame error context goes.
+
+The last two reach only sessions built here: the test suite, ``bench.py``,
+``perfbench`` and the tools other than ``tools/verify_queries.py``. The
+driver contract's caller builds its own session: its workers keep
+pyspark's stock daemon and its ``F.*`` calls still record their call site.
 """
 
 from __future__ import annotations

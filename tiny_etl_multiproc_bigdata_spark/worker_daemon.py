@@ -15,7 +15,7 @@ import zipimport
 
 _home = os.environ.get("SPARK_HOME")
 _SPARK_HOME = os.path.join(os.path.realpath(_home), "") if _home else None
-_reread = zipimport.zipimporter.invalidate_caches
+_reread = getattr(zipimport.zipimporter, "invalidate_caches", None)
 
 
 def invalidate_caches(self):
@@ -24,7 +24,10 @@ def invalidate_caches(self):
     _reread(self)
 
 
-zipimport.zipimporter.invalidate_caches = invalidate_caches
+# Before Python 3.10 a zipimporter has no invalidate_caches: it never
+# re-reads its archive, so there is nothing to skip.
+if _reread is not None:
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 if __name__ == "__main__":
     from pyspark import daemon
