@@ -316,6 +316,7 @@ def python_datasource_stream_write(
     spark.dataSource.register(JsonlStreamSink)
     from tiny_etl_multiproc_bigdata_spark.streaming.jobs import (
         _events_stream,
+        _run_available_now,
     )
 
     ev = (
@@ -330,14 +331,12 @@ def python_datasource_stream_write(
     with staged_dir(sf_dir, "pydssw") as root:
         data_dir = os.path.join(root, "data")
         os.makedirs(data_dir)
-        q = (
+        _run_available_now(
+            spark,
             ev.writeStream.format("tiny_etl_jsonl_stream_sink")
             .option("path", data_dir)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", os.path.join(root, "ckpt")),
         )
-        q.awaitTermination()
         # explicit schema (r11 empty-input audit), as above
         back = (
             spark.read.schema("event_type string, cents bigint")

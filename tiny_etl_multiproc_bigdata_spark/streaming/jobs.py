@@ -15,13 +15,20 @@ tests/test_streaming.py.
 Scale notes: identical code runs against Kafka/files on a cluster; the
 state store partitions by the grouping key (shuffle.partitions tasks),
 watermarks bound state size, and `availableNow` gives incremental
-backfill with rate limiting.
+backfill with rate limiting. Every query starts through
+``_run_available_now``, which manages checkpoint files through Hadoop's
+FileSystem API instead of FileContext: the same files are written, and
+the rename that commits each one is a single ``FileSystem.rename``,
+atomic wherever FileContext's rename is (one POSIX ``rename(2)`` on a
+local disk, a namenode rename on HDFS; neither API makes an object
+store's rename atomic).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from tiny_etl_multiproc_bigdata_spark.catalog import parquet_schema
 from tiny_etl_multiproc_bigdata_spark.functions.rounding import (
@@ -145,7 +152,49 @@ _RUN_SEQ = [0]
 # dropDuplicates or agg in a refactor) multiplies state-store size and
 # checkpoint traffic at scale exactly like lineage re-execution
 # multiplies scans, and value sweeps cannot see it.
+# Each record also carries the last trigger's phase times
+# (``duration_ms``), so a run's checkpoint cost (walCommit,
+# commitOffsets) reads apart from its Spark jobs (addBatch); a phase the
+# last trigger did not run (a trigger that found no new data) reads 0.
 RUN_STATS: list[dict] = []
+
+_PHASES = (
+    "latestOffset", "walCommit", "queryPlanning", "addBatch",
+    "commitOffsets", "triggerExecution",
+)
+
+_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def _run_available_now(spark: SparkSession, writer: DataStreamWriter) -> StreamingQuery:
+    """Start ``writer`` as a bounded ``availableNow`` query and wait for
+    it to end. Every streaming query of the engine starts here.
+
+    Checkpoint files go through Spark's FileSystem-based manager, not
+    the default FileContext one. Both write the same files (offsets,
+    commits, sources, state deltas and snapshots, each with its Hadoop
+    ``.crc`` sidecar) through a temporary file renamed into place, and
+    a checkpoint started under one resumes under the other. Without a
+    native Hadoop library, FileContext's rename asks for the link status
+    of the file and of its ``.crc`` at source and destination, and each
+    such call forks ``readlink``: 80 processes per
+    ``streaming_stream_static_join`` replay (JFR ``jdk.ProcessStart``,
+    sf0.01). ``FileSystem.rename`` is one POSIX ``rename(2)`` on a local
+    disk, and it is atomic wherever FileContext's rename is (HDFS too; on
+    an object store neither is).
+
+    Spark reads the key when a query starts, so it is set here, at use
+    time, and also reaches a session the caller built, as
+    ``_events_stream`` sets ``nanosAsLong``."""
+    spark.conf.set(
+        "spark.sql.streaming.checkpointFileManagerClass", _CHECKPOINT_FILE_MANAGER
+    )
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q
 
 
 def _run_to_memory(df: DataFrame, spark: SparkSession, name: str, output_mode: str) -> DataFrame:
@@ -157,15 +206,12 @@ def _run_to_memory(df: DataFrame, spark: SparkSession, name: str, output_mode: s
     """
     _RUN_SEQ[0] += 1
     qname = f"{name}_{_RUN_SEQ[0]}"
-    q = (
-        df.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+    q = _run_available_now(
+        spark,
+        df.writeStream.format("memory").queryName(qname).outputMode(output_mode),
     )
-    q.awaitTermination()
     prog = q.lastProgress or {}
+    durations = prog.get("durationMs", {})
     RUN_STATS.append(
         {
             "name": name,
@@ -175,6 +221,7 @@ def _run_to_memory(df: DataFrame, spark: SparkSession, name: str, output_mode: s
                 int(op.get("numRowsTotal", 0))
                 for op in prog.get("stateOperators", [])
             ),
+            "duration_ms": {k: int(durations.get(k, 0)) for k in _PHASES},
         }
     )
     return spark.table(qname)
@@ -425,13 +472,12 @@ def streaming_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         def write_batch(batch_df: DataFrame, batch_id: int) -> None:
             csv_load(batch_df, os.path.join(data_dir, f"batch_id={batch_id}"))
 
-        q = (
-            ev.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        _run_available_now(
+            spark,
+            ev.writeStream.foreachBatch(write_batch).option(
+                "checkpointLocation", os.path.join(root, "ckpt")
+            ),
         )
-        q.awaitTermination()
         out = (
             spark.read.option("sep", ";")
             .option("header", "true")
