@@ -91,7 +91,7 @@ def main() -> None:
     # comparison (reference: 1.95 MB/s).
     from pyspark.sql import functions as F
 
-    from tiny_etl_multiproc_bigdata_spark.plans.flagship import words_from_docs
+    from tiny_etl_multiproc_bigdata_spark.plans.flagship import words_from_labelled_docs
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     corpus_bytes = docs.select(
@@ -117,11 +117,11 @@ def main() -> None:
     # compute, so one warm pass + 3 timed keeps the battery bounded
     # while absorbing load spikes
     mark_load("sustained")
-    words_from_docs(amplified).write.format("noop").mode("overwrite").save()
+    words_from_labelled_docs(amplified).write.format("noop").mode("overwrite").save()
     runs: list[float] = []
     for i in range(3):
         t0 = time.perf_counter()
-        words_from_docs(amplified).write.format("noop").mode("overwrite").save()
+        words_from_labelled_docs(amplified).write.format("noop").mode("overwrite").save()
         runs.append(time.perf_counter() - t0)
         print(f"# sustained run {i + 1}: {runs[-1]:.1f}s", file=sys.stderr)
     dt = sorted(runs)[1]

@@ -1,12 +1,14 @@
 """Equivalence pins for the flagship's rewrites
-(plans/flagship.py::words_from_docs).
+(plans/flagship.py::words_from_docs and ::words_from_labelled_docs).
 
-Keeps two earlier lowerings VERBATIM — the three-exchange token-level
-one, and the one-exchange one that derived ``file`` per output row and
+Keeps three earlier lowerings VERBATIM — the three-exchange token-level
+one; the one-exchange one that derived ``file`` per output row and
 dropped required-field NULLs with ``na.drop`` over the five derived
-columns — and asserts the current lowering (``file`` per document, the
-NULL drop on the base columns) returns identical rows to both, at
-shuffle partitions 1 and 3, over:
+columns; and the one-exchange token-level one with ``file`` per
+document and the NULL drop on the base columns — and asserts both live
+lowerings (the per-document ``array_distinct`` one and the label-level
+one) return identical rows to all three, at shuffle partitions 1 and 3,
+over:
 
 - the sf0.001 ``documents.parquet`` (a ``source`` label shared by many
   documents);
@@ -16,7 +18,12 @@ shuffle partitions 1 and 3, over:
   variants, U+0130 (İ), a token longer than 255 characters, and paths
   more than five segments deep;
 - a docs frame with NULL ``source``, NULL ``text`` and empty ``text``
-  rows, the inputs the required-field drop exists for.
+  rows, the inputs the required-field drop exists for;
+- one source shared by documents of different token counts plus a
+  NULL-text document, where ``words_count`` must be the source's total.
+
+The two NULL-bearing frames also run with ``spark.sql.ansi.enabled``
+off, where ``size(NULL)`` is -1.
 """
 
 from __future__ import annotations
@@ -32,7 +39,10 @@ from tiny_etl_multiproc_bigdata_spark.functions.text import (
     tokenize_words,
     truncate_str,
 )
-from tiny_etl_multiproc_bigdata_spark.plans.flagship import words_from_docs
+from tiny_etl_multiproc_bigdata_spark.plans.flagship import (
+    words_from_docs,
+    words_from_labelled_docs,
+)
 from tiny_etl_multiproc_bigdata_spark.session import shuffle_partitions
 from tiny_etl_multiproc_bigdata_spark.sources.files import read_whole_files
 
@@ -125,7 +135,66 @@ def _words_from_docs_na_drop(docs: DataFrame) -> DataFrame:
     )
 
 
-_OLD_LOWERINGS = (_words_from_docs_three_exchanges, _words_from_docs_na_drop)
+def _words_from_docs_token_level(docs: DataFrame) -> DataFrame:
+    """The one-exchange token-level lowering with ``file`` per document
+    and the NULL drop on the base columns, verbatim (plans/flagship.py @
+    6ec3e76)."""
+    # basename_backwards_x4 keeps 5 segments (reference commons.py:157-158);
+    # computed before the explode, so once per document
+    docs = docs.repartition(
+        shuffle_partitions(docs.sparkSession), "source"
+    ).withColumn("file", truncate_str(basename_backwards(F.col("source"), 5), 270))
+    tokens = docs.select(
+        "source",
+        "file",
+        F.explode(tokenize_words(F.col("text"))).alias("token"),
+    ).withColumn("token", F.trim("token"))
+    # mappers=[str.strip] (example/main.py:85); ignore_word_fn=str.isspace
+    # never fires post-split (tokens can't contain \s) — see
+    # functions.text.tokenize_words parity note.
+
+    # Two-level aggregation, deliberately: the token stream must be
+    # reduced by a pure-count HashAggregate (fixed-size buffer →
+    # whole-stage codegen). A direct min(token) would fall back to
+    # SortAggregate (sorting the full stream per partition) and
+    # array_min(collect_set) to ObjectHashAggregate (no codegen) —
+    # measured 10x slower on a 95 MB corpus. Level 1 groups on
+    # (source, file, norm, token) with COUNT only; level 2 then takes
+    # min(token)/sum(count) over the already-tiny per-word rows.
+    pre = tokens.groupBy(
+        "source", "file", F.lower(F.col("token")).alias("norm"), "token"
+    ).agg(F.count("*").alias("c"))
+    grouped = pre.groupBy("source", "file", "norm").agg(
+        F.min("token").alias("word0"),
+        F.sum("c").alias("occurrences"),
+    )
+
+    with_count = grouped.withColumn(
+        "words_count",
+        F.sum("occurrences").over(Window.partitionBy("source")).cast("bigint"),
+    )
+
+    # required-field drop at the sink (loaders/commons.py:55-62), on the
+    # base columns — see the module docstring
+    required = (
+        F.col("word0").isNotNull()
+        & F.col("source").isNotNull()
+        & F.col("words_count").isNotNull()
+    )
+    return with_count.where(required).select(
+        truncate_str(F.col("word0"), 255).alias("word"),
+        F.length(remove_diac(F.col("word0"))).cast("bigint").alias("word_len"),
+        len_str_gt(F.col("word0"), 255).alias("word_truncated"),
+        "file",
+        "words_count",
+    )
+
+
+_OLD_LOWERINGS = (
+    _words_from_docs_three_exchanges,
+    _words_from_docs_na_drop,
+    _words_from_docs_token_level,
+)
 
 _LONG = "x" * 300
 _FILES = {
@@ -160,12 +229,24 @@ def txt_tree(tmp_path_factory):
     return str(root)
 
 
+@pytest.fixture(params=["true", "false"], ids=["ansi", "legacy"])
+def ansi(spark, request):
+    # ANSI off brings back the legacy size(NULL) = -1
+    key = "spark.sql.ansi.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, request.param)
+    yield request.param
+    spark.conf.set(key, before)
+
+
 def _rows(df: DataFrame) -> list[tuple]:
     return sorted(tuple(r) for r in df.collect())
 
 
 def _assert_same_as_old(docs: DataFrame) -> list[tuple]:
+    """Both live lowerings return the rows of every old one."""
     new = _rows(words_from_docs(docs))
+    assert new == _rows(words_from_labelled_docs(docs)), "words_from_labelled_docs"
     for old in _OLD_LOWERINGS:
         assert new == _rows(old(docs)), old.__name__
     return new
@@ -187,7 +268,7 @@ def test_txt_tree_identical(spark, txt_tree, partitions):
     assert {r[3].count("/") for r in new} == {4}  # deep paths cut to 5 segments
 
 
-def test_null_docs_identical(spark, partitions):
+def test_null_docs_identical(spark, partitions, ansi):
     docs = spark.createDataFrame(
         [
             (None, "orphan words Orphan"),
@@ -204,3 +285,24 @@ def test_null_docs_identical(spark, partitions):
     assert None not in files  # NULL-source rows dropped
     assert {"d/b.txt", "d/c.txt", ""} <= files  # empty text keeps one "" token
     assert "d/a.txt" not in files  # NULL text yields no token
+
+
+def test_shared_source_identical(spark, partitions, ansi):
+    """One source shared by documents of different token counts and a
+    NULL-text document: words_count is the source's total, not any one
+    document's, and the NULL text adds nothing to it."""
+    docs = spark.createDataFrame(
+        [
+            ("/s/shared.txt", "one Two three"),
+            ("/s/shared.txt", "two"),
+            ("/s/shared.txt", None),
+            ("/s/shared.txt", "ONE four five six seven"),
+            ("/s/other.txt", "two Two"),
+        ],
+        "source string, text string",
+    )
+    new = _assert_same_as_old(docs)
+    counts = {(r[3], r[0]): r[4] for r in new}
+    assert counts[("s/shared.txt", "Two")] == 9
+    assert counts[("s/shared.txt", "ONE")] == 9  # min over both documents
+    assert counts[("s/other.txt", "Two")] == 2

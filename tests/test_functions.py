@@ -165,3 +165,40 @@ def test_compression_ratio_invariants(spark, sf_dir):
     r_rep = len(zlib.compress(rep.encode(), 6)) / len(rep.encode())
     r_mix = len(zlib.compress(mixed.encode(), 6)) / len(mixed.encode())
     assert r_rep < r_mix, "repetition must compress better"
+
+
+# C0 controls and space, NEL, NBSP, Ogham space, the U+2000 spaces to
+# ZWSP, line/paragraph separators, narrow NBSP, math space, ideographic
+# space, BOM: Unicode White_Space, Python's str.strip set, Java's \s,
+# and the zero-width characters some trims also strip
+_EDGE_CHARS = (
+    [chr(c) for c in range(0x21)]
+    + ["\u0085", " ", " "]
+    + [chr(c) for c in range(0x2000, 0x200C)]
+    + [" ", " ", " ", " ", "　", "﻿"]
+)
+
+
+def test_split_tokens_are_fixed_points_of_trim(spark):
+    """The flagship drops the reference's per-token strip mapper:
+    Spark's ``trim`` removes only U+0020, and ``split(s, '\\s+', -1)``
+    never leaves one in a token, so ``trim(t) == t`` for every token
+    whatever whitespace sits at its edges."""
+    from tiny_etl_multiproc_bigdata_spark.functions.text import tokenize_words
+
+    texts = [
+        s
+        for ch in _EDGE_CHARS
+        for s in (f"{ch}a{ch} {ch}b{ch}", f"c{ch}{ch}d\t{ch}", ch, f"e {ch} f")
+    ]
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    rows = (
+        df.select(F.explode(tokenize_words("text")).alias("t"))
+        .select("t", F.trim("t").alias("trimmed"))
+        .collect()
+    )
+    assert rows and all(r.t == r.trimmed for r in rows)
+    # the characters \s does not match do reach the token edges
+    kept = {ch for r in rows for ch in r.t}
+    assert {"\x00", " ", "　", "﻿"} <= kept
+    assert " " not in kept

@@ -91,6 +91,47 @@ def test_flagship_shuffle_shape(spark, sf_dir):
     assert optimized.index("Generate") < optimized.index(file_nodes[0]), optimized
 
 
+def test_flagship_file_tree_dedupes_per_document(spark, tmp_path):
+    """The per-document lowering over a file tree: the one exchange, and
+    every document deduplicated inside its own row before the token
+    explode, so the only aggregation sees distinct tokens per document
+    and no token reaches a hash aggregate. The split, the per-row
+    distinct and the document-row window all sit below the token
+    Generate."""
+    from tiny_etl_multiproc_bigdata_spark.plans.flagship import words_from_docs
+    from tiny_etl_multiproc_bigdata_spark.sources.files import read_whole_files
+
+    for rel, text in {"a/b/one.txt": "x y X y", "two.txt": "z  z"}.items():
+        path = tmp_path / rel
+        path.parent.mkdir(parents=True, exist_ok=True)
+        path.write_text(text, encoding="utf-8")
+    docs = read_whole_files(
+        spark, str(tmp_path), ".txt", path_key="source", content_key="text"
+    )
+    df = words_from_docs(docs)
+    plan = _plan(df)
+    body = plan.split("\n\n(1)")[0]
+    assert body.count("Exchange") == 1, body
+    args = re.search(r"\) Exchange\nInput \[[^\]]*\]: [^\n]*\nArguments: ([^\n]*)", plan)
+    assert args and re.match(r"hashpartitioning\(source#\d+, \d+\)", args.group(1)), plan
+    assert "HashAggregate" not in body, body
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    for banned in ("trim(", "lambdafunction", "atleastnnonnulls"):
+        assert banned not in optimized, (banned, optimized)
+    lines = optimized.splitlines()
+    # top-down: a later line is lower in the tree
+    token_gen = [i for i, ln in enumerate(lines) if "Generate explode(u#" in ln]
+    assert len(token_gen) == 1, optimized
+    above, below = lines[: token_gen[0]], lines[token_gen[0] + 1 :]
+    for marker in ("split(text#", "array_distinct("):
+        hits = [ln for ln in lines if marker in ln]
+        assert len(hits) == 1 and hits[0] in below, (marker, optimized)
+    assert any(ln.lstrip("+- :").startswith("Window") for ln in below), optimized
+    assert not any(ln.lstrip("+- :").startswith("Window") for ln in above), optimized
+    aggregates = [ln for ln in lines if ln.lstrip("+- :").startswith("Aggregate")]
+    assert len(aggregates) == 1 and aggregates[0] in above, optimized
+
+
 def test_flagship_scan_prunes_to_two_columns(spark, sf_dir):
     plan = _plan(_q("flagship_words", spark, sf_dir))
     m = re.search(r"ReadSchema: struct<([^>]*)>", plan)

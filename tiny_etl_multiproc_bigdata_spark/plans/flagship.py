@@ -11,27 +11,54 @@ Reference dataflow (two full reads of every file!):
   4. project (word, word_len, word_truncated, file, words_count) with
      required-null drop (main.py:158-162).
 
-Spark-first single-pass design (the double scan disappears):
+Spark-first single-pass design (the double scan disappears), in two
+lowerings that share their one exchange and their output stage:
 
   docs → repartition(N, source)  -- the ONLY exchange: each document's
            compressed text crosses it once, whole
        → file = truncate_270(basename_backwards(source, 5))
            -- once per document, not once per output word
-       → tokens → groupBy(source, file, lower(token)) with COUNT(*), then
-           min(token) as the deterministic representative word
-       → window SUM(occurrences) OVER (PARTITION BY source)
-           -- words_count recovered from the already-deduped rows
+       → (per input shape, below)
        → WHERE word0, source, words_count IS NOT NULL → project.
 
-Every operator after the repartition is keyed by ``source`` (both
-aggregation levels and the window), and ``hashpartitioning(source)``
+``words_from_docs`` — a file tree, one document per source:
+       → per document row: tokens = split(text), n = size(tokens),
+           u = array_distinct(tokens)
+       → window SUM(n) OVER (PARTITION BY source) = words_count,
+           over document rows
+       → explode(u) → groupBy(lower(token), source, file, words_count)
+           with min(token) as the deterministic representative word.
+
+``words_from_labelled_docs`` — a table whose ``source`` label is shared
+by many documents:
+       → tokens → groupBy(source, file, lower(token), token) with
+           COUNT(*), then groupBy(source, file, lower(token)) with
+           min(token)
+       → window SUM(occurrences) OVER (PARTITION BY source)
+           -- words_count recovered from the already-deduped rows.
+
+Which is faster depends on how many documents share a source, which
+only the caller knows (a file source or a labelled table), so each
+caller names its lowering and there is no setting. Measured on this
+engine (4-vCPU host): over perfbench ``flagship_corpus`` (160 files)
+the per-document lowering cuts traced executor CPU by about a quarter,
+because the token-level one spends 45% of its executor samples in a
+hash aggregate that copies, hashes and compares two ~100-byte paths per
+token; over bench.py's sf0.1 ×128 amplification (a label holds ~250
+documents) it is slower, because ``array_distinct`` cannot merge a
+word across documents and every document's copy reaches the final
+aggregation. The numbers are in each function's docstring.
+
+Every operator after the repartition is keyed by ``source`` (the
+aggregations and the window), and ``hashpartitioning(source)``
 satisfies all their distribution requirements, so the token stream is
 produced, reduced and summed inside the task the document landed in:
 one exchange instead of three token-level ones (pinned by
-tests/test_plans.py::test_flagship_shuffle_shape; the older lowerings
-are kept verbatim in tests/test_flagship_rewrite.py). ``file`` is a
-function of ``source``, so carrying it as a grouping key beside
-``source`` changes no group and adds no exchange.
+tests/test_plans.py::test_flagship_shuffle_shape and
+::test_flagship_file_tree_dedupes_per_document; the older lowerings
+are kept verbatim in tests/test_flagship_rewrite.py). ``file`` and
+``words_count`` are functions of ``source``, so carrying them as
+grouping keys beside ``source`` changes no group and adds no exchange.
 
 Required-field drop: every output column is NULL exactly when one of
 ``word0``, ``source`` or ``words_count`` is — ``word``, ``word_len`` and
@@ -57,7 +84,13 @@ the source is a label shared by many documents (20 labels, at most 25
 documents per label at sf0.01 and 250 at sf0.1), so one task holds at
 least one label's documents and at most 20 tasks have work. What
 crosses the exchange is the input text once, never the token stream,
-and there is no join, no broadcast and no Python in the plan.
+and there is no join, no broadcast and no Python in the plan. Memory:
+the per-document lowering holds at most one document row's token array
+and its distinct set at a time; the window over a source's document
+rows buffers them in a spillable array, and the sort in front of the
+aggregation spills, so neither needs a source to fit in memory. The
+label lowering's hash aggregates fall back to sort-based aggregation
+when their map fills.
 """
 
 from __future__ import annotations
@@ -80,18 +113,79 @@ from tiny_etl_multiproc_bigdata_spark.session import shuffle_partitions
 def flagship_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents(text, source) → words(word, word_len, word_truncated,
     file, words_count), per-(file, normalized-word) distinct."""
-    return words_from_docs(read_parquet(spark, f"{sf_dir}/documents.parquet"))
+    return words_from_labelled_docs(
+        read_parquet(spark, f"{sf_dir}/documents.parquet")
+    )
 
 
 def words_from_docs(docs: DataFrame) -> DataFrame:
-    """The flagship pipeline over any (source, text) DataFrame — also
-    used by bench.py's sustained-throughput run over an amplified
-    corpus."""
-    # basename_backwards_x4 keeps 5 segments (reference commons.py:157-158);
-    # computed before the explode, so once per document
-    docs = docs.repartition(
-        shuffle_partitions(docs.sparkSession), "source"
-    ).withColumn("file", truncate_str(basename_backwards(F.col("source"), 5), 270))
+    """The flagship pipeline over a file tree (``read_whole_files``:
+    ``source`` is the file path, so each source is one document) — the
+    reference's own job.
+
+    Each document row is deduplicated inside itself: its text is split
+    once, ``n = size(tokens)`` and ``u = array_distinct(tokens)`` come
+    from that one array, ``words_count`` is ``sum(n)`` over the source's
+    document rows, and only ``u`` is exploded into the single
+    aggregation. The per-row hash set keys on token bytes alone, so no
+    token is hashed or compared together with its path. Measured on
+    perfbench ``flagship_corpus`` (160 files, ``local[2]``, 4-vCPU
+    host), against the token-level lowering: pass time 1.37 → 1.00 s
+    (median of 10 interleaved pairs), traced executor CPU 1.39 → 1.07 s;
+    a JFR profile of the token-level lowering put 45% of executor
+    samples in its hash aggregate keyed on (source, file, norm, token).
+    ``array_distinct`` cannot merge across documents, so on a label
+    shared by many documents the token-level lowering is faster: use
+    ``words_from_labelled_docs`` there."""
+    # NULL text yields no token, and ANSI-off size(NULL) = -1 would leak
+    # into words_count, so it is dropped first
+    docs = _by_source(docs).where(F.col("text").isNotNull())
+    # No Generate barrier is needed to split each document once:
+    # CollapseProject does not inline the non-cheap split into both of
+    # its uses (pinned by tests/test_plans.py)
+    split = docs.select(
+        "source", "file", tokenize_words(F.col("text")).alias("tokens")
+    )
+    # mappers=[str.strip] (example/main.py:85) needs no trim here: Spark's
+    # trim strips only U+0020, which split('\s+') never leaves in a token
+    # (pinned by tests/test_functions.py); ignore_word_fn=str.isspace
+    # never fires post-split — see functions.text.tokenize_words.
+    per_doc = split.select(
+        "source",
+        "file",
+        F.size("tokens").alias("n"),
+        F.array_distinct("tokens").alias("u"),
+    )
+    counted = per_doc.withColumn(
+        "words_count", F.sum("n").over(Window.partitionBy("source"))
+    )
+    # words_count and file are functions of source: as grouping keys they
+    # change no group. lower(token) leads so the sort feeding the
+    # aggregate compares token bytes before the long shared path prefixes.
+    grouped = (
+        counted.select(
+            "source", "file", "words_count", F.explode("u").alias("token")
+        )
+        .groupBy(F.lower(F.col("token")).alias("norm"), "source", "file", "words_count")
+        .agg(F.min("token").alias("word0"))
+    )
+    return _required_words(grouped)
+
+
+def words_from_labelled_docs(docs: DataFrame) -> DataFrame:
+    """The flagship pipeline over a labelled table, where one ``source``
+    label is shared by many documents (the registry's
+    ``documents.parquet``: 20 labels × 25 documents at sf0.01) — also
+    bench.py's sustained-throughput run over an amplified corpus.
+
+    Tokens of all a label's documents meet in one token-level
+    aggregation, which merges them across documents. Measured on
+    bench.py's sf0.1 ×128 amplification (190 MB, about 250 documents a
+    label, ``local[4]``, 4-vCPU host; median of three processes): 33.9
+    MB/s here against 19.0 MB/s for ``words_from_docs``, whose per-row
+    ``array_distinct`` keeps every document's copy of a word until the
+    final aggregation."""
+    docs = _by_source(docs)
     tokens = docs.select(
         "source",
         "file",
@@ -121,15 +215,29 @@ def words_from_docs(docs: DataFrame) -> DataFrame:
         "words_count",
         F.sum("occurrences").over(Window.partitionBy("source")).cast("bigint"),
     )
+    return _required_words(with_count)
 
-    # required-field drop at the sink (loaders/commons.py:55-62), on the
-    # base columns — see the module docstring
+
+def _by_source(docs: DataFrame) -> DataFrame:
+    """The one exchange: whole documents hash-partitioned on ``source``,
+    with ``file`` derived once per document."""
+    # basename_backwards_x4 keeps 5 segments (reference commons.py:157-158);
+    # computed before the explode, so once per document
+    return docs.repartition(
+        shuffle_partitions(docs.sparkSession), "source"
+    ).withColumn("file", truncate_str(basename_backwards(F.col("source"), 5), 270))
+
+
+def _required_words(grouped: DataFrame) -> DataFrame:
+    """(source, file, word0, words_count) → the output columns, with the
+    required-field drop at the sink (loaders/commons.py:55-62) on the
+    base columns — see the module docstring."""
     required = (
         F.col("word0").isNotNull()
         & F.col("source").isNotNull()
         & F.col("words_count").isNotNull()
     )
-    return with_count.where(required).select(
+    return grouped.where(required).select(
         truncate_str(F.col("word0"), 255).alias("word"),
         F.length(remove_diac(F.col("word0"))).cast("bigint").alias("word_len"),
         len_str_gt(F.col("word0"), 255).alias("word_truncated"),
