@@ -268,7 +268,7 @@ def test_txt_tree_identical(spark, txt_tree, partitions):
     assert {r[3].count("/") for r in new} == {4}  # deep paths cut to 5 segments
 
 
-def test_null_docs_identical(spark, partitions, ansi):
+def _assert_null_docs_identical(spark) -> None:
     docs = spark.createDataFrame(
         [
             (None, "orphan words Orphan"),
@@ -285,6 +285,15 @@ def test_null_docs_identical(spark, partitions, ansi):
     assert None not in files  # NULL-source rows dropped
     assert {"d/b.txt", "d/c.txt", ""} <= files  # empty text keeps one "" token
     assert "d/a.txt" not in files  # NULL text yields no token
+
+
+def test_null_docs_identical(spark, partitions):
+    _assert_null_docs_identical(spark)
+
+
+@pytest.mark.parametrize("ansi", ["false"], ids=["legacy"], indirect=True)
+def test_null_docs_identical_ansi_off(spark, partitions, ansi):
+    _assert_null_docs_identical(spark)
 
 
 def test_shared_source_identical(spark, partitions, ansi):
