@@ -57,9 +57,9 @@ def pytest_collection_modifyitems(config, items):
 def spark():
     from tiny_etl_multiproc_bigdata_spark.session import get_spark
 
-    # small local session for unit tests; shuffle partitions low so tiny
-    # fixtures don't pay 32-task scheduling overhead per stage
-    spark = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
+    # master and shuffle partitions come from SPARK_GRAFT_CPUS (default:
+    # the host's core count), as for every other session of the package
+    spark = get_spark(app_name="tests")
     yield spark
 
 

@@ -23,7 +23,9 @@ over:
   NULL-text document, where ``words_count`` must be the source's total.
 
 The two NULL-bearing frames also run with ``spark.sql.ansi.enabled``
-off, where ``size(NULL)`` is -1.
+off, where ``size(NULL)`` is -1. The label-level lowering is also
+checked against the token-level one, which trims every token, on
+``documents.parquet`` at two SFs.
 """
 
 from __future__ import annotations
@@ -31,6 +33,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from conftest import TWO_SFS
 
 from tiny_etl_multiproc_bigdata_spark.functions.text import (
     basename_backwards,
@@ -255,6 +259,15 @@ def _assert_same_as_old(docs: DataFrame) -> list[tuple]:
 def test_documents_parquet_identical(spark, sf_dir, partitions):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     assert _assert_same_as_old(docs)
+
+
+@pytest.mark.parametrize("sf", TWO_SFS)
+def test_labelled_docs_match_token_level(spark, sf):
+    """The registry's flagship_words (words_from_labelled_docs) against
+    its earlier body, which trimmed every token, at two SFs."""
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    new = _rows(words_from_labelled_docs(docs))
+    assert new and new == _rows(_words_from_docs_token_level(docs))
 
 
 def test_txt_tree_identical(spark, txt_tree, partitions):

@@ -82,10 +82,13 @@ def test_flagship_shuffle_shape(spark, sf_dir):
     # basename_backwards split runs below the explode, not in the final
     # projection), the required-field drop filters base columns rather
     # than pushing the derived ones into an `atleastnnonnulls` filter,
-    # and no interpreted lambda is left in the plan.
+    # and no interpreted lambda is left in the plan. Nor is a trim:
+    # Spark's trim strips only U+0020, which split('\s+') never leaves
+    # in a token (tests/test_functions.py).
     optimized = df._jdf.queryExecution().optimizedPlan().toString()
     assert "atleastnnonnulls" not in optimized, optimized
     assert "lambdafunction" not in optimized, optimized
+    assert "trim(" not in optimized, optimized
     file_nodes = [ln for ln in optimized.splitlines() if "split(source#" in ln]
     assert len(file_nodes) == 1, optimized
     assert optimized.index("Generate") < optimized.index(file_nodes[0]), optimized

@@ -24,6 +24,11 @@ def md5_long(col: Column, offset: int = 1) -> Column:
     return F.conv(F.substring(F.md5(col), offset, 15), 16, 10).cast("bigint")
 
 
+def duck_md5_long(expr: str) -> str:
+    """DuckDB twin of ``md5_long`` (offset 1) for oracle SQL."""
+    return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
+
+
 def stable_token_hash(col: Column, seed: int = 0) -> Column:
     """Stable 60-bit hash of a token under a seed: md5(seed || '|' || tok)."""
     return md5_long(F.concat(F.lit(f"{seed}|"), col))

@@ -114,6 +114,16 @@ def duck_jlower(expr: str) -> str:
     return f"lower(replace({expr}, 'İ', 'i' || chr(775)))"
 
 
+# DuckDB twin of ``tokenize_words_nonempty("text")`` for oracle SQL:
+# the token strings flow into output hashes, fingerprints and term
+# columns, so the oracle lowers exactly like the engine (duck_jlower).
+DUCK_TOKS = (
+    r"list_filter(regexp_split_to_array("
+    + duck_jlower("text")
+    + r", '\s+'), t -> t <> '')"
+)
+
+
 def word_ngrams(tokens: Column, n: int) -> Column:
     """Contiguous word n-grams of a token array, space-joined.
 

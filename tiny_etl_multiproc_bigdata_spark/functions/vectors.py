@@ -37,6 +37,14 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return dot_product(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+def duck_cosine(a: str, b: str) -> str:
+    """DuckDB twin of ``cosine_similarity`` for oracle SQL."""
+    return (
+        f"list_dot_product({a}, {b})"
+        f" / (sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
+    )
+
+
 def top_k_by_cosine(scored: DataFrame, k: int) -> DataFrame:
     """Per-query top-``k`` of a ``(query_id, candidate_id, cos)`` frame:
     rank by the micro-scaled integer score ``floor(cos·1e6+0.5)``
@@ -58,6 +66,21 @@ def top_k_by_cosine(scored: DataFrame, k: int) -> DataFrame:
             "rn",
         )
     )
+
+
+def duck_top_k_by_cosine(scored: str, k: int) -> str:
+    """DuckDB twin of ``top_k_by_cosine`` over the ``(query_id,
+    candidate_id, cos)`` relation ``scored``: a ``ranked`` CTE and the
+    final SELECT, written to follow ``), `` in an oracle's WITH list."""
+    return f"""ranked AS (
+      SELECT query_id, candidate_id, cos,
+             row_number() OVER (PARTITION BY query_id
+                                ORDER BY CAST(floor(cos * 1000000 + 0.5) AS BIGINT) DESC,
+                                         candidate_id ASC) AS rn
+      FROM {scored}
+    )
+    SELECT query_id, candidate_id, (floor(cos * 10000 + 0.5) / 10000) AS cosine, rn
+    FROM ranked WHERE rn <= {k}"""
 
 
 # Per-element grid bound, shared with functions/numerics.py: 2**53 /

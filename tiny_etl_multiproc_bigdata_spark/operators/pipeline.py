@@ -32,6 +32,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tiny_etl_multiproc_bigdata_spark.functions import text
+
 Transformer = Callable[[DataFrame], DataFrame]
 Loader = Callable[[DataFrame], None]
 
@@ -150,7 +152,9 @@ def tokenize_words(
         src = F.col(source)
         if remove_chars:
             src = F.translate(src, remove_chars, "")
-        out = df.select(*keep, F.explode(F.split(src, pattern, -1)).alias(output))
+        out = df.select(
+            *keep, F.explode(text.tokenize_words(src, pattern)).alias(output)
+        )
         c: Column = F.col(output)
         for fn in mappers:
             c = fn(c)

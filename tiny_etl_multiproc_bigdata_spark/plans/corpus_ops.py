@@ -34,22 +34,12 @@ from tiny_etl_multiproc_bigdata_spark.functions.rounding import (
     round_half_up,
 )
 from tiny_etl_multiproc_bigdata_spark.functions.text import (
+    DUCK_TOKS,
     duck_jlower,
     tokenize_words_nonempty,
     word_ngrams,
 )
 from tiny_etl_multiproc_bigdata_spark.plans.registry import register
-
-# DuckDB twin of tokenize_words_nonempty (same fragment as quality.py,
-# patched identically): the token strings flow into output hashes,
-# fingerprints, and term columns, so the oracle must lower exactly
-# like the engine (r13 unicode matrix: one İ silently shifted 14 of
-# this module's entries — see functions/text.py::duck_jlower).
-_DUCK_TOKS = (
-    r"list_filter(regexp_split_to_array("
-    + duck_jlower("text")
-    + r", '\s+'), t -> t <> '')"
-)
 
 _SEG = 8  # dedup segment width (tokens)
 _CHUNK_W = 32  # chunk width (tokens)
@@ -95,7 +85,7 @@ def segment_hash_structs(l="l") -> F.Column:
     "dedup_corpus_segments",
     oracle=rf"""
     WITH t AS (
-      SELECT doc_id, {_DUCK_TOKS} AS l FROM documents
+      SELECT doc_id, {DUCK_TOKS} AS l FROM documents
     ), t2 AS (
       SELECT doc_id, l FROM t WHERE len(l) >= 1
     ), segs AS (
@@ -156,7 +146,7 @@ def dedup_corpus_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     "chunk_sliding_tokens",
     oracle=rf"""
     WITH t AS (
-      SELECT doc_id, {_DUCK_TOKS} AS l FROM documents
+      SELECT doc_id, {DUCK_TOKS} AS l FROM documents
     ), t2 AS (
       SELECT doc_id, l FROM t WHERE len(l) >= 1
     )
@@ -288,7 +278,7 @@ _N_QUERY_TERMS = 3
     ulp_sensitive=True,
     oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, unnest({_DUCK_TOKS}) AS tok FROM documents
+      SELECT doc_id, unnest({DUCK_TOKS}) AS tok FROM documents
     ), dl AS (
       SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id
     ), stats AS (
@@ -420,7 +410,7 @@ _PMI_MIN_COUNT = 5
     ulp_sensitive=True,
     oracle=rf"""
     WITH t AS (
-      SELECT {_DUCK_TOKS} AS l FROM documents
+      SELECT {DUCK_TOKS} AS l FROM documents
     ), uni AS (
       SELECT u.tok, count(*) AS c
       FROM t, unnest(l) AS u(tok)
@@ -512,7 +502,7 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_corpus_segments_rewrite",
     oracle=rf"""
     WITH t AS (
-      SELECT doc_id, {_DUCK_TOKS} AS l FROM documents
+      SELECT doc_id, {DUCK_TOKS} AS l FROM documents
     ), t2 AS (
       SELECT doc_id, l FROM t WHERE len(l) >= 1
     ), segs AS (
@@ -617,7 +607,7 @@ _PIPE_MIN_TOKENS = 12
     "pretrain_corpus_pipeline",
     oracle=rf"""
     WITH t AS (
-      SELECT doc_id, source, lang, {_DUCK_TOKS} AS l FROM documents
+      SELECT doc_id, source, lang, {DUCK_TOKS} AS l FROM documents
     ), gated AS (
       SELECT doc_id, source, l FROM t
       WHERE lang IN {_PIPE_LANGS!r} AND len(l) >= {_PIPE_MIN_TOKENS}
@@ -1114,7 +1104,7 @@ def winnowing_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "segment_novelty_rate",
     oracle=rf"""
     WITH t AS (
-      SELECT doc_id, {_DUCK_TOKS} AS l FROM documents
+      SELECT doc_id, {DUCK_TOKS} AS l FROM documents
     ), t2 AS (
       SELECT doc_id, l FROM t WHERE len(l) >= 1
     ), segs AS (
@@ -1199,7 +1189,7 @@ def _register_ndcg_eval() -> None:
     # _N_QUERY_TERMS moves both entries together.
     oracle = f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_DUCK_TOKS}) AS tok FROM documents
+      SELECT doc_id, unnest({DUCK_TOKS}) AS tok FROM documents
     ), df AS (
       SELECT tok, count(DISTINCT doc_id) AS df FROM toks GROUP BY tok
     ), qterms AS (
@@ -1325,7 +1315,7 @@ _COV_KS = (100, 1_000, 10_000)
     oracle=f"""
     WITH freq AS (
       SELECT tok, CAST(count(*) AS BIGINT) AS f
-      FROM (SELECT unnest({_DUCK_TOKS}) AS tok FROM documents)
+      FROM (SELECT unnest({DUCK_TOKS}) AS tok FROM documents)
       GROUP BY tok
     ),
     ranked AS (
@@ -1405,7 +1395,7 @@ _PROV_TOPK = 20
     "segment_provenance_topk",
     oracle=rf"""
     WITH t AS (
-      SELECT doc_id, {_DUCK_TOKS} AS l FROM documents
+      SELECT doc_id, {DUCK_TOKS} AS l FROM documents
     ), t2 AS (
       SELECT doc_id, l FROM t WHERE len(l) >= 1
     ), segs AS (
@@ -1464,7 +1454,7 @@ def segment_provenance_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "source_overlap_matrix",
     oracle=rf"""
     WITH t AS (
-      SELECT doc_id, source, {_DUCK_TOKS} AS l FROM documents
+      SELECT doc_id, source, {DUCK_TOKS} AS l FROM documents
     ), t2 AS (
       SELECT doc_id, source, l FROM t WHERE len(l) >= 1
     ), segs AS (

@@ -27,10 +27,14 @@ from pyspark.sql import functions as F
 
 from tiny_etl_multiproc_bigdata_spark.catalog import table
 from tiny_etl_multiproc_bigdata_spark.functions.numerics import in_grid_domain
-from tiny_etl_multiproc_bigdata_spark.functions.hashing import md5_long
+from tiny_etl_multiproc_bigdata_spark.functions.hashing import (
+    duck_md5_long,
+    md5_long,
+)
 from tiny_etl_multiproc_bigdata_spark.functions.rounding import round_half_up
 from tiny_etl_multiproc_bigdata_spark.functions.vectors import (
     complete_vector_sql,
+    duck_cosine,
     is_complete_vector,
 )
 from tiny_etl_multiproc_bigdata_spark.functions.text import (
@@ -43,9 +47,6 @@ from tiny_etl_multiproc_bigdata_spark.plans.registry import register
 
 _N_HASHES = 8
 _N_BANDS = 4  # 2 rows per band
-
-# DuckDB twin of functions.hashing.md5_long / stable_token_hash
-_DUCK_H = "CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
 
 
 def _tokens(col):
@@ -308,7 +309,7 @@ def _minhash_sig_df(shingled: DataFrame) -> DataFrame:
 
 
 def _duck_sig_sql() -> str:
-    base = "(" + _DUCK_H.format(expr="t") + f" % {_MERSENNE_P})"
+    base = "(" + duck_md5_long("t") + f" % {_MERSENNE_P})"
     comps = ", ".join(
         f"list_min(list_transform(shingles, t -> "
         f"({a} * {base} + {b}) % {_MERSENNE_P}))"
@@ -780,7 +781,7 @@ _N_SIM_BITS = 32
 
 
 def _simhash_oracle() -> str:
-    h = _DUCK_H.format(expr="token")
+    h = duck_md5_long("token")
     bit_sums = ", ".join(
         f"sum(CASE WHEN ({h} >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS s{b}"
         for b in range(_N_SIM_BITS)
@@ -846,40 +847,12 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MAX_SHINGLE_DF = 20
 
 
-@register(
-    "dedup_ngram_jaccard",
-    oracle=_DUCK_SHINGLES
-    + f"""
-, ex AS (
-  SELECT DISTINCT doc_id, s.sh
-  FROM shingled, unnest(shingles) AS s(sh)
-), ex_rare AS (
-  SELECT doc_id, sh FROM (
-    SELECT doc_id, sh, count(*) OVER (PARTITION BY sh) AS df FROM ex
-  ) WHERE df <= {_MAX_SHINGLE_DF}
-), sizes AS (
-  SELECT doc_id, count(*) AS n FROM ex_rare GROUP BY doc_id
-), inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-  FROM ex_rare a JOIN ex_rare b ON a.sh = b.sh AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-  HAVING count(*) >= 2
-)
-SELECT i.doc_a, i.doc_b, i.n_common,
-       (floor(CAST(i.n_common AS DOUBLE) / (sa.n + sb.n - i.n_common) * 10000 + 0.5) / 10000) AS jaccard
-FROM inter i
-JOIN sizes sa ON sa.doc_id = i.doc_a
-JOIN sizes sb ON sb.doc_id = i.doc_b
-""",
-)
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact n-gram Jaccard for pairs sharing ≥2 word-3-grams: the
-    verification stage that follows LSH candidate generation (shingle
-    inverted index → df-cap → intersection counts → |A∩B| / |A∪B| over
-    the rare-shingle sets). The df cap makes the self-join safe at
-    corpus scale (no hot-shingle k² blowup); one extra window count on
-    the already-shuffled sh key."""
-    d = table(spark, sf_dir, "documents")
+def _rare_shingle_pairs(d: DataFrame) -> DataFrame:
+    """(doc_b, doc_a, n_common, na, nb) for every doc pair sharing ≥2
+    rare shingles: the shingle inverted index, df-capped, self-joined
+    into intersection counts, with both docs' rare-shingle set sizes —
+    the shared front of dedup_ngram_jaccard and
+    dedup_shingle_containment."""
     # token-pinning barrier via _shingled_docs (r13 optimization round):
     # the bare explode(_shingles(text)) generator re-derived the token
     # array 7x per row inside word_ngrams
@@ -907,19 +880,63 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
+    return inter.join(sa, "doc_a").join(sb, "doc_b")
+
+
+def _duck_rare_shingle_pairs(cols: str) -> str:
+    """DuckDB twin of _rare_shingle_pairs: ``SELECT cols`` over the
+    pairs ``i`` (doc_a, doc_b, n_common) joined to their sizes ``sa``
+    and ``sb`` (n)."""
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_common",
-            round_half_up(
-                F.col("n_common").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("n_common")),
-                4,
-            ).alias("jaccard"),
-        )
+        _DUCK_SHINGLES
+        + f"""
+, ex AS (
+  SELECT DISTINCT doc_id, s.sh
+  FROM shingled, unnest(shingles) AS s(sh)
+), ex_rare AS (
+  SELECT doc_id, sh FROM (
+    SELECT doc_id, sh, count(*) OVER (PARTITION BY sh) AS df FROM ex
+  ) WHERE df <= {_MAX_SHINGLE_DF}
+), sizes AS (
+  SELECT doc_id, count(*) AS n FROM ex_rare GROUP BY doc_id
+), inter AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
+  FROM ex_rare a JOIN ex_rare b ON a.sh = b.sh AND a.doc_id < b.doc_id
+  GROUP BY a.doc_id, b.doc_id
+  HAVING count(*) >= 2
+)
+SELECT {cols}
+FROM inter i
+JOIN sizes sa ON sa.doc_id = i.doc_a
+JOIN sizes sb ON sb.doc_id = i.doc_b
+"""
+    )
+
+
+@register(
+    "dedup_ngram_jaccard",
+    oracle=_duck_rare_shingle_pairs(
+        """i.doc_a, i.doc_b, i.n_common,
+       (floor(CAST(i.n_common AS DOUBLE) / (sa.n + sb.n - i.n_common) * 10000 + 0.5) / 10000) AS jaccard"""
+    ),
+)
+def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact n-gram Jaccard for pairs sharing ≥2 word-3-grams: the
+    verification stage that follows LSH candidate generation (shingle
+    inverted index → df-cap → intersection counts → |A∩B| / |A∪B| over
+    the rare-shingle sets). The df cap makes the self-join safe at
+    corpus scale (no hot-shingle k² blowup); one extra window count on
+    the already-shuffled sh key."""
+    d = table(spark, sf_dir, "documents")
+    return _rare_shingle_pairs(d).select(
+        "doc_a",
+        "doc_b",
+        "n_common",
+        round_half_up(
+            F.col("n_common").cast("double")
+            / (F.col("na") + F.col("nb") - F.col("n_common")),
+            4,
+        ).alias("jaccard"),
     )
 
 
@@ -974,13 +991,12 @@ def _blocked_cosine_topk(blocked: DataFrame, block_col: str) -> DataFrame:
 def _embedding_topk_oracle(block_col: str, v_select: str) -> str:
     """DuckDB twin of _blocked_cosine_topk; ``v_select`` must yield
     (vec_id, emb, <block_col>)."""
-    from tiny_etl_multiproc_bigdata_spark.plans.vector_queries import _DUCK_COS
 
     return f"""
     WITH v AS ({v_select}), pairs AS (
       SELECT a.{block_col} AS {block_col},
              a.vec_id AS vec_a, b.vec_id AS vec_b,
-             {_DUCK_COS.format(a="a.emb", b="b.emb")} AS cos
+             {duck_cosine("a.emb", "b.emb")} AS cos
       FROM v a JOIN v b
         ON a.{block_col} = b.{block_col} AND a.vec_id < b.vec_id
     ), ranked AS (
@@ -1293,10 +1309,7 @@ _INC_EMB_THRESH_MICRO = 300_000  # cosine >= 0.30 flags a batch vector
 
 
 def _dedup_incremental_embedding_oracle() -> str:
-    from tiny_etl_multiproc_bigdata_spark.plans.vector_queries import (
-        _DUCK_COS,
-        _duck_bucket,
-    )
+    from tiny_etl_multiproc_bigdata_spark.plans.vector_queries import _duck_bucket
 
     return f"""
     WITH v AS (
@@ -1310,7 +1323,7 @@ def _dedup_incremental_embedding_oracle() -> str:
       SELECT * FROM v WHERE vec_id % 2 = 1
     ), pairs AS (
       SELECT b.vec_id, c.vec_id AS match_id,
-             {_DUCK_COS.format(a="b.emb", b="c.emb")} AS cos
+             {duck_cosine("b.emb", "c.emb")} AS cos
       FROM batch b JOIN corpus c ON c.bucket = b.bucket
     ), top1 AS (
       SELECT vec_id, match_id, cos,
@@ -1480,24 +1493,8 @@ _CONTAIN_FLAG = "0.8"  # shared literal: containment >= this flags a subset
 
 @register(
     "dedup_shingle_containment",
-    oracle=_DUCK_SHINGLES
-    + f"""
-, ex AS (
-  SELECT DISTINCT doc_id, s.sh
-  FROM shingled, unnest(shingles) AS s(sh)
-), ex_rare AS (
-  SELECT doc_id, sh FROM (
-    SELECT doc_id, sh, count(*) OVER (PARTITION BY sh) AS df FROM ex
-  ) WHERE df <= {_MAX_SHINGLE_DF}
-), sizes AS (
-  SELECT doc_id, count(*) AS n FROM ex_rare GROUP BY doc_id
-), inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-  FROM ex_rare a JOIN ex_rare b ON a.sh = b.sh AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-  HAVING count(*) >= 2
-)
-SELECT i.doc_a, i.doc_b, i.n_common,
+    oracle=_duck_rare_shingle_pairs(
+        f"""i.doc_a, i.doc_b, i.n_common,
        (floor(CAST(i.n_common AS DOUBLE) / sa.n * 10000 + 0.5) / 10000)
          AS containment_a,
        (floor(CAST(i.n_common AS DOUBLE) / sb.n * 10000 + 0.5) / 10000)
@@ -1505,11 +1502,8 @@ SELECT i.doc_a, i.doc_b, i.n_common,
        greatest(
          (floor(CAST(i.n_common AS DOUBLE) / sa.n * 10000 + 0.5) / 10000),
          (floor(CAST(i.n_common AS DOUBLE) / sb.n * 10000 + 0.5) / 10000))
-         >= {_CONTAIN_FLAG} AS subset_flag
-FROM inter i
-JOIN sizes sa ON sa.doc_id = i.doc_a
-JOIN sizes sb ON sb.doc_id = i.doc_b
-""",
+         >= {_CONTAIN_FLAG} AS subset_flag"""
+    ),
 )
 def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric shingle CONTAINMENT C(A,B) = |A∩B|/|A| for candidate
@@ -1518,58 +1512,23 @@ def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     but containment 1.0, and corpus pipelines must catch that
     direction (the small doc is the redundant one). Broder's
     containment companion to dedup_ngram_jaccard, sharing its shingle
-    index, df-cap and candidate generation verbatim, so the two
-    entries price the same pairs under both measures; the comparison
+    index, df-cap and candidate generation (_rare_shingle_pairs), so the
+    two entries price the same pairs under both measures; the comparison
     flag is the QUANTIZED value the row itself carries.
 
     100 TB shape: identical to dedup_ngram_jaccard (df-capped posting
     self-join — the cap is the k² guard); the two extra divisions ride
     the same joined row."""
     d = table(spark, sf_dir, "documents")
-    # token-pinning barrier via _shingled_docs (r13 optimization round):
-    # the bare explode(_shingles(text)) generator re-derived the token
-    # array 7x per row inside word_ngrams
-    ex = (
-        _shingled_docs(d)
-        .select("doc_id", F.explode("shingles").alias("sh"))
-        .distinct()
-    )
-    ex = (
-        ex.withColumn("df", F.count("*").over(Window.partitionBy("sh")))
-        .filter(F.col("df") <= _MAX_SHINGLE_DF)
-        .drop("df")
-        .localCheckpoint(eager=True)  # sizes + both self-join sides
-    )
-    sizes = ex.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = ex.alias("a")
-    b = ex.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("n_common"))
-        .filter(F.col("n_common") >= 2)
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
     ca = round_half_up(F.col("n_common").cast("double") / F.col("na"), 4)
     cb = round_half_up(F.col("n_common").cast("double") / F.col("nb"), 4)
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_common",
-            ca.alias("containment_a"),
-            cb.alias("containment_b"),
-            (F.greatest(ca, cb) >= float(_CONTAIN_FLAG)).alias("subset_flag"),
-        )
+    return _rare_shingle_pairs(d).select(
+        "doc_a",
+        "doc_b",
+        "n_common",
+        ca.alias("containment_a"),
+        cb.alias("containment_b"),
+        (F.greatest(ca, cb) >= float(_CONTAIN_FLAG)).alias("subset_flag"),
     )
 
 
@@ -1577,7 +1536,7 @@ def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _agreement_oracle() -> str:
-    h = _DUCK_H.format(expr="token")
+    h = duck_md5_long("token")
     bit_sums = ", ".join(
         f"sum(CASE WHEN ({h} >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS s{b}"
         for b in range(_N_SIM_BITS)

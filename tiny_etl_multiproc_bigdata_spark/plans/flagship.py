@@ -190,10 +190,7 @@ def words_from_labelled_docs(docs: DataFrame) -> DataFrame:
         "source",
         "file",
         F.explode(tokenize_words(F.col("text"))).alias("token"),
-    ).withColumn("token", F.trim("token"))
-    # mappers=[str.strip] (example/main.py:85); ignore_word_fn=str.isspace
-    # never fires post-split (tokens can't contain \s) — see
-    # functions.text.tokenize_words parity note.
+    )
 
     # Two-level aggregation, deliberately: the token stream must be
     # reduced by a pure-count HashAggregate (fixed-size buffer →

@@ -17,14 +17,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tiny_etl_multiproc_bigdata_spark.catalog import table
-from tiny_etl_multiproc_bigdata_spark.functions.rounding import (
-    exact_round,
-    round_half_up,
-)
+from tiny_etl_multiproc_bigdata_spark.functions.rounding import round_half_up
 from tiny_etl_multiproc_bigdata_spark.functions.partitioning import ckpt_hash
 from tiny_etl_multiproc_bigdata_spark.functions.vectors import (
     complete_vector_sql,
     cosine_similarity,
+    duck_cosine,
+    duck_top_k_by_cosine,
     is_complete_vector,
     top_k_by_cosine,
 )
@@ -100,16 +99,26 @@ _DUCK_L2SQ = (
     "i -> (({a})[i]::DOUBLE - ({b})[i]::DOUBLE)"
     " * (({a})[i]::DOUBLE - ({b})[i]::DOUBLE)), 'sum')"
 )
-_DUCK_COS = (
-    "list_dot_product({a}, {b})"
-    " / (sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
-)
 
 
-@register(
-    "ann_ivf_topk",
-    oracle=f"""
-    WITH centroids AS (
+def _ivf_cells(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The IVF index of ann_ivf_topk and ann_ivf_multiprobe: the
+    complete embeddings, the centroid sample (cid, cvec) and every
+    vector's nearest cell (_assign_cells)."""
+    e = table(spark, sf_dir, "embeddings").filter(
+        is_complete_vector(F.col("embedding"))
+    )
+    centroids = e.filter(F.col("vec_id") % _CENTROID_MOD == 7).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
+    )
+    return e, centroids, _assign_cells(e, centroids)
+
+
+# DuckDB twin of _ivf_cells' centroids and assignment, opening the WITH
+# list
+_DUCK_IVF_CELLS = f"""centroids AS (
       SELECT vec_id AS cid, embedding::DOUBLE[] AS cvec
       FROM embeddings WHERE vec_id % {_CENTROID_MOD} = 7 AND {_VEC_OK}
     ), assigned AS (
@@ -122,22 +131,20 @@ _DUCK_COS = (
         FROM embeddings e, centroids c
         WHERE {complete_vector_sql("e.embedding")}
       ) WHERE rn = 1
-    ), q AS (
+    )"""
+
+
+@register(
+    "ann_ivf_topk",
+    oracle=f"""
+    WITH {_DUCK_IVF_CELLS}, q AS (
       SELECT vec_id AS query_id, emb AS qv, cell FROM assigned
       WHERE vec_id < {_N_QUERIES}
     ), scored AS (
       SELECT q.query_id, a.vec_id AS candidate_id,
-             {_DUCK_COS.format(a="q.qv", b="a.emb")} AS cos
+             {duck_cosine("q.qv", "a.emb")} AS cos
       FROM q JOIN assigned a ON a.cell = q.cell AND a.vec_id <> q.query_id
-    ), ranked AS (
-      SELECT query_id, candidate_id, cos,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY CAST(floor(cos * 1000000 + 0.5) AS BIGINT) DESC,
-                                         candidate_id ASC) AS rn
-      FROM scored
-    )
-    SELECT query_id, candidate_id, (floor(cos * 10000 + 0.5) / 10000) AS cosine, rn
-    FROM ranked WHERE rn <= {_TOP_K}
+    ), {duck_top_k_by_cosine("scored", _TOP_K)}
     """,
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -146,13 +153,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the query's cell. Cells ≈ corpus/|centroids|, so each query
     compares ~1/50th of the corpus; recall rises with multi-cell
     probing, same plan shape."""
-    e = table(spark, sf_dir, "embeddings").filter(
-        is_complete_vector(F.col("embedding"))
-    )
-    centroids = e.filter(F.col("vec_id") % _CENTROID_MOD == 7).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
-    )
-    assigned = _assign_cells(e, centroids)
+    _, _, assigned = _ivf_cells(spark, sf_dir)
     q = assigned.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qv"),
@@ -495,20 +496,7 @@ _N_PROBES = 2
 @register(
     "ann_ivf_multiprobe",
     oracle=f"""
-    WITH centroids AS (
-      SELECT vec_id AS cid, embedding::DOUBLE[] AS cvec
-      FROM embeddings WHERE vec_id % {_CENTROID_MOD} = 7 AND {_VEC_OK}
-    ), assigned AS (
-      SELECT vec_id, emb, cell FROM (
-        SELECT e.vec_id, e.embedding::DOUBLE[] AS emb, c.cid AS cell,
-               row_number() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY CAST(floor({_DUCK_L2SQ.format(a="e.embedding::DOUBLE[]", b="c.cvec")} * 1000000 + 0.5) AS BIGINT) ASC,
-                          c.cid ASC) AS rn
-        FROM embeddings e, centroids c
-        WHERE {complete_vector_sql("e.embedding")}
-      ) WHERE rn = 1
-    ), qcells AS (
+    WITH {_DUCK_IVF_CELLS}, qcells AS (
       SELECT vec_id AS query_id, emb AS qv, cell AS qcell FROM (
         SELECT e.vec_id, e.embedding::DOUBLE[] AS emb, c.cid AS cell,
                row_number() OVER (
@@ -521,18 +509,10 @@ _N_PROBES = 2
       ) WHERE rn <= {_N_PROBES}
     ), scored AS (
       SELECT q.query_id, a.vec_id AS candidate_id,
-             {_DUCK_COS.format(a="q.qv", b="a.emb")} AS cos
+             {duck_cosine("q.qv", "a.emb")} AS cos
       FROM qcells q JOIN assigned a
         ON a.cell = q.qcell AND a.vec_id <> q.query_id
-    ), ranked AS (
-      SELECT query_id, candidate_id, cos,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY CAST(floor(cos * 1000000 + 0.5) AS BIGINT) DESC,
-                                         candidate_id ASC) AS rn
-      FROM scored
-    )
-    SELECT query_id, candidate_id, (floor(cos * 10000 + 0.5) / 10000) AS cosine, rn
-    FROM ranked WHERE rn <= {_TOP_K}
+    ), {duck_top_k_by_cosine("scored", _TOP_K)}
     """,
 )
 def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -546,13 +526,7 @@ def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape to ann_ivf_topk. Candidate sets from different probes are
     disjoint by construction (each corpus vector lives in exactly one
     cell), so no dedup stage is needed."""
-    e = table(spark, sf_dir, "embeddings").filter(
-        is_complete_vector(F.col("embedding"))
-    )
-    centroids = e.filter(F.col("vec_id") % _CENTROID_MOD == 7).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
-    )
-    assigned = _assign_cells(e, centroids)
+    e, centroids, assigned = _ivf_cells(spark, sf_dir)
     # query-side: top-_N_PROBES cells (rn <= P instead of == 1)
     qj = e.filter(F.col("vec_id") < _N_QUERIES).crossJoin(
         F.broadcast(centroids)

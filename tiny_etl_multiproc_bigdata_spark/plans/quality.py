@@ -24,24 +24,17 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tiny_etl_multiproc_bigdata_spark.catalog import table
-from tiny_etl_multiproc_bigdata_spark.functions.hashing import md5_long
+from tiny_etl_multiproc_bigdata_spark.functions.hashing import (
+    duck_md5_long,
+    md5_long,
+)
 from tiny_etl_multiproc_bigdata_spark.functions.rounding import round_half_up
 from tiny_etl_multiproc_bigdata_spark.functions.text import (
+    DUCK_TOKS,
     tokenize_words_nonempty,
 )
 from tiny_etl_multiproc_bigdata_spark.plans.registry import register
 from tiny_etl_multiproc_bigdata_spark.plans.text_queries import _BPE_RE
-
-# shared token-array fragments (lowercased whitespace split, empties
-# dropped) — the DuckDB twin of functions/text.tokenize_words_nonempty
-# oracle lowercase rides duck_jlower's İ pre-map (r13 unicode matrix:
-# text_repetition_strip's strip-hash and hashed_linear_classifier's
-# feature buckets silently shifted on one Turkish İ) — same fragment
-# as corpus_ops.py
-_DUCK_TOKS = (
-    r"list_filter(regexp_split_to_array("
-    r"lower(replace(text, 'İ', 'i' || chr(775))), '\s+'), t -> t <> '')"
-)
 
 
 def _toks() -> F.Column:
@@ -52,7 +45,7 @@ def _toks() -> F.Column:
     "repetition_quality_flags",
     oracle=rf"""
     WITH t AS (
-      SELECT doc_id, {_DUCK_TOKS} AS l FROM documents
+      SELECT doc_id, {DUCK_TOKS} AS l FROM documents
     ), m AS (
       SELECT doc_id,
              len(l) AS n_tokens,
@@ -133,7 +126,7 @@ def repetition_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_repetition_strip",
     oracle=rf"""
     WITH t AS (
-      SELECT doc_id, {_DUCK_TOKS} AS l FROM documents
+      SELECT doc_id, {DUCK_TOKS} AS l FROM documents
     ), t1 AS (
       SELECT doc_id, l, len(l) AS n FROM t WHERE len(l) >= 1
     ), g AS (
@@ -256,7 +249,7 @@ def text_repetition_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracles; a fix applied to one copy would silently desynchronize them)
 _DUCK_LM_CTES = rf"""
     WITH toks AS (
-      SELECT doc_id, unnest({_DUCK_TOKS}) AS tok FROM documents
+      SELECT doc_id, unnest({DUCK_TOKS}) AS tok FROM documents
     ), cnts AS (
       SELECT tok, count(*) AS c FROM toks GROUP BY tok
     ), tot AS (
@@ -426,7 +419,7 @@ def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH m AS (
       SELECT lang,
-             CAST(len({_DUCK_TOKS}) AS BIGINT)                     AS ws,
+             CAST(len({DUCK_TOKS}) AS BIGINT)                     AS ws,
              CAST(len(regexp_extract_all(text, '{_BPE_RE}')) AS BIGINT) AS bpe,
              CAST(len(replace(text, ' ', '')) AS BIGINT)           AS chars
       FROM documents
@@ -478,7 +471,7 @@ def tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     ulp_sensitive=True,
     oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, unnest({_DUCK_TOKS}) AS tok FROM documents
+      SELECT doc_id, unnest({DUCK_TOKS}) AS tok FROM documents
     ), cnts AS (
       SELECT doc_id, tok, count(*) AS c FROM toks GROUP BY doc_id, tok
     ), tot AS (
@@ -548,7 +541,7 @@ def token_entropy_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     ulp_sensitive=True,
     oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, {_DUCK_TOKS} AS l FROM documents
+      SELECT doc_id, {DUCK_TOKS} AS l FROM documents
     ), pairs AS (
       SELECT doc_id,
              unnest(list_transform(range(1, len(l)),
@@ -723,22 +716,62 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---- hashed linear quality classifier ------------------------------------
 
 _HLC_B = 256  # hashed feature space (hashing trick, md5 mod B)
+_DSIR_TARGET = "src0"  # in-domain proxy: one source as the target corpus
 
-# 60-bit md5 integer of an arbitrary SQL string expression — DuckDB twin
-# of functions/hashing.md5_long
-_DUCK_MD5 = "CAST(('0x' || substr(md5({0}), 1, 15)) AS BIGINT)"
+
+def _hlc_weights(d: DataFrame) -> DataFrame:
+    """(doc_id, source, w): one row per token of each document, ``w``
+    the fixed md5-derived weight in [-50, 50] of the token's md5
+    bucket (mod _HLC_B) — the shared front of the hashed linear
+    classifier and its evaluations."""
+    toks = d.select("doc_id", "source", F.explode(_toks()).alias("tok"))
+    bucket = md5_long(F.col("tok")) % _HLC_B
+    w = md5_long(F.concat(F.lit("w|"), bucket.cast("string"))) % 101 - 50
+    return toks.select("doc_id", "source", w.alias("w"))
+
+
+def _labelled_logits(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(logit, pos) per document: the classifier's summed weights
+    against the source-target label."""
+    return (
+        _hlc_weights(table(spark, sf_dir, "documents"))
+        .groupBy("doc_id", "source")
+        .agg(F.sum("w").cast("bigint").alias("logit"))
+        .select("logit", (F.col("source") == _DSIR_TARGET).alias("pos"))
+    )
+
+
+# DuckDB twins: the per-token weight, the (doc_id, w) ``feat`` CTE and,
+# through ``scored``, _labelled_logits with its score column named ``col``
+_DUCK_HLC_W = (
+    "("
+    + duck_md5_long(
+        "'w|' || CAST(" + duck_md5_long("tok") + f" % {_HLC_B} AS VARCHAR)"
+    )
+    + ") % 101 - 50"
+)
+_DUCK_HLC_FEAT = f"""toks AS (
+      SELECT doc_id, unnest({DUCK_TOKS}) AS tok FROM documents
+    ), feat AS (
+      SELECT doc_id,
+             {_DUCK_HLC_W} AS w
+      FROM toks
+    )"""
+
+
+def _duck_labelled_logits(col: str) -> str:
+    return f"""{_DUCK_HLC_FEAT}, scored AS (
+      SELECT f.doc_id, CAST(sum(f.w) AS BIGINT) AS {col},
+             d.source = '{_DSIR_TARGET}' AS pos
+      FROM feat f JOIN documents d ON f.doc_id = d.doc_id
+      GROUP BY f.doc_id, d.source
+    )"""
 
 
 @register(
     "hashed_linear_classifier",
     oracle=rf"""
-    WITH toks AS (
-      SELECT doc_id, unnest({_DUCK_TOKS}) AS tok FROM documents
-    ), feat AS (
-      SELECT doc_id,
-             ({_DUCK_MD5.format("'w|' || CAST(" + _DUCK_MD5.format("tok") + f" % {_HLC_B} AS VARCHAR)")}) % 101 - 50 AS w
-      FROM toks
-    )
+    WITH {_DUCK_HLC_FEAT}
     SELECT doc_id,
            CAST(sum(w) AS BIGINT) AS logit,
            CAST(count(*) AS BIGINT) AS n_tokens,
@@ -761,14 +794,8 @@ def hashed_linear_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id; memory is O(1) per token regardless of vocabulary growth —
     the same property that makes the hashing trick the standard for
     web-scale quality classifiers. Integer weights ⇒ bit-exact."""
-    d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(_toks()).alias("tok"))
-    bucket = md5_long(F.col("tok")) % _HLC_B
-    w = (
-        md5_long(F.concat(F.lit("w|"), bucket.cast("string"))) % 101 - 50
-    )
     return (
-        toks.select("doc_id", w.alias("w"))
+        _hlc_weights(table(spark, sf_dir, "documents"))
         .groupBy("doc_id")
         .agg(
             F.sum("w").cast("bigint").alias("logit"),
@@ -783,7 +810,6 @@ def hashed_linear_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---- DSIR importance weighting -------------------------------------------
 
 _DSIR_B = 256  # hashed n-gram feature buckets
-_DSIR_TARGET = "src0"  # in-domain proxy: one source as the target corpus
 
 
 @register(
@@ -792,8 +818,8 @@ _DSIR_TARGET = "src0"  # in-domain proxy: one source as the target corpus
     oracle=rf"""
     WITH toks AS (
       SELECT doc_id, source,
-             ({_DUCK_MD5.format("tok")}) % {_DSIR_B} AS b
-      FROM (SELECT doc_id, source, unnest({_DUCK_TOKS}) AS tok
+             ({duck_md5_long("tok")}) % {_DSIR_B} AS b
+      FROM (SELECT doc_id, source, unnest({DUCK_TOKS}) AS tok
             FROM documents)
     ), cnts AS (
       SELECT b,
@@ -884,7 +910,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     ulp_sensitive=True,
     oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, {_DUCK_TOKS} AS l FROM documents
+      SELECT doc_id, {DUCK_TOKS} AS l FROM documents
     ), train_uni AS (
       SELECT tok, count(*) AS cu
       FROM (SELECT unnest(l) AS tok FROM toks WHERE doc_id % 2 = 0)
@@ -1019,18 +1045,7 @@ def stupid_backoff_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "roc_auc_eval",
     oracle=rf"""
-    WITH toks AS (
-      SELECT doc_id, unnest({_DUCK_TOKS}) AS tok FROM documents
-    ), feat AS (
-      SELECT doc_id,
-             ({_DUCK_MD5.format("'w|' || CAST(" + _DUCK_MD5.format("tok") + f" % {_HLC_B} AS VARCHAR)")}) % 101 - 50 AS w
-      FROM toks
-    ), scored AS (
-      SELECT f.doc_id, CAST(sum(f.w) AS BIGINT) AS score,
-             d.source = '{_DSIR_TARGET}' AS pos
-      FROM feat f JOIN documents d ON f.doc_id = d.doc_id
-      GROUP BY f.doc_id, d.source
-    ), per_score AS (
+    WITH {_duck_labelled_logits("score")}, per_score AS (
       SELECT score,
              count(*) AS n_s,
              count(*) FILTER (pos) AS n_pos_s
@@ -1073,15 +1088,8 @@ def roc_auc_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rank arithmetic never touches row-level data. AUC ≈ 0.5 here
     — md5 weights don't know the label, and the eval SHOWING that is
     the point (the protocol is the deliverable)."""
-    d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", "source", F.explode(_toks()).alias("tok"))
-    bucket = md5_long(F.col("tok")) % _HLC_B
-    w = md5_long(F.concat(F.lit("w|"), bucket.cast("string"))) % 101 - 50
-    scored = (
-        toks.select("doc_id", "source", w.alias("w"))
-        .groupBy("doc_id", "source")
-        .agg(F.sum("w").cast("bigint").alias("score"))
-        .select("score", (F.col("source") == _DSIR_TARGET).alias("pos"))
+    scored = _labelled_logits(spark, sf_dir).select(
+        F.col("logit").alias("score"), "pos"
     )
     per_score = scored.groupBy("score").agg(
         F.count(F.lit(1)).alias("n_s"),
@@ -1117,18 +1125,7 @@ def roc_auc_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "confusion_matrix_threshold",
     oracle=rf"""
-    WITH toks AS (
-      SELECT doc_id, unnest({_DUCK_TOKS}) AS tok FROM documents
-    ), feat AS (
-      SELECT doc_id,
-             ({_DUCK_MD5.format("'w|' || CAST(" + _DUCK_MD5.format("tok") + f" % {_HLC_B} AS VARCHAR)")}) % 101 - 50 AS w
-      FROM toks
-    ), scored AS (
-      SELECT f.doc_id, CAST(sum(f.w) AS BIGINT) AS score,
-             d.source = '{_DSIR_TARGET}' AS pos
-      FROM feat f JOIN documents d ON f.doc_id = d.doc_id
-      GROUP BY f.doc_id, d.source
-    ), cells AS (
+    WITH {_duck_labelled_logits("score")}, cells AS (
       SELECT CAST(count(*) FILTER (pos AND score > 0) AS BIGINT) AS tp,
              CAST(count(*) FILTER (NOT pos AND score > 0) AS BIGINT) AS fp,
              CAST(count(*) FILTER (pos AND score <= 0) AS BIGINT) AS fn,
@@ -1163,15 +1160,8 @@ def confusion_matrix_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     roc_auc_eval; the confusion matrix is a single partial+final
     aggregate producing four numbers — nothing row-scale ever reaches
     the driver."""
-    d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", "source", F.explode(_toks()).alias("tok"))
-    bucket = md5_long(F.col("tok")) % _HLC_B
-    w = md5_long(F.concat(F.lit("w|"), bucket.cast("string"))) % 101 - 50
-    scored = (
-        toks.select("doc_id", "source", w.alias("w"))
-        .groupBy("doc_id", "source")
-        .agg(F.sum("w").cast("bigint").alias("score"))
-        .select("score", (F.col("source") == _DSIR_TARGET).alias("pos"))
+    scored = _labelled_logits(spark, sf_dir).select(
+        F.col("logit").alias("score"), "pos"
     )
     cells = scored.agg(
         F.count_if(F.col("pos") & (F.col("score") > 0))
@@ -1286,18 +1276,7 @@ _PR_THRESHOLDS = (-20, -10, -5, 0, 5, 10, 20)
 @register(
     "pr_curve_thresholds",
     oracle=rf"""
-    WITH toks AS (
-      SELECT doc_id, unnest({_DUCK_TOKS}) AS tok FROM documents
-    ), feat AS (
-      SELECT doc_id,
-             ({_DUCK_MD5.format("'w|' || CAST(" + _DUCK_MD5.format("tok") + f" % {_HLC_B} AS VARCHAR)")}) % 101 - 50 AS w
-      FROM toks
-    ), scored AS (
-      SELECT f.doc_id, CAST(sum(f.w) AS BIGINT) AS logit,
-             d.source = '{_DSIR_TARGET}' AS pos
-      FROM feat f JOIN documents d ON f.doc_id = d.doc_id
-      GROUP BY f.doc_id, d.source
-    ),
+    WITH {_duck_labelled_logits("logit")},
     ladder AS (
       SELECT CAST(unnest([{", ".join(str(t) for t in _PR_THRESHOLDS)}])
                   AS BIGINT) AS threshold
@@ -1336,16 +1315,7 @@ def pr_curve_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
     token scan, one groupBy); the ladder fan-out multiplies the
     doc-grain table by {len(_PR_THRESHOLDS)} before a partial-agg'd
     groupBy on {len(_PR_THRESHOLDS)} keys."""
-    d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", "source", F.explode(_toks()).alias("tok"))
-    bucket = md5_long(F.col("tok")) % _HLC_B
-    w = md5_long(F.concat(F.lit("w|"), bucket.cast("string"))) % 101 - 50
-    scored = (
-        toks.select("doc_id", "source", w.alias("w"))
-        .groupBy("doc_id", "source")
-        .agg(F.sum("w").cast("bigint").alias("logit"))
-        .select("logit", (F.col("source") == _DSIR_TARGET).alias("pos"))
-    )
+    scored = _labelled_logits(spark, sf_dir)
     ladder = F.explode(
         F.array(*[F.lit(t).cast("bigint") for t in _PR_THRESHOLDS])
     ).alias("threshold")
@@ -1387,10 +1357,7 @@ def pr_curve_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
 # deterministic 80/20 doc-id hash split (same md5-bucket arithmetic as
 # dataset_holdout_split / sample_stratified_hash)
 _NB_TRAIN_PCT = 80
-_DUCK_BUCKET = (
-    "CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) "
-    "AS BIGINT) % 100"
-)
+_DUCK_BUCKET = duck_md5_long("CAST(doc_id AS VARCHAR)") + " % 100"
 
 
 def nb_confusion_from_docs(d: DataFrame) -> DataFrame:
@@ -1513,7 +1480,7 @@ def nb_confusion_from_docs(d: DataFrame) -> DataFrame:
     langs AS (SELECT lang, count(*) AS docs_l FROM train GROUP BY 1),
     tot AS (SELECT sum(docs_l) AS docs_tot FROM langs),
     ttoks AS (
-      SELECT lang, unnest({_DUCK_TOKS}) AS tok FROM train
+      SELECT lang, unnest({DUCK_TOKS}) AS tok FROM train
     ),
     cnts AS (SELECT lang, tok, count(*) AS c FROM ttoks GROUP BY 1, 2),
     nl AS (SELECT lang, sum(c) AS n_l FROM cnts GROUP BY 1),
@@ -1534,7 +1501,7 @@ def nb_confusion_from_docs(d: DataFrame) -> DataFrame:
       FROM cnts c JOIN lstats s ON c.lang = s.lang
     ),
     tt AS (
-      SELECT doc_id, lang AS true_lang, unnest({_DUCK_TOKS}) AS tok
+      SELECT doc_id, lang AS true_lang, unnest({DUCK_TOKS}) AS tok
       FROM test
     ),
     sc AS (
@@ -1617,7 +1584,7 @@ def _rbo_tail_col(m: F.Column) -> F.Column:
     oracle=rf"""
     WITH dt AS (
       SELECT doc_id, count(DISTINCT tok) AS n_types
-      FROM (SELECT doc_id, unnest({_DUCK_TOKS}) AS tok FROM documents)
+      FROM (SELECT doc_id, unnest({DUCK_TOKS}) AS tok FROM documents)
       GROUP BY 1
     ),
     r AS (
@@ -1698,7 +1665,7 @@ def rank_biased_overlap_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH t AS (
       SELECT doc_id, source, md5(text) AS h,
-             CAST(len({_DUCK_TOKS}) AS BIGINT) AS n_toks
+             CAST(len({DUCK_TOKS}) AS BIGINT) AS n_toks
       FROM documents
     ),
     surv AS (
@@ -1776,7 +1743,7 @@ _TRUNC_GRID = (128, 256, 512)
     "truncation_loss_report",
     oracle=rf"""
     WITH t AS (
-      SELECT lang, CAST(len({_DUCK_TOKS}) AS BIGINT) AS n FROM documents
+      SELECT lang, CAST(len({DUCK_TOKS}) AS BIGINT) AS n FROM documents
     )
     SELECT lang, g.max_len,
            CAST(count(*) AS BIGINT) AS n_docs,

@@ -41,6 +41,7 @@ from tiny_etl_multiproc_bigdata_spark.functions.rounding import (
     exact_round,
     round_half_up,
 )
+from tiny_etl_multiproc_bigdata_spark.functions.text import DUCK_TOKS
 from tiny_etl_multiproc_bigdata_spark.plans.registry import register
 
 
@@ -375,15 +376,34 @@ def spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ACF_MAX_LAG = 7
 
 
-@register(
-    "autocorrelation_lags",
-    oracle=f"""
-    WITH daily AS (
+def _daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(d, r): order revenue per o_orderdate in exact integer cents —
+    the day series of autocorrelation_lags, runs_test_randomness,
+    pinball_loss_eval and windows.bollinger_bands."""
+    return (
+        table(spark, sf_dir, "orders")
+        .groupBy(F.col("o_orderdate").alias("d"))
+        .agg(
+            F.sum(exact_round(F.col("o_totalprice") * 100, 0).cast("bigint"))
+            .cast("bigint")
+            .alias("r")
+        )
+    )
+
+
+# DuckDB twin of _daily_revenue, a CTE named daily
+_DUCK_DAILY = """daily AS (
       SELECT o_orderdate AS d,
              CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
                   AS BIGINT) AS r
       FROM orders GROUP BY o_orderdate
-    ),
+    )"""
+
+
+@register(
+    "autocorrelation_lags",
+    oracle=f"""
+    WITH {_DUCK_DAILY},
     idx AS (SELECT row_number() OVER (ORDER BY d) AS t, r FROM daily),
     tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
                    CAST(sum(r) AS BIGINT) AS s FROM idx),
@@ -424,12 +444,7 @@ def autocorrelation_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     all run on a table that fits in a single task. The lag join is a
     1-to-{_ACF_MAX_LAG} band self-join on consecutive integers —
     never a cross product."""
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").alias("d")).agg(
-        F.sum(exact_round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-        .cast("bigint")
-        .alias("r")
-    )
+    daily = _daily_revenue(spark, sf_dir)
     idx = daily.select(
         F.row_number().over(Window.orderBy("d")).alias("t"), "r"
     )
@@ -785,7 +800,7 @@ def theil_sen_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---- paired-classifier evaluation: McNemar + Cohen's kappa -----------------
 #
 # Two zero-artifact document classifiers over the same corpus:
-#   A: the hashed linear classifier's sign (quality.py:742 — logit > 0)
+#   A: the hashed linear classifier's sign (quality._hlc_weights — logit > 0)
 #   B: the length heuristic n_chars >= _LEN_THRESH
 # against the source-target label roc_auc_eval uses. Both entries share
 # the per-doc prediction build (one token scan + one groupBy).
@@ -794,19 +809,14 @@ _LEN_THRESH = 500
 
 
 def _paired_preds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tiny_etl_multiproc_bigdata_spark.functions.hashing import md5_long
     from tiny_etl_multiproc_bigdata_spark.plans.quality import (
         _DSIR_TARGET,
-        _HLC_B,
-        _toks,
+        _hlc_weights,
     )
 
     d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(_toks()).alias("tok"))
-    bucket = md5_long(F.col("tok")) % _HLC_B
-    w = md5_long(F.concat(F.lit("w|"), bucket.cast("string"))) % 101 - 50
     logits = (
-        toks.select("doc_id", w.alias("w"))
+        _hlc_weights(d)
         .groupBy("doc_id")
         .agg(F.sum("w").cast("bigint").alias("logit"))
     )
@@ -822,20 +832,15 @@ def _paired_preds(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _paired_oracle_cte() -> str:
     from tiny_etl_multiproc_bigdata_spark.plans.quality import (
         _DSIR_TARGET,
-        _DUCK_MD5,
-        _DUCK_TOKS,
-        _HLC_B,
+        _DUCK_HLC_W,
     )
 
-    w = _DUCK_MD5.format(
-        "'w|' || CAST(" + _DUCK_MD5.format("tok") + f" % {_HLC_B} AS VARCHAR)"
-    )
     return f"""
     toks AS (
-      SELECT doc_id, unnest({_DUCK_TOKS}) AS tok FROM documents
+      SELECT doc_id, unnest({DUCK_TOKS}) AS tok FROM documents
     ),
     logits AS (
-      SELECT doc_id, CAST(sum(({w}) % 101 - 50) AS BIGINT) AS logit
+      SELECT doc_id, CAST(sum({_DUCK_HLC_W}) AS BIGINT) AS logit
       FROM toks GROUP BY doc_id
     ),
     preds AS (
@@ -1160,12 +1165,10 @@ def zipf_fit_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _zipf_oracle() -> str:
-    from tiny_etl_multiproc_bigdata_spark.plans.quality import _DUCK_TOKS
-
     return f"""
     WITH freq AS (
       SELECT tok, CAST(count(*) AS BIGINT) AS f
-      FROM (SELECT unnest({_DUCK_TOKS}) AS tok FROM documents)
+      FROM (SELECT unnest({DUCK_TOKS}) AS tok FROM documents)
       GROUP BY tok
     ),
     ranked AS (
@@ -1725,13 +1728,8 @@ def ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "runs_test_randomness",
-    oracle="""
-    WITH daily AS (
-      SELECT o_orderdate AS d,
-             CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                  AS BIGINT) AS r
-      FROM orders GROUP BY o_orderdate
-    ),
+    oracle=f"""
+    WITH {_DUCK_DAILY},
     med AS (SELECT quantile_cont(CAST(r AS DOUBLE), 0.5) AS m FROM daily),
     signs AS (
       SELECT d, CAST(r AS DOUBLE) > med.m AS up
@@ -1771,12 +1769,8 @@ def runs_test_randomness(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: one partial-agg'd groupBy to day grain; the median,
     the sign sequence, and the single ordered lag all run over the
     bounded (~2,400-row) series."""
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").alias("d")).agg(
-        F.sum(exact_round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-        .cast("bigint")
-        .alias("r")
-    ).localCheckpoint(eager=True)  # consumers: median + sign sequence
+    # consumers: median + sign sequence
+    daily = _daily_revenue(spark, sf_dir).localCheckpoint(eager=True)
     med = daily.agg(
         F.percentile(F.col("r").cast("double"), F.lit(0.5)).alias("m")
     )
@@ -1957,12 +1951,7 @@ _PINBALL_TAUS = ("0.5", "0.9")  # shared literals
 @register(
     "pinball_loss_eval",
     oracle=f"""
-    WITH daily AS (
-      SELECT o_orderdate AS d,
-             CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                  AS BIGINT) AS r
-      FROM orders GROUP BY o_orderdate
-    ),
+    WITH {_DUCK_DAILY},
     paired AS (
       SELECT r, lag(r, {_PINBALL_LAG}) OVER (ORDER BY d) AS yhat
       FROM daily
@@ -1998,12 +1987,7 @@ def pinball_loss_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: one partial-agg'd groupBy to day grain, one lag
     window and one small aggregate over the bounded day series; the
     tau fan-out is x2."""
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").alias("d")).agg(
-        F.sum(exact_round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-        .cast("bigint")
-        .alias("r")
-    )
+    daily = _daily_revenue(spark, sf_dir)
     paired = daily.select(
         "r",
         F.lag("r", _PINBALL_LAG).over(Window.orderBy("d")).alias("yhat"),

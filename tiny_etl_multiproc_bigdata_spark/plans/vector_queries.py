@@ -26,6 +26,8 @@ from tiny_etl_multiproc_bigdata_spark.functions.rounding import round_half_up
 from tiny_etl_multiproc_bigdata_spark.functions.vectors import (
     complete_vector_sql,
     cosine_similarity,
+    duck_cosine,
+    duck_top_k_by_cosine,
     is_complete_vector,
     top_k_by_cosine,
 )
@@ -106,12 +108,6 @@ def _duck_bucket(expr: str) -> str:
     return "CAST(" + " + ".join(terms) + " AS BIGINT)"
 
 
-_DUCK_COS = (
-    "list_dot_product({a}, {b})"
-    " / (sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
-)
-
-
 @register(
     "ann_bruteforce_topk",
     oracle=f"""
@@ -120,18 +116,10 @@ _DUCK_COS = (
       FROM embeddings WHERE vec_id < {_N_QUERIES} AND {_VEC_OK}
     ), scored AS (
       SELECT q.query_id, e.vec_id AS candidate_id,
-             {_DUCK_COS.format(a="q.qv", b="e.embedding::DOUBLE[]")} AS cos
+             {duck_cosine("q.qv", "e.embedding::DOUBLE[]")} AS cos
       FROM q JOIN embeddings e ON e.vec_id <> q.query_id
         AND {complete_vector_sql("e.embedding")}
-    ), ranked AS (
-      SELECT query_id, candidate_id, cos,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY CAST(floor(cos * 1000000 + 0.5) AS BIGINT) DESC,
-                                         candidate_id ASC) AS rn
-      FROM scored
-    )
-    SELECT query_id, candidate_id, (floor(cos * 10000 + 0.5) / 10000) AS cosine, rn
-    FROM ranked WHERE rn <= {_TOP_K}
+    ), {duck_top_k_by_cosine("scored", _TOP_K)}
     """,
 )
 def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -191,17 +179,9 @@ def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT vec_id AS query_id, emb AS qv, bucket FROM v WHERE vec_id < {_N_QUERIES}
     ), scored AS (
       SELECT q.query_id, v.vec_id AS candidate_id,
-             {_DUCK_COS.format(a="q.qv", b="v.emb")} AS cos
+             {duck_cosine("q.qv", "v.emb")} AS cos
       FROM q JOIN v ON v.bucket = q.bucket AND v.vec_id <> q.query_id
-    ), ranked AS (
-      SELECT query_id, candidate_id, cos,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY CAST(floor(cos * 1000000 + 0.5) AS BIGINT) DESC,
-                                         candidate_id ASC) AS rn
-      FROM scored
-    )
-    SELECT query_id, candidate_id, (floor(cos * 10000 + 0.5) / 10000) AS cosine, rn
-    FROM ranked WHERE rn <= {_TOP_K}
+    ), {duck_top_k_by_cosine("scored", _TOP_K)}
     """,
 )
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -640,6 +620,40 @@ def embedding_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _recall_at_k(exact: DataFrame, found: DataFrame) -> DataFrame:
+    """Per-query recall@k of the ``found`` (query_id, candidate_id)
+    top-k against the ``exact`` one."""
+    hits = found.select("query_id", "candidate_id", F.lit(1).alias("hit"))
+    return (
+        exact.select("query_id", "candidate_id")
+        .join(hits, ["query_id", "candidate_id"], "left")
+        .groupBy("query_id")
+        .agg(
+            F.count("*").alias("n_exact"),
+            F.count("hit").cast("bigint").alias("n_hit"),
+            round_half_up(
+                F.count("hit").cast("double") / F.count("*"), 4
+            ).alias("recall_at_k"),
+        )
+    )
+
+
+def _duck_recall_at_k(exact: str, found: str) -> str:
+    """DuckDB twin of _recall_at_k over two top-k relations, each given
+    as ``"name alias"``."""
+    x, f = exact.split()[1], found.split()[1]
+    on = f"        LEFT JOIN {found} ON "  # the AND below ends where ON does
+    return f"""SELECT {x}.query_id,
+               count(*) AS n_exact,
+               CAST(count({f}.candidate_id) AS BIGINT) AS n_hit,
+               (floor(CAST(count({f}.candidate_id) AS DOUBLE) / count(*)
+                      * 10000 + 0.5) / 10000) AS recall_at_k
+        FROM {exact}
+{on}{f}.query_id = {x}.query_id
+{" " * (len(on) - 4)}AND {f}.candidate_id = {x}.candidate_id
+        GROUP BY {x}.query_id"""
+
+
 def _register_ivf_recall_eval() -> None:
     # Pull the two already-registered oracles and compose them as named
     # CTEs (a CTE body may itself carry a WITH clause); importing
@@ -656,15 +670,7 @@ def _register_ivf_recall_eval() -> None:
         oracle=f"""
         WITH brute AS ({brute_sql}),
         ivf AS ({ivf_sql})
-        SELECT b.query_id,
-               count(*) AS n_exact,
-               CAST(count(i.candidate_id) AS BIGINT) AS n_hit,
-               (floor(CAST(count(i.candidate_id) AS DOUBLE) / count(*)
-                      * 10000 + 0.5) / 10000) AS recall_at_k
-        FROM brute b
-        LEFT JOIN ivf i ON i.query_id = b.query_id
-                       AND i.candidate_id = b.candidate_id
-        GROUP BY b.query_id
+        {_duck_recall_at_k("brute b", "ivf i")}
         """,
     )
     def ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -681,22 +687,9 @@ def _register_ivf_recall_eval() -> None:
         force over the corpus is the expensive side and is exactly the
         cost being amortized by the index; running it on a bounded
         query set is the standard offline recall protocol."""
-        brute = ann_bruteforce_topk(spark, sf_dir).select(
-            "query_id", "candidate_id"
-        )
-        ivf = ivf_kmeans.ann_ivf_multiprobe(spark, sf_dir).select(
-            "query_id", "candidate_id", F.lit(1).alias("hit")
-        )
-        return (
-            brute.join(ivf, ["query_id", "candidate_id"], "left")
-            .groupBy("query_id")
-            .agg(
-                F.count("*").alias("n_exact"),
-                F.count("hit").cast("bigint").alias("n_hit"),
-                round_half_up(
-                    F.count("hit").cast("double") / F.count("*"), 4
-                ).alias("recall_at_k"),
-            )
+        return _recall_at_k(
+            ann_bruteforce_topk(spark, sf_dir),
+            ivf_kmeans.ann_ivf_multiprobe(spark, sf_dir),
         )
 
 
@@ -704,14 +697,10 @@ _register_ivf_recall_eval()
 
 
 def _register_pq_recall_eval() -> None:
+    from tiny_etl_multiproc_bigdata_spark.plans.ivf_kmeans import _DUCK_L2SQ, _l2sq
     from tiny_etl_multiproc_bigdata_spark.plans.registry import REGISTRY
 
     pq_sql = REGISTRY["pq_adc_topk"].oracle
-    l2 = (
-        "list_aggregate(list_transform(range(1, len({a}) + 1), "
-        "i -> (({a})[i]::DOUBLE - ({b})[i]::DOUBLE)"
-        " * (({a})[i]::DOUBLE - ({b})[i]::DOUBLE)), 'sum')"
-    )
 
     @register(
         "pq_recall_eval",
@@ -727,7 +716,7 @@ def _register_pq_recall_eval() -> None:
                    row_number() OVER (
                      PARTITION BY q.query_id
                      ORDER BY CAST(floor(
-                       {l2.format(a="q.qv", b="e.embedding::DOUBLE[]")}
+                       {_DUCK_L2SQ.format(a="q.qv", b="e.embedding::DOUBLE[]")}
                        * 1000000 + 0.5) AS BIGINT) ASC,
                        e.vec_id ASC) AS rn
             FROM q JOIN embeddings e
@@ -735,15 +724,7 @@ def _register_pq_recall_eval() -> None:
               AND {complete_vector_sql("e.embedding")}
           ) WHERE rn <= {_TOP_K}
         )
-        SELECT x.query_id,
-               count(*) AS n_exact,
-               CAST(count(p.candidate_id) AS BIGINT) AS n_hit,
-               (floor(CAST(count(p.candidate_id) AS DOUBLE) / count(*)
-                      * 10000 + 0.5) / 10000) AS recall_at_k
-        FROM exact x
-        LEFT JOIN pq p ON p.query_id = x.query_id
-                      AND p.candidate_id = x.candidate_id
-        GROUP BY x.query_id
+        {_duck_recall_at_k("exact x", "pq p")}
         """,
     )
     def pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -763,23 +744,9 @@ def _register_pq_recall_eval() -> None:
         q = e.filter(F.col("vec_id") < _N_QUERIES).select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
         )
-
-        def l2sq(a, b):
-            return F.aggregate(
-                F.zip_with(
-                    a,
-                    b,
-                    lambda x, y: (x.cast("double") - y.cast("double")) ** 2,
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-
-        from pyspark.sql import Window
-
         w = Window.partitionBy("query_id").orderBy(
             F.floor(
-                l2sq(F.col("qv"), F.col("embedding")) * 1_000_000 + F.lit(0.5)
+                _l2sq(F.col("qv"), F.col("embedding")) * 1_000_000 + F.lit(0.5)
             )
             .cast("bigint")
             .asc(),
@@ -792,20 +759,7 @@ def _register_pq_recall_eval() -> None:
             .filter(F.col("rn") <= _TOP_K)
             .select("query_id", F.col("vec_id").alias("candidate_id"))
         )
-        pq = pq_adc_topk(spark, sf_dir).select(
-            "query_id", "candidate_id", F.lit(1).alias("hit")
-        )
-        return (
-            exact.join(pq, ["query_id", "candidate_id"], "left")
-            .groupBy("query_id")
-            .agg(
-                F.count("*").alias("n_exact"),
-                F.count("hit").cast("bigint").alias("n_hit"),
-                round_half_up(
-                    F.count("hit").cast("double") / F.count("*"), 4
-                ).alias("recall_at_k"),
-            )
-        )
+        return _recall_at_k(exact, pq_adc_topk(spark, sf_dir))
 
 
 _register_pq_recall_eval()
@@ -1090,7 +1044,7 @@ def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _mnn_oracle() -> str:
-    cos = _DUCK_COS.format(a="a.emb", b="b.emb")
+    cos = duck_cosine("a.emb", "b.emb")
     return f"""
     WITH v AS (
       SELECT vec_id, embedding::DOUBLE[] AS emb,
@@ -1204,7 +1158,7 @@ _KNN_K = 5
              row_number() OVER (
                PARTITION BY q.query_id
                ORDER BY CAST(floor(
-                 {_DUCK_COS.format(a="q.qv", b="e.embedding::DOUBLE[]")}
+                 {duck_cosine("q.qv", "e.embedding::DOUBLE[]")}
                  * 1000000 + 0.5) AS BIGINT) DESC, e.vec_id ASC) AS rn
       FROM q JOIN embeddings e ON e.vec_id >= {_KNN_Q}
         AND {complete_vector_sql("e.embedding")}
@@ -1319,7 +1273,7 @@ def knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
              row_number() OVER (
                PARTITION BY q.query_id
                ORDER BY CAST(floor(
-                 {_DUCK_COS.format(a="q.qv", b="cvec.cv")}
+                 {duck_cosine("q.qv", "cvec.cv")}
                  * 1000000 + 0.5) AS BIGINT) DESC, cvec.c_label ASC) AS rn
       FROM q CROSS JOIN cvec
     )
@@ -1411,15 +1365,7 @@ def _register_lsh_recall_eval() -> None:
         oracle=f"""
         WITH brute AS ({brute_sql}),
         lsh AS ({lsh_sql})
-        SELECT b.query_id,
-               count(*) AS n_exact,
-               CAST(count(l.candidate_id) AS BIGINT) AS n_hit,
-               (floor(CAST(count(l.candidate_id) AS DOUBLE) / count(*)
-                      * 10000 + 0.5) / 10000) AS recall_at_k
-        FROM brute b
-        LEFT JOIN lsh l ON l.query_id = b.query_id
-                       AND l.candidate_id = b.candidate_id
-        GROUP BY b.query_id
+        {_duck_recall_at_k("brute b", "lsh l")}
         """,
     )
     def lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1438,22 +1384,8 @@ def _register_lsh_recall_eval() -> None:
         100 TB shape: same offline protocol as ivf_recall_eval — the
         bounded query sample pays the brute-force side once to price
         the index."""
-        brute = ann_bruteforce_topk(spark, sf_dir).select(
-            "query_id", "candidate_id"
-        )
-        lsh = ann_lsh_topk(spark, sf_dir).select(
-            "query_id", "candidate_id", F.lit(1).alias("hit")
-        )
-        return (
-            brute.join(lsh, ["query_id", "candidate_id"], "left")
-            .groupBy("query_id")
-            .agg(
-                F.count("*").alias("n_exact"),
-                F.count("hit").cast("bigint").alias("n_hit"),
-                round_half_up(
-                    F.count("hit").cast("double") / F.count("*"), 4
-                ).alias("recall_at_k"),
-            )
+        return _recall_at_k(
+            ann_bruteforce_topk(spark, sf_dir), ann_lsh_topk(spark, sf_dir)
         )
 
 
@@ -1560,7 +1492,7 @@ _CAL_N = 60  # pairs among vec_id < _CAL_N
     ),
     pairs AS (
       SELECT bit_count(CAST(xor(a.bucket, b.bucket) AS BIGINT)) AS hamming,
-             CAST(floor({_DUCK_COS.format(a="a.emb", b="b.emb")}
+             CAST(floor({duck_cosine("a.emb", "b.emb")}
                         * 1000000 + 0.5) AS BIGINT) AS cos_micro
       FROM v a JOIN v b ON a.vec_id < b.vec_id
     )

@@ -39,6 +39,10 @@ from tiny_etl_multiproc_bigdata_spark.functions.rounding import (
     round_half_up,
 )
 from tiny_etl_multiproc_bigdata_spark.plans.registry import register
+from tiny_etl_multiproc_bigdata_spark.plans.stat_tests import (
+    _DUCK_DAILY,
+    _daily_revenue,
+)
 
 
 @register(
@@ -494,19 +498,58 @@ def ewma_fixed_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "event_transition_matrix",
-    oracle="""
+# ---- first-order Markov chain over event types ---------------------------
+#
+# Five entries model the per-user event sequence as a Markov chain;
+# each reads its transitions through _markov_seq / _transition_counts
+# and their DuckDB twins.
+
+
+def _markov_seq(spark: SparkSession, sf_dir: str, *keep: str) -> DataFrame:
+    """(keep..., event_type, prev_type): every event with its user's
+    preceding event type, first events dropped. The lag orders by ts
+    with the event_id tiebreak, ASC NULLS LAST: a NULL-ts row must take
+    the same sequence position as in the oracles, or different
+    transition pairs exist."""
+    w = Window.partitionBy("user_id").orderBy(*event_time_order())
+    return (
+        table(spark, sf_dir, "events")
+        .select(*keep, "event_type", F.lag("event_type").over(w).alias("prev_type"))
+        .filter(F.col("prev_type").isNotNull())
+    )
+
+
+def _transition_counts(seq: DataFrame) -> DataFrame:
+    """(prev_type, next_type, n) transition counts of a _markov_seq."""
+    return seq.groupBy(
+        "prev_type", F.col("event_type").alias("next_type")
+    ).agg(F.count(F.lit(1)).alias("n"))
+
+
+# DuckDB twins: the lag sequence (opening the WITH list), its transition
+# counts, and the even-user train counts of the held-out evaluations
+_DUCK_MARKOV_SEQ = """
     WITH seq AS (
       SELECT user_id, event_type,
              lag(event_type) OVER (PARTITION BY user_id
                                    ORDER BY ts ASC, event_id ASC) AS prev_type
       FROM events
-    ), tr AS (
+    )"""
+_DUCK_TR = """tr AS (
       SELECT prev_type, event_type AS next_type, count(*) AS n
       FROM seq WHERE prev_type IS NOT NULL
       GROUP BY 1, 2
-    ), tot AS (
+    )"""
+_DUCK_TRAIN = """train AS (
+      SELECT prev_type, event_type AS next_type, count(*) AS n
+      FROM seq WHERE prev_type IS NOT NULL AND user_id % 2 = 0
+      GROUP BY 1, 2
+    )"""
+
+
+@register(
+    "event_transition_matrix",
+    oracle=f"""{_DUCK_MARKOV_SEQ}, {_DUCK_TR}, tot AS (
       SELECT prev_type, CAST(sum(n) AS BIGINT) AS row_total FROM tr GROUP BY 1
     )
     SELECT tr.prev_type, tr.next_type, tr.n,
@@ -525,19 +568,7 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     the data lives), then two tiny aggregations over the |states|²
     transition space; the probability is one double division, 4-dp
     quantized."""
-    e = table(spark, sf_dir, "events")
-    # asc_nulls_last: a NULL-ts row must take the same sequence
-    # position as in the oracle's NULLS LAST order, or different
-    # transition pairs exist (r11 NULL-parity audit class)
-    w = Window.partitionBy("user_id").orderBy(
-        F.asc_nulls_last("ts"), F.asc_nulls_last("event_id")
-    )
-    seq = e.select(
-        "event_type", F.lag("event_type").over(w).alias("prev_type")
-    ).filter(F.col("prev_type").isNotNull())
-    tr = seq.groupBy(
-        "prev_type", F.col("event_type").alias("next_type")
-    ).agg(F.count("*").alias("n"))
+    tr = _transition_counts(_markov_seq(spark, sf_dir))
     tot = tr.groupBy(F.col("prev_type").alias("t_prev")).agg(
         F.sum("n").cast("bigint").alias("row_total")
     )
@@ -1223,18 +1254,8 @@ def cusum_alert_path(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "markov_next_event_eval",
-    oracle="""
-    WITH seq AS (
-      SELECT user_id, event_type,
-             lag(event_type) OVER (PARTITION BY user_id
-                                   ORDER BY ts ASC, event_id ASC) AS prev_type
-      FROM events
-    ),
-    train AS (
-      SELECT prev_type, event_type AS next_type, count(*) AS n
-      FROM seq WHERE prev_type IS NOT NULL AND user_id % 2 = 0
-      GROUP BY 1, 2
-    ),
+    oracle=f"""{_DUCK_MARKOV_SEQ},
+    {_DUCK_TRAIN},
     model AS (
       SELECT prev_type, next_type AS predicted FROM (
         SELECT prev_type, next_type,
@@ -1269,19 +1290,9 @@ def markov_next_event_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     partially-aggregated filtered count plus one division. The
     train/eval split is a pure expression on the partition key — zero
     extra passes."""
-    e = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(*event_time_order())
-    seq = e.select(
-        "user_id",
-        "event_type",
-        F.lag("event_type").over(w).alias("prev_type"),
-    ).filter(F.col("prev_type").isNotNull())
-    seq = seq.localCheckpoint(eager=True)  # feeds train AND eval
-    train = (
-        seq.filter(F.col("user_id") % 2 == 0)
-        .groupBy("prev_type", F.col("event_type").alias("next_type"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    # feeds train AND eval
+    seq = _markov_seq(spark, sf_dir, "user_id").localCheckpoint(eager=True)
+    train = _transition_counts(seq.filter(F.col("user_id") % 2 == 0))
     model = train.groupBy("prev_type").agg(
         F.min(
             F.struct((-F.col("n")).alias("nn"), F.col("next_type"))
@@ -1308,18 +1319,8 @@ def markov_next_event_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "markov_calibration_bins",
-    oracle="""
-    WITH seq AS (
-      SELECT user_id, event_type,
-             lag(event_type) OVER (PARTITION BY user_id
-                                   ORDER BY ts ASC, event_id ASC) AS prev_type
-      FROM events
-    ),
-    train AS (
-      SELECT prev_type, event_type AS next_type, count(*) AS n
-      FROM seq WHERE prev_type IS NOT NULL AND user_id % 2 = 0
-      GROUP BY 1, 2
-    ),
+    oracle=f"""{_DUCK_MARKOV_SEQ},
+    {_DUCK_TRAIN},
     model AS (
       SELECT prev_type, next_type AS predicted,
              CAST(n * 10000 // row_total AS BIGINT) AS p10k
@@ -1358,19 +1359,9 @@ def markov_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: identical to markov_next_event_eval — one lag pass,
     a broadcast |states|-row model, one partially-aggregated groupBy
     on the (few) confidence bins."""
-    e = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(*event_time_order())
-    seq = e.select(
-        "user_id",
-        "event_type",
-        F.lag("event_type").over(w).alias("prev_type"),
-    ).filter(F.col("prev_type").isNotNull())
-    seq = seq.localCheckpoint(eager=True)  # feeds train AND eval
-    train = (
-        seq.filter(F.col("user_id") % 2 == 0)
-        .groupBy("prev_type", F.col("event_type").alias("next_type"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    # feeds train AND eval
+    seq = _markov_seq(spark, sf_dir, "user_id").localCheckpoint(eager=True)
+    train = _transition_counts(seq.filter(F.col("user_id") % 2 == 0))
     wt = Window.partitionBy("prev_type")
     model = (
         train.withColumn("row_total", F.sum("n").over(wt))
@@ -1605,17 +1596,7 @@ def session_path_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "markov_entropy_rate",
     ulp_sensitive=True,
-    oracle="""
-    WITH seq AS (
-      SELECT user_id, event_type,
-             lag(event_type) OVER (PARTITION BY user_id
-                                   ORDER BY ts ASC, event_id ASC) AS prev_type
-      FROM events
-    ), tr AS (
-      SELECT prev_type, event_type AS next_type, count(*) AS n
-      FROM seq WHERE prev_type IS NOT NULL
-      GROUP BY 1, 2
-    ), tot AS (
+    oracle=f"""{_DUCK_MARKOV_SEQ}, {_DUCK_TR}, tot AS (
       SELECT prev_type, CAST(sum(n) AS BIGINT) AS n_out FROM tr GROUP BY 1
     ), terms AS (
       SELECT tr.prev_type, tot.n_out,
@@ -1652,14 +1633,7 @@ def markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: one user-partitioned ordered window pass, then all
     arithmetic happens on the |states|² transition table. Nothing else
     touches row-scale data."""
-    e = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(*event_time_order())
-    seq = e.select(
-        "event_type", F.lag("event_type").over(w).alias("prev_type")
-    ).filter(F.col("prev_type").isNotNull())
-    tr = seq.groupBy(
-        "prev_type", F.col("event_type").alias("next_type")
-    ).agg(F.count(F.lit(1)).alias("n"))
+    tr = _transition_counts(_markov_seq(spark, sf_dir))
     tot = tr.groupBy(F.col("prev_type").alias("t_prev")).agg(
         F.sum("n").cast("bigint").alias("n_out")
     )
@@ -1788,12 +1762,7 @@ _BOLL_MIN = 4  # minimum frame rows before bands are emitted
 @register(
     "bollinger_bands",
     oracle=f"""
-    WITH daily AS (
-      SELECT o_orderdate AS d,
-             CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                  AS BIGINT) AS r
-      FROM orders GROUP BY o_orderdate
-    ),
+    WITH {_DUCK_DAILY},
     framed AS (
       SELECT d, r,
              CAST(count(*) OVER w AS BIGINT) AS n,
@@ -1832,12 +1801,7 @@ def bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-scale stage); the window runs over the bounded day series.
     Squared daily cents pass int64 at ~1e9-dollar days — hence the
     decimal/HUGEINT product inside the frame sum."""
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").alias("d")).agg(
-        F.sum(exact_round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-        .cast("bigint")
-        .alias("r")
-    )
+    daily = _daily_revenue(spark, sf_dir)
     w = Window.orderBy("d").rowsBetween(-_BOLL_W, 0)
     framed = daily.select(
         "d",
@@ -1872,13 +1836,7 @@ _STAT_ITERS = 4
 
 
 def _stationary_oracle() -> str:
-    head = f"""
-    WITH seq AS (
-      SELECT user_id, event_type,
-             lag(event_type) OVER (PARTITION BY user_id
-                                   ORDER BY ts ASC, event_id ASC) AS prev_type
-      FROM events
-    ),
+    head = f"""{_DUCK_MARKOV_SEQ},
     tr AS (
       SELECT prev_type, event_type AS next_type,
              CAST(count(*) AS BIGINT) AS n
@@ -1930,14 +1888,10 @@ def markov_stationary_distribution(
     (one lag window + one groupBy); each iteration is a join over the
     |states|^2 matrix — dimension-sized at any corpus scale, so the
     whole recurrence is effectively free after the count build."""
-    e = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(*event_time_order())
-    seq = e.select(
-        "event_type", F.lag("event_type").over(w).alias("prev_type")
-    ).filter(F.col("prev_type").isNotNull())
-    tr = seq.groupBy("prev_type", F.col("event_type").alias("next_type")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n")
-    ).localCheckpoint(eager=True)  # consumers: row totals, states, ITERS joins
+    # consumers: row totals, states, ITERS joins
+    tr = _transition_counts(_markov_seq(spark, sf_dir)).localCheckpoint(
+        eager=True
+    )
     rt = tr.groupBy("prev_type").agg(
         F.sum("n").cast("bigint").alias("row_total")
     )

@@ -22,6 +22,14 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tiny_etl_multiproc_bigdata_spark.catalog import table
+from tiny_etl_multiproc_bigdata_spark.functions.rounding import round_half_up
+from tiny_etl_multiproc_bigdata_spark.functions.text import (
+    tokenize_words_nonempty,
+)
+from tiny_etl_multiproc_bigdata_spark.plans.registry import register
+from tiny_etl_multiproc_bigdata_spark.sinks import csv_load
+
 
 def files_list(
     spark: SparkSession,
@@ -136,12 +144,9 @@ def staged_dir(sf_dir: str, name: str) -> Iterator[str]:
             fcntl.flock(lock, fcntl.LOCK_UN)
 
 
-def _register_csv_roundtrip() -> None:
-    from tiny_etl_multiproc_bigdata_spark.plans.registry import register
-
-    @register(
-        "csv_roundtrip_agg",
-        oracle="""
+@register(
+    "csv_roundtrip_agg",
+    oracle="""
         SELECT l_returnflag,
                count(*) AS n,
                (floor(CAST(sum(CAST(l_quantity AS DECIMAL(30,2))) AS DOUBLE)
@@ -149,60 +154,48 @@ def _register_csv_roundtrip() -> None:
         FROM lineitem
         GROUP BY l_returnflag
         """,
+)
+def csv_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CSV source/sink roundtrip: stage three lineitem columns
+    through the L4 ';'-CSV writer (sinks.csv_load), read them back
+    with an explicit schema through the CSV SOURCE — the read path
+    no other registry entry exercises — and aggregate; the oracle
+    runs the same aggregate on the original parquet, so the
+    roundtrip must be lossless (delimiters, headers, numeric
+    parsing). Stages in ``staged_dir``. quantity stages as its
+    DECIMAL(30,2) cents rendering so the text roundtrip is exact
+    (a raw double would print shortest-repr and reparse exactly
+    too, but the decimal form also pins the column's scale in the
+    file)."""
+    li = table(spark, sf_dir, "lineitem").select(
+        "l_orderkey",
+        "l_returnflag",
+        F.col("l_quantity").cast("decimal(30,2)").alias("l_quantity"),
     )
-    def csv_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """CSV source/sink roundtrip: stage three lineitem columns
-        through the L4 ';'-CSV writer (sinks.csv_load), read them back
-        with an explicit schema through the CSV SOURCE — the read path
-        no other registry entry exercises — and aggregate; the oracle
-        runs the same aggregate on the original parquet, so the
-        roundtrip must be lossless (delimiters, headers, numeric
-        parsing). Stages in ``staged_dir``. quantity stages as its
-        DECIMAL(30,2) cents rendering so the text roundtrip is exact
-        (a raw double would print shortest-repr and reparse exactly
-        too, but the decimal form also pins the column's scale in the
-        file)."""
-        from tiny_etl_multiproc_bigdata_spark.catalog import table
-        from tiny_etl_multiproc_bigdata_spark.functions.rounding import (
-            round_half_up,
-        )
-        from tiny_etl_multiproc_bigdata_spark.sinks import csv_load
-
-        li = table(spark, sf_dir, "lineitem").select(
-            "l_orderkey",
-            "l_returnflag",
-            F.col("l_quantity").cast("decimal(30,2)").alias("l_quantity"),
-        )
-        with staged_dir(sf_dir, "csvrt") as root:
-            data_dir = os.path.join(root, "data")
-            csv_load(li, data_dir)
-            back = (
-                spark.read.option("sep", ";")
-                .option("header", "true")
-                .schema(
-                    "l_orderkey bigint, l_returnflag string, "
-                    "l_quantity decimal(30,2)"
-                )
-                .csv(data_dir)
-                .localCheckpoint(eager=True)
+    with staged_dir(sf_dir, "csvrt") as root:
+        data_dir = os.path.join(root, "data")
+        csv_load(li, data_dir)
+        back = (
+            spark.read.option("sep", ";")
+            .option("header", "true")
+            .schema(
+                "l_orderkey bigint, l_returnflag string, "
+                "l_quantity decimal(30,2)"
             )
-        return back.groupBy("l_returnflag").agg(
-            F.count("*").alias("n"),
-            round_half_up(F.sum("l_quantity").cast("double"), 2).alias(
-                "sum_qty"
-            ),
+            .csv(data_dir)
+            .localCheckpoint(eager=True)
         )
+    return back.groupBy("l_returnflag").agg(
+        F.count("*").alias("n"),
+        round_half_up(F.sum("l_quantity").cast("double"), 2).alias(
+            "sum_qty"
+        ),
+    )
 
 
-_register_csv_roundtrip()
-
-
-def _register_orc_roundtrip() -> None:
-    from tiny_etl_multiproc_bigdata_spark.plans.registry import register
-
-    @register(
-        "orc_roundtrip_agg",
-        oracle="""
+@register(
+    "orc_roundtrip_agg",
+    oracle="""
         SELECT o_orderpriority,
                count(*) AS n,
                CAST(sum(o_totalprice_cents) AS BIGINT) AS total_cents
@@ -214,44 +207,36 @@ def _register_orc_roundtrip() -> None:
         )
         GROUP BY o_orderpriority
         """,
+)
+def orc_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ORC source/sink roundtrip — the columnar-format twin of
+    csv_roundtrip_agg: stage two orders columns (price pre-quantized
+    to integer cents so the staged file carries only exact types)
+    through ORC write + read, then aggregate; the oracle runs the
+    same aggregate on the original parquet, so the roundtrip must be
+    lossless. Exercises Spark's second columnar format end-to-end —
+    at 100 TB the ORC path matters for interop with Hive-era lakes,
+    and it inherits the same predicate-pushdown/column-pruning
+    contract as parquet. Stages in ``staged_dir``."""
+    o = table(spark, sf_dir, "orders").select(
+        "o_orderpriority",
+        F.floor(F.col("o_totalprice").cast("double") * 100 + 0.5)
+        .cast("bigint")
+        .alias("o_totalprice_cents"),
     )
-    def orc_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """ORC source/sink roundtrip — the columnar-format twin of
-        csv_roundtrip_agg: stage two orders columns (price pre-quantized
-        to integer cents so the staged file carries only exact types)
-        through ORC write + read, then aggregate; the oracle runs the
-        same aggregate on the original parquet, so the roundtrip must be
-        lossless. Exercises Spark's second columnar format end-to-end —
-        at 100 TB the ORC path matters for interop with Hive-era lakes,
-        and it inherits the same predicate-pushdown/column-pruning
-        contract as parquet. Stages in ``staged_dir``."""
-        from tiny_etl_multiproc_bigdata_spark.catalog import table
-
-        o = table(spark, sf_dir, "orders").select(
-            "o_orderpriority",
-            F.floor(F.col("o_totalprice").cast("double") * 100 + 0.5)
-            .cast("bigint")
-            .alias("o_totalprice_cents"),
-        )
-        with staged_dir(sf_dir, "orcrt") as root:
-            data_dir = os.path.join(root, "data")
-            o.write.mode("overwrite").orc(data_dir)
-            back = spark.read.orc(data_dir).localCheckpoint(eager=True)
-        return back.groupBy("o_orderpriority").agg(
-            F.count("*").alias("n"),
-            F.sum("o_totalprice_cents").cast("bigint").alias("total_cents"),
-        )
+    with staged_dir(sf_dir, "orcrt") as root:
+        data_dir = os.path.join(root, "data")
+        o.write.mode("overwrite").orc(data_dir)
+        back = spark.read.orc(data_dir).localCheckpoint(eager=True)
+    return back.groupBy("o_orderpriority").agg(
+        F.count("*").alias("n"),
+        F.sum("o_totalprice_cents").cast("bigint").alias("total_cents"),
+    )
 
 
-_register_orc_roundtrip()
-
-
-def _register_jsonl_roundtrip() -> None:
-    from tiny_etl_multiproc_bigdata_spark.plans.registry import register
-
-    @register(
-        "jsonl_roundtrip_agg",
-        oracle=r"""
+@register(
+    "jsonl_roundtrip_agg",
+    oracle=r"""
         SELECT lang,
                count(*) AS n_docs,
                CAST(sum(n_toks) AS BIGINT) AS total_tokens,
@@ -265,70 +250,59 @@ def _register_jsonl_roundtrip() -> None:
         )
         GROUP BY lang
         """,
+)
+def jsonl_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """JSON-lines source/sink roundtrip — the interchange format of
+    every pretraining corpus pipeline (one JSON doc per line, the
+    WebText/C4/RedPajama convention). The documents table stages
+    through .write.json + .read.json and the rolled-up per-language
+    aggregate INCLUDES an order-insensitive corpus hash (md5 of the
+    doc-id-ordered per-doc text md5s), so the oracle proves the
+    text survived JSON escaping byte-exactly — newlines, quotes,
+    unicode and all — not just that row counts match. Stages in
+    ``staged_dir``.
+
+    100 TB shape: JSONL is splittable by line, so the read stays
+    partition-parallel; schema is explicit on read (never
+    inferSchema over a corpus — that is a full extra scan)."""
+    d = table(spark, sf_dir, "documents").select(
+        "doc_id", "lang", "text"
     )
-    def jsonl_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """JSON-lines source/sink roundtrip — the interchange format of
-        every pretraining corpus pipeline (one JSON doc per line, the
-        WebText/C4/RedPajama convention). The documents table stages
-        through .write.json + .read.json and the rolled-up per-language
-        aggregate INCLUDES an order-insensitive corpus hash (md5 of the
-        doc-id-ordered per-doc text md5s), so the oracle proves the
-        text survived JSON escaping byte-exactly — newlines, quotes,
-        unicode and all — not just that row counts match. Stages in
-        ``staged_dir``.
+    with staged_dir(sf_dir, "jsonrt") as root:
+        data_dir = os.path.join(root, "data")
+        d.write.mode("overwrite").json(data_dir)
+        back = spark.read.schema(
+            "doc_id bigint, lang string, text string"
+        ).json(data_dir).localCheckpoint(eager=True)
 
-        100 TB shape: JSONL is splittable by line, so the read stays
-        partition-parallel; schema is explicit on read (never
-        inferSchema over a corpus — that is a full extra scan)."""
-        from tiny_etl_multiproc_bigdata_spark.catalog import table
-
-        d = table(spark, sf_dir, "documents").select(
-            "doc_id", "lang", "text"
-        )
-        with staged_dir(sf_dir, "jsonrt") as root:
-            data_dir = os.path.join(root, "data")
-            d.write.mode("overwrite").json(data_dir)
-            back = spark.read.schema(
-                "doc_id bigint, lang string, text string"
-            ).json(data_dir).localCheckpoint(eager=True)
-        from tiny_etl_multiproc_bigdata_spark.functions.text import (
-            tokenize_words_nonempty,
-        )
-
-        per_doc = back.select(
-            "doc_id",
-            "lang",
-            F.md5("text").alias("text_hash"),
-            F.size(tokenize_words_nonempty("text")).alias("n_toks"),
-        )
-        return per_doc.groupBy("lang").agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_toks").cast("bigint").alias("total_tokens"),
-            F.md5(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(
-                                F.struct(F.col("doc_id"), F.col("text_hash"))
-                            )
-                        ),
-                        lambda s: s["text_hash"],
+    per_doc = back.select(
+        "doc_id",
+        "lang",
+        F.md5("text").alias("text_hash"),
+        F.size(tokenize_words_nonempty("text")).alias("n_toks"),
+    )
+    return per_doc.groupBy("lang").agg(
+        F.count("*").alias("n_docs"),
+        F.sum("n_toks").cast("bigint").alias("total_tokens"),
+        F.md5(
+            F.array_join(
+                F.transform(
+                    F.array_sort(
+                        F.collect_list(
+                            F.struct(F.col("doc_id"), F.col("text_hash"))
+                        )
                     ),
-                    "",
-                )
-            ).alias("corpus_hash"),
-        )
+                    lambda s: s["text_hash"],
+                ),
+                "",
+            )
+        ).alias("corpus_hash"),
+    )
 
 
-_register_jsonl_roundtrip()
-
-
-def _register_partitioned_roundtrip() -> None:
-    from tiny_etl_multiproc_bigdata_spark.plans.registry import register
-
-    @register(
-        "partitioned_write_prune_agg",
-        oracle="""
+@register(
+    "partitioned_write_prune_agg",
+    oracle="""
         SELECT source,
                count(*) AS n,
                CAST(sum(n_chars) AS BIGINT) AS total_chars
@@ -336,51 +310,43 @@ def _register_partitioned_roundtrip() -> None:
         WHERE lang = 'en'
         GROUP BY source
         """,
+)
+def partitioned_write_prune_agg(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Hive-style partitioned write + partition-PRUNED read: stage
+    the documents table partitioned by ``lang``, read it back with
+    a lang filter that Spark satisfies by LISTING only the matching
+    directory (PartitionFilters in the scan — the pruning plan
+    shape is pinned in tests/test_partitioned_write.py), and aggregate. The oracle aggregates the
+    original parquet — the roundtrip plus pruning must be lossless.
+    At 100 TB this is the difference between scanning one language
+    partition and the whole corpus; the same mechanics drive
+    date-partitioned ingest layouts. Stages in ``staged_dir``."""
+    d = table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "n_chars", "lang"
     )
-    def partitioned_write_prune_agg(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        """Hive-style partitioned write + partition-PRUNED read: stage
-        the documents table partitioned by ``lang``, read it back with
-        a lang filter that Spark satisfies by LISTING only the matching
-        directory (PartitionFilters in the scan — the pruning plan
-        shape is pinned in tests/test_partitioned_write.py), and aggregate. The oracle aggregates the
-        original parquet — the roundtrip plus pruning must be lossless.
-        At 100 TB this is the difference between scanning one language
-        partition and the whole corpus; the same mechanics drive
-        date-partitioned ingest layouts. Stages in ``staged_dir``."""
-        from tiny_etl_multiproc_bigdata_spark.catalog import table
-
-        d = table(spark, sf_dir, "documents").select(
-            "doc_id", "source", "n_chars", "lang"
+    with staged_dir(sf_dir, "partrt") as root:
+        data_dir = os.path.join(root, "data")
+        d.write.mode("overwrite").partitionBy("lang").parquet(data_dir)
+        # explicit schema (r11 empty-input audit): an EMPTY
+        # write leaves no files to infer from — production
+        # readers of a partitioned table carry the schema
+        back = (
+            spark.read.schema(d.schema)
+            .parquet(data_dir)
+            .where(F.col("lang") == "en")
+            .localCheckpoint(eager=True)
         )
-        with staged_dir(sf_dir, "partrt") as root:
-            data_dir = os.path.join(root, "data")
-            d.write.mode("overwrite").partitionBy("lang").parquet(data_dir)
-            # explicit schema (r11 empty-input audit): an EMPTY
-            # write leaves no files to infer from — production
-            # readers of a partitioned table carry the schema
-            back = (
-                spark.read.schema(d.schema)
-                .parquet(data_dir)
-                .where(F.col("lang") == "en")
-                .localCheckpoint(eager=True)
-            )
-        return back.groupBy("source").agg(
-            F.count("*").alias("n"),
-            F.sum("n_chars").cast("bigint").alias("total_chars"),
-        )
+    return back.groupBy("source").agg(
+        F.count("*").alias("n"),
+        F.sum("n_chars").cast("bigint").alias("total_chars"),
+    )
 
 
-_register_partitioned_roundtrip()
-
-
-def _register_schema_evolution() -> None:
-    from tiny_etl_multiproc_bigdata_spark.plans.registry import register
-
-    @register(
-        "schema_evolution_merge_read",
-        oracle="""
+@register(
+    "schema_evolution_merge_read",
+    oracle="""
         SELECT CAST(count(*) AS BIGINT) AS n,
                CAST(count(CASE WHEN o_orderdate >= TIMESTAMP '1996-01-01'
                                THEN o_orderpriority END) AS BIGINT)
@@ -389,63 +355,55 @@ def _register_schema_evolution() -> None:
                     AS BIGINT) AS total_cents
         FROM orders
         """,
+)
+def schema_evolution_merge_read(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Schema evolution across file vintages: an old writer emitted
+    orders WITHOUT o_orderpriority (pre-1996 partition), a new
+    writer added the column — ``mergeSchema`` reconciles both
+    vintages in one scan, old files surfacing NULL for the added
+    column. The aggregate counts exactly the new-vintage rows as
+    priority-bearing, so the oracle (a CASE over the original
+    table) pins both the union semantics and the NULL-fill.
+    The lake-reality primitive every long-lived 100 TB table needs:
+    schema change must not require rewriting history. Stages in
+    ``staged_dir``."""
+    o = table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_orderdate",
+        "o_orderpriority",
+        F.floor(F.col("o_totalprice") * 100 + 0.5)
+        .cast("bigint")
+        .alias("cents"),
     )
-    def schema_evolution_merge_read(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        """Schema evolution across file vintages: an old writer emitted
-        orders WITHOUT o_orderpriority (pre-1996 partition), a new
-        writer added the column — ``mergeSchema`` reconciles both
-        vintages in one scan, old files surfacing NULL for the added
-        column. The aggregate counts exactly the new-vintage rows as
-        priority-bearing, so the oracle (a CASE over the original
-        table) pins both the union semantics and the NULL-fill.
-        The lake-reality primitive every long-lived 100 TB table needs:
-        schema change must not require rewriting history. Stages in
-        ``staged_dir``."""
-        from tiny_etl_multiproc_bigdata_spark.catalog import table
-
-        o = table(spark, sf_dir, "orders").select(
-            "o_orderkey",
-            "o_orderdate",
-            "o_orderpriority",
-            F.floor(F.col("o_totalprice") * 100 + 0.5)
-            .cast("bigint")
-            .alias("cents"),
+    old = o.where(F.col("o_orderdate") < "1996-01-01").select(
+        "o_orderkey", "cents"
+    )
+    new = o.where(F.col("o_orderdate") >= "1996-01-01").select(
+        "o_orderkey", "cents", "o_orderpriority"
+    )
+    with staged_dir(sf_dir, "evort") as root:
+        data_dir = os.path.join(root, "data")
+        old.write.mode("overwrite").parquet(f"{data_dir}/v=1")
+        new.write.mode("overwrite").parquet(f"{data_dir}/v=2")
+        back = (
+            spark.read.option("mergeSchema", "true")
+            .parquet(data_dir)
+            .localCheckpoint(eager=True)
         )
-        old = o.where(F.col("o_orderdate") < "1996-01-01").select(
-            "o_orderkey", "cents"
-        )
-        new = o.where(F.col("o_orderdate") >= "1996-01-01").select(
-            "o_orderkey", "cents", "o_orderpriority"
-        )
-        with staged_dir(sf_dir, "evort") as root:
-            data_dir = os.path.join(root, "data")
-            old.write.mode("overwrite").parquet(f"{data_dir}/v=1")
-            new.write.mode("overwrite").parquet(f"{data_dir}/v=2")
-            back = (
-                spark.read.option("mergeSchema", "true")
-                .parquet(data_dir)
-                .localCheckpoint(eager=True)
-            )
-        return back.agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.count("o_orderpriority").cast("bigint").alias(
-                "n_with_priority"
-            ),
-            F.sum("cents").cast("bigint").alias("total_cents"),
-        )
+    return back.agg(
+        F.count("*").cast("bigint").alias("n"),
+        F.count("o_orderpriority").cast("bigint").alias(
+            "n_with_priority"
+        ),
+        F.sum("cents").cast("bigint").alias("total_cents"),
+    )
 
 
-_register_schema_evolution()
-
-
-def _register_dynamic_partition_overwrite() -> None:
-    from tiny_etl_multiproc_bigdata_spark.plans.registry import register
-
-    @register(
-        "dynamic_partition_overwrite",
-        oracle="""
+@register(
+    "dynamic_partition_overwrite",
+    oracle="""
         SELECT lang, count(*) AS n, CAST(sum(n_chars) AS BIGINT)
                  AS total_chars
         FROM documents WHERE lang IS DISTINCT FROM 'en' GROUP BY lang
@@ -453,79 +411,71 @@ def _register_dynamic_partition_overwrite() -> None:
         SELECT lang, count(*), CAST(sum(n_chars) AS BIGINT)
         FROM documents WHERE lang = 'en' AND doc_id % 2 = 0 GROUP BY lang
         """,
-        # IS DISTINCT FROM, not <>: a NULL lang is a REAL partition
-        # (Spark writes it as __HIVE_DEFAULT_PARTITION__) that the en
-        # overwrite leaves untouched — plain <> would drop it from the
-        # oracle under 3VL (r11 NULL-parity audit class)
+    # IS DISTINCT FROM, not <>: a NULL lang is a REAL partition
+    # (Spark writes it as __HIVE_DEFAULT_PARTITION__) that the en
+    # overwrite leaves untouched — plain <> would drop it from the
+    # oracle under 3VL (r11 NULL-parity audit class)
+)
+def dynamic_partition_overwrite(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Dynamic partition overwrite (INSERT OVERWRITE partition
+    semantics): stage the corpus partitioned by lang, then
+    overwrite with a frame containing ONLY a reduced English slice
+    under partitionOverwriteMode=dynamic — the write must replace
+    exactly the partitions present in the incoming data (en) and
+    leave every other language's files untouched. Static mode
+    would have wiped the whole table; the readback aggregation
+    proves both halves: en reflects the second write, the rest
+    still reflect the first. This is the daily-reload primitive of
+    date-partitioned lakes (reload today's partition, keep
+    history). Stages in ``staged_dir``; the session-level mode flag
+    is restored in a finally.
+
+    100 TB shape: the overwrite's cost is proportional to the
+    REPLACED partitions only — commit is a directory swap per
+    touched partition, never a table rewrite."""
+    d = table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "n_chars", "lang"
     )
-    def dynamic_partition_overwrite(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        """Dynamic partition overwrite (INSERT OVERWRITE partition
-        semantics): stage the corpus partitioned by lang, then
-        overwrite with a frame containing ONLY a reduced English slice
-        under partitionOverwriteMode=dynamic — the write must replace
-        exactly the partitions present in the incoming data (en) and
-        leave every other language's files untouched. Static mode
-        would have wiped the whole table; the readback aggregation
-        proves both halves: en reflects the second write, the rest
-        still reflect the first. This is the daily-reload primitive of
-        date-partitioned lakes (reload today's partition, keep
-        history). Stages in ``staged_dir``; the session-level mode flag
-        is restored in a finally.
-
-        100 TB shape: the overwrite's cost is proportional to the
-        REPLACED partitions only — commit is a directory swap per
-        touched partition, never a table rewrite."""
-        from tiny_etl_multiproc_bigdata_spark.catalog import table
-
-        d = table(spark, sf_dir, "documents").select(
-            "doc_id", "source", "n_chars", "lang"
+    en_half = d.filter(
+        (F.col("lang") == "en") & (F.col("doc_id") % 2 == 0)
+    )
+    with staged_dir(sf_dir, "dynpo") as root:
+        data_dir = os.path.join(root, "data")
+        prev = spark.conf.get(
+            "spark.sql.sources.partitionOverwriteMode", "static"
         )
-        en_half = d.filter(
-            (F.col("lang") == "en") & (F.col("doc_id") % 2 == 0)
-        )
-        with staged_dir(sf_dir, "dynpo") as root:
-            data_dir = os.path.join(root, "data")
-            prev = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
+        try:
+            d.write.mode("overwrite").partitionBy("lang").parquet(
+                data_dir
             )
-            try:
-                d.write.mode("overwrite").partitionBy("lang").parquet(
-                    data_dir
-                )
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", "dynamic"
-                )
-                en_half.write.mode("overwrite").partitionBy("lang").parquet(
-                    data_dir
-                )
-                # explicit schema (r11 empty-input audit): an EMPTY
-                # staging write leaves nothing to infer from
-                back = (
-                    spark.read.schema(d.schema)
-                    .parquet(data_dir)
-                    .localCheckpoint(eager=True)
-                )
-            finally:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev
-                )
-        return back.groupBy("lang").agg(
-            F.count("*").alias("n"),
-            F.sum("n_chars").cast("bigint").alias("total_chars"),
-        )
+            spark.conf.set(
+                "spark.sql.sources.partitionOverwriteMode", "dynamic"
+            )
+            en_half.write.mode("overwrite").partitionBy("lang").parquet(
+                data_dir
+            )
+            # explicit schema (r11 empty-input audit): an EMPTY
+            # staging write leaves nothing to infer from
+            back = (
+                spark.read.schema(d.schema)
+                .parquet(data_dir)
+                .localCheckpoint(eager=True)
+            )
+        finally:
+            spark.conf.set(
+                "spark.sql.sources.partitionOverwriteMode", prev
+            )
+    return back.groupBy("lang").agg(
+        F.count("*").alias("n"),
+        F.sum("n_chars").cast("bigint").alias("total_chars"),
+    )
 
 
-_register_dynamic_partition_overwrite()
-
-
-def _register_csv_permissive() -> None:
-    from tiny_etl_multiproc_bigdata_spark.plans.registry import register
-
-    @register(
-        "csv_permissive_corrupt_records",
-        oracle="""
+@register(
+    "csv_permissive_corrupt_records",
+    oracle="""
         WITH base AS (
           SELECT doc_id, source, n_chars FROM documents WHERE doc_id < 200
         )
@@ -541,220 +491,199 @@ def _register_csv_permissive() -> None:
                  AS n_distinct_sources
         FROM base
         """,
+)
+def csv_permissive_corrupt_records(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """CSV parser compliance under PERMISSIVE mode (the reference's
+    CSV loader domain, hardened): the staged file mixes clean rows,
+    QUOTED fields containing the delimiter (every 7th doc's source
+    becomes "src;ok" — must parse as one field), and rows with an
+    extra unquoted field (every 13th doc — schema mismatch). The
+    read must parse the quoted delimiters correctly, capture each
+    malformed line in `_corrupt_record` WITHOUT nulling the whole
+    batch or aborting (FAILFAST's behavior), and account for every
+    line exactly once: n_good + n_corrupt == lines written. The
+    oracle never parses the CSV — it derives the expected outcome
+    from the same rules applied relationally, so a parser
+    divergence (swallowed lines, mis-split quotes) cannot cancel
+    out. Stages in ``staged_dir``.
+
+    100 TB shape: CSV parsing is per-split streaming; PERMISSIVE
+    keeps one bad upstream line from failing a 10-hour ingest —
+    the corrupt column IS the dead-letter queue."""
+    rows = (
+        table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") < 200)
+        .select("doc_id", "source", "n_chars")
+        .collect()
     )
-    def csv_permissive_corrupt_records(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        """CSV parser compliance under PERMISSIVE mode (the reference's
-        CSV loader domain, hardened): the staged file mixes clean rows,
-        QUOTED fields containing the delimiter (every 7th doc's source
-        becomes "src;ok" — must parse as one field), and rows with an
-        extra unquoted field (every 13th doc — schema mismatch). The
-        read must parse the quoted delimiters correctly, capture each
-        malformed line in `_corrupt_record` WITHOUT nulling the whole
-        batch or aborting (FAILFAST's behavior), and account for every
-        line exactly once: n_good + n_corrupt == lines written. The
-        oracle never parses the CSV — it derives the expected outcome
-        from the same rules applied relationally, so a parser
-        divergence (swallowed lines, mis-split quotes) cannot cancel
-        out. Stages in ``staged_dir``.
-
-        100 TB shape: CSV parsing is per-split streaming; PERMISSIVE
-        keeps one bad upstream line from failing a 10-hour ingest —
-        the corrupt column IS the dead-letter queue."""
-        from tiny_etl_multiproc_bigdata_spark.catalog import table
-
-        rows = (
-            table(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") < 200)
-            .select("doc_id", "source", "n_chars")
-            .collect()
-        )
-        with staged_dir(sf_dir, "csvperm") as root:
-            path = os.path.join(root, "data.csv")
-            with open(path, "w") as f:
-                for r in sorted(rows, key=lambda r: r["doc_id"]):
-                    src = (
-                        f'"{r["source"]};ok"'
-                        if r["doc_id"] % 7 == 0
-                        else r["source"]
-                    )
-                    line = f'{r["doc_id"]};{src};{r["n_chars"]}'
-                    if r["doc_id"] % 13 == 0:
-                        line += ";EXTRA"
-                    f.write(line + "\n")
-            back = (
-                spark.read.schema(
-                    "doc_id long, source string, n_chars long, "
-                    "_corrupt_record string"
+    with staged_dir(sf_dir, "csvperm") as root:
+        path = os.path.join(root, "data.csv")
+        with open(path, "w") as f:
+            for r in sorted(rows, key=lambda r: r["doc_id"]):
+                src = (
+                    f'"{r["source"]};ok"'
+                    if r["doc_id"] % 7 == 0
+                    else r["source"]
                 )
-                .option("sep", ";")
-                .option("mode", "PERMISSIVE")
-                .option("columnNameOfCorruptRecord", "_corrupt_record")
-                .csv(path)
-                .localCheckpoint(eager=True)
+                line = f'{r["doc_id"]};{src};{r["n_chars"]}'
+                if r["doc_id"] % 13 == 0:
+                    line += ";EXTRA"
+                f.write(line + "\n")
+        back = (
+            spark.read.schema(
+                "doc_id long, source string, n_chars long, "
+                "_corrupt_record string"
             )
-        good = F.col("_corrupt_record").isNull()
-        # count_if, not sum(when): the oracle's count(CASE) is 0 over
-        # an empty file while sum is NULL (r11 empty-input audit)
-        return back.agg(
-            F.count_if(good).cast("bigint").alias("n_good"),
-            F.count_if(~good).cast("bigint").alias("n_corrupt"),
-            F.sum(F.when(good, F.col("n_chars"))).cast("bigint").alias(
-                "good_chars"
-            ),
-            F.count_distinct(
-                F.when(good, F.col("source"))
-            )
-            .cast("bigint")
-            .alias("n_distinct_sources"),
+            .option("sep", ";")
+            .option("mode", "PERMISSIVE")
+            .option("columnNameOfCorruptRecord", "_corrupt_record")
+            .csv(path)
+            .localCheckpoint(eager=True)
         )
+    good = F.col("_corrupt_record").isNull()
+    # count_if, not sum(when): the oracle's count(CASE) is 0 over
+    # an empty file while sum is NULL (r11 empty-input audit)
+    return back.agg(
+        F.count_if(good).cast("bigint").alias("n_good"),
+        F.count_if(~good).cast("bigint").alias("n_corrupt"),
+        F.sum(F.when(good, F.col("n_chars"))).cast("bigint").alias(
+            "good_chars"
+        ),
+        F.count_distinct(
+            F.when(good, F.col("source"))
+        )
+        .cast("bigint")
+        .alias("n_distinct_sources"),
+    )
 
 
-_register_csv_permissive()
-
-
-def _register_federated_union() -> None:
-    from tiny_etl_multiproc_bigdata_spark.plans.registry import register
-
-    @register(
-        "federated_union_agg",
-        oracle="""
+@register(
+    "federated_union_agg",
+    oracle="""
         SELECT lang,
                CAST(3 * count(*) AS BIGINT) AS n_rows,
                CAST(3 * sum(n_chars) AS BIGINT) AS total_chars
         FROM documents GROUP BY lang
         """,
+)
+def federated_union_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multi-format federation: the same table staged as parquet,
+    CSV and JSONL, read back through three format-specific readers
+    and unioned BY NAME (each format surfaces columns in its own
+    order — positional union would silently misalign) into one
+    aggregation. This is the lake reality the reference's
+    one-format loaders never face: vendor drops arrive as CSV,
+    streams land as JSONL, curated zones are parquet, and the
+    query layer must treat them as one relation. The oracle states
+    the invariant directly: three lossless copies triple every
+    count exactly. Stages in ``staged_dir``.
+
+    100 TB shape: each leg scans with its own reader
+    (pruning/pushdown quality differs per format — parquet prunes,
+    CSV cannot; that asymmetry is inherent) and the union is
+    plan-level, no materialized concatenation; partial aggregation
+    folds per leg before the shared shuffle."""
+    d = table(spark, sf_dir, "documents").select(
+        "doc_id", "lang", "n_chars"
     )
-    def federated_union_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Multi-format federation: the same table staged as parquet,
-        CSV and JSONL, read back through three format-specific readers
-        and unioned BY NAME (each format surfaces columns in its own
-        order — positional union would silently misalign) into one
-        aggregation. This is the lake reality the reference's
-        one-format loaders never face: vendor drops arrive as CSV,
-        streams land as JSONL, curated zones are parquet, and the
-        query layer must treat them as one relation. The oracle states
-        the invariant directly: three lossless copies triple every
-        count exactly. Stages in ``staged_dir``.
-
-        100 TB shape: each leg scans with its own reader
-        (pruning/pushdown quality differs per format — parquet prunes,
-        CSV cannot; that asymmetry is inherent) and the union is
-        plan-level, no materialized concatenation; partial aggregation
-        folds per leg before the shared shuffle."""
-        from tiny_etl_multiproc_bigdata_spark.catalog import table
-
-        d = table(spark, sf_dir, "documents").select(
-            "doc_id", "lang", "n_chars"
-        )
-        with staged_dir(sf_dir, "fedun") as root:
-            pq, csvd, jl = (os.path.join(root, x) for x in ("pq", "csv", "jl"))
-            d.write.mode("overwrite").parquet(pq)
-            d.select("lang", "n_chars", "doc_id").write.mode(
-                "overwrite"
-            ).option("header", True).csv(csvd)
-            d.select("n_chars", "doc_id", "lang").write.mode(
-                "overwrite"
-            ).json(jl)
-            a = spark.read.schema(d.schema).parquet(pq)
-            # explicit schemas (r11 empty-input audit): CSV/JSON
-            # legs of an empty federation have no rows (or even no
-            # header files) to infer from
-            b = spark.read.option("header", True).schema(
-                "lang string, n_chars bigint, doc_id bigint"
-            ).csv(csvd)
-            c = spark.read.schema(
-                "n_chars bigint, doc_id bigint, lang string"
-            ).json(jl)
-            back = (
-                a.unionByName(
-                    b.select(
-                        F.col("doc_id").cast("long"),
-                        "lang",
-                        F.col("n_chars").cast("long"),
-                    )
+    with staged_dir(sf_dir, "fedun") as root:
+        pq, csvd, jl = (os.path.join(root, x) for x in ("pq", "csv", "jl"))
+        d.write.mode("overwrite").parquet(pq)
+        d.select("lang", "n_chars", "doc_id").write.mode(
+            "overwrite"
+        ).option("header", True).csv(csvd)
+        d.select("n_chars", "doc_id", "lang").write.mode(
+            "overwrite"
+        ).json(jl)
+        a = spark.read.schema(d.schema).parquet(pq)
+        # explicit schemas (r11 empty-input audit): CSV/JSON
+        # legs of an empty federation have no rows (or even no
+        # header files) to infer from
+        b = spark.read.option("header", True).schema(
+            "lang string, n_chars bigint, doc_id bigint"
+        ).csv(csvd)
+        c = spark.read.schema(
+            "n_chars bigint, doc_id bigint, lang string"
+        ).json(jl)
+        back = (
+            a.unionByName(
+                b.select(
+                    F.col("doc_id").cast("long"),
+                    "lang",
+                    F.col("n_chars").cast("long"),
                 )
-                .unionByName(
-                    c.select(
-                        F.col("doc_id").cast("long"),
-                        "lang",
-                        F.col("n_chars").cast("long"),
-                    )
-                )
-                .localCheckpoint(eager=True)
             )
-        return back.groupBy("lang").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.sum("n_chars").cast("bigint").alias("total_chars"),
+            .unionByName(
+                c.select(
+                    F.col("doc_id").cast("long"),
+                    "lang",
+                    F.col("n_chars").cast("long"),
+                )
+            )
+            .localCheckpoint(eager=True)
         )
+    return back.groupBy("lang").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+        F.sum("n_chars").cast("bigint").alias("total_chars"),
+    )
 
 
-_register_federated_union()
-
-
-def _register_nested_field_pruning() -> None:
-    from tiny_etl_multiproc_bigdata_spark.plans.registry import register
-
-    @register(
-        "nested_field_pruning_agg",
-        oracle="""
+@register(
+    "nested_field_pruning_agg",
+    oracle="""
         SELECT o_orderpriority AS priority,
                CAST(count(*) AS BIGINT) AS n,
                CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
                     AS BIGINT) AS cents
         FROM orders GROUP BY o_orderpriority
         """,
-    )
-    def nested_field_pruning_agg(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        """Nested-schema column pruning: stage orders with the payload
-        folded into a STRUCT (meta.priority, meta.money.cents — the
-        shape every event envelope and API dump arrives in), read back
-        selecting only two LEAVES, and aggregate. Correctness is the
-        roundtrip; the 100 TB property is that Spark's schema pruning
-        pushes the leaf selection INTO the parquet scan (ReadSchema
-        carries the pruned struct, not the whole envelope — pinned in
-        tests/test_partitioned_write.py::test_nested_leaf_pruning), so
-        a 2-leaf query over a 50-field envelope reads 2 columns. The
-        oracle aggregates the flat original — the fold/unfold must be
-        lossless. Stages in ``staged_dir``.
+)
+def nested_field_pruning_agg(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Nested-schema column pruning: stage orders with the payload
+    folded into a STRUCT (meta.priority, meta.money.cents — the
+    shape every event envelope and API dump arrives in), read back
+    selecting only two LEAVES, and aggregate. Correctness is the
+    roundtrip; the 100 TB property is that Spark's schema pruning
+    pushes the leaf selection INTO the parquet scan (ReadSchema
+    carries the pruned struct, not the whole envelope — pinned in
+    tests/test_partitioned_write.py::test_nested_leaf_pruning), so
+    a 2-leaf query over a 50-field envelope reads 2 columns. The
+    oracle aggregates the flat original — the fold/unfold must be
+    lossless. Stages in ``staged_dir``.
 
-        100 TB shape: leaf-level I/O plus map-side combine; without
-        nested pruning the scan would materialize the full struct per
-        row — the usual envelope tax this entry exists to refuse."""
-        from tiny_etl_multiproc_bigdata_spark.catalog import table
-
-        o = table(spark, sf_dir, "orders").select(
-            "o_orderkey",
+    100 TB shape: leaf-level I/O plus map-side combine; without
+    nested pruning the scan would materialize the full struct per
+    row — the usual envelope tax this entry exists to refuse."""
+    o = table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        F.struct(
+            F.col("o_orderpriority").alias("priority"),
             F.struct(
-                F.col("o_orderpriority").alias("priority"),
-                F.struct(
-                    F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-                    .cast("bigint")
-                    .alias("cents"),
-                    F.col("o_orderstatus").alias("status"),
-                ).alias("money"),
-                F.col("o_orderdate").alias("odate"),
-                F.col("o_custkey").alias("custkey"),
-            ).alias("meta"),
-        )
-        with staged_dir(sf_dir, "nested") as root:
-            data_dir = os.path.join(root, "data")
-            o.write.mode("overwrite").parquet(data_dir)
-            back = (
-                spark.read.parquet(data_dir)
-                .select(
-                    F.col("meta.priority").alias("priority"),
-                    F.col("meta.money.cents").alias("cents"),
-                )
-                .localCheckpoint(eager=True)
+                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
+                .cast("bigint")
+                .alias("cents"),
+                F.col("o_orderstatus").alias("status"),
+            ).alias("money"),
+            F.col("o_orderdate").alias("odate"),
+            F.col("o_custkey").alias("custkey"),
+        ).alias("meta"),
+    )
+    with staged_dir(sf_dir, "nested") as root:
+        data_dir = os.path.join(root, "data")
+        o.write.mode("overwrite").parquet(data_dir)
+        back = (
+            spark.read.parquet(data_dir)
+            .select(
+                F.col("meta.priority").alias("priority"),
+                F.col("meta.money.cents").alias("cents"),
             )
-        return back.groupBy("priority").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum("cents").cast("bigint").alias("cents"),
+            .localCheckpoint(eager=True)
         )
-
-
-_register_nested_field_pruning()
+    return back.groupBy("priority").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("cents").cast("bigint").alias("cents"),
+    )

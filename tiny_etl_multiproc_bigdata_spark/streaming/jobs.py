@@ -755,8 +755,8 @@ def _docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _register_streaming_segment_dedup() -> None:
+    from tiny_etl_multiproc_bigdata_spark.functions.text import DUCK_TOKS
     from tiny_etl_multiproc_bigdata_spark.plans.corpus_ops import (
-        _DUCK_TOKS,
         _SEG,
         segment_hash_structs,
     )
@@ -765,7 +765,7 @@ def _register_streaming_segment_dedup() -> None:
         "streaming_segment_dedup",
         oracle=rf"""
         WITH t AS (
-          SELECT doc_id, {_DUCK_TOKS} AS l FROM documents
+          SELECT doc_id, {DUCK_TOKS} AS l FROM documents
         ), t2 AS (
           SELECT doc_id, l FROM t WHERE len(l) >= 1
         )
