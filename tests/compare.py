@@ -61,13 +61,15 @@ def compare(
     con: duckdb.DuckDBPyConnection,
     sql: str,
     exact_floats: bool = False,
+    counts: dict | None = None,
 ) -> list[str]:
     """Return a list of mismatch descriptions (empty == match).
 
     ``exact_floats=True`` mirrors the driver's exact value hash (no
     12-significant-digit normalization) — used for registry entries
     flagged ``ulp_sensitive`` so any cross-engine transcendental drift
-    that would red the driver reds this local gate first.
+    that would red the driver reds this local gate first. A ``counts``
+    dict, when given, receives the ``spark`` and ``duckdb`` row counts.
     """
     problems: list[str] = []
     s_rows = [tuple(r) for r in spark_df.collect()]
@@ -75,6 +77,8 @@ def compare(
     res = con.execute(sql)
     d_cols = [d[0] for d in res.description]
     d_rows = [tuple(r) for r in res.fetchall()]
+    if counts is not None:
+        counts.update(spark=len(s_rows), duckdb=len(d_rows))
 
     sc, sr = canon(s_rows, s_cols, exact_floats)
     dc, dr = canon(d_rows, d_cols, exact_floats)

@@ -100,9 +100,13 @@ def test_null_parity_sentinel(spark, null_fixture, name):
 # silent corruption, pinned by embedding_label_centroids below.
 #
 # --unicode (functions/text.py::duck_jlower) — the engines' lowercase
-# mappings differ on 71 codepoints; the realistic one (Turkish U+0130)
-# silently shifted every downstream token string, fingerprint md5 and
-# simhash in 20 entries.
+# mappings differ on 71 codepoints; the realistic one is Turkish U+0130
+# 'İ'. Any oracle that lowercased with a bare DuckDB lower() silently
+# shifted its token strings, fingerprint md5s and simhashes: with the
+# colliding pair "İi …" / "ii …" in the spike, 16 entries went red.
+# Every oracle lower( now goes through duck_jlower
+# (tests/test_twin_lint.py); one sentinel per oracle shape that had
+# its own copy.
 NONFINITE_SENTINELS = [
     "ohlc_daily_candles",          # quantizing scalar: ANSI-CAST crash class
     "welch_t_test_ab",             # stat tier: DuckDB stddev Out-of-Range class
@@ -113,6 +117,11 @@ UNICODE_SENTINELS = [
     "text_fingerprint",            # fingerprint md5 silently shifted
     "dedup_simhash",               # bit-level hash silently shifted
     "a3_unique_filter",            # reference-ops normalization path
+    "text_rarity_score",           # shared lowered-term CTE (training_ops)
+    "dedup_minhash_lsh",           # shingle token arrays (dedup_queries)
+    "tokenizer_vocab_coverage",    # unnested token array
+    "two_stage_distinct",          # DISTINCT over lowered tokens
+    "dedup_exact_normalized",      # md5 of the normalized token join
 ]
 
 
@@ -185,12 +194,19 @@ def test_nonfinite_fixture_nonvacuous(nonfinite_fixture):
 
 
 def test_unicode_fixture_nonvacuous(unicode_fixture):
-    """The spike must contain the İ casefold divergence trigger."""
+    """The spike must contain the İ casefold divergence trigger, and a
+    document that a bare DuckDB lower() makes equal to another one."""
     fix, con = unicode_fixture
     n = con.execute(
         "SELECT count(*) FROM documents WHERE text LIKE '%İ%'"
     ).fetchone()[0]
     assert n >= 1
+    n_colliding = con.execute(
+        "SELECT count(*) FROM documents a JOIN documents b "
+        "ON a.doc_id < b.doc_id AND a.text <> b.text "
+        "AND lower(a.text) = lower(b.text) AND a.text LIKE '%İ%'"
+    ).fetchone()[0]
+    assert n_colliding >= 1
 
 
 # --ragged (functions/vectors.py declared-dimension conjunct,

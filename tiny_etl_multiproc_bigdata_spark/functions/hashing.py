@@ -37,7 +37,4 @@ def stable_token_hash(col: Column, seed: int = 0) -> Column:
 def minhash_value(tokens: Column, seed: int) -> Column:
     """MinHash signature component: min over token array of the seeded
     stable hash. ``tokens`` is an ``array<string>`` column."""
-    hashed = F.transform(
-        tokens, lambda t: F.conv(F.substring(F.md5(F.concat(F.lit(f"{seed}|"), t)), 1, 15), 16, 10).cast("bigint")
-    )
-    return F.array_min(hashed)
+    return F.array_min(F.transform(tokens, lambda t: stable_token_hash(t, seed)))

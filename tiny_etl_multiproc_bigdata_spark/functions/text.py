@@ -103,14 +103,15 @@ def duck_jlower(expr: str) -> str:
     no realistic corpus frequency; the seventy-first is Turkish
     U+0130 'İ', which is common web text — Spark lowers it to
     'i' + U+0307 COMBINING DOT ABOVE (the Unicode-correct result) while
-    DuckDB yields bare 'i'. One İ in a corpus silently shifted every
-    downstream token string, chunk boundary, fingerprint md5, and
-    simhash in 20 registry entries (crash-free silent divergence — the
-    worst kind). The twin pre-maps İ on the oracle side so both
-    engines produce the identical Unicode-correct lowercase; the 70
-    rare-script codepoints are accepted as a documented oracle skew
-    (they cannot be enumerated into every SQL string; the audit spike
-    pins İ, the realistic one)."""
+    DuckDB yields bare 'i'. One İ silently shifts every downstream
+    token string, chunk boundary, fingerprint md5 and simhash of an
+    oracle that lowercases, so every oracle ``lower(`` goes through
+    this twin (tests/test_twin_lint.py holds it there). It pre-maps İ
+    on the oracle side so both engines produce the identical
+    Unicode-correct lowercase; the 70 rare-script codepoints are
+    accepted as a documented oracle skew (they cannot be enumerated
+    into every SQL string; the audit spike pins İ, the realistic
+    one)."""
     return f"lower(replace({expr}, 'İ', 'i' || chr(775)))"
 
 

@@ -45,6 +45,27 @@ def duck_cosine(a: str, b: str) -> str:
     )
 
 
+def cosine_scored(
+    queries: DataFrame, candidates: DataFrame, key: str | None = None
+) -> DataFrame:
+    """``(query_id, candidate_id, cos)`` of an ANN search: the query set
+    ``(query_id, qv[, q<key>])`` is broadcast and joined to the
+    ``(vec_id, embedding[, <key>])`` candidates, itself excluded, inside
+    the query's ``key`` cell when one is given."""
+    on = F.col("vec_id") != F.col("query_id")
+    if key is not None:
+        on = (F.col(key) == F.col(f"q{key}")) & on
+    return (
+        F.broadcast(queries)
+        .join(candidates, on)
+        .select(
+            "query_id",
+            F.col("vec_id").alias("candidate_id"),
+            cosine_similarity(F.col("qv"), F.col("embedding")).alias("cos"),
+        )
+    )
+
+
 def top_k_by_cosine(scored: DataFrame, k: int) -> DataFrame:
     """Per-query top-``k`` of a ``(query_id, candidate_id, cos)`` frame:
     rank by the micro-scaled integer score ``floor(cos·1e6+0.5)``

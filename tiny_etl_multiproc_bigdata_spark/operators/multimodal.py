@@ -30,6 +30,7 @@ from pyspark.sql.types import (
 )
 
 from tiny_etl_multiproc_bigdata_spark.catalog import table
+from tiny_etl_multiproc_bigdata_spark.functions.hashing import duck_md5_long
 from tiny_etl_multiproc_bigdata_spark.plans.registry import register
 
 DECODED_SCHEMA = StructType(
@@ -201,10 +202,8 @@ FEATURE_SCHEMA = StructType(
 
 
 def _duck_feat(i: int) -> str:
-    return (
-        f"(CAST(('0x' || substr(md5(text || '|f{i}'), 1, 15)) AS BIGINT)"
-        f" % 2001 - 1000)"
-    )
+    h = duck_md5_long(f"text || '|f{i}'")
+    return f"({h} % 2001 - 1000)"
 
 
 @register(

@@ -28,7 +28,10 @@ from tiny_etl_multiproc_bigdata_spark.functions.timedomain import (
     in_obs_window,
     obs_window_sql,
 )
-from tiny_etl_multiproc_bigdata_spark.functions.hashing import stable_token_hash
+from tiny_etl_multiproc_bigdata_spark.functions.hashing import (
+    duck_md5_long,
+    stable_token_hash,
+)
 from tiny_etl_multiproc_bigdata_spark.functions.rounding import (
     exact_round,
     duck_round,
@@ -1714,9 +1717,9 @@ def _pois_w_sql(u: str) -> str:
       SELECT e.event_type, b.b,
              CAST(floor(e.value * 100 + 0.5) AS BIGINT) AS y,
              {_pois_w_sql(
-                 "(CAST(('0x' || substr(md5(CAST(e.event_id AS VARCHAR)"
-                 " || '|' || CAST(b.b AS VARCHAR)), 1, 15)) AS BIGINT)"
-                 f" / {_U_DENOM})"
+                 "(" + duck_md5_long(
+                     "CAST(e.event_id AS VARCHAR) || '|' || CAST(b.b AS VARCHAR)"
+                 ) + f" / {_U_DENOM})"
              )} AS w
       FROM (SELECT * FROM events WHERE value > -9007199254.740992 AND value < 9007199254.740992) e, range(0, {_BOOT_B}) b(b)
       WHERE e.value IS NOT NULL
@@ -2036,8 +2039,7 @@ _BLOOM_K = 3
 
 def _bloom_positions_sql(key_expr: str) -> str:
     parts = ", ".join(
-        f"CAST(('0x' || substr(md5('{i}|' || CAST({key_expr} AS VARCHAR)),"
-        f" 1, 15)) AS BIGINT) % {_BLOOM_M}"
+        duck_md5_long(f"'{i}|' || CAST({key_expr} AS VARCHAR)") + f" % {_BLOOM_M}"
         for i in range(_BLOOM_K)
     )
     return f"unnest([{parts}])"

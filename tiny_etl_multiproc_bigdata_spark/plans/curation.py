@@ -16,7 +16,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tiny_etl_multiproc_bigdata_spark.catalog import table
+from tiny_etl_multiproc_bigdata_spark.functions.hashing import duck_md5_long, md5_long
 from tiny_etl_multiproc_bigdata_spark.functions.rounding import round_half_up
+from tiny_etl_multiproc_bigdata_spark.functions.text import DUCK_TOKS
 from tiny_etl_multiproc_bigdata_spark.plans.dedup_groups import (
     _CC_GROUPS_CTES,
     _cc_labels,
@@ -121,7 +123,7 @@ _DECON_ROWS: list[tuple[int, str]] = [
 
 _DECON_ORACLE = f"""
 WITH fp AS (
-  SELECT doc_id, {DUCK_FINGERPRINT.format(col="text")} AS fingerprint
+  SELECT doc_id, {DUCK_FINGERPRINT} AS fingerprint
   FROM {_fixture_docs_sql(_DECON_ROWS)} d
 )
 SELECT f.doc_id, f.fingerprint
@@ -256,14 +258,11 @@ def curation_from_docs(docs: DataFrame) -> DataFrame:
 
 @register(
     "dataset_holdout_split",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-                AS BIGINT) % 100 AS bucket,
-           CASE WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-                     AS BIGINT) % 100 < 5  THEN 'test'
-                WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-                     AS BIGINT) % 100 < 15 THEN 'val'
+           {duck_md5_long("CAST(doc_id AS VARCHAR)")} % 100 AS bucket,
+           CASE WHEN {duck_md5_long("CAST(doc_id AS VARCHAR)")} % 100 < 5  THEN 'test'
+                WHEN {duck_md5_long("CAST(doc_id AS VARCHAR)")} % 100 < 15 THEN 'val'
                 ELSE 'train' END AS split
     FROM documents
     """,
@@ -275,8 +274,6 @@ def dataset_holdout_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     and partitionings; a random() split is none of those. Pure per-row
     expressions, zero shuffle; the same bucket arithmetic extends to
     k-fold assignment."""
-    from tiny_etl_multiproc_bigdata_spark.functions.hashing import md5_long
-
     d = table(spark, sf_dir, "documents")
     bucket = md5_long(F.col("doc_id").cast("string")) % 100
     return d.select(
@@ -302,8 +299,7 @@ _DUCK_GRAM = " || ' ' || ".join(
     oracle=rf"""
     WITH t AS (
       SELECT doc_id,
-             list_filter(regexp_split_to_array(lower(text), '\s+'),
-                         x -> x <> '') AS l
+             {DUCK_TOKS} AS l
       FROM documents
     ), grams AS (
       SELECT doc_id, g.g AS g

@@ -38,6 +38,7 @@ from tiny_etl_multiproc_bigdata_spark.functions.vectors import (
     is_complete_vector,
 )
 from tiny_etl_multiproc_bigdata_spark.functions.text import (
+    DUCK_TOKS,
     tokenize_words_nonempty,
 )
 from tiny_etl_multiproc_bigdata_spark.functions.timedomain import (
@@ -198,10 +199,9 @@ def _shingled_docs(d: DataFrame) -> DataFrame:
     return s.select("doc_id", "shingles")
 
 
-_DUCK_SHINGLES = r"""
+_DUCK_SHINGLES = rf"""
 WITH toks AS (
-  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-                             t -> t <> '') AS l
+  SELECT doc_id, {DUCK_TOKS} AS l
   FROM documents
 ), shingled AS (
   SELECT doc_id,
@@ -237,10 +237,9 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_exact_normalized",
-    oracle=r"""
+    oracle=rf"""
     SELECT md5(array_to_string(
-             list_filter(regexp_split_to_array(lower(text), '\s+'),
-                         t -> t <> ''), ' ')) AS norm_hash,
+             {DUCK_TOKS}, ' ')) AS norm_hash,
            count(*)    AS n_docs,
            min(doc_id) AS keep_doc_id
     FROM documents
@@ -794,9 +793,7 @@ def _simhash_oracle() -> str:
     WITH tok AS (
       SELECT DISTINCT doc_id, t.token AS token
       FROM documents,
-           unnest(list_filter(regexp_split_to_array(
-                    lower(replace(text, 'İ', 'i' || chr(775))), '\s+'),
-                              x -> x <> '')) AS t(token)
+           unnest({DUCK_TOKS}) AS t(token)
     ), bits AS (
       SELECT doc_id, {bit_sums} FROM tok GROUP BY doc_id
     )
@@ -1551,8 +1548,7 @@ def _agreement_oracle() -> str:
 stok AS (
   SELECT DISTINCT doc_id, t.token AS token
   FROM documents,
-       unnest(list_filter(regexp_split_to_array(lower(text), '\s+'),
-                          x -> x <> '')) AS t(token)
+       unnest({DUCK_TOKS}) AS t(token)
 ), sbits AS (
   SELECT doc_id, {bit_sums} FROM stok GROUP BY doc_id
 ), shash AS (

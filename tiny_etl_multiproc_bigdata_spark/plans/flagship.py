@@ -102,6 +102,7 @@ from tiny_etl_multiproc_bigdata_spark.catalog import read_parquet
 from tiny_etl_multiproc_bigdata_spark.functions.text import (
     ARABIC_DIACRITICS,
     basename_backwards,
+    duck_jlower,
     len_str_gt,
     remove_diac,
     tokenize_words,
@@ -243,25 +244,25 @@ def _required_words(grouped: DataFrame) -> DataFrame:
     )
 
 
-_FLAGSHIP_ORACLE_TEMPLATE = r"""
+FLAGSHIP_ORACLE_SQL = rf"""
 WITH toks AS (
     SELECT source, trim(t.token) AS token
     FROM documents,
          unnest(regexp_split_to_array(text, '\s+')) AS t(token)
 ), grp AS (
     SELECT source,
-           lower(token)  AS norm,
+           {duck_jlower("token")}  AS norm,
            min(token)    AS word0,
            count(*)      AS occurrences
     FROM toks
-    GROUP BY source, lower(token)
+    GROUP BY source, {duck_jlower("token")}
 ), wc AS (
     SELECT *,
            CAST(sum(occurrences) OVER (PARTITION BY source) AS BIGINT) AS words_count
     FROM grp
 )
 SELECT substr(word0, 1, 254)                       AS word,
-       length(translate(word0, '{diacritics}', '')) AS word_len,
+       length(translate(word0, '{ARABIC_DIACRITICS}', '')) AS word_len,
        length(word0) > 255                          AS word_truncated,
        substr(
          array_to_string(
@@ -276,10 +277,6 @@ WHERE word IS NOT NULL AND word_len IS NOT NULL
   AND word_truncated IS NOT NULL AND file IS NOT NULL
   AND words_count IS NOT NULL
 """
-
-FLAGSHIP_ORACLE_SQL = _FLAGSHIP_ORACLE_TEMPLATE.replace(
-    "{diacritics}", ARABIC_DIACRITICS
-)
 
 from tiny_etl_multiproc_bigdata_spark.plans.registry import register  # noqa: E402
 

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from tiny_etl_multiproc_bigdata_spark.catalog import table
 from tiny_etl_multiproc_bigdata_spark.functions.numerics import in_grid_domain
-from tiny_etl_multiproc_bigdata_spark.functions.text import tokenize_words
+from tiny_etl_multiproc_bigdata_spark.functions.text import duck_jlower, tokenize_words
 from tiny_etl_multiproc_bigdata_spark.functions.rounding import (
     exact_round,
 )
@@ -19,11 +19,11 @@ from tiny_etl_multiproc_bigdata_spark.plans.registry import register
 
 @register(
     "explode_outer_nulls",
-    oracle=r"""
+    oracle=rf"""
     WITH docs AS (
       SELECT doc_id,
              CASE WHEN doc_id % 7 = 0 THEN NULL
-                  ELSE list_filter(regexp_split_to_array(lower(text), '\s+'),
+                  ELSE list_filter(regexp_split_to_array({duck_jlower("text")}, '\s+'),
                                    t -> t LIKE 'q%') END AS qwords
       FROM documents WHERE doc_id < 200
     )

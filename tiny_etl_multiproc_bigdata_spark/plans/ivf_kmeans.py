@@ -21,7 +21,7 @@ from tiny_etl_multiproc_bigdata_spark.functions.rounding import round_half_up
 from tiny_etl_multiproc_bigdata_spark.functions.partitioning import ckpt_hash
 from tiny_etl_multiproc_bigdata_spark.functions.vectors import (
     complete_vector_sql,
-    cosine_similarity,
+    cosine_scored,
     duck_cosine,
     duck_top_k_by_cosine,
     is_complete_vector,
@@ -159,19 +159,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("qv"),
         F.col("cell").alias("qcell"),
     )
-    scored = (
-        F.broadcast(q)
-        .join(
-            assigned,
-            (F.col("cell") == F.col("qcell")) & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("candidate_id"),
-            cosine_similarity(F.col("qv"), F.col("embedding")).alias("cos"),
-        )
-    )
-    return top_k_by_cosine(scored, _TOP_K)
+    return top_k_by_cosine(cosine_scored(q, assigned, "cell"), _TOP_K)
 
 
 @register("kmeans_lloyd", oracle=None)
@@ -545,20 +533,7 @@ def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cid").alias("qcell"),
         )
     )
-    scored = (
-        F.broadcast(qcells)
-        .join(
-            assigned,
-            (F.col("cell") == F.col("qcell"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("candidate_id"),
-            cosine_similarity(F.col("qv"), F.col("embedding")).alias("cos"),
-        )
-    )
-    return top_k_by_cosine(scored, _TOP_K)
+    return top_k_by_cosine(cosine_scored(qcells, assigned, "cell"), _TOP_K)
 
 
 # ---- dedup_semantic_kmeans: SemDeDup ------------------------------------

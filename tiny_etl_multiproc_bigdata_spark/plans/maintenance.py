@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from tiny_etl_multiproc_bigdata_spark.catalog import table
 from tiny_etl_multiproc_bigdata_spark.functions.numerics import in_grid_domain
-from tiny_etl_multiproc_bigdata_spark.functions.hashing import md5_long
+from tiny_etl_multiproc_bigdata_spark.functions.hashing import duck_md5_long, md5_long
 from tiny_etl_multiproc_bigdata_spark.functions.rounding import (
     exact_round,
     round_half_up,
@@ -808,8 +808,7 @@ _DP_U_DENOM = str(1 << 60)  # md5_long range (the poisson_bootstrap idiom)
     ),
     u AS (
       SELECT event_type, n,
-             CAST(('0x' || substr(md5('dp|' || event_type), 1, 15))
-                  AS BIGINT) / {_DP_U_DENOM} AS u
+             {duck_md5_long("'dp|' || event_type")} / {_DP_U_DENOM} AS u
       FROM g
     )
     SELECT event_type, CAST({_DP_EPS} AS DOUBLE) AS epsilon,
@@ -839,8 +838,6 @@ def dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = e.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
     )
-    from tiny_etl_multiproc_bigdata_spark.functions.hashing import md5_long
-
     u = md5_long(F.concat(F.lit("dp|"), F.col("event_type"))) / F.lit(
         float(_DP_U_DENOM)
     )
@@ -935,12 +932,10 @@ _CKSUM_BUCKETS = 64
     oracle=f"""
     WITH h AS (
       SELECT o_orderkey % {_CKSUM_BUCKETS} AS bucket,
-             CAST(('0x' || substr(md5(CAST(o_orderkey AS VARCHAR) || '|'
-                                       || o_orderstatus || '|'
-                                       || CAST(CAST(floor(o_totalprice * 100
-                                                          + 0.5) AS BIGINT)
-                                               AS VARCHAR)), 1, 15))
-                  AS BIGINT) AS rh
+             {duck_md5_long(
+                 "CAST(o_orderkey AS VARCHAR) || '|' || o_orderstatus || '|' || "
+                 "CAST(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS VARCHAR)"
+             )} AS rh
       FROM orders
     )
     SELECT CAST(bucket AS BIGINT) AS bucket,
@@ -999,8 +994,7 @@ _ERASE_PCT = 5  # md5-bucket percentage of users selected for erasure
     oracle=f"""
     WITH victims AS (
       SELECT c_custkey AS k FROM customer
-      WHERE CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 15))
-                 AS BIGINT) % 100 < {_ERASE_PCT}
+      WHERE {duck_md5_long("CAST(c_custkey AS VARCHAR)")} % 100 < {_ERASE_PCT}
     ),
     o_del AS (
       SELECT o_orderkey FROM orders
@@ -1099,13 +1093,11 @@ def right_to_erasure_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
       -- corrupted (status flipped) — md5-bucketed so both engines
       -- build the identical replica
       SELECT o_orderkey,
-             CASE WHEN CAST(('0x' || substr(md5('corrupt|' ||
-                        CAST(o_orderkey AS VARCHAR)), 1, 15)) AS BIGINT)
+             CASE WHEN {duck_md5_long("'corrupt|' || CAST(o_orderkey AS VARCHAR)")}
                        % 100 < 1
                   THEN 'X' ELSE o_orderstatus END AS o_orderstatus
       FROM orders
-      WHERE CAST(('0x' || substr(md5('drop|' ||
-                 CAST(o_orderkey AS VARCHAR)), 1, 15)) AS BIGINT) % 100 >= 2
+      WHERE {duck_md5_long("'drop|' || CAST(o_orderkey AS VARCHAR)")} % 100 >= 2
     ),
     j AS (
       SELECT p.o_orderkey AS pk, r.o_orderkey AS rk,

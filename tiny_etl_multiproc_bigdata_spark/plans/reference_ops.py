@@ -26,7 +26,7 @@ from tiny_etl_multiproc_bigdata_spark.functions.text import (
     tokenize_words,
     truncate_str,
 )
-from tiny_etl_multiproc_bigdata_spark.functions.text import ARABIC_DIACRITICS
+from tiny_etl_multiproc_bigdata_spark.functions.text import ARABIC_DIACRITICS, duck_jlower
 from tiny_etl_multiproc_bigdata_spark.functions.rounding import (
     exact_round,
 )
@@ -170,9 +170,9 @@ def p1_static_values(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "p2_derived_values",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           CAST(length(lower(replace(trim(text), 'İ', 'i' || chr(775)))) AS BIGINT) AS clean_len
+           CAST(length({duck_jlower("trim(text)")}) AS BIGINT) AS clean_len
     FROM documents
     """,
 )
@@ -300,8 +300,8 @@ def p11_remove_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "p12_mapper_chain",
-    oracle=r"""
-    SELECT DISTINCT lower(replace(trim(t.token), 'İ', 'i' || chr(775))) AS norm_word
+    oracle=rf"""
+    SELECT DISTINCT {duck_jlower("trim(t.token)")} AS norm_word
     FROM documents, unnest(regexp_split_to_array(text, '\s+')) AS t(token)
     """,
 )
@@ -400,8 +400,8 @@ def t3_arabic_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "t4_pipeline_chain",
-    oracle=r"""
-    SELECT source, count(DISTINCT lower(trim(t.token))) AS n_distinct_words
+    oracle=rf"""
+    SELECT source, count(DISTINCT {duck_jlower("trim(t.token)")}) AS n_distinct_words
     FROM documents, unnest(regexp_split_to_array(text, '\s+')) AS t(token)
     WHERE trim(t.token) <> ''
     GROUP BY source
@@ -484,10 +484,10 @@ def a1_reduce_fold_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "a3_unique_filter",
-    oracle=r"""
-    SELECT source, lower(replace(trim(t.token), 'İ', 'i' || chr(775))) AS norm_word
+    oracle=rf"""
+    SELECT source, {duck_jlower("trim(t.token)")} AS norm_word
     FROM documents, unnest(regexp_split_to_array(text, '\s+')) AS t(token)
-    GROUP BY source, lower(replace(trim(t.token), 'İ', 'i' || chr(775)))
+    GROUP BY source, {duck_jlower("trim(t.token)")}
     """,
 )
 def a3_unique_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -505,11 +505,11 @@ def a3_unique_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "a3_duplicates_only",
-    oracle=r"""
-    SELECT source, lower(trim(t.token)) AS norm_word,
+    oracle=rf"""
+    SELECT source, {duck_jlower("trim(t.token)")} AS norm_word,
            count(*) - 1 AS extra_occurrences
     FROM documents, unnest(regexp_split_to_array(text, '\s+')) AS t(token)
-    GROUP BY source, lower(trim(t.token))
+    GROUP BY source, {duck_jlower("trim(t.token)")}
     HAVING count(*) > 1
     """,
 )

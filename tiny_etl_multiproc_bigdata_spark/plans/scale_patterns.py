@@ -20,7 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tiny_etl_multiproc_bigdata_spark.catalog import table
-from tiny_etl_multiproc_bigdata_spark.functions.text import tokenize_words
+from tiny_etl_multiproc_bigdata_spark.functions.hashing import duck_md5_long, md5_long
+from tiny_etl_multiproc_bigdata_spark.functions.text import duck_jlower, tokenize_words
 from tiny_etl_multiproc_bigdata_spark.functions.rounding import (
     exact_round,
     round_half_up,
@@ -104,9 +105,9 @@ def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "two_stage_distinct",
-    oracle=r"""
+    oracle=rf"""
     SELECT count(*) AS n_distinct_words
-    FROM (SELECT DISTINCT lower(t.token)
+    FROM (SELECT DISTINCT {duck_jlower("t.token")}
           FROM documents, unnest(regexp_split_to_array(text, '\s+')) AS t(token))
     """,
 )
@@ -163,8 +164,7 @@ _SAMPLE_MOD = 16  # 1/16 deterministic hash sample
       SELECT event_type,
              CAST(count(*) AS BIGINT) AS n_exact,
              CAST({_SAMPLE_MOD} * count(*) FILTER (
-               CAST(('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 15))
-                    AS BIGINT) % {_SAMPLE_MOD} = 0) AS BIGINT) AS n_est
+               {duck_md5_long("CAST(event_id AS VARCHAR)")} % {_SAMPLE_MOD} = 0) AS BIGINT) AS n_est
       FROM events GROUP BY event_type
     )
     SELECT event_type, n_exact, n_est,
@@ -187,8 +187,6 @@ def hash_sample_extrapolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side filter dropping 15/16 of rows before the shuffle); here
     both branches share one scan+groupBy via filtered aggregates, so
     verifying the estimator costs one pass."""
-    from tiny_etl_multiproc_bigdata_spark.functions.hashing import md5_long
-
     e = table(spark, sf_dir, "events")
     in_sample = md5_long(F.col("event_id").cast("string")) % _SAMPLE_MOD == 0
     both = e.groupBy("event_type").agg(

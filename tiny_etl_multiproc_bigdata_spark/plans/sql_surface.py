@@ -24,6 +24,7 @@ from tiny_etl_multiproc_bigdata_spark.functions.jsonpath import (
     json_bigint,
 )
 from tiny_etl_multiproc_bigdata_spark.functions.numerics import in_grid_domain
+from tiny_etl_multiproc_bigdata_spark.functions.text import DUCK_TOKS, duck_jlower
 from tiny_etl_multiproc_bigdata_spark.plans.registry import register
 
 # Synthetic deterministic "referral" graph over customers: every
@@ -114,11 +115,10 @@ def lateral_nation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "udtf_token_chunks",
-    oracle=r"""
+    oracle=rf"""
     WITH t AS (
       SELECT doc_id,
-             list_filter(regexp_split_to_array(lower(text), '\s+'),
-                         x -> x <> '') AS l
+             {DUCK_TOKS} AS l
       FROM documents WHERE doc_id < 50
     )
     SELECT doc_id,
@@ -661,11 +661,11 @@ def udtf_table_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "collation_lcase_grouping",
-    oracle="""
+    oracle=f"""
     WITH v AS (
       SELECT CASE WHEN p_partkey % 2 = 0 THEN upper(p_name)
                   ELSE p_name END AS name_mixed,
-             lower(p_name) AS name_lc,
+             {duck_jlower("p_name")} AS name_lc,
              p_partkey
       FROM part
     )

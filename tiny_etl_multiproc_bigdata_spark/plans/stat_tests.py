@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tiny_etl_multiproc_bigdata_spark.catalog import table
+from tiny_etl_multiproc_bigdata_spark.functions.hashing import duck_md5_long
 from tiny_etl_multiproc_bigdata_spark.functions.jsonpath import (
     duck_json_bigint,
     json_bigint,
@@ -2373,8 +2374,8 @@ def _ransac_oracle() -> str:
             picks.append(
                 f"""p_{tag}{i} AS (
       SELECT x, y FROM pts
-      ORDER BY CAST(('0x' || substr(md5('{seed}|' || CAST(event_id AS
-               VARCHAR)), 1, 15)) AS BIGINT) ASC, event_id ASC LIMIT 1
+      ORDER BY {duck_md5_long(f"'{seed}|' || CAST(event_id AS VARCHAR)")} ASC,
+               event_id ASC LIMIT 1
     )"""
             )
     models = "\n    UNION ALL\n    ".join(

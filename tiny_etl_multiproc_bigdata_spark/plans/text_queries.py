@@ -15,7 +15,11 @@ from tiny_etl_multiproc_bigdata_spark.functions.rounding import (
     duck_round,
     round_half_up,
 )
-from tiny_etl_multiproc_bigdata_spark.functions.text import tokenize_words
+from tiny_etl_multiproc_bigdata_spark.functions.text import (
+    duck_jlower,
+    DUCK_TOKS,
+    tokenize_words,
+)
 from tiny_etl_multiproc_bigdata_spark.plans.fixtures import (
     fixture_docs,
     fixture_docs_sql,
@@ -54,7 +58,7 @@ def feat_cte_sql(extra: str = "") -> str:
              greatest(len(regexp_split_to_array(text, '\s+')), 1) AS n_tokens,
              greatest(length(text), 1)                            AS n_chars,
              len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))      AS n_punct,
-             len(list_filter(regexp_split_to_array(lower(text), '\s+'),
+             len(list_filter(regexp_split_to_array({duck_jlower("text")}, '\s+'),
                              t -> t IN ({_SW_SQL})))              AS sw_hits
       FROM documents"""
 
@@ -86,7 +90,7 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH scored AS (
       SELECT doc_id, lang,
-             len(list_filter(regexp_split_to_array(lower(text), '\s+'),
+             len(list_filter(regexp_split_to_array({duck_jlower("text")}, '\s+'),
                              t -> t IN ({_SW_SQL})))                  AS sw_hits,
              greatest(len(regexp_split_to_array(text, '\s+')), 1)     AS n_tokens
       FROM documents
@@ -168,15 +172,9 @@ def quality_from_docs(d: DataFrame, *extra_cols: str) -> DataFrame:
     )
 
 
-# DuckDB twin of vocab_fingerprint(); `{col}`-substitutable.
-# oracle lowercase rides duck_jlower's İ pre-map (r13 unicode matrix:
-# the fingerprint md5 silently shifted on one Turkish İ) — shared by
-# text_fingerprint and curation.decontaminate_eval_overlap
-DUCK_FINGERPRINT = (
-    "md5(array_to_string(list_sort(list_distinct("
-    r"list_filter(regexp_split_to_array(lower(replace({col}, 'İ', 'i' || chr(775))), '\s+'),"
-    " t -> t <> ''))), ' '))"
-)
+# DuckDB twin of vocab_fingerprint("text"), shared by text_fingerprint
+# and curation.decontaminate_eval_overlap
+DUCK_FINGERPRINT = f"md5(array_to_string(list_sort(list_distinct({DUCK_TOKS})), ' '))"
 
 
 def vocab_fingerprint(col) -> F.Column:
@@ -192,7 +190,7 @@ def vocab_fingerprint(col) -> F.Column:
 @register(
     "text_fingerprint",
     oracle=f"""
-    SELECT doc_id, {DUCK_FINGERPRINT.format(col="text")} AS fingerprint
+    SELECT doc_id, {DUCK_FINGERPRINT} AS fingerprint
     FROM documents
     """,
 )
@@ -208,10 +206,9 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_ngram_topk",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT list_filter(regexp_split_to_array(lower(text), '\s+'),
-                         t -> t <> '') AS l
+      SELECT {DUCK_TOKS} AS l
       FROM documents
     ), bi AS (
       SELECT b.ngram
@@ -264,17 +261,15 @@ _BOILERPLATE_ROWS: list[tuple[int, str]] = [
 
 
 def _boilerplate_oracle() -> str:
-    return r"""
+    return rf"""
     WITH sents AS (
       SELECT doc_id,
              list_filter(list_transform(regexp_split_to_array(text, '\.'),
-                                        s -> trim(lower(replace(s, 'İ', 'i' || chr(775))))),
+                                        s -> trim({duck_jlower("s")})),
                          s -> s <> '') AS l
-      FROM {docs} d
+      FROM {fixture_docs_sql(_BOILERPLATE_ROWS)} d
       WHERE text IS NOT NULL
-    ), ex AS (""".replace(
-        "{docs}", fixture_docs_sql(_BOILERPLATE_ROWS)
-    ) + r"""
+    ), ex AS (
       SELECT doc_id, s.s FROM sents, unnest(l) AS s(s)
     ), bl AS (
       SELECT s AS sent FROM ex GROUP BY s HAVING count(DISTINCT doc_id) >= 3
@@ -365,12 +360,11 @@ def text_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "inverted_index_build",
-    oracle=r"""
+    oracle=rf"""
     WITH ex AS (
       SELECT DISTINCT doc_id, t.term
       FROM documents,
-           unnest(list_filter(regexp_split_to_array(lower(replace(text, 'İ', 'i' || chr(775))), '\s+'),
-                              x -> x <> '')) AS t(term)
+           unnest({DUCK_TOKS}) AS t(term)
     )
     SELECT term,
            CAST(count(*) AS BIGINT) AS df,
@@ -401,12 +395,11 @@ def inverted_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "corpus_stats_summary",
-    oracle=r"""
+    oracle=rf"""
     WITH ex AS (
       SELECT doc_id, t.t AS token
       FROM documents,
-           unnest(list_filter(regexp_split_to_array(lower(text), '\s+'),
-                              x -> x <> '')) AS t(t)
+           unnest({DUCK_TOKS}) AS t(t)
     ), agg AS (
       SELECT count(*) AS total_tokens,
              count(DISTINCT token) AS vocab_size
@@ -616,7 +609,7 @@ _RAKE_DELIM_RE = r"\b(" + "|".join(_STOPWORDS) + r")\b"
       SELECT trim(p) AS phrase
       FROM (
         SELECT unnest(string_split(
-                 regexp_replace(lower(text), '{_RAKE_DELIM_RE}', '|', 'g'),
+                 regexp_replace({duck_jlower("text")}, '{_RAKE_DELIM_RE}', '|', 'g'),
                  '|')) AS p
         FROM documents
       ) WHERE trim(p) <> ''
@@ -738,7 +731,7 @@ def rake_keyword_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH scored AS (
       SELECT lang,
              CASE WHEN CAST(len(list_filter(
-                          regexp_split_to_array(lower(text), '\s+'),
+                          regexp_split_to_array({duck_jlower("text")}, '\s+'),
                           t -> t IN ({_SW_SQL}))) AS DOUBLE)
                        / greatest(len(regexp_split_to_array(text, '\s+')), 1)
                        >= 0.03
@@ -805,7 +798,7 @@ _CHAR_COV_PPM = 999_500
     oracle=f"""
     WITH ch AS (
       SELECT lang, c.c AS ch, count(*) AS n
-      FROM documents, unnest(string_split(lower(replace(text, 'İ', 'i' || chr(775))), '')) AS c(c)
+      FROM documents, unnest(string_split({duck_jlower("text")}, '')) AS c(c)
       WHERE c.c <> ' '
       GROUP BY lang, c.c
     ),

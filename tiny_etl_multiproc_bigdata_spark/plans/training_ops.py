@@ -45,7 +45,13 @@ from tiny_etl_multiproc_bigdata_spark.functions.jsonpath import (
     duck_json_bigint,
     json_bigint,
 )
-from tiny_etl_multiproc_bigdata_spark.functions.hashing import md5_long
+from tiny_etl_multiproc_bigdata_spark.functions.hashing import duck_md5_long, md5_long
+from tiny_etl_multiproc_bigdata_spark.functions.text import (
+    duck_jlower,
+    DUCK_TOKS,
+    tokenize_words,
+    tokenize_words_nonempty,
+)
 from tiny_etl_multiproc_bigdata_spark.functions.vectors import (
     complete_vector_sql,
 )
@@ -221,11 +227,9 @@ _STRATA_DEFAULT = 50
     "sample_stratified_hash",
     oracle=f"""
     SELECT doc_id, lang,
-           CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-                AS BIGINT) % 100 AS bucket
+           {duck_md5_long("CAST(doc_id AS VARCHAR)")} % 100 AS bucket
     FROM documents
-    WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-               AS BIGINT) % 100
+    WHERE {duck_md5_long("CAST(doc_id AS VARCHAR)")} % 100
           < CASE lang WHEN 'en' THEN {_STRATA_RATES["en"]}
                       WHEN 'fr' THEN {_STRATA_RATES["fr"]}
                       ELSE {_STRATA_DEFAULT} END
@@ -342,13 +346,11 @@ def make_greedy_packer(capacity: int):
     "pack_sequences_greedy",
     oracle=f"""
     WITH RECURSIVE docs AS (
-      SELECT CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-                  AS BIGINT) % {_PACK_SHARDS} AS shard,
+      SELECT {duck_md5_long("CAST(doc_id AS VARCHAR)")} % {_PACK_SHARDS} AS shard,
              doc_id,
              greatest(1, n_chars // 4) AS n_tokens,
              row_number() OVER (
-               PARTITION BY CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)),
-                                 1, 15)) AS BIGINT) % {_PACK_SHARDS}
+               PARTITION BY {duck_md5_long("CAST(doc_id AS VARCHAR)")} % {_PACK_SHARDS}
                ORDER BY doc_id ASC) AS rn
       FROM documents
     ), packed(shard, rn, doc_id, n_tokens, bin, fill) AS (
@@ -416,16 +418,20 @@ _GRAM_EXPR = (
 )
 
 
+def _duck_grams(c: str) -> str:
+    """DuckDB twin of ``_GRAM_EXPR``: the distinct lowered 3-grams of ``c``."""
+    return (
+        f"list_distinct([substr({duck_jlower(c)}, i, 3) "
+        f"for i in range(1, length({c}) - 1)])"
+    )
+
+
 def _fuzzy_oracle() -> str:
     values = ", ".join(f"({i}, '{s}')" for i, s in _FUZZY_PROBES)
-    grams = (
-        "list_distinct([substr(lower({c}), i, 3) "
-        "for i in range(1, length({c}) - 1)])"
-    )
     return f"""
     WITH probes(probe_id, probe_name) AS (VALUES {values}),
     pg AS (
-      SELECT probe_id, probe_name, {grams.format(c="probe_name")} AS grams
+      SELECT probe_id, probe_name, {_duck_grams("probe_name")} AS grams
       FROM probes
     ),
     pga AS (
@@ -434,7 +440,7 @@ def _fuzzy_oracle() -> str:
     ),
     names AS (SELECT DISTINCT p_name FROM part),
     ng AS (
-      SELECT p_name, {grams.format(c="p_name")} AS grams FROM names
+      SELECT p_name, {_duck_grams("p_name")} AS grams FROM names
     ),
     nga AS (
       SELECT p_name, len(grams) AS nb, unnest(grams) AS g FROM ng
@@ -516,13 +522,31 @@ def fuzzy_match_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+def _lowered_terms(d: DataFrame, *keep: str) -> DataFrame:
+    """``(*keep, term)``: every non-empty whitespace token of ``text``,
+    lowercased — the term stream the term-statistics entries count."""
+    return (
+        d.select(*keep, F.explode(tokenize_words("text")).alias("token"))
+        .filter(F.col("token") != "")
+        .select(*keep, F.lower("token").alias("term"))
+    )
+
+
+def _duck_terms(*keep: str) -> str:
+    """DuckDB twin of ``_lowered_terms``, the body of a ``toks`` CTE."""
+    cols = "".join(f"{c}, " for c in keep)
+    return (
+        f"SELECT {cols}{duck_jlower('t.token')} AS term\n"
+        "      FROM documents, unnest(regexp_split_to_array(text, '\\s+')) AS t(token)\n"
+        "      WHERE t.token <> ''"
+    )
+
+
 @register(
     "tfidf_topk_terms",
-    oracle=r"""
+    oracle=f"""
     WITH toks AS (
-      SELECT doc_id, lower(replace(t.token, 'İ', 'i' || chr(775))) AS term
-      FROM documents, unnest(regexp_split_to_array(text, '\s+')) AS t(token)
-      WHERE t.token <> ''
+      {_duck_terms("doc_id")}
     ),
     tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY doc_id, term),
     df AS (SELECT term, count(DISTINCT doc_id) AS df FROM toks GROUP BY term),
@@ -554,11 +578,7 @@ def tfidf_topk_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     WindowGroupLimit. The bigint product saturates near tf·N·10⁴ ≈
     9.2e18 — switch to log-idf before that."""
     d = table(spark, sf_dir, "documents")
-    toks = (
-        d.select("doc_id", F.explode(F.split("text", r"\s+")).alias("token"))
-        .filter(F.col("token") != "")
-        .select("doc_id", F.lower("token").alias("term"))
-    )
+    toks = _lowered_terms(d, "doc_id")
     # toks feeds tf AND df — pin the exploded term stream once (r07
     # plan audit: 3 scans without); n comes off the pinned tf table
     # (distinct doc_ids) so the base table is scanned exactly once
@@ -703,11 +723,9 @@ def asof_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_rarity_score",
-    oracle=r"""
+    oracle=f"""
     WITH toks AS (
-      SELECT doc_id, lower(t.token) AS term
-      FROM documents, unnest(regexp_split_to_array(text, '\s+')) AS t(token)
-      WHERE t.token <> ''
+      {_duck_terms("doc_id")}
     ),
     df AS (SELECT term, count(DISTINCT doc_id) AS df FROM toks GROUP BY term),
     scored AS (
@@ -729,11 +747,7 @@ def text_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit. Shapes: tf/df aggregations plus one equi-join on
     term; everything partial-agg'd."""
     d = table(spark, sf_dir, "documents")
-    toks = (
-        d.select("doc_id", F.explode(F.split("text", r"\s+")).alias("token"))
-        .filter(F.col("token") != "")
-        .select("doc_id", F.lower("token").alias("term"))
-    )
+    toks = _lowered_terms(d, "doc_id")
     df = toks.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
     scored = toks.join(df, "term").select(
         "doc_id", F.expr("100000000 div (df + 1)").alias("tok_rarity")
@@ -758,19 +772,15 @@ _CMS_WIDTH = 64
 
 
 def _cms_oracle() -> str:
-    md5_bucket = (
-        "CAST(('0x' || substr(md5(CAST({j} AS VARCHAR) || term), 1, 15)) "
-        f"AS BIGINT) % {_CMS_WIDTH}"
-    )
     rows_union = " UNION ALL ".join(
-        f"SELECT {j} AS j, {md5_bucket.format(j=j)} AS bucket, term, cnt FROM tc"
+        f"SELECT {j} AS j, "
+        f"{duck_md5_long(f'CAST({j} AS VARCHAR) || term')} % {_CMS_WIDTH} "
+        "AS bucket, term, cnt FROM tc"
         for j in range(_CMS_ROWS)
     )
-    return rf"""
+    return f"""
     WITH toks AS (
-      SELECT lower(replace(t.token, 'İ', 'i' || chr(775))) AS term
-      FROM documents, unnest(regexp_split_to_array(text, '\s+')) AS t(token)
-      WHERE t.token <> ''
+      {_duck_terms()}
     ),
     tc AS (SELECT term, count(*) AS cnt FROM toks GROUP BY term),
     hashed AS ({rows_union}),
@@ -806,11 +816,7 @@ def sketch_count_min_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     documenting. The sketch is (d·w) cells regardless of vocabulary —
     the aggregation shuffles at most d·w rows after map-side combine."""
     d = table(spark, sf_dir, "documents")
-    toks = (
-        d.select(F.explode(F.split("text", r"\s+")).alias("token"))
-        .filter(F.col("token") != "")
-        .select(F.lower("token").alias("term"))
-    )
+    toks = _lowered_terms(d)
     # tc feeds both sketch rows AND the exact top-k; hashed feeds the
     # sketch agg AND the probe join — pin both vocab-sized tables (r07
     # plan audit: 5 scans without)
@@ -851,13 +857,11 @@ def sketch_count_min_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bpe_pair_counts",
-    oracle=r"""
-    WITH words AS (
-      SELECT lower(t.token) AS w, count(*) AS freq
-      FROM documents, unnest(regexp_split_to_array(text, '\s+')) AS t(token)
-      WHERE t.token <> ''
-      GROUP BY lower(t.token)
+    oracle=f"""
+    WITH toks AS (
+      {_duck_terms()}
     ),
+    words AS (SELECT term AS w, count(*) AS freq FROM toks GROUP BY term),
     pairs AS (
       SELECT p.pair, CAST(sum(freq) AS BIGINT) AS n
       FROM words, unnest([substr(w, i, 2) for i in range(1, length(w))])
@@ -879,7 +883,7 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds; the per-round plan is exactly this query."""
     d = table(spark, sf_dir, "documents")
     words = (
-        d.select(F.explode(F.split("text", r"\s+")).alias("token"))
+        d.select(F.explode(tokenize_words("text")).alias("token"))
         .filter(F.col("token") != "")
         .groupBy(F.lower("token").alias("w"))
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -963,19 +967,17 @@ _FEAT_BUCKETS = 64
 
 @register(
     "feature_hash_counts",
-    oracle=rf"""
+    oracle=f"""
     WITH toks AS (
-      SELECT doc_id, lower(replace(t.token, 'İ', 'i' || chr(775))) AS term
-      FROM documents, unnest(regexp_split_to_array(text, '\s+')) AS t(token)
-      WHERE t.token <> ''
+      {_duck_terms("doc_id")}
     )
     SELECT doc_id,
-           CAST(('0x' || substr(md5(term), 1, 15)) AS BIGINT)
+           {duck_md5_long("term")}
              % {_FEAT_BUCKETS} AS bucket,
            count(*) AS weight
     FROM toks
     GROUP BY doc_id,
-             CAST(('0x' || substr(md5(term), 1, 15)) AS BIGINT)
+             {duck_md5_long("term")}
                % {_FEAT_BUCKETS}
     """,
 )
@@ -989,11 +991,7 @@ def feature_hash_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     same deterministic arithmetic as the holdout split, so features
     are reproducible across engines and reruns."""
     d = table(spark, sf_dir, "documents")
-    toks = (
-        d.select("doc_id", F.explode(F.split("text", r"\s+")).alias("token"))
-        .filter(F.col("token") != "")
-        .select("doc_id", F.lower("token").alias("term"))
-    )
+    toks = _lowered_terms(d, "doc_id")
     return (
         toks.select("doc_id", (md5_long(F.col("term")) % _FEAT_BUCKETS).alias("bucket"))
         .groupBy("doc_id", "bucket")
@@ -1014,10 +1012,8 @@ _WS_TOPK = 10
     oracle=rf"""
     WITH w AS (
       SELECT doc_id, source,
-             CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-                                  t -> t <> '')) AS BIGINT) AS wt,
-             (CAST(('0x' || substr(md5('ws|' || CAST(doc_id AS VARCHAR)), 1, 15))
-                   AS BIGINT) % 1000000 + 1) / 1000000.0 AS u
+             CAST(len({DUCK_TOKS}) AS BIGINT) AS wt,
+             ({duck_md5_long("'ws|' || CAST(doc_id AS VARCHAR)")} % 1000000 + 1) / 1000000.0 AS u
       FROM documents
     ), keyed AS (
       SELECT doc_id, source, wt,
@@ -1046,10 +1042,6 @@ def weighted_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-scaled-ranking convention; same documented 1-ULP ln()
     tolerance as the LM scores). Scale shape: per-row keys, then one
     per-source WindowGroupLimit top-k — no global sort."""
-    from tiny_etl_multiproc_bigdata_spark.functions.text import (
-        tokenize_words_nonempty,
-    )
-
     d = table(spark, sf_dir, "documents")
     wt = F.size(tokenize_words_nonempty("text")).cast("bigint")
     u = (
@@ -1093,9 +1085,9 @@ _NEG_ANCHORS = 32  # bounded anchor set
       WHERE doc_id < {_NEG_ANCHORS}
     ), probes AS (
       SELECT a.anchor_id, i.i AS neg_idx,
-             CAST(('0x' || substr(md5(CAST(a.anchor_id AS VARCHAR)
-                                       || '#' || CAST(i.i AS VARCHAR)),
-                                  1, 15)) AS BIGINT) % (mx.m + 1) AS target
+             {duck_md5_long(
+                 "CAST(a.anchor_id AS VARCHAR) || '#' || CAST(i.i AS VARCHAR)"
+             )} % (mx.m + 1) AS target
       FROM anchors a, unnest(range(1, {_NEG_K + 1})) AS i(i), mx
     ), snapped AS (
       SELECT p.anchor_id, p.neg_idx,
@@ -1169,8 +1161,7 @@ _SPAN_EVERY = 5  # every 5th span is masked (20% corruption rate)
     oracle=rf"""
     WITH t AS (
       SELECT doc_id,
-             list_filter(regexp_split_to_array(lower(replace(text, 'İ', 'i' || chr(775))), '\s+'),
-                         x -> x <> '') AS l
+             {DUCK_TOKS} AS l
       FROM documents
     ), t2 AS (
       SELECT doc_id, l FROM t WHERE len(l) >= 1
@@ -1290,8 +1281,7 @@ _VOCAB_TOP = 50  # closed vocabulary = top-50 corpus tokens
     WITH toks AS (
       SELECT doc_id, t.tok AS tok
       FROM documents,
-           unnest(list_filter(regexp_split_to_array(lower(text), '\s+'),
-                              x -> x <> '')) AS t(tok)
+           unnest({DUCK_TOKS}) AS t(tok)
     ), vocab AS (
       SELECT tok FROM (
         SELECT tok, count(*) AS c FROM toks GROUP BY tok
@@ -1365,8 +1355,7 @@ _BATCH_SIZE = 8
     oracle=rf"""
     WITH t AS (
       SELECT doc_id,
-             len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-                             x -> x <> '')) AS n_tokens
+             len({DUCK_TOKS}) AS n_tokens
       FROM documents
     ), t2 AS (
       SELECT doc_id, n_tokens,
@@ -1393,10 +1382,6 @@ def length_bucket_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number chain ever became the bottleneck, the id-ordered batch
     assignment decomposes per table-partition with a cumulative offset
     (the two-pass distribution-rewrite recipe, plans/advanced.py)."""
-    from tiny_etl_multiproc_bigdata_spark.functions.text import (
-        tokenize_words_nonempty,
-    )
-
     d = table(spark, sf_dir, "documents")
     t = d.select(
         "doc_id", F.size(tokenize_words_nonempty("text")).alias("n_tokens")
@@ -1434,8 +1419,7 @@ _MIX_ALPHA = 0.7  # temperature exponent (UnifiedLM / multilingual-mix style)
     WITH t AS (
       SELECT source,
              count(*) AS n_docs,
-             sum(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-                                 x -> x <> ''))) AS n_tokens
+             sum(len({DUCK_TOKS})) AS n_tokens
       FROM documents GROUP BY source
     ), q AS (
       SELECT source, n_docs, n_tokens,
@@ -1472,10 +1456,6 @@ def mix_weights_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side combine does ~all the work; source cardinality is tiny),
     then a 1-row broadcast of the totals — the same scalar-aggregate
     crossJoin convention as the curation thresholds."""
-    from tiny_etl_multiproc_bigdata_spark.functions.text import (
-        tokenize_words_nonempty,
-    )
-
     d = table(spark, sf_dir, "documents")
     agg = d.groupBy("source").agg(
         F.count("*").cast("bigint").alias("n_docs"),
@@ -1537,8 +1517,7 @@ def _bpe_oracle() -> str:
     head = rf"""
     WITH d0 AS (
       SELECT doc_id,
-             list_filter(regexp_split_to_array(lower(text), '\s+'),
-                         t -> t <> '') AS l
+             {DUCK_TOKS} AS l
       FROM documents
     )"""
     steps = []
@@ -1597,10 +1576,6 @@ def bpe_merge_train_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-rewrite cost real BPE trainers pay per merge, and the
     reason production tokenizers train on a sampled subset or use
     pair-count deltas; both fit this plan shape."""
-    from tiny_etl_multiproc_bigdata_spark.functions.text import (
-        tokenize_words_nonempty,
-    )
-
     sep, dd = _BPE_SEP, _BPE_SEP + _BPE_SEP
     d = table(spark, sf_dir, "documents").select(
         "doc_id", tokenize_words_nonempty("text").alias("l")
@@ -1683,8 +1658,7 @@ _MIX_BUDGET = 100_000  # total training-token budget for the allocation
     oracle=rf"""
     WITH t AS (
       SELECT source,
-             sum(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-                                 x -> x <> ''))) AS n_tokens
+             sum(len({DUCK_TOKS})) AS n_tokens
       FROM documents GROUP BY source
     ), q AS (
       SELECT source, n_tokens,
@@ -1715,10 +1689,6 @@ def mix_token_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB shape: identical to mix_weights_temperature — one map-side
     combined agg keyed by source plus a 1-row totals broadcast."""
-    from tiny_etl_multiproc_bigdata_spark.functions.text import (
-        tokenize_words_nonempty,
-    )
-
     d = table(spark, sf_dir, "documents")
     agg = d.groupBy("source").agg(
         F.sum(F.size(tokenize_words_nonempty("text")).cast("bigint"))
@@ -1755,18 +1725,14 @@ _LEV_MAX = 3  # accept a candidate only within 3 edits
 
 def _lev_oracle() -> str:
     values = ", ".join(f"({i}, '{s}')" for i, s in _FUZZY_PROBES)
-    grams = (
-        "list_distinct([substr(lower({c}), i, 3) "
-        "for i in range(1, length({c}) - 1)])"
-    )
     return f"""
     WITH probes(probe_id, probe_name) AS (VALUES {values}),
     pga AS (
-      SELECT probe_id, probe_name, unnest({grams.format(c="probe_name")}) AS g
+      SELECT probe_id, probe_name, unnest({_duck_grams("probe_name")}) AS g
       FROM probes
     ),
     nga AS (
-      SELECT p_name, unnest({grams.format(c="p_name")}) AS g
+      SELECT p_name, unnest({_duck_grams("p_name")}) AS g
       FROM (SELECT DISTINCT p_name FROM part)
     ),
     cand AS (
@@ -1775,7 +1741,8 @@ def _lev_oracle() -> str:
     ),
     verified AS (
       SELECT probe_id, probe_name, p_name,
-             CAST(levenshtein(lower(probe_name), lower(p_name)) AS BIGINT)
+             CAST(levenshtein({duck_jlower("probe_name")},
+                              {duck_jlower("p_name")}) AS BIGINT)
                AS edit_dist
       FROM cand
     )
@@ -1966,8 +1933,7 @@ _KFOLD_K = 5
     "kfold_assignment_balance",
     oracle=f"""
     WITH folds AS (
-      SELECT CAST(('0x' || substr(md5('fold|' || CAST(doc_id AS VARCHAR)),
-                                  1, 15)) AS BIGINT) % {_KFOLD_K} AS fold,
+      SELECT {duck_md5_long("'fold|' || CAST(doc_id AS VARCHAR)")} % {_KFOLD_K} AS fold,
              lang
       FROM documents
     ),
@@ -1999,8 +1965,6 @@ def kfold_assignment_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: fold assignment is a per-row expression; one
     partial-agg'd groupBy to K x |langs| cells; the rate windows run
     over that bounded table."""
-    from tiny_etl_multiproc_bigdata_spark.functions.hashing import md5_long
-
     d = table(spark, sf_dir, "documents")
     folds = d.select(
         (
@@ -2250,11 +2214,9 @@ def largest_remainder_apportion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ctfidf_cluster_terms",
-    oracle=r"""
+    oracle=f"""
     WITH toks AS (
-      SELECT lang, lower(replace(t.token, 'İ', 'i' || chr(775))) AS term
-      FROM documents, unnest(regexp_split_to_array(text, '\s+')) AS t(token)
-      WHERE t.token <> ''
+      {_duck_terms("lang")}
     ),
     tf AS (SELECT lang, term, count(*) AS tf FROM toks GROUP BY lang, term),
     cdf AS (SELECT term, count(DISTINCT lang) AS cdf FROM tf GROUP BY term),
@@ -2293,13 +2255,7 @@ def ctfidf_cluster_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     per class."""
     d = table(spark, sf_dir, "documents")
     toks = d.select(
-        "lang",
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col("text")), r"\s+"),
-                lambda t: t != "",
-            )
-        ).alias("term"),
+        "lang", F.explode(tokenize_words_nonempty(F.col("text"))).alias("term")
     )
     tf = toks.groupBy("lang", "term").agg(F.count(F.lit(1)).alias("tf"))
     cdf = tf.groupBy("term").agg(F.count_distinct("lang").alias("cdf"))

@@ -21,10 +21,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tiny_etl_multiproc_bigdata_spark.catalog import table
-from tiny_etl_multiproc_bigdata_spark.functions.hashing import md5_long  # noqa: F401 (doc ref)
+from tiny_etl_multiproc_bigdata_spark.functions.hashing import duck_md5_long, md5_long
 from tiny_etl_multiproc_bigdata_spark.functions.rounding import round_half_up
 from tiny_etl_multiproc_bigdata_spark.functions.vectors import (
     complete_vector_sql,
+    cosine_scored,
     cosine_similarity,
     duck_cosine,
     duck_top_k_by_cosine,
@@ -131,16 +132,7 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
-    scored = (
-        F.broadcast(q)
-        .join(e, F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("candidate_id"),
-            cosine_similarity(F.col("qv"), F.col("embedding")).alias("cos"),
-        )
-    )
-    return top_k_by_cosine(scored, _TOP_K)
+    return top_k_by_cosine(cosine_scored(q, e), _TOP_K)
 
 
 @register(
@@ -198,16 +190,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("qv"),
         F.col("bucket").alias("qbucket"),
     )
-    scored = (
-        F.broadcast(q)
-        .join(v, (F.col("bucket") == F.col("qbucket")) & (F.col("vec_id") != F.col("query_id")))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("candidate_id"),
-            cosine_similarity(F.col("qv"), F.col("embedding")).alias("cos"),
-        )
-    )
-    return top_k_by_cosine(scored, _TOP_K)
+    return top_k_by_cosine(cosine_scored(q, v, "bucket"), _TOP_K)
 
 
 @register(
@@ -1847,8 +1830,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH q AS (
       SELECT vec_id, label,
-             CAST(('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))
-                  AS BIGINT) % 2 AS half,
+             {duck_md5_long("CAST(vec_id AS VARCHAR)")} % 2 AS half,
              list_transform(embedding::DOUBLE[],
                             x -> CAST(floor(x * 10000 + 0.5) AS BIGINT))
                AS qv

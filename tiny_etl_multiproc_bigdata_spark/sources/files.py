@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from tiny_etl_multiproc_bigdata_spark.catalog import table
 from tiny_etl_multiproc_bigdata_spark.functions.rounding import round_half_up
 from tiny_etl_multiproc_bigdata_spark.functions.text import (
+    DUCK_TOKS,
     tokenize_words_nonempty,
 )
 from tiny_etl_multiproc_bigdata_spark.plans.registry import register
@@ -236,7 +237,7 @@ def orc_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "jsonl_roundtrip_agg",
-    oracle=r"""
+    oracle=rf"""
         SELECT lang,
                count(*) AS n_docs,
                CAST(sum(n_toks) AS BIGINT) AS total_tokens,
@@ -244,8 +245,7 @@ def orc_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                  AS corpus_hash
         FROM (
           SELECT doc_id, lang, md5(text) AS text_hash,
-                 len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-                                 t -> t <> '')) AS n_toks
+                 len({DUCK_TOKS}) AS n_toks
           FROM documents
         )
         GROUP BY lang

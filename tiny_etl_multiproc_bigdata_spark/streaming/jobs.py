@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from tiny_etl_multiproc_bigdata_spark.catalog import parquet_schema
+from tiny_etl_multiproc_bigdata_spark.functions.hashing import duck_md5_long
 from tiny_etl_multiproc_bigdata_spark.functions.rounding import (
     exact_round,
 )
@@ -1182,11 +1183,10 @@ def streaming_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_denylist_filter",
-    oracle="""
+    oracle=f"""
     WITH deny AS (
       SELECT c_custkey AS k FROM customer
-      WHERE CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 15))
-                 AS BIGINT) % 100 < 5
+      WHERE {duck_md5_long("CAST(c_custkey AS VARCHAR)")} % 100 < 5
     )
     SELECT event_type,
            count(*) AS n_kept,

@@ -1,6 +1,7 @@
 """Targeted driver-sim verify: run named registry queries against
 their DuckDB oracles (order-insensitive rows+schema compare, the
 tests/compare.py harness == the driver's t2 check) at one or more SFs.
+``ulp_sensitive`` entries compare float-exact, as in tier-1.
 
 Usage: python tools/verify_queries.py [--sf 0.01[,0.1]] name [name ...]
 (``--sf`` may come before, between or after the names.)
@@ -41,10 +42,11 @@ def main() -> None:
 
     from tiny_etl_multiproc_bigdata_spark.session import _cpus
     from tiny_etl_multiproc_bigdata_spark.plans.registry import (
-        queries,
         oracle_sql,
+        queries,
+        query_metadata,
     )
-    from tests.compare import canon, duck_connect
+    from tests.compare import compare, duck_connect
 
     # The JVM, and with it every Python worker, inherits this directory.
     os.chdir(tempfile.gettempdir())
@@ -56,8 +58,7 @@ def main() -> None:
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-    q = queries()
-    o = oracle_sql()
+    q, o, meta = queries(), oracle_sql(), query_metadata()
     board: dict[str, dict] = {}
     n_bad = 0
     for sf in sfs:
@@ -66,31 +67,19 @@ def main() -> None:
         for name in names:
             key = f"{name}@sf{sf}"
             try:
-                df = q[name](spark, sf_dir)
-                s_rows = df.collect()
-                s_cols = df.columns
-                rel = con.execute(o[name])
-                d_cols = [d[0] for d in rel.description]
-                d_rows = rel.fetchall()
-                sc, sr = canon(s_rows, s_cols)
-                dc, dr = canon(d_rows, d_cols)
-                ok = sc == dc and sr == dr
+                counts: dict = {}
+                problems = compare(
+                    q[name](spark, sf_dir), con, o[name],
+                    meta[name]["ulp_sensitive"], counts,
+                )
                 board[key] = {
-                    "ok": bool(ok),
-                    "spark_rows": len(s_rows),
-                    "oracle_rows": len(d_rows),
+                    "ok": not problems,
+                    "spark_rows": counts["spark"],
+                    "oracle_rows": counts["duckdb"],
                 }
-                if not ok:
+                if problems:
                     n_bad += 1
-                    board[key]["first_diff"] = next(
-                        (
-                            {"spark": repr(a)[:200], "oracle": repr(b)[:200]}
-                            for a, b in zip(sr, dr)
-                            if a != b
-                        ),
-                        {"note": "row count or schema mismatch",
-                         "spark_cols": sc, "oracle_cols": dc},
-                    )
+                    board[key]["first_diff"] = problems
             except Exception as exc:  # noqa: BLE001
                 n_bad += 1
                 board[key] = {"ok": False, "err": repr(exc)[:300]}
