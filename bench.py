@@ -14,6 +14,23 @@ import sys
 import time
 
 
+def noop(df) -> None:
+    """Materialize every column of ``df`` through the noop sink."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def median_time(run, n: int) -> tuple[float, list[float]]:
+    """Run ``run`` once untimed (codegen, page cache, class loading),
+    then ``n`` timed runs; return the median and the timed runs."""
+    run()
+    runs = []
+    for _ in range(n):
+        t0 = time.perf_counter()
+        run()
+        runs.append(time.perf_counter() - t0)
+    return sorted(runs)[n // 2], runs
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -55,9 +72,7 @@ def main() -> None:
     # committer/broadcast class loading) are ~3s and would otherwise be
     # billed to the first query — the baseline rate we compare against
     # (BASELINE.md) is a steady-state throughput constant
-    all_queries["flagship_words"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    noop(all_queries["flagship_words"](spark, sf_dir))
 
     mark_load("headline")
     timings: dict[str, float] = {}
@@ -72,13 +87,7 @@ def main() -> None:
         # pays per-plan codegen/page-cache costs, and single-shot
         # numbers vary up to 5× under VM load (BENCH_r03 recorded q1 at
         # 8.98s vs 1.6s steady-state)
-        df.write.format("noop").mode("overwrite").save()
-        runs = []
-        for _ in range(5):
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        dt = sorted(runs)[2]
+        dt, runs = median_time(lambda: noop(df), 5)
         timings[name] = round(dt, 3)
         total += dt
         print(f"# {name}: {dt:.3f}s (runs: {[round(r, 3) for r in runs]})", file=sys.stderr)
@@ -117,14 +126,9 @@ def main() -> None:
     # compute, so one warm pass + 3 timed keeps the battery bounded
     # while absorbing load spikes
     mark_load("sustained")
-    words_from_labelled_docs(amplified).write.format("noop").mode("overwrite").save()
-    runs: list[float] = []
-    for i in range(3):
-        t0 = time.perf_counter()
-        words_from_labelled_docs(amplified).write.format("noop").mode("overwrite").save()
-        runs.append(time.perf_counter() - t0)
-        print(f"# sustained run {i + 1}: {runs[-1]:.1f}s", file=sys.stderr)
-    dt = sorted(runs)[1]
+    dt, runs = median_time(lambda: noop(words_from_labelled_docs(amplified)), 3)
+    for i, r in enumerate(runs):
+        print(f"# sustained run {i + 1}: {r:.1f}s", file=sys.stderr)
     mb_per_s = (corpus_bytes * n_rep / 1e6) / dt
     print(
         f"# flagship sustained (median of 3): {corpus_bytes * n_rep / 1e6:.0f} MB in "
@@ -149,17 +153,11 @@ def main() -> None:
         # run's evidence (the BENCH_r08 lesson, generalized): record
         # the error in-JSON and keep going
         try:
-            run()  # warm-once (r08 protocol)
-            samples = []
-            for _ in range(3):
-                t0 = time.perf_counter()
-                run()
-                samples.append(time.perf_counter() - t0)
+            dt, samples = median_time(run, 3)  # warm-once (r08 protocol)
         except Exception as ex:  # noqa: BLE001 — recorded, not hidden
             amplified[name] = {"rep": amp_rep, "error": f"{type(ex).__name__}: {ex}"[:300]}
             print(f"# {name} amplified FAILED: {ex}", file=sys.stderr)
             return
-        dt = sorted(samples)[1]
         amplified[name] = {
             "rep": amp_rep,
             "sec": round(dt, 3),
@@ -186,10 +184,7 @@ def main() -> None:
     # named in the key instead of sharing a falsely-common unit
     timed_amp(
         "q1_pricing_summary",
-        lambda: q1_from_lineitem(li_amp)
-        .write.format("noop")
-        .mode("overwrite")
-        .save(),
+        lambda: noop(q1_from_lineitem(li_amp)),
         "parquet_mb_per_s",
         li_bytes,
     )
@@ -214,10 +209,7 @@ def main() -> None:
     )
     timed_amp(
         "dedup_minhash_lsh",
-        lambda: minhash_pairs_from_docs(docs_amp)
-        .write.format("noop")
-        .mode("overwrite")
-        .save(),
+        lambda: noop(minhash_pairs_from_docs(docs_amp)),
         "text_mb_per_s",
         corpus_bytes,
     )
@@ -231,16 +223,13 @@ def main() -> None:
     )
     timed_amp(
         "q9_product_profit",
-        lambda: q9_from_tables(
+        lambda: noop(q9_from_tables(
             li_amp9,
             spark.read.parquet(f"{sf_dir}/orders.parquet"),
             spark.read.parquet(f"{sf_dir}/supplier.parquet"),
             spark.read.parquet(f"{sf_dir}/nation.parquet"),
             spark.read.parquet(f"{sf_dir}/part.parquet"),
-        )
-        .write.format("noop")
-        .mode("overwrite")
-        .save(),
+        )),
         "parquet_mb_per_s",
         li_bytes,
     )
@@ -254,10 +243,7 @@ def main() -> None:
 
     timed_amp(
         "dedup_jaccard_prefix_filter",
-        lambda: prefix_filter_pairs_from_docs(docs_amp)
-        .write.format("noop")
-        .mode("overwrite")
-        .save(),
+        lambda: noop(prefix_filter_pairs_from_docs(docs_amp)),
         "text_mb_per_s",
         corpus_bytes,
     )
@@ -272,10 +258,7 @@ def main() -> None:
 
     timed_amp(
         "corpus_curation",
-        lambda: curation_from_docs(docs_amp)
-        .write.format("noop")
-        .mode("overwrite")
-        .save(),
+        lambda: noop(curation_from_docs(docs_amp)),
         "text_mb_per_s",
         corpus_bytes,
     )
@@ -304,10 +287,7 @@ def main() -> None:
     )
     timed_amp(
         "pretrain_corpus_pipeline",
-        lambda: pipeline_from_docs(docs_pipe)
-        .write.format("noop")
-        .mode("overwrite")
-        .save(),
+        lambda: noop(pipeline_from_docs(docs_pipe)),
         "text_mb_per_s",
         corpus_bytes,
     )
@@ -334,10 +314,7 @@ def main() -> None:
     )
     timed_amp(
         "embedding_gram_matrix",
-        lambda: gram_from_embeddings(emb_amp)
-        .write.format("noop")
-        .mode("overwrite")
-        .save(),
+        lambda: noop(gram_from_embeddings(emb_amp)),
         "parquet_mb_per_s",
         emb_bytes,
     )
@@ -363,10 +340,7 @@ def main() -> None:
     )
     timed_amp(
         "naive_bayes_lang_confusion",
-        lambda: nb_confusion_from_docs(docs_nb)
-        .write.format("noop")
-        .mode("overwrite")
-        .save(),
+        lambda: noop(nb_confusion_from_docs(docs_nb)),
         "text_mb_per_s",
         corpus_bytes,
     )
@@ -424,10 +398,7 @@ def main() -> None:
                 # warm query itself); the steady-state number is what
                 # detects super-linear scaling
                 try:
-                    run()
-                    t0 = time.perf_counter()
-                    run()
-                    dt = time.perf_counter() - t0
+                    dt, _ = median_time(run, 1)
                 except Exception as ex:  # noqa: BLE001 — recorded, not hidden
                     sf1[name] = {"error": f"{type(ex).__name__}: {ex}"[:300]}
                     print(f"# sf1 {name} FAILED: {ex}", file=sys.stderr)
@@ -441,64 +412,46 @@ def main() -> None:
             li1 = lambda: spark.read.parquet(f"{sf1_dir}/lineitem.parquet")  # noqa: E731
             timed_sf1(
                 "q1_pricing_summary",
-                lambda: q1_from_lineitem(li1())
-                .write.format("noop")
-                .mode("overwrite")
-                .save(),
+                lambda: noop(q1_from_lineitem(li1())),
                 "parquet_mb_per_s",
                 li1_bytes,
             )
             timed_sf1(
                 "q9_product_profit",
-                lambda: q9_from_tables(
+                lambda: noop(q9_from_tables(
                     li1(),
                     spark.read.parquet(f"{sf1_dir}/orders.parquet"),
                     spark.read.parquet(f"{sf1_dir}/supplier.parquet"),
                     spark.read.parquet(f"{sf1_dir}/nation.parquet"),
                     spark.read.parquet(f"{sf1_dir}/part.parquet"),
-                )
-                .write.format("noop")
-                .mode("overwrite")
-                .save(),
+                )),
                 "parquet_mb_per_s",
                 li1_bytes,
             )
             d1 = docs1.select("doc_id", "text")
             timed_sf1(
                 "dedup_minhash_lsh",
-                lambda: minhash_pairs_from_docs(d1)
-                .write.format("noop")
-                .mode("overwrite")
-                .save(),
+                lambda: noop(minhash_pairs_from_docs(d1)),
                 "text_mb_per_s",
                 docs1_bytes,
             )
             timed_sf1(
                 "dedup_jaccard_prefix_filter",
-                lambda: prefix_filter_pairs_from_docs(d1)
-                .write.format("noop")
-                .mode("overwrite")
-                .save(),
+                lambda: noop(prefix_filter_pairs_from_docs(d1)),
                 "text_mb_per_s",
                 docs1_bytes,
             )
             timed_sf1(
                 "corpus_curation",
-                lambda: curation_from_docs(d1)
-                .write.format("noop")
-                .mode("overwrite")
-                .save(),
+                lambda: noop(curation_from_docs(d1)),
                 "text_mb_per_s",
                 docs1_bytes,
             )
             timed_sf1(
                 "pretrain_corpus_pipeline",
-                lambda: pipeline_from_docs(
+                lambda: noop(pipeline_from_docs(
                     docs1.select("doc_id", "source", "lang", "text")
-                )
-                .write.format("noop")
-                .mode("overwrite")
-                .save(),
+                )),
                 "text_mb_per_s",
                 docs1_bytes,
             )
@@ -521,13 +474,7 @@ def main() -> None:
 
             def timed_sf1_entry(name: str, basis_key: str, basis_bytes: int) -> None:
                 fn = all_queries[name]
-
-                def run():
-                    fn(spark, sf1_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-
-                timed_sf1(name, run, basis_key, basis_bytes)
+                timed_sf1(name, lambda: noop(fn(spark, sf1_dir)), basis_key, basis_bytes)
 
             timed_sf1_entry("hits_hub_authority", "parquet_mb_per_s", li1_bytes)
             timed_sf1_entry(
@@ -643,13 +590,7 @@ def main() -> None:
                         spark.read.parquet(ldir))),
                     ("q1", lambda: q1_from_lineitem(spark.read.parquet(ldir))),
                 ):
-                    probe().write.format("noop").mode("overwrite").save()  # warm
-                    samples = []
-                    for _ in range(3):
-                        t0 = time.perf_counter()
-                        probe().write.format("noop").mode("overwrite").save()
-                        samples.append(time.perf_counter() - t0)
-                    dt = sorted(samples)[1]
+                    dt, _ = median_time(lambda: noop(probe()), 3)
                     probes[f"{pname}_sec"] = round(dt, 3)
                     probes[f"{pname}_mb_per_s"] = round(lbytes / 1e6 / dt, 1)
                 layout[lname] = probes
@@ -665,8 +606,6 @@ def main() -> None:
     # decides state-backend sizing at scale (SCALE_NOTES.md).
     import shutil
     import tempfile
-
-    from pyspark.sql.types import LongType
 
     streaming: dict[str, dict[str, float]] = {}
     mark_load("streaming")
@@ -712,27 +651,15 @@ def main() -> None:
     from tiny_etl_multiproc_bigdata_spark.functions.text import (
         tokenize_words_nonempty,
     )
-
-    ev_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    ev_rows = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    raw = (
-        spark.readStream.schema(ev_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+    from tiny_etl_multiproc_bigdata_spark.streaming.jobs import (
+        _docs_stream,
+        _events_stream,
     )
-    if isinstance(ev_schema["ts"].dataType, LongType):
-        ev = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        ev = raw.withColumn(
-            "ts",
-            F.timestamp_micros(
-                F.to_unix_timestamp("ts") * F.lit(1_000_000).cast("bigint")
-                + F.date_format("ts", "SSSSSS").cast("bigint")
-            ),
-        )
+
+    ev_rows = spark.read.parquet(f"{sf_dir}/events.parquet").count()
     tumbling = (
-        ev.withWatermark("ts", "10 minutes")
+        _events_stream(spark, sf_dir)
+        .withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n"),
@@ -741,16 +668,10 @@ def main() -> None:
     )
     timed_stream("streaming_tumbling_counts", tumbling, "complete", ev_rows)
 
-    doc_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     doc_rows = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-    docs_stream = (
-        spark.readStream.schema(doc_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
     segs = (
-        docs_stream.select(tokenize_words_nonempty("text").alias("l"))
+        _docs_stream(spark, sf_dir)
+        .select(tokenize_words_nonempty("text").alias("l"))
         .where(F.size("l") >= 1)
         .select(F.explode(segment_hash_structs()).alias("s"))
         .select(

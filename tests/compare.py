@@ -56,6 +56,15 @@ def canon(rows, colnames, exact_floats: bool = False):
     return sorted(colnames), out
 
 
+def first_difference(a_rows: list, b_rows: list) -> tuple[int, tuple, tuple] | None:
+    """``(i, a_row, b_row)`` at the first index where two canonical row
+    lists differ, or None when they agree over their common length."""
+    for i, (a, b) in enumerate(zip(a_rows, b_rows)):
+        if a != b:
+            return i, a, b
+    return None
+
+
 def compare(
     spark_df,
     con: duckdb.DuckDBPyConnection,
@@ -87,16 +96,16 @@ def compare(
         return problems
     if len(sr) != len(dr):
         problems.append(f"row count differs: spark={len(sr)} duckdb={len(dr)}")
-    for i, (a, b) in enumerate(zip(sr, dr)):
-        if a != b:
-            msg = f"first differing row #{i}: spark={a!r} duckdb={b!r}"
-            if exact_floats:
-                msg += (
-                    " [ulp_sensitive entry compared driver-exact: this is"
-                    " the documented 1-ULP JVM-vs-libm boundary landing —"
-                    " adjust the entry's quantization scale for this"
-                    " fixture vintage]"
-                )
-            problems.append(msg)
-            break
+    first = first_difference(sr, dr)
+    if first is not None:
+        i, a, b = first
+        msg = f"first differing row #{i}: spark={a!r} duckdb={b!r}"
+        if exact_floats:
+            msg += (
+                " [ulp_sensitive entry compared driver-exact: this is"
+                " the documented 1-ULP JVM-vs-libm boundary landing —"
+                " adjust the entry's quantization scale for this"
+                " fixture vintage]"
+            )
+        problems.append(msg)
     return problems

@@ -18,13 +18,21 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
-from compare import compare  # noqa: E402
-from null_parity_audit import SF_DIR, build_fixture  # noqa: E402
+from compare import compare, duck_connect  # noqa: E402
+from null_parity_audit import (  # noqa: E402
+    SF_DIR,
+    build_fixture,
+    build_jsonedge_fixture,
+    build_nonfinite_fixture,
+    build_ragged_fixture,
+    build_stuck_fixture,
+    build_timeskew_fixture,
+    build_unicode_fixture,
+)
 
 # build_fixture derives the spiked tables from the real sf0.001
 # parquet; SF_DIR honors SPARK_GRAFT_TEST_SF_DIR like conftest.py
@@ -34,11 +42,33 @@ pytestmark = pytest.mark.skipif(
     reason=f"fixture source dir missing: {SF_DIR}",
 )
 
-from tiny_etl_multiproc_bigdata_spark.catalog import TABLES  # noqa: E402
 from tiny_etl_multiproc_bigdata_spark.plans.registry import (  # noqa: E402
     REGISTRY,
     _load_all,
 )
+
+
+def _parity_fixture(build):
+    """A module-scoped ``(fixture dir, DuckDB connection)`` fixture over
+    the spiked tables that ``build`` writes."""
+
+    @pytest.fixture(scope="module")
+    def fixture(tmp_path_factory):
+        fix = str(tmp_path_factory.mktemp(build.__name__) / "fixture")
+        build(fix)
+        return fix, duck_connect(fix)
+
+    return fixture
+
+
+def _assert_parity(spark, fixture, name: str, spike: str) -> None:
+    _load_all()
+    fix, con = fixture
+    spec = REGISTRY[name]
+    assert spec.oracle is not None, f"{name} lost its oracle"
+    problems = compare(spec.fn(spark, fix), con, spec.oracle, spec.ulp_sensitive)
+    assert not problems, f"{name} diverges on {spike}: {problems}"
+
 
 # one per fixed class, plus the two audit-era windows rewrites
 SENTINELS = [
@@ -65,26 +95,12 @@ SENTINELS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def null_fixture(tmp_path_factory):
-    fix = str(tmp_path_factory.mktemp("null_parity") / "fixture")
-    build_fixture(fix)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{fix}/{t}.parquet')"
-        )
-    return fix, con
+null_fixture = _parity_fixture(build_fixture)
 
 
 @pytest.mark.parametrize("name", SENTINELS)
 def test_null_parity_sentinel(spark, null_fixture, name):
-    _load_all()
-    fix, con = null_fixture
-    spec = REGISTRY[name]
-    assert spec.oracle is not None, f"{name} lost its oracle"
-    problems = compare(spec.fn(spark, fix), con, spec.oracle, spec.ulp_sensitive)
-    assert not problems, f"{name} diverges on NULL-spiked input: {problems}"
+    _assert_parity(spark, null_fixture, name, "NULL-spiked input")
 
 
 # --- r13 matrix extensions: non-finite doubles and adversarial UTF-8 ---
@@ -125,52 +141,20 @@ UNICODE_SENTINELS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def nonfinite_fixture(tmp_path_factory):
-    from null_parity_audit import build_nonfinite_fixture
-
-    fix = str(tmp_path_factory.mktemp("nonfinite_parity") / "fixture")
-    build_nonfinite_fixture(fix)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{fix}/{t}.parquet')"
-        )
-    return fix, con
+nonfinite_fixture = _parity_fixture(build_nonfinite_fixture)
 
 
-@pytest.fixture(scope="module")
-def unicode_fixture(tmp_path_factory):
-    from null_parity_audit import build_unicode_fixture
-
-    fix = str(tmp_path_factory.mktemp("unicode_parity") / "fixture")
-    build_unicode_fixture(fix)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{fix}/{t}.parquet')"
-        )
-    return fix, con
+unicode_fixture = _parity_fixture(build_unicode_fixture)
 
 
 @pytest.mark.parametrize("name", NONFINITE_SENTINELS)
 def test_nonfinite_parity_sentinel(spark, nonfinite_fixture, name):
-    _load_all()
-    fix, con = nonfinite_fixture
-    spec = REGISTRY[name]
-    assert spec.oracle is not None, f"{name} lost its oracle"
-    problems = compare(spec.fn(spark, fix), con, spec.oracle, spec.ulp_sensitive)
-    assert not problems, f"{name} diverges on non-finite input: {problems}"
+    _assert_parity(spark, nonfinite_fixture, name, "non-finite input")
 
 
 @pytest.mark.parametrize("name", UNICODE_SENTINELS)
 def test_unicode_parity_sentinel(spark, unicode_fixture, name):
-    _load_all()
-    fix, con = unicode_fixture
-    spec = REGISTRY[name]
-    assert spec.oracle is not None, f"{name} lost its oracle"
-    problems = compare(spec.fn(spark, fix), con, spec.oracle, spec.ulp_sensitive)
-    assert not problems, f"{name} diverges on adversarial UTF-8: {problems}"
+    _assert_parity(spark, unicode_fixture, name, "adversarial UTF-8")
 
 
 def test_nonfinite_fixture_nonvacuous(nonfinite_fixture):
@@ -224,28 +208,12 @@ RAGGED_SENTINELS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def ragged_fixture(tmp_path_factory):
-    from null_parity_audit import build_ragged_fixture
-
-    fix = str(tmp_path_factory.mktemp("ragged_parity") / "fixture")
-    build_ragged_fixture(fix)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{fix}/{t}.parquet')"
-        )
-    return fix, con
+ragged_fixture = _parity_fixture(build_ragged_fixture)
 
 
 @pytest.mark.parametrize("name", RAGGED_SENTINELS)
 def test_ragged_parity_sentinel(spark, ragged_fixture, name):
-    _load_all()
-    fix, con = ragged_fixture
-    spec = REGISTRY[name]
-    assert spec.oracle is not None, f"{name} lost its oracle"
-    problems = compare(spec.fn(spark, fix), con, spec.oracle, spec.ulp_sensitive)
-    assert not problems, f"{name} diverges on ragged-dimension input: {problems}"
+    _assert_parity(spark, ragged_fixture, name, "ragged-dimension input")
 
 
 def test_ragged_fixture_nonvacuous(ragged_fixture):
@@ -289,52 +257,20 @@ JSONEDGE_SENTINELS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def stuck_fixture(tmp_path_factory):
-    from null_parity_audit import build_stuck_fixture
-
-    fix = str(tmp_path_factory.mktemp("stuck_parity") / "fixture")
-    build_stuck_fixture(fix)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{fix}/{t}.parquet')"
-        )
-    return fix, con
+stuck_fixture = _parity_fixture(build_stuck_fixture)
 
 
-@pytest.fixture(scope="module")
-def jsonedge_fixture(tmp_path_factory):
-    from null_parity_audit import build_jsonedge_fixture
-
-    fix = str(tmp_path_factory.mktemp("jsonedge_parity") / "fixture")
-    build_jsonedge_fixture(fix)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{fix}/{t}.parquet')"
-        )
-    return fix, con
+jsonedge_fixture = _parity_fixture(build_jsonedge_fixture)
 
 
 @pytest.mark.parametrize("name", STUCK_SENTINELS)
 def test_stuck_parity_sentinel(spark, stuck_fixture, name):
-    _load_all()
-    fix, con = stuck_fixture
-    spec = REGISTRY[name]
-    assert spec.oracle is not None, f"{name} lost its oracle"
-    problems = compare(spec.fn(spark, fix), con, spec.oracle, spec.ulp_sensitive)
-    assert not problems, f"{name} diverges on degenerate groups: {problems}"
+    _assert_parity(spark, stuck_fixture, name, "degenerate groups")
 
 
 @pytest.mark.parametrize("name", JSONEDGE_SENTINELS)
 def test_jsonedge_parity_sentinel(spark, jsonedge_fixture, name):
-    _load_all()
-    fix, con = jsonedge_fixture
-    spec = REGISTRY[name]
-    assert spec.oracle is not None, f"{name} lost its oracle"
-    problems = compare(spec.fn(spark, fix), con, spec.oracle, spec.ulp_sensitive)
-    assert not problems, f"{name} diverges on adversarial JSON: {problems}"
+    _assert_parity(spark, jsonedge_fixture, name, "adversarial JSON")
 
 
 def test_stuck_fixture_nonvacuous(stuck_fixture):
@@ -382,28 +318,12 @@ TIMESKEW_SENTINELS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def timeskew_fixture(tmp_path_factory):
-    from null_parity_audit import build_timeskew_fixture
-
-    fix = str(tmp_path_factory.mktemp("timeskew_parity") / "fixture")
-    build_timeskew_fixture(fix)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{fix}/{t}.parquet')"
-        )
-    return fix, con
+timeskew_fixture = _parity_fixture(build_timeskew_fixture)
 
 
 @pytest.mark.parametrize("name", TIMESKEW_SENTINELS)
 def test_timeskew_parity_sentinel(spark, timeskew_fixture, name):
-    _load_all()
-    fix, con = timeskew_fixture
-    spec = REGISTRY[name]
-    assert spec.oracle is not None, f"{name} lost its oracle"
-    problems = compare(spec.fn(spark, fix), con, spec.oracle, spec.ulp_sensitive)
-    assert not problems, f"{name} diverges on extreme timestamps: {problems}"
+    _assert_parity(spark, timeskew_fixture, name, "extreme timestamps")
 
 
 def test_timeskew_fixture_nonvacuous(timeskew_fixture):

@@ -29,15 +29,12 @@ from partition_invariance_audit import (  # noqa: E402
     BASELINE_CONFS,
     PERTURBED_CONFS,
     SF_DIR,
-    _canon_result,
-    _diff,
     build_fixture,
+    canon_run,
+    layout_diff,
 )
 
-from tiny_etl_multiproc_bigdata_spark.plans.registry import (  # noqa: E402
-    REGISTRY,
-    _load_all,
-)
+from tiny_etl_multiproc_bigdata_spark.plans.registry import _load_all  # noqa: E402
 
 pytestmark = pytest.mark.skipif(
     not os.path.isdir(SF_DIR),
@@ -60,30 +57,12 @@ def splittable_fixture(tmp_path_factory):
     return fix
 
 
-def _run(spark, name: str, fix: str, confs: dict):
-    # restore the session's own values afterwards (unset would fall
-    # back to Spark's defaults, not conftest's, and leak into the
-    # rest of the suite)
-    prior = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    spark.catalog.clearCache()
-    try:
-        return _canon_result(REGISTRY[name].fn(spark, fix))
-    finally:
-        for k, v in prior.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
 @pytest.mark.parametrize("name", SENTINELS)
 def test_sentinel_layout_invariant(spark, splittable_fixture, name):
     _load_all()
-    base = _run(spark, name, splittable_fixture, BASELINE_CONFS)
-    pert = _run(spark, name, splittable_fixture, PERTURBED_CONFS)
-    assert _diff(base, pert) is None
+    base = canon_run(spark, name, splittable_fixture, BASELINE_CONFS)
+    pert = canon_run(spark, name, splittable_fixture, PERTURBED_CONFS)
+    assert layout_diff(base, pert) is None
 
 
 def test_harness_not_vacuous_table_sample_diverges(
@@ -96,6 +75,6 @@ def test_harness_not_vacuous_table_sample_diverges(
     row silently returned to partition 0) and the green board above
     proves nothing."""
     _load_all()
-    base = _run(spark, "table_sample", splittable_fixture, BASELINE_CONFS)
-    pert = _run(spark, "table_sample", splittable_fixture, PERTURBED_CONFS)
-    assert _diff(base, pert) is not None
+    base = canon_run(spark, "table_sample", splittable_fixture, BASELINE_CONFS)
+    pert = canon_run(spark, "table_sample", splittable_fixture, PERTURBED_CONFS)
+    assert layout_diff(base, pert) is not None

@@ -66,6 +66,18 @@ def cosine_scored(
     )
 
 
+def duck_cosine_scored(queries: str, candidates: str, key: str | None = None) -> str:
+    """DuckDB twin of ``cosine_scored``: the SELECT of ``(query_id,
+    candidate_id, cos)`` over the relations ``queries`` ``(query_id,
+    qv[, q<key>])`` and ``candidates`` ``(vec_id, emb[, <key>])``."""
+    on = "c.vec_id <> q.query_id"
+    if key is not None:
+        on = f"c.{key} = q.q{key} AND {on}"
+    return f"""SELECT q.query_id, c.vec_id AS candidate_id,
+             {duck_cosine("q.qv", "c.emb")} AS cos
+      FROM {queries} q JOIN {candidates} c ON {on}"""
+
+
 def top_k_by_cosine(scored: DataFrame, k: int) -> DataFrame:
     """Per-query top-``k`` of a ``(query_id, candidate_id, cos)`` frame:
     rank by the micro-scaled integer score ``floor(cos·1e6+0.5)``

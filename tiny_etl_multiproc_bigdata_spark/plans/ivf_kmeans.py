@@ -22,7 +22,7 @@ from tiny_etl_multiproc_bigdata_spark.functions.partitioning import ckpt_hash
 from tiny_etl_multiproc_bigdata_spark.functions.vectors import (
     complete_vector_sql,
     cosine_scored,
-    duck_cosine,
+    duck_cosine_scored,
     duck_top_k_by_cosine,
     is_complete_vector,
     top_k_by_cosine,
@@ -138,12 +138,9 @@ _DUCK_IVF_CELLS = f"""centroids AS (
     "ann_ivf_topk",
     oracle=f"""
     WITH {_DUCK_IVF_CELLS}, q AS (
-      SELECT vec_id AS query_id, emb AS qv, cell FROM assigned
+      SELECT vec_id AS query_id, emb AS qv, cell AS qcell FROM assigned
       WHERE vec_id < {_N_QUERIES}
-    ), scored AS (
-      SELECT q.query_id, a.vec_id AS candidate_id,
-             {duck_cosine("q.qv", "a.emb")} AS cos
-      FROM q JOIN assigned a ON a.cell = q.cell AND a.vec_id <> q.query_id
+    ), scored AS ({duck_cosine_scored("q", "assigned", "cell")}
     ), {duck_top_k_by_cosine("scored", _TOP_K)}
     """,
 )
@@ -495,11 +492,7 @@ _N_PROBES = 2
         WHERE e.vec_id < {_N_QUERIES}
           AND {complete_vector_sql("e.embedding")}
       ) WHERE rn <= {_N_PROBES}
-    ), scored AS (
-      SELECT q.query_id, a.vec_id AS candidate_id,
-             {duck_cosine("q.qv", "a.emb")} AS cos
-      FROM qcells q JOIN assigned a
-        ON a.cell = q.qcell AND a.vec_id <> q.query_id
+    ), scored AS ({duck_cosine_scored("qcells", "assigned", "cell")}
     ), {duck_top_k_by_cosine("scored", _TOP_K)}
     """,
 )

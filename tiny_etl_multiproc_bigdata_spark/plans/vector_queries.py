@@ -28,6 +28,7 @@ from tiny_etl_multiproc_bigdata_spark.functions.vectors import (
     cosine_scored,
     cosine_similarity,
     duck_cosine,
+    duck_cosine_scored,
     duck_top_k_by_cosine,
     is_complete_vector,
     top_k_by_cosine,
@@ -112,14 +113,11 @@ def _duck_bucket(expr: str) -> str:
 @register(
     "ann_bruteforce_topk",
     oracle=f"""
-    WITH q AS (
-      SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-      FROM embeddings WHERE vec_id < {_N_QUERIES} AND {_VEC_OK}
-    ), scored AS (
-      SELECT q.query_id, e.vec_id AS candidate_id,
-             {duck_cosine("q.qv", "e.embedding::DOUBLE[]")} AS cos
-      FROM q JOIN embeddings e ON e.vec_id <> q.query_id
-        AND {complete_vector_sql("e.embedding")}
+    WITH e AS (
+      SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings WHERE {_VEC_OK}
+    ), q AS (
+      SELECT vec_id AS query_id, emb AS qv FROM e WHERE vec_id < {_N_QUERIES}
+    ), scored AS ({duck_cosine_scored("q", "e")}
     ), {duck_top_k_by_cosine("scored", _TOP_K)}
     """,
 )
@@ -168,11 +166,8 @@ def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
              {_duck_bucket("embedding::DOUBLE[]")} AS bucket
       FROM embeddings WHERE {_VEC_OK}
     ), q AS (
-      SELECT vec_id AS query_id, emb AS qv, bucket FROM v WHERE vec_id < {_N_QUERIES}
-    ), scored AS (
-      SELECT q.query_id, v.vec_id AS candidate_id,
-             {duck_cosine("q.qv", "v.emb")} AS cos
-      FROM q JOIN v ON v.bucket = q.bucket AND v.vec_id <> q.query_id
+      SELECT vec_id AS query_id, emb AS qv, bucket AS qbucket FROM v WHERE vec_id < {_N_QUERIES}
+    ), scored AS ({duck_cosine_scored("q", "v", "bucket")}
     ), {duck_top_k_by_cosine("scored", _TOP_K)}
     """,
 )

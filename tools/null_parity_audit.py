@@ -61,7 +61,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tests"))
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from _guard import guarded
+from _guard import sweep
 
 # Same override tests/conftest.py honors (ADVICE r11): the spiked
 # fixture derives from the real sf0.001 tables, so point both at the
@@ -614,10 +614,8 @@ def main() -> None:
     empty_mode = "--empty" in flags
     build = _MODES[flags[0]] if flags else build_fixture
     only = set(a for a in args if not a.startswith("--"))
-    from compare import compare  # tests/compare.py
-    import duckdb
+    from compare import compare, duck_connect  # tests/compare.py
 
-    from tiny_etl_multiproc_bigdata_spark.catalog import TABLES
     from tiny_etl_multiproc_bigdata_spark.plans.registry import (
         REGISTRY,
         _load_all,
@@ -625,67 +623,34 @@ def main() -> None:
     from tiny_etl_multiproc_bigdata_spark.session import get_spark
 
     _load_all()
-    from tiny_etl_multiproc_bigdata_spark.plans.registry import REGISTRY as _R
-    bad_names = sorted(only - set(_R))
+    bad_names = sorted(only - set(REGISTRY))
     if bad_names:
         raise SystemExit(f"not registry entries: {bad_names}")
     scratch = tempfile.mkdtemp(prefix="null_audit_")
     fix = os.path.join(scratch, "fixture")
     build(fix)
+    con = duck_connect(fix)
 
-    def _new_session():
+    def check(spark, name: str) -> str:
+        spec = REGISTRY[name]
+        df = spec.fn(spark, fix)
+        if spec.oracle is None:
+            df.count()
+            return "ok (rows-only)"
+        problems = compare(df, con, spec.oracle, spec.ulp_sensitive)
+        return "ok" if not problems else "MISMATCH: " + "; ".join(problems)[:400]
+
+    def new_session():
         return get_spark(app_name="null-parity-audit")
 
-    spark = _new_session()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{fix}/{t}.parquet')"
-        )
-
-    results: dict[str, str] = {}
     names = [n for n in sorted(REGISTRY) if not only or n in only]
     t_all = time.time()
-    for i, name in enumerate(names):
-        spec = REGISTRY[name]
-        try:
-            with guarded(spark, f"nullaudit-{name}", WATCHDOG_S) as cancelled:
-                df = spec.fn(spark, fix)
-                if spec.oracle is None:
-                    df.count()
-                    results[name] = "ok (rows-only)"
-                else:
-                    problems = compare(df, con, spec.oracle, spec.ulp_sensitive)
-                    results[name] = (
-                        "ok" if not problems else "MISMATCH: " + "; ".join(problems)[:400]
-                    )
-        except Exception as ex:  # noqa: BLE001 — per-entry isolation
-            kind = "WATCHDOG" if cancelled.is_set() else "error"
-            results[name] = f"{kind}: {repr(ex)[:300]}"
-        finally:
-            # An entry can kill the whole JVM (observed in the r13
-            # --timeskew scout: interpolating a 55k-year gap OOMed the
-            # driver and every later entry then "errored" on a dead
-            # context — 200+ cascade rows masking the real findings).
-            # Per-entry isolation must include the session itself:
-            # restart on a stopped context and mark the entry, so one
-            # poisoned entry costs one restart, not the rest of the run.
-            try:
-                dead = spark.sparkContext._jsc.sc().isStopped()
-            except Exception:  # noqa: BLE001 — py4j gone = dead
-                dead = True
-            if dead:
-                results[name] = (
-                    f"{results.get(name, 'error:')[:200]}"
-                    " [KILLED SESSION — restarted]"
-                )
-                try:
-                    spark.stop()
-                except Exception:  # noqa: BLE001 — already dead
-                    pass
-                spark = _new_session()
-        if (i + 1) % 25 == 0:
-            print(f"{i + 1}/{len(names)} {time.time() - t_all:.0f}s", flush=True)
+    results: dict[str, str] = {}
+    for name, o in sweep(new_session, names, "nullaudit", WATCHDOG_S, check).items():
+        r = o.value if o.status == "ok" else f"{o.status}: {repr(o.error)[:300]}"
+        if o.restarted:
+            r = f"{r[:200]} [KILLED SESSION — restarted]"
+        results[name] = r
 
     if empty_mode:
         for n, (sig, why) in _KNOWN_EMPTY_DEVIATIONS.items():
@@ -695,7 +660,7 @@ def main() -> None:
     bad = {n: v for n, v in results.items() if not v.startswith("ok")}
     print(f"TOTAL {time.time() - t_all:.1f}s; {ok} ok, {len(bad)} non-ok", flush=True)
     print("NON-OK:", json.dumps(bad, indent=1, sort_keys=True), flush=True)
-    spark.stop()
+    new_session().stop()
     shutil.rmtree(scratch, ignore_errors=True)
 
 

@@ -72,7 +72,8 @@ import time
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tests"))
 
-from _guard import guarded
+from _guard import sweep
+from compare import canon, first_difference
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 WATCHDOG_S = 120
@@ -178,60 +179,57 @@ KNOWN_LAYOUT_DEFINED: dict[str, str] = {
 }
 
 
-def _canon_result(df):
-    from compare import canon
+def canon_run(spark, name: str, sf_dir: str, confs: dict):
+    """The entry's canonical result with the layout ``confs`` set and
+    the cache cleared; the session's own values are restored afterwards
+    (unset would fall back to Spark's defaults, not the session's)."""
+    from tiny_etl_multiproc_bigdata_spark.plans.registry import REGISTRY
 
-    rows = [tuple(r) for r in df.collect()]
-    return canon(rows, list(df.columns))
+    prior = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    spark.catalog.clearCache()
+    try:
+        df = REGISTRY[name].fn(spark, sf_dir)
+        return canon([tuple(r) for r in df.collect()], list(df.columns))
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
-def _diff(a, b) -> str | None:
-    """None if canonical results match; else a classified description."""
+def layout_diff(a, b) -> str | None:
+    """None if two canonical results match; else a classified
+    description of the first difference."""
     (ac, ar), (bc, br) = a, b
     if ac != bc:
         return f"columns differ: {ac} vs {bc}"
     if len(ar) != len(br):
         return f"row count differs: {len(ar)} vs {len(br)}"
-    float_only = True
-    first = None
-    for i, (ra, rb) in enumerate(zip(ar, br)):
-        if ra != rb:
-            if first is None:
-                first = f"row #{i}: {ra!r} vs {rb!r}"
-            for va, vb in zip(ra, rb):
-                if va != vb and not (
-                    isinstance(va, float) and isinstance(vb, float)
-                ):
-                    float_only = False
+    first = first_difference(ar, br)
     if first is None:
         return None
+    i, ra, rb = first
+    float_only = all(
+        va == vb or (isinstance(va, float) and isinstance(vb, float))
+        for xa, xb in zip(ar[i:], br[i:])
+        for va, vb in zip(xa, xb)
+    )
     kind = "FLOAT-DRIFT(>12g)" if float_only else "STRUCTURAL"
-    return f"{kind} {first}"
+    return f"{kind} row #{i}: {ra!r} vs {rb!r}"
 
 
-def run_pass(spark, names, registry, confs, label: str, sf_dir: str) -> dict:
-    """One full-board pass under `confs`; returns name -> canonical
-    result tuple, or ('__error__', repr) / ('__watchdog__', '')."""
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    spark.catalog.clearCache()
-    out: dict = {}
+def run_pass(new_session, names, confs, label: str, sf_dir: str) -> dict:
+    """One full-board pass under ``confs``: each entry's Outcome, whose
+    value is the entry's canonical result."""
     t0 = time.time()
-    for i, name in enumerate(names):
-        spec = registry[name]
-        try:
-            with guarded(
-                spark, f"payout-{label}-{name}", WATCHDOG_S
-            ) as cancelled:
-                out[name] = _canon_result(spec.fn(spark, sf_dir))
-        except Exception as ex:  # noqa: BLE001 — per-entry isolation
-            kind = "__watchdog__" if cancelled.is_set() else "__error__"
-            out[name] = (kind, repr(ex)[:300])
-        if (i + 1) % 50 == 0:
-            print(
-                f"[{label}] {i + 1}/{len(names)} {time.time() - t0:.0f}s",
-                flush=True,
-            )
+    out = sweep(
+        new_session, names, f"payout-{label}", WATCHDOG_S,
+        lambda spark, name: canon_run(spark, name, sf_dir, confs),
+        f"[{label}] ",
+    )
     print(f"[{label}] TOTAL {time.time() - t0:.1f}s", flush=True)
     return out
 
@@ -255,21 +253,19 @@ def main() -> None:
     )
     build_fixture(fix)
 
-    spark = get_spark(app_name="partition-invariance-audit")
+    def new_session():
+        return get_spark(app_name="partition-invariance-audit")
 
-    base = run_pass(spark, names, REGISTRY, BASELINE_CONFS, "baseline", fix)
-    pert = run_pass(spark, names, REGISTRY, PERTURBED_CONFS, "perturbed", fix)
+    base = run_pass(new_session, names, BASELINE_CONFS, "baseline", fix)
+    pert = run_pass(new_session, names, PERTURBED_CONFS, "perturbed", fix)
 
     results: dict[str, str] = {}
     for n in names:
         a, b = base[n], pert[n]
-        if a[0] in ("__error__", "__watchdog__") or b[0] in (
-            "__error__",
-            "__watchdog__",
-        ):
-            results[n] = f"ERROR: baseline={a[0] if a[0].startswith('__') else 'ok'} perturbed={b[0] if b[0].startswith('__') else 'ok'}"
+        if a.status != "ok" or b.status != "ok":
+            results[n] = f"ERROR: baseline={a.status} perturbed={b.status}"
             continue
-        d = _diff(a, b)
+        d = layout_diff(a.value, b.value)
         if d is None:
             results[n] = "ok"
         elif n in KNOWN_LAYOUT_DEFINED:

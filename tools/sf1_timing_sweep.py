@@ -33,14 +33,18 @@ import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-from _guard import guarded
+from _guard import sweep
 from tiny_etl_multiproc_bigdata_spark.session import get_spark
 
 WATCHDOG_S = 150
 
 
+def new_session():
+    return get_spark(app_name="sf1-timing-sweep")
+
+
 def main() -> None:
-    spark = get_spark(app_name="sf1-timing-sweep")
+    spark = new_session()
     from tiny_etl_multiproc_bigdata_spark.benchgen import (
         ensure_sf1,
         ensure_sf1_embeddings,
@@ -55,33 +59,25 @@ def main() -> None:
     ensure_sf1(spark, sf01, sf1)
     ensure_sf1_events(spark, sf01, sf1)
     ensure_sf1_embeddings(spark, sf01, sf1)
-    results: dict[str, dict] = {}
-    names = sorted(q)
+
+    def timed(spark, name: str) -> None:
+        q[name](spark, sf1).write.format("noop").mode("overwrite").save()
+
+    def status(o) -> str:
+        if o.status == "ok":
+            return "ok"
+        if o.status == "WATCHDOG":
+            return "WATCHDOG_CANCELLED"
+        msg = repr(o.error)
+        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
+            return "no_fixture"
+        return f"error: {msg[:160]}"
+
     t_all = time.time()
-    for i, name in enumerate(names):
-        t0 = time.time()
-        try:
-            with guarded(spark, f"sweep-{name}", WATCHDOG_S) as cancelled:
-                df = q[name](spark, sf1)
-                df.write.format("noop").mode("overwrite").save()
-            results[name] = {
-                "sec": round(time.time() - t0, 2),
-                "status": "ok",
-            }
-        except Exception as ex:  # noqa: BLE001 — per-entry isolation
-            msg = repr(ex)
-            if cancelled.is_set():
-                status = "WATCHDOG_CANCELLED"
-            elif "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-                status = "no_fixture"
-            else:
-                status = f"error: {msg[:160]}"
-            results[name] = {
-                "sec": round(time.time() - t0, 2),
-                "status": status,
-            }
-        if (i + 1) % 25 == 0:
-            print(f"{i+1}/{len(names)} {time.time()-t_all:.0f}s", flush=True)
+    outcomes = sweep(new_session, sorted(q), "sweep", WATCHDOG_S, timed)
+    results = {
+        n: {"sec": o.sec, "status": status(o)} for n, o in outcomes.items()
+    }
 
     ok = {n: r["sec"] for n, r in results.items() if r["status"] == "ok"}
     bad = {n: r for n, r in results.items() if r["status"] != "ok"}

@@ -27,6 +27,10 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from _guard import sweep
+
+WATCHDOG_S = 120
+
 
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
@@ -51,42 +55,47 @@ def main() -> None:
     # The JVM, and with it every Python worker, inherits this directory.
     os.chdir(tempfile.gettempdir())
     cpus = _cpus()
-    spark = (
-        SparkSession.builder.appName("verify-queries")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+
+    def new_session():
+        return (
+            SparkSession.builder.appName("verify-queries")
+            .master(f"local[{cpus}]")
+            .config("spark.sql.shuffle.partitions", str(cpus))
+            .config("spark.ui.enabled", "false")
+            .getOrCreate()
+        )
+
     q, o, meta = queries(), oracle_sql(), query_metadata()
     board: dict[str, dict] = {}
-    n_bad = 0
     for sf in sfs:
         sf_dir = f"/root/testdata/sf{sf}"
         con = duck_connect(sf_dir)
-        for name in names:
+
+        def check(spark, name: str) -> dict:
+            counts: dict = {}
+            problems = compare(
+                q[name](spark, sf_dir), con, o[name],
+                meta[name]["ulp_sensitive"], counts,
+            )
+            row = {
+                "ok": not problems,
+                "spark_rows": counts["spark"],
+                "oracle_rows": counts["duckdb"],
+            }
+            if problems:
+                row["first_diff"] = problems
+            return row
+
+        for name, out in sweep(new_session, names, "verify", WATCHDOG_S, check).items():
             key = f"{name}@sf{sf}"
-            try:
-                counts: dict = {}
-                problems = compare(
-                    q[name](spark, sf_dir), con, o[name],
-                    meta[name]["ulp_sensitive"], counts,
-                )
-                board[key] = {
-                    "ok": not problems,
-                    "spark_rows": counts["spark"],
-                    "oracle_rows": counts["duckdb"],
-                }
-                if problems:
-                    n_bad += 1
-                    board[key]["first_diff"] = problems
-            except Exception as exc:  # noqa: BLE001
-                n_bad += 1
-                board[key] = {"ok": False, "err": repr(exc)[:300]}
+            board[key] = (
+                out.value if out.status == "ok"
+                else {"ok": False, "err": repr(out.error)[:300]}
+            )
             print(f"{key}: {'OK' if board[key]['ok'] else 'FAIL'}", flush=True)
         con.close()
     print(json.dumps(board, indent=1))
-    sys.exit(1 if n_bad else 0)
+    sys.exit(0 if all(r["ok"] for r in board.values()) else 1)
 
 
 if __name__ == "__main__":
